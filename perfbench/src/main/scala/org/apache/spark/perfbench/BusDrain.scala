@@ -1,0 +1,11 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Waits until the listener bus has delivered every posted event, so
+  * counters read right after an action are complete. Lives in the
+  * `org.apache.spark` package because the bus is `private[spark]`.
+  */
+object BusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
