@@ -4,19 +4,20 @@
 `out_dir`; the same seed gives byte-identical files. The engine reads
 only these files.
 
-- corpus/documents.parquet: a 5,000-doc word-soup corpus with the shape
-  of the harness's sf0.1 `documents` table (31-word vocabulary, 10-100
-  words per doc, five languages, 20 sources, 5% near-duplicates). It
-  comes from a fixed seed, so every workload seed serves the same
-  corpus and set-up cost does not vary with the seed.
+- corpus/documents.parquet: the sf0.1 `documents` table (5,000 docs),
+  copied byte for byte from data/sf0.1/. Every workload seed serves the
+  same corpus, so set-up cost does not vary with the seed. The words
+  the generator draws (query noise, shard vocabularies, re-versions)
+  are the words of this corpus.
 - rag/queries.parquet: the rag_serve op schedule. A cycle is five
   1-query ops (exact twice, IVF, PQ, RRF) in a seeded order, then one
   100-query exact op. Each query is a noisy excerpt of one corpus doc,
   whose id is the query's gold answer. Ops with negative ids are the
   set-up warm-up.
-- curate/shard_NNNN/documents.parquet: 500-doc slices of the corpus,
-  re-keyed, with the vocabulary permuted per shard by the seed.
-  warm_0/ (the last slice) is the set-up shard.
+- curate/shard_0000/documents.parquet: the corpus re-keyed, with its
+  vocabulary permuted by the seed (a word-level form of ScaleGen's
+  per-replica bijection). warm_0/ is the 200-doc set-up shard, built
+  the same way.
 - ingest/batch_NNNN.parquet: 20-doc micro-batches of doc versions, in
   landing order: 10 re-versions of existing docs, 4 truncations, 3 new
   docs and 3 re-sent current versions. warm_0.parquet is landed
@@ -25,16 +26,13 @@ only these files.
 
 import os
 import random
+import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-CORPUS_SEED = 42
-N_DOCS = 5000
-VOCAB = ("spark window merge table column vector stream value data small join filter big "
-         "group hash customer sort order slow line part fast row the agg key query a scan "
-         "batch").split()
-LANGS = ["en"] * 41 + ["zh"] * 15 + ["es"] * 15 + ["fr"] * 15 + ["de"] * 14
+HERE = os.path.dirname(os.path.abspath(__file__))
+CORPUS = os.path.join(HERE, "data", "sf0.1", "documents.parquet")
 PATHS = ["exact", "ivf", "pq", "rrf"]
 # the 1-query ops of one rag cycle; exact twice, so the cycle's median
 # averages two ops
@@ -42,7 +40,12 @@ SMALL_OPS = ["exact", "exact", "ivf", "pq", "rrf"]
 
 RAG_CYCLES = 10
 LARGE_BATCH = 100
-CURATE_SHARD_DOCS = 500
+CURATE_SHARDS = 1
+CURATE_SHARD_DOCS = 5000
+CURATE_WARM_DOCS = 200
+# words a shard's permutation keeps: the boilerplate separator and the
+# corpus's near-duplicate marker
+FIXED_WORDS = {"the", "dup"}
 INGEST_BATCHES = 40
 # doc versions per ingest batch, by kind
 INGEST_MIX = [("reversion", 10), ("truncate", 4), ("new", 3), ("resend", 3)]
@@ -52,18 +55,14 @@ DOC_SCHEMA = pa.schema([("doc_id", pa.int64()), ("text", pa.string()), ("lang", 
 
 
 def corpus():
-    """The fixed corpus as a list of (doc_id, text, lang, source)."""
-    rng = random.Random(CORPUS_SEED)
-    docs = []
-    for i in range(N_DOCS):
-        if i >= 100 and rng.random() < 0.05:
-            src = docs[rng.randrange(len(docs))][1].split()
-            src[rng.randrange(len(src))] = "dup"
-            text = " ".join(src)
-        else:
-            text = " ".join(rng.choice(VOCAB) for _ in range(rng.randint(10, 100)))
-        docs.append((i, text, rng.choice(LANGS), f"src{i % 20}"))
-    return docs
+    """The corpus as a list of (doc_id, text, lang, source), by doc id."""
+    t = pq.read_table(CORPUS, columns=["doc_id", "text", "lang", "source"])
+    return sorted(zip(*(t.column(c).to_pylist() for c in t.column_names)))
+
+
+def vocabulary(docs):
+    """The corpus's words, sorted."""
+    return sorted({w for d in docs for w in d[1].split()})
 
 
 def write_docs(path, docs):
@@ -74,22 +73,22 @@ def write_docs(path, docs):
     pq.write_table(table, path)
 
 
-def case_query(rng, docs):
+def case_query(rng, docs, vocab):
     """A noisy excerpt of one doc; its gold answer is the doc id."""
     doc_id, text, _, _ = docs[rng.randrange(len(docs))]
     words = text.split()
     n = max(8, len(words) * rng.randint(40, 80) // 100)
     start = rng.randrange(len(words) - n + 1) if n < len(words) else 0
-    excerpt = [w if rng.random() >= 0.15 else rng.choice(VOCAB) for w in words[start:start + n]]
+    excerpt = [w if rng.random() >= 0.15 else rng.choice(vocab) for w in words[start:start + n]]
     return " ".join(excerpt), str(doc_id)
 
 
-def rag_queries(rng, docs, path):
+def rag_queries(rng, docs, vocab, path):
     ops, cycles, paths, qids, texts, answers, kinds = [], [], [], [], [], [], []
 
     def add(op, kind, p, n):
         for _ in range(n):
-            text, gold = case_query(rng, docs)
+            text, gold = case_query(rng, docs, vocab)
             ops.append(op)
             kinds.append(kind)
             paths.append(p)
@@ -113,35 +112,38 @@ def rag_queries(rng, docs, path):
     pq.write_table(table, path)
 
 
-def curate_shards(rng, docs, out):
-    """Shard k re-keys corpus slice k by (k + 1) * 10^6 and maps its words
-    through a seeded vocabulary permutation that keeps the chunk separator
-    "the" and the "dup" marker. Every seed's shard k has the same doc
-    lengths, languages and duplicate structure, so the seed changes the
-    text but not the shape of the work."""
-    fixed = {"the", "dup"}
-    movable = [w for w in VOCAB if w not in fixed]
-    n_shards = len(docs) // CURATE_SHARD_DOCS
-    for s in range(n_shards):
+def curate_shards(rng, docs, vocab, out):
+    """Shard k is a CURATE_SHARD_DOCS-doc run of the corpus from doc
+    k * CURATE_SHARD_DOCS on (wrapping), re-keyed by (k + 1) * 10^6, its
+    words mapped through a seeded permutation of the vocabulary that
+    keeps FIXED_WORDS. A permutation keeps every doc's word count,
+    language and duplicate structure, so the seed changes the text but
+    not the shape of the work. The set-up shard warm_0 is built the same
+    way with CURATE_WARM_DOCS docs."""
+    movable = [w for w in vocab if w not in FIXED_WORDS]
+    sizes = [CURATE_SHARD_DOCS] * CURATE_SHARDS + [CURATE_WARM_DOCS]
+    for s, size in enumerate(sizes):
         perm = movable[:]
         rng.shuffle(perm)
         mapping = dict(zip(movable, perm))
+        start = s * CURATE_SHARD_DOCS
         shard = [((s + 1) * 1_000_000 + doc_id, " ".join(mapping.get(w, w) for w in text.split()),
                   lang, source)
-                 for doc_id, text, lang, source in docs[s * CURATE_SHARD_DOCS:(s + 1) * CURATE_SHARD_DOCS]]
-        name = "warm_0" if s == n_shards - 1 else f"shard_{s:04d}"
+                 for doc_id, text, lang, source in
+                 (docs[(start + j) % len(docs)] for j in range(size))]
+        name = "warm_0" if s == CURATE_SHARDS else f"shard_{s:04d}"
         os.makedirs(os.path.join(out, name), exist_ok=True)
         write_docs(os.path.join(out, name, "documents.parquet"), shard)
 
 
-def ingest_batches(rng, docs, out):
+def ingest_batches(rng, docs, vocab, out):
     """Every batch has the same version mix: re-versions, truncations, new
     docs and re-sent current versions, in fixed counts. Text lengths come
     from a seed-independent schedule, so batches of every seed carry about
     the same volume; the seed picks the docs and the words."""
     shape = random.Random("ingest-shape")
     current = {d[0]: d[1] for d in docs}
-    next_id = N_DOCS
+    next_id = max(current) + 1
     for b in range(-1, INGEST_BATCHES):
         batch = {}
         for kind, n in INGEST_MIX:
@@ -159,7 +161,7 @@ def ingest_batches(rng, docs, out):
                 elif kind == "truncate":
                     text = " ".join(words[:min(len(words) - 1, max(8, length // 3))])
                 else:
-                    text = " ".join(rng.choice(VOCAB) for _ in range(length))
+                    text = " ".join(rng.choice(vocab) for _ in range(length))
                 batch[doc_id] = text
                 current[doc_id] = text
         rows = sorted(batch.items())
@@ -171,11 +173,13 @@ def ingest_batches(rng, docs, out):
 
 def generate(seed, out_dir):
     docs = corpus()
+    vocab = vocabulary(docs)
     for sub in ("corpus", "rag", "curate", "ingest"):
         os.makedirs(os.path.join(out_dir, sub), exist_ok=True)
-    write_docs(os.path.join(out_dir, "corpus", "documents.parquet"), docs)
+    shutil.copyfile(CORPUS, os.path.join(out_dir, "corpus", "documents.parquet"))
     # one stream per workload, so changing one workload's generator
     # leaves the others' inputs as they were
-    rag_queries(random.Random(f"{seed}/rag"), docs, os.path.join(out_dir, "rag", "queries.parquet"))
-    curate_shards(random.Random(f"{seed}/curate"), docs, os.path.join(out_dir, "curate"))
-    ingest_batches(random.Random(f"{seed}/ingest"), docs, os.path.join(out_dir, "ingest"))
+    rag_queries(random.Random(f"{seed}/rag"), docs, vocab,
+                os.path.join(out_dir, "rag", "queries.parquet"))
+    curate_shards(random.Random(f"{seed}/curate"), docs, vocab, os.path.join(out_dir, "curate"))
+    ingest_batches(random.Random(f"{seed}/ingest"), docs, vocab, os.path.join(out_dir, "ingest"))

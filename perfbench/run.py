@@ -13,6 +13,7 @@ instead of the end-to-end ones. `--workload all` runs every workload.
 import argparse
 import hashlib
 import json
+import math
 import os
 import shutil
 import signal
@@ -28,10 +29,13 @@ import stats  # noqa: E402
 ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
 WORKLOADS = ["rag_serve", "curate_batch", "ingest_refresh"]
-# set-up reps per workload: the reported setup_s is their median
-SETUP_REPS = {"rag_serve": 2, "curate_batch": 2, "ingest_refresh": 3}
+# set-up reps per workload. The first is cold (class loading, JIT,
+# codegen) and its time is printed; setup_s is the median of the others.
+SETUP_REPS = {"rag_serve": 3, "curate_batch": 3, "ingest_refresh": 3}
 JVM_TIMEOUT_S = 170
 BUILD_TIMEOUT_S = 850
+# result of curate_batch's un-sharded corpus check, kept per build
+CORPUS_CHECK = os.path.join(BUILD, "corpus_check.json")
 JDK_OPENS = ["java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net",
              "java.nio", "java.util", "java.util.concurrent", "java.util.concurrent.atomic",
              "sun.nio.ch", "sun.nio.cs", "sun.security.action", "sun.util.calendar"]
@@ -41,11 +45,11 @@ MB = 1e6
 # units of the metrics printed but not listed in BENCHMARK.json
 UNGATED_UNITS = {"op_p50_s": "s", "items_per_s": "1/s", "Store.bytes_written_mb": "MB",
                  "Store.files_written": "count", "Store.write_amp": "ratio",
-                 "EventStream.batches": "count", "EventStream.wait_frac": "ratio",
-                 "EventStream.drain_frac": "ratio", "EventStream.busy_frac": "ratio",
-                 "EventStream.cpu_frac": "ratio", "EventStream.calls": "count",
+                 "EventStream.batches": "count", "EventStream.wait_s": "s",
+                 "EventStream.drain_s": "s", "EventStream.busy_s": "s",
+                 "EventStream.cpu_s": "s", "EventStream.calls": "count",
                  "EventStream.jobs": "count", "EventStream.shuffle_mb": "MB",
-                 "Build.store_init_frac": "ratio"}
+                 "Build.store_init_s": "s"}
 
 
 def fail(msg, code):
@@ -76,6 +80,8 @@ def build():
     if os.path.exists(classpath) and os.path.exists(stamp) and open(stamp).read() == fp:
         return open(classpath).read().strip()
     os.makedirs(BUILD, exist_ok=True)
+    if os.path.exists(CORPUS_CHECK):
+        os.remove(CORPUS_CHECK)
     env = dict(os.environ, COURSIER_MODE="offline")
     if "SBT_OPTS" not in env:
         opts = ["-Dsbt.offline=true", "-Xmx2g"]
@@ -127,7 +133,9 @@ def run_jvm(classpath, workload, inputs, seconds, trace):
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     out = os.path.join(work, "raw.json")
-    cmd = (["java", "-Xms3g", "-Xmx3g", "-XX:+UseParallelGC"]
+    check_corpus = workload == "curate_batch" and not os.path.exists(CORPUS_CHECK)
+    cmd = (["java", "-Xms3g", "-Xmx3g", "-XX:+UseParallelGC",
+            f"-Dperfbench.checkCorpus={str(check_corpus).lower()}"]
            + [a for p in JDK_OPENS for a in ("--add-opens", f"java.base/{p}=ALL-UNNAMED")]
            + ["-cp", classpath, "graft.perfbench.Main", workload, inputs, work,
               str(seconds), str(trace), str(SETUP_REPS[workload]), out])
@@ -137,6 +145,7 @@ def run_jvm(classpath, workload, inputs, seconds, trace):
     if rc != 0 or not os.path.exists(out):
         fail(f"{workload} run failed (exit {rc}); see {log}\n{open(log).read()[-3000:]}", 4)
     raw = json.load(open(out))
+    corpus_checks(workload, raw)
     if trace:
         traces = os.path.join(BUILD, "traces")
         os.makedirs(traces, exist_ok=True)
@@ -146,6 +155,20 @@ def run_jvm(classpath, workload, inputs, seconds, trace):
             json.dump(raw["layers"], f, indent=1, sort_keys=True)
     shutil.rmtree(work, ignore_errors=True)
     return raw
+
+
+def corpus_checks(workload, raw):
+    """The un-sharded corpus check of `curate_batch` runs in the first run
+    of a build; later runs of that build report its recorded result."""
+    if workload != "curate_batch":
+        return
+    done = [c for c in raw["checks"] if c["name"] == "pipeline_e2e_rows"]
+    if done:
+        with open(CORPUS_CHECK, "w") as f:
+            json.dump(done[0], f)
+    else:
+        c = json.load(open(CORPUS_CHECK))
+        raw["checks"].append(dict(c, detail=c["detail"] + " (recorded by the first run of this build)"))
 
 
 def hash_checks(workload, seed, raw):
@@ -164,15 +187,27 @@ def hash_checks(workload, seed, raw):
              "detail": f"{len(hashes)} shard outputs, differing from earlier runs: {bad}"}]
 
 
+def warm_setups(raw):
+    """The set-up reps after the cold first one."""
+    return raw["setups"][1:]
+
+
+def reference_s(raw):
+    """The run's reference time: the geometric mean of the median Spark-job
+    sample and the median CPU-loop sample."""
+    return math.sqrt(stats.median(raw["reference_job_samples"])
+                     * stats.median(raw["reference_cpu_samples"]))
+
+
 def end_to_end(raw):
     ops = raw["ops"]
     n = len(ops)
     busy = sum(o["latency_s"] for o in ops)
-    ref = stats.median([o["reference_s"] for o in ops])
+    ref = reference_s(raw)
     op_p50 = stats.median(stats.op_latencies(ops))
     items_per_s = sum(o["items"] for o in ops if o["ok"]) / busy
     return {
-        "setup_s": stats.median([s["total_s"] for s in raw["setups"]]),
+        "setup_s": stats.median([s["total_s"] for s in warm_setups(raw)]),
         "op_p50_s": op_p50,
         "items_per_s": items_per_s,
         "op_p50_rel": op_p50 / ref,
@@ -185,31 +220,28 @@ def end_to_end(raw):
 def per_layer(raw):
     ops = raw["ops"]
     n = len(ops)
-    busy = sum(o["latency_s"] for o in ops)
     cpu = sum(o["cpu_s"] for o in ops)
     extra = raw["extra"]
     m = {}
     for layer in LAYERS:
         row = raw["layers"].get(layer, {})
-        m[f"{layer}.busy_frac"] = row.get("busy_s", 0.0) / busy
+        m[f"{layer}.busy_s"] = row.get("busy_s", 0.0)
         m[f"{layer}.calls"] = row.get("calls", 0)
         m[f"{layer}.jobs"] = row.get("jobs", 0)
-        m[f"{layer}.cpu_frac"] = row.get("cpu_s", 0.0) / cpu if cpu else 0.0
+        m[f"{layer}.cpu_s"] = row.get("cpu_s", 0.0)
         m[f"{layer}.shuffle_mb"] = row.get("shuffle_write_bytes", 0) / MB
     for name in ["Knn.pairs_per_hit", "SimilaritySearch.candidates_per_hit",
                  "Pq.candidates_per_hit", "ContextAssembly.chars_kept_frac", "Clean.kept_frac",
-                 "TextAnalysis.kept_frac", "Dedup.verified_per_candidate",
-                 "Curation.selected_frac", "Store.write_amp", "Store.bytes_written_mb",
-                 "Store.files_written", "EventStream.batches"]:
+                 "TextAnalysis.kept_frac", "Dedup.kept_frac", "Curation.selected_frac",
+                 "Store.write_amp", "Store.bytes_written_mb", "Store.files_written",
+                 "EventStream.batches", "EventStream.wait_s", "EventStream.drain_s"]:
         m[name] = extra.get(name, 0)
     recall = extra.get("recall_by_path", {})
     m["SimilaritySearch.recall_at_k"] = recall.get("ivf", 0.0)
     m["Pq.recall_at_k"] = recall.get("pq", 0.0)
-    m["EventStream.wait_frac"] = extra.get("EventStream.wait_s", 0.0) / busy
-    m["EventStream.drain_frac"] = extra.get("EventStream.drain_s", 0.0) / busy
-    setup = stats.median([s["total_s"] for s in raw["setups"]])
+    setups = warm_setups(raw)
     for b in ["corpus_embed", "ivf_train", "pq_train", "store_init"]:
-        m[f"Build.{b}_frac"] = stats.median([s.get(f"{b}_s", 0.0) for s in raw["setups"]]) / setup
+        m[f"Build.{b}_s"] = stats.median([s.get(f"{b}_s", 0.0) for s in setups])
     m.update({
         "Spark.session_start_s": raw["session_start_s"],
         "Spark.planning_s": sum(o["planning_s"] for o in ops) / n,
@@ -236,8 +268,9 @@ def report(workload, seed, trace, raw, spec):
     lat = stats.op_latencies(ops)
     p90 = stats.tail_percentile(lat, 90)
     busy = sum(o["latency_s"] for o in ops)
+    setup_times = ", ".join(f"{s['total_s']:.3f}" for s in raw["setups"])
     print(f"[{workload} seed={seed} trace={trace}] {len(ops)} ops in {raw['loop_s']:.2f} s, "
-          f"{len(raw['setups'])} set-up reps, session start {raw['session_start_s']:.2f} s")
+          f"session start {raw['session_start_s']:.2f} s, set-up reps {setup_times} s (first cold)")
     for name, value in values.items():
         print(f"  {name} = {value:.6g} {units.get(name) or UNGATED_UNITS[name]}")
     print(f"  fail_frac = {failed / attempted:.6g} ratio ({failed} of {attempted})")
@@ -246,6 +279,10 @@ def report(workload, seed, trace, raw, spec):
     for kind in sorted({o["kind"] for o in ops}):
         ks = [o["latency_s"] for o in ops if o["kind"] == kind]
         print(f"  {kind}: {len(ks)} ops, median {stats.median(ks):.4g} s")
+    print(f"  reference = {reference_s(raw):.4g} s (Spark job "
+          f"{stats.median(raw['reference_job_samples']):.4g} s, CPU loop "
+          f"{stats.median(raw['reference_cpu_samples']):.4g} s, "
+          f"medians of {len(raw['reference_job_samples'])})")
     print(f"  listener overhead = {raw['listener_s']:.4g} s ({raw['listener_s'] / busy:.3%} of op time)")
     if "ann_recall" in raw["extra"]:
         print(f"  ann_recall = {raw['extra']['ann_recall']:.4g} ratio")
@@ -265,6 +302,8 @@ def main():
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     args = ap.parse_args()
+    # on SIGTERM unwind through run_group, which kills and waits for the JVM
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     if not (os.path.isfile(os.path.join(ROOT, "build.sbt"))
             and os.path.isdir(os.path.join(ROOT, "src", "main", "scala"))):
         fail(f"no engine sources under {ROOT} (expected build.sbt and src/main/scala)", 2)

@@ -3,111 +3,65 @@ package graft.perfbench
 import java.io.File
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.SparkEntry
-import graft.ops._
+import graft.SparkEntryExt
 
 /** `curate_batch`: the bulk curation chain `pipeline_e2e` composes —
   * boilerplate removal, quality filter, MinHash-LSH dedup with
   * keep-best, DSIR selection, token-budget sampling, epoch shuffle and
-  * sequence packing — run over one seeded shard per op. The chain cuts
-  * lineage at the same five stage boundaries as `pipeline_e2e`.
+  * sequence packing — run over one seeded shard per op. Each op calls
+  * the engine's own chain, `SparkEntryExt.pipelineE2eChain`, with the
+  * registry's lineage cut; a traced run wraps each of the five cuts in
+  * a span of the stage's layer.
   */
 final class CurateBatch(spark: SparkSession, t: Tracer, inputs: String)
     extends Workload {
+  import CurateBatch._
+
   private def dirs(prefix: String): Vector[String] =
     new File(s"$inputs/curate").listFiles().map(_.getName).filter(_.startsWith(prefix))
       .sorted.map(n => s"$inputs/curate/$n").toVector
   private val shards = dirs("shard_")
-  private val warm = dirs("warm_")
-  val cycleLength = 2
+  private val warm = dirs("warm_").head
+  val cycleLength: Int = shards.size
 
   private val hashes = scala.collection.mutable.ArrayBuffer[(String, String)]()
-  private var registryOut, chainOut: Array[Row] = _
+  private var corpusRows = -1L
   private val counts = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
 
-  private def docs(dir: String): DataFrame = Tables.documents(spark, dir)
+  /** The registry's cut, `localCheckpoint(false)`. Traced, the stage is
+    * materialized inside its layer's span, and in ops its rows are counted.
+    */
+  private def cut(compute: () => DataFrame, stage: String): DataFrame =
+    if (!t.on) compute().localCheckpoint(false)
+    else {
+      val out = t.span(StageLayer(stage), stage)(compute().localCheckpoint(true))
+      if (t.op >= 0) counts(stage) += out.count()
+      out
+    }
 
-  /** Set-up is two warm-up passes over the set-up shard: first through
-    * the registry's `pipeline_e2e`, then through the benchmark's chain.
-    * The two outputs must match (checked in [[finish]]).
+  /** The chain over the shard in `dir`, collected. */
+  private def curate(dir: String): Array[Row] =
+    t.span("TextAnalysis", "packSequences")(SparkEntryExt.pipelineE2eChain(spark, dir, cut).collect())
+
+  /** A pass over the set-up shard. With `-Dperfbench.checkCorpus=true`
+    * (the first run of a build) the cold rep 0 is instead one pass over
+    * the un-sharded corpus, checked in [[finish]].
     */
   def setup(rep: Int): Map[String, Double] = {
-    val a = System.nanoTime()
-    if (rep == 0) registryOut = SparkEntry.queries("pipeline_e2e")(spark, warm.head).collect()
-    else chainOut = chain(docs(warm.head)).collect()
-    Map("warmup_s" -> (System.nanoTime() - a) / 1e9)
-  }
-
-  /** Traced, count a layer output for the useful-work ratios. */
-  private def count(name: String, df: DataFrame): Unit =
-    if (t.on) counts(name) += df.count()
-
-  /** The `pipeline_e2e` chain over `docs`, each layer call in its span. */
-  def chain(docs: DataFrame): DataFrame = {
-    def cut(df: DataFrame): DataFrame = df.localCheckpoint(false)
-    count("input", docs)
-    val cleaned = cut(t.df("Clean", "removeBoilerplate")(
-        Clean.removeBoilerplate(docs, "doc_id", "text", sep = " the ", minDocs = 3))
-      .filter(col("n_kept") > 0)
-      .select(col("doc_id"), col("clean_text").as("text")))
-    count("cleaned", cleaned)
-    val qdocs = cut {
-      val okIds = t.df("TextAnalysis", "qualityFilter")(
-          TextAnalysis.qualityFilter(cleaned, "doc_id", "text"))
-        .filter(col("reason") === "ok").select(col("doc_id"))
-      cleaned.join(okIds, Seq("doc_id"))
-    }
-    count("qdocs", qdocs)
-    val sdocs = cut {
-      val cands = t.df("Dedup", "minHashLsh")(
-        Dedup.minHashLsh(qdocs, "doc_id", "text", shingleN = 3, numHashes = 16, rowsPerBand = 8))
-      val pairs = cands.filter(col("jaccard") >= 0.5)
-      count("candidates", cands)
-      count("verified", pairs)
-      val survivors = t.df("Dedup", "keepBest")(
-          Dedup.keepBest(qdocs, "doc_id", "text", pairs, iterations = 3))
-        .select(col("doc_id"))
-      qdocs.join(survivors, Seq("doc_id"))
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-    }
-    count("sdocs", sdocs)
-    val pool = cut {
-      val dsirSel = t.df("Curation", "dsirSelect")(
-        Curation.dsirSelect(sdocs, "doc_id", "text",
-          isTarget = col("lang") === "en", buckets = 256, keepFrac = 0.25))
-      sdocs.filter(col("lang") === "en")
-        .unionByName(sdocs.join(dsirSel.select(col("doc_id")), Seq("doc_id")))
-    }
-    val keyed = cut {
-      val mixed = t.df("TextAnalysis", "tokenBudgetSample")(
-        TextAnalysis.tokenBudgetSample(pool, "doc_id", "lang", "text",
-          budgets = Map("en" -> 6000L, "zh" -> 1500L), defaultBudget = 2000L))
-      val selected = pool.join(mixed.select(col("doc_id")), Seq("doc_id"))
-      val order = t.df("Curation", "epochShuffle")(
-        Curation.epochShuffle(selected, "doc_id", seed = "epoch1", nShards = 8))
-      selected.join(order, Seq("doc_id"))
-        .withColumn("__ord", col("shard").cast("long") * lit(1L << 40) + col("pos"))
-    }
-    count("selected", keyed)
-    val packed = t.df("TextAnalysis", "packSequences")(
-      TextAnalysis.packSequences(keyed, "__ord", "text", seqLen = 512))
-    packed.select(col("doc_id").as("__ord"), col("n_tokens"),
-        col("seq_start"), col("seq_end"), col("offset"))
-      .join(keyed.select(col("__ord"), col("doc_id"), col("lang"),
-        col("shard"), col("pos")), Seq("__ord"))
-      .select(col("doc_id"), col("lang"), col("shard"), col("pos"),
-        col("n_tokens"), col("seq_start"), col("seq_end"), col("offset"))
-      .orderBy(col("shard"), col("pos"))
+    if (rep == 0 && sys.props.get("perfbench.checkCorpus").contains("true"))
+      corpusRows = curate(s"$inputs/corpus").length.toLong
+    else curate(warm)
+    Map.empty
   }
 
   def op(i: Int): OpOutcome = {
     val shard = shards(i % shards.size)
-    val input = docs(shard)
-    val out = chain(input).collect()
+    val n = Shard.docs(spark, shard)
+    if (t.on) counts("input") += n
+    val out = curate(shard)
     val name = new File(shard).getName
-    OpOutcome("shard", name, Shard.docs(spark, shard), () => {
+    OpOutcome("shard", name, n, () => {
       val ids = out.map(_.getLong(0))
       if (out.isEmpty) s"$name: empty output"
       else if (ids.distinct.length != ids.length) s"$name: a doc is packed twice"
@@ -116,13 +70,13 @@ final class CurateBatch(spark: SparkSession, t: Tracer, inputs: String)
     })
   }
 
-  /** The benchmark's chain and the registry's `pipeline_e2e` gave the
-    * same rows on the set-up shard.
+  /** One pass over the un-sharded corpus gave the row count the bench
+    * `counts` channel records for `pipeline_e2e` on it.
     */
   def finish(): Seq[(String, Boolean, String)] =
-    if (registryOut == null || chainOut == null) Nil
-    else Seq(("pipeline_e2e_parity", Shard.hash(registryOut) == Shard.hash(chainOut),
-      s"set-up shard: chain ${chainOut.length} rows, pipeline_e2e ${registryOut.length} rows"))
+    if (corpusRows < 0) Nil
+    else Seq(("pipeline_e2e_rows", corpusRows == CorpusRows,
+      s"un-sharded corpus: $corpusRows rows, pipeline_e2e records $CorpusRows"))
 
   def extra: Map[String, Any] = {
     def frac(a: String, b: String): Double = counts(a).toDouble / math.max(1L, counts(b))
@@ -130,9 +84,22 @@ final class CurateBatch(spark: SparkSession, t: Tracer, inputs: String)
       "output_hashes" -> hashes.map { case (s, h) => Map("shard" -> s, "hash" -> h) }.toSeq,
       "Clean.kept_frac" -> frac("cleaned", "input"),
       "TextAnalysis.kept_frac" -> frac("qdocs", "cleaned"),
-      "Dedup.verified_per_candidate" -> frac("verified", "candidates"),
-      "Curation.selected_frac" -> frac("selected", "sdocs"))
+      "Dedup.kept_frac" -> frac("sdocs", "qdocs"),
+      "Curation.selected_frac" -> frac("keyed", "sdocs"))
   }
+}
+
+object CurateBatch {
+  /** The layer that owns each of the chain's cut stages. `keyed` holds
+    * `TextAnalysis.tokenBudgetSample` and `Curation.epochShuffle`; it is
+    * charged to Curation.
+    */
+  val StageLayer: Map[String, String] = Map("cleaned" -> "Clean", "qdocs" -> "TextAnalysis",
+    "sdocs" -> "Dedup", "pool" -> "Curation", "keyed" -> "Curation")
+  /** `pipeline_e2e` rows on the sf0.1 corpus, as the bench `counts`
+    * channel records them.
+    */
+  val CorpusRows = 219L
 }
 
 object Shard {

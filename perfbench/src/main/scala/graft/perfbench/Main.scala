@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * passed its checks, and the engine counters it consumed.
   */
 final case class OpRecord(kind: String, path: String, latencyS: Double, items: Long,
-    ok: Boolean, error: String, counters: Counters, gcMs: Long, referenceS: Double)
+    ok: Boolean, error: String, counters: Counters, gcMs: Long)
 
 /** A workload: its set-up, its op schedule, and its checks. `extra`
   * carries the workload's own useful-work ratios.
@@ -46,6 +46,25 @@ final case class OpOutcome(kind: String, path: String, items: Long, check: () =>
   * run.py turns them into metrics.
   */
 object Main {
+  /** Reference samples taken after the warm-up, and again after the loop. */
+  val RefSamples = 2
+
+  /** Seconds for a fixed integer loop on four threads. */
+  def cpuLoop(): Double = {
+    val a = System.nanoTime()
+    val threads = (0 until 4).map { k =>
+      val t = new Thread(() => {
+        var x = k + 1L
+        var i = 0
+        while (i < 30000000) { x = x * 6364136223846793005L + 1442695040888963407L; x ^= x >>> 29; i += 1 }
+        CpuLoop.sink += x
+      })
+      t.start(); t
+    }
+    threads.foreach(_.join())
+    (System.nanoTime() - a) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(workload, inputs, work, secondsArg, traceArg, repsArg, out) = args
     val seconds = secondsArg.toDouble
@@ -83,18 +102,29 @@ object Main {
       Map("total_s" -> (System.nanoTime() - s0) / 1e9) ++ builds
     }
     w.warmup()
-    // A fixed Spark job outside the engine's code (one aggregation, one
-    // shuffle), timed before every op: a shared host's speed can drift by
-    // tens of percent within minutes, and op latency over this reference
-    // cancels the drift while engine changes still move it. The minimum of
-    // three runs filters the clean-up work an op leaves behind.
-    def reference(): Double = (1 to 3).map { _ =>
-      val a = System.nanoTime()
-      spark.range(0, 400000, 1, 4).selectExpr("sum(id % 7)").collect()
-      spark.range(0, 100000, 1, 4).selectExpr("id % 64 as k").groupBy("k").count().collect()
-      (System.nanoTime() - a) / 1e9
-    }.min
-    (1 to 5).foreach(_ => reference())
+    // Two fixed reference workloads outside the engine's code: a Spark job
+    // (one aggregation, one shuffle) and an integer loop on four threads.
+    // A shared host's speed can drift by tens of percent within minutes;
+    // op latency over the references cancels the drift while engine
+    // changes still move it. The Spark job tracks the scheduling and
+    // planning that bound small ops, the loop the executor CPU that bounds
+    // large ones. A sample is the minimum of three runs, which filters the
+    // clean-up work an op leaves behind. Samples are taken after the
+    // warm-up, before every op and after the loop.
+    val jobRefs, cpuRefs = mutable.ArrayBuffer[Double]()
+    def reference(): Unit = {
+      jobRefs += (1 to 3).map { _ =>
+        val a = System.nanoTime()
+        spark.range(0, 400000, 1, 4).selectExpr("sum(id % 7)").collect()
+        spark.range(0, 100000, 1, 4).selectExpr("id % 64 as k").groupBy("k").count().collect()
+        (System.nanoTime() - a) / 1e9
+      }.min
+      cpuRefs += (1 to 3).map(_ => cpuLoop()).min
+    }
+    reference()
+    jobRefs.clear()
+    cpuRefs.clear()
+    (1 to RefSamples).foreach(_ => reference())
 
     val ops = mutable.ArrayBuffer[OpRecord]()
     val listenerNs0 = meter.handlerNs
@@ -102,7 +132,7 @@ object Main {
     val deadline = loopStart + (seconds * 1e9).toLong
     var i = 0
     while (System.nanoTime() < deadline || i % w.cycleLength != 0) {
-      val ref = reference()
+      reference()
       BusDrain(spark.sparkContext)
       val before = meter.snapshot
       val gc0 = gcMs
@@ -116,10 +146,11 @@ object Main {
       val err = try outcome.check() catch { case e: Exception => e.toString }
       BusDrain(spark.sparkContext)
       ops += OpRecord(outcome.kind, outcome.path, lat, outcome.items, err == null || err.isEmpty,
-        Option(err).getOrElse(""), meter.snapshot.minus(before), gcMs - gc0, ref)
+        Option(err).getOrElse(""), meter.snapshot.minus(before), gcMs - gc0)
       i += 1
     }
     val loopS = (System.nanoTime() - loopStart) / 1e9
+    (1 to RefSamples).foreach(_ => reference())
     val listenerS = (meter.handlerNs - listenerNs0) / 1e9
     val checks = w.finish()
     // let the context cleaner drop unreferenced blocks between collections
@@ -133,10 +164,12 @@ object Main {
       "setups" -> setups,
       "loop_s" -> loopS,
       "listener_s" -> listenerS,
+      "reference_job_samples" -> jobRefs.toSeq,
+      "reference_cpu_samples" -> cpuRefs.toSeq,
       "live_heap_mb" -> heapMb,
       "ops" -> ops.map(o => Map(
         "kind" -> o.kind, "path" -> o.path, "latency_s" -> o.latencyS, "items" -> o.items,
-        "ok" -> o.ok, "error" -> o.error, "gc_ms" -> o.gcMs, "reference_s" -> o.referenceS)
+        "ok" -> o.ok, "error" -> o.error, "gc_ms" -> o.gcMs)
         ++ o.counters.toMap).toSeq,
       "checks" -> checks.map { case (n, ok, d) => Map("name" -> n, "ok" -> ok, "detail" -> d) },
       "extra" -> w.extra,
@@ -149,6 +182,11 @@ object Main {
     Files.write(Paths.get(out), Json(result).getBytes("UTF-8"))
     spark.stop()
   }
+}
+
+/** Keeps the reference loop's result live, so the JIT cannot drop it. */
+object CpuLoop {
+  @volatile var sink = 0L
 }
 
 /** JSON for the raw result: Scala maps, sequences and primitives. */

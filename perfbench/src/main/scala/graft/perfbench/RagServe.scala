@@ -36,6 +36,8 @@ final class RagServe(spark: SparkSession, t: Tracer, inputs: String)
   private var ptVecs: Array[Array[Double]] = _
   private var centVecs: Array[(Long, Array[Double])] = _
   private var cellSize: Map[Long, Long] = _
+  private var qvecs: Map[Long, Array[Double]] = _
+  private var idIndex: Map[Long, Int] = _
 
   private val recallSum = scala.collection.mutable.Map[String, Double]().withDefaultValue(0.0)
   private val recallN = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
@@ -45,9 +47,14 @@ final class RagServe(spark: SparkSession, t: Tracer, inputs: String)
     val a = System.nanoTime(); body; (System.nanoTime() - a) / 1e9
   }
 
+  /** The builds over the corpus. The cold rep 0 runs them over every
+    * [[ColdEvery]]-th doc only: it loads and compiles the code the later
+    * reps time.
+    */
   def setup(rep: Int): Map[String, Double] = {
     val embedS = timed {
-      val docs = spark.read.parquet(s"$inputs/corpus/documents.parquet")
+      val corpus = spark.read.parquet(s"$inputs/corpus/documents.parquet")
+      val docs = (if (rep == 0) corpus.filter(col("doc_id") % ColdEvery === 0) else corpus)
         .select(col("doc_id"), col("text"))
       val chunks = t.df("Chunker", "chunk")(
         Chunker.chunk(docs, Seq("doc_id"), separator = " the ", minLen = 20)
@@ -79,12 +86,24 @@ final class RagServe(spark: SparkSession, t: Tracer, inputs: String)
     Map("corpus_embed_s" -> embedS, "ivf_train_s" -> ivfS, "pq_train_s" -> pqS)
   }
 
-  /** One small op per path (JIT and codegen). */
-  override def warmup(): Unit = queries.keys.filter(_ < 0).foreach(op => runOp(op))
+  /** One small op per path (JIT and codegen), then the in-memory copies
+    * the checks read, so the measured loop does not build them.
+    */
+  override def warmup(): Unit = {
+    queries.keys.filter(_ < 0).foreach(op => runOp(op))
+    loadCheckData()
+  }
 
-  private def loadCheckData(): Unit = if (ptIds == null) {
+  private def loadCheckData(): Unit = {
+    val all = queries.values.flatten.toSeq
+    qvecs = spark.createDataFrame(
+        all.map(r => Row(r.getAs[Long]("qid"), r.getAs[String]("text"), r.getAs[String]("answers"))).asJava,
+        QuerySchema)
+      .transform(VectorOps.embedTextDistributed(_, Seq("qid"), "text", Dim))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
     val rows = vecs.collect()
     ptIds = rows.map(_.getLong(0))
+    idIndex = ptIds.zipWithIndex.toMap
     ptVecs = rows.map(_.getSeq[Double](1).toArray)
     centVecs = cents.collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     cellSize = assigned.groupBy("cid").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -151,7 +170,6 @@ final class RagServe(spark: SparkSession, t: Tracer, inputs: String)
 
   /** Output checks of one op; returns "" when every check passes. */
   private def check(path: String, rows: Array[Row], result: Array[Row]): String = {
-    loadCheckData()
     if (result.length != rows.length) return s"$path: ${result.length} results for ${rows.length} queries"
     val byQid = result.map(r => r.getLong(0) -> r).toMap
     // every context fits its char budget and carries text
@@ -170,20 +188,15 @@ final class RagServe(spark: SparkSession, t: Tracer, inputs: String)
         return s"$path: query ${r.getLong(0)} recall/mrr ${r.get(5)}/${r.get(6)} != $rec/$mrr"
     }
     // hits against a driver-side brute-force top-k
-    val qvec = spark.createDataFrame(
-        rows.map(r => Row(r.getAs[Long]("qid"), r.getAs[String]("text"), r.getAs[String]("answers")))
-          .toSeq.asJava, QuerySchema)
-      .transform(VectorOps.embedTextDistributed(_, Seq("qid"), "text", Dim))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
     val sample = rows.map(_.getAs[Long]("qid")).sortBy(q => (q * 0x9E3779B97F4A7C15L) >>> 1).take(ExactSample)
-    val idIndex = ptIds.zipWithIndex.toMap
     for (qid <- rows.map(_.getAs[Long]("qid"))) {
       val got = byQid(qid).getAs[scala.collection.Seq[Long]]("hit_ids")
       if (got.size > K || got.exists(id => !idIndex.contains(id)))
         return s"$path: query $qid returned unknown or too many ids $got"
-      val scores = ptVecs.map(dot(qvec(qid), _))
-      val top = scores.indices.sortBy(j => (-scores(j), ptIds(j))).take(K)
-      val kth = scores(top.last)
+      // the brute force runs only for the queries a check compares
+      lazy val scores = ptVecs.map(dot(qvecs(qid), _))
+      lazy val top = scores.indices.sortBy(j => (-scores(j), ptIds(j))).take(K)
+      lazy val kth = scores(top.last)
       path match {
         case "exact" =>
           knnPairs += ptIds.length; knnHits += K
@@ -200,7 +213,7 @@ final class RagServe(spark: SparkSession, t: Tracer, inputs: String)
           recallSum(ann) += good.toDouble / K
           recallN(ann) += 1
           if (ann == "ivf") {
-            val probed = centVecs.sortBy { case (cid, c) => (-cosine(qvec(qid), c), cid) }.take(IvfProbes)
+            val probed = centVecs.sortBy { case (cid, c) => (-cosine(qvecs(qid), c), cid) }.take(IvfProbes)
             ivfCands += probed.map { case (cid, _) => cellSize.getOrElse(cid, 0L) }.sum
             ivfHits += got.size
           }
@@ -235,6 +248,8 @@ object RagServe {
   val ExactSample = 5
   /** Train the ANN models on points whose id is a multiple of this. */
   val TrainEvery = 4
+  /** The cold set-up rep builds over docs whose id is a multiple of this. */
+  val ColdEvery = 20
 
   val QuerySchema: StructType = StructType(Seq(
     StructField("qid", LongType), StructField("text", StringType), StructField("answers", StringType)))

@@ -21,6 +21,10 @@ import run  # noqa: E402
 import stats  # noqa: E402
 
 
+# sha256 of the sf0.1 `documents.parquet` the engine's bench reads
+SF01_DOCUMENTS_SHA256 = "d10b0da67e5aceb465e89365781dab5c69d3c62b64a8308398c6fd3fb09bcf82"
+
+
 def tree_digest(root):
     h = hashlib.sha256()
     for d, _, files in sorted(os.walk(root)):
@@ -36,10 +40,10 @@ def raw_run(ok=True):
     """A minimal harness record, shaped like Main's output."""
     op = {"kind": "small", "path": "exact", "latency_s": 0.5, "items": 1, "ok": ok, "error": "",
           "gc_ms": 3, "jobs": 4, "tasks": 8, "job_s": 0.3, "planning_s": 0.05, "cpu_s": 0.2,
-          "sched_delay_s": 0.01, "shuffle_write_bytes": 1000, "spill_bytes": 0, "reference_s": 0.1,
+          "sched_delay_s": 0.01, "shuffle_write_bytes": 1000, "spill_bytes": 0,
           "input_bytes": 5000}
     return {"session_start_s": 4.0, "setups": [{"total_s": 2.0}, {"total_s": 3.0}],
-            "loop_s": 1.0, "listener_s": 0.001, "live_heap_mb": 100.0,
+            "loop_s": 1.0, "listener_s": 0.001, "reference_job_samples": [0.1, 0.12, 0.11], "reference_cpu_samples": [0.07], "live_heap_mb": 100.0,
             "ops": [op, dict(op, latency_s=0.7)], "checks": [], "extra": {},
             "layers": {"Knn": {"busy_s": 0.4, "calls": 2, "jobs": 3, "cpu_s": 0.1,
                                "shuffle_write_bytes": 500}}}
@@ -91,6 +95,26 @@ class SpecTest(unittest.TestCase):
         self.assertLessEqual({m["name"] for m in spec["end_to_end"]}, set(run.end_to_end(raw)))
         self.assertLessEqual({m["name"] for m in spec["per_layer"]}, set(run.per_layer(raw)))
 
+    def test_setup_s_is_the_median_of_the_warm_reps(self):
+        raw = raw_run()
+        raw["setups"] = [{"total_s": 20.0}, {"total_s": 3.0}, {"total_s": 2.0}]
+        self.assertEqual(run.end_to_end(raw)["setup_s"], 2.5)
+
+    def test_corpus_check_is_replayed_for_later_runs_of_a_build(self):
+        check = {"name": "pipeline_e2e_rows", "ok": True, "detail": "219 rows"}
+        with tempfile.TemporaryDirectory() as d:
+            saved = run.CORPUS_CHECK
+            run.CORPUS_CHECK = os.path.join(d, "corpus_check.json")
+            try:
+                first = dict(raw_run(), checks=[check])
+                run.corpus_checks("curate_batch", first)
+                later = raw_run()
+                run.corpus_checks("curate_batch", later)
+            finally:
+                run.CORPUS_CHECK = saved
+        self.assertEqual([(c["name"], c["ok"]) for c in later["checks"]],
+                         [("pipeline_e2e_rows", True)])
+
     def test_failed_op_is_reported_as_incorrect(self):
         spec = json.load(open(os.path.join(run.ROOT, "BENCHMARK.json")))
         raw = raw_run()
@@ -101,6 +125,13 @@ class SpecTest(unittest.TestCase):
 
 
 class GeneratorTest(unittest.TestCase):
+    def test_corpus_is_the_sf01_documents_table(self):
+        with open(gen.CORPUS, "rb") as f:
+            self.assertEqual(hashlib.sha256(f.read()).hexdigest(), SF01_DOCUMENTS_SHA256)
+        docs = gen.corpus()
+        self.assertEqual(len(docs), 5000)
+        self.assertEqual([d[0] for d in docs], list(range(5000)))
+
     def test_same_seed_gives_byte_identical_inputs(self):
         with tempfile.TemporaryDirectory() as a, tempfile.TemporaryDirectory() as b:
             gen.generate(7, a)
