@@ -18,23 +18,7 @@ object Bench {
     catch { case e: Exception =>
       System.err.println(s"stale bench_summary delete failed (continuing): $e")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // SPARK_GRAFT_SHUFFLE: dev override only — see RunQ. Lazy-plan
-      // split-safety rides the volume-sized AQE initial partition
-      // number; AQE coalescing keeps the sf0.1 suite's task counts.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        VolumeConf.initialPartitions(sfDir, cpus.toInt).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sfDir)
     // Optional args: subset of query names (dev); driver passes none.
     val selected =
       if (args.nonEmpty) SparkEntry.queries.view.filterKeys(args.toSet).toMap

@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ListenerBusBridge
 
 /** Dev tool: noise-robust per-query cost attribution. Wall-clock on this
   * host swings up to 4x between identical runs (BASELINE.md), so A/B
@@ -12,9 +12,11 @@ import org.apache.spark.sql.SparkSession
   * CPU time (far steadier than wall). One warm-up rep, then `reps`
   * measured reps; reports the MIN across reps per channel (counts are
   * identical across reps; min CPU is the least-interfered rep).
+  * `reps=0` is a quick look instead: no warm-up, and each query's one
+  * untimed rep reports its channels and wall time and shows its rows.
   *
   * Usage: runMain graft.DevMeter [reps=N] <query> [<query>...|all]
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1); session from [[GraftSession]].
   */
 object DevMeter {
 
@@ -46,31 +48,21 @@ object DevMeter {
     val (repArg, names0) = args.partition(_.startsWith("reps="))
     val reps = repArg.headOption.map(_.stripPrefix("reps=").toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        VolumeConf.initialPartitions(sfDir, cpus.toInt).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sfDir)
     val names =
       if (names0.isEmpty || names0.sameElements(Array("all")))
         SparkEntry.queries.keys.toSeq.sorted.sortBy(_.startsWith("stream_"))
       else names0.toSeq
     // Bench-style warm-up + memo prewarm so reps measure serving.
-    Seq("q1_pricing", "v_knn_join", "q_events_hourly").foreach { n =>
-      SparkEntry.queries.get(n).foreach { fn =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
+    if (reps > 0) {
+      Seq("q1_pricing", "v_knn_join", "q_events_hourly").foreach { n =>
+        SparkEntry.queries.get(n).foreach { fn =>
+          try fn(spark, sfDir).count() catch { case _: Throwable => () }
+        }
       }
+      try SparkEntryExt.prewarmMemos(spark, sfDir)
+      catch { case e: Throwable => System.err.println(s"prewarm failed: $e") }
     }
-    try SparkEntryExt.prewarmMemos(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"prewarm failed: $e") }
     println("query,rep,wall_s,jobs,stages,tasks,cpu_s,run_s,shuf_read_mb,shuf_write_mb")
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query '$name'"))
@@ -78,18 +70,22 @@ object DevMeter {
         val meter = new Meter
         spark.sparkContext.addSparkListener(meter)
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"$name failed: $e") }
+        val df =
+          try {
+            val d = fn(spark, sfDir)
+            d.write.format("noop").mode("overwrite").save()
+            Some(d)
+          } catch { case e: Throwable => System.err.println(s"$name failed: $e"); None }
         val wall = (System.nanoTime() - t0) / 1e9
-        // listener bus is async and its drain API is private[spark]; a
-        // short sleep suffices for a dev tool's event settle
-        Thread.sleep(300)
+        ListenerBusBridge.drain(spark.sparkContext)
         spark.sparkContext.removeSparkListener(meter)
         val Array(j, st, tk, cpu, run, sr, sw) = meter.snapshot()
-        spark.catalog.clearCache()
-        if (rep > 0) // rep 0 is the untimed warm-up
+        // rep 0 is the untimed warm-up, reported only when it is the only rep
+        if (rep > 0 || reps == 0)
           println(f"$name,$rep,$wall%.3f,$j,$st,$tk,${cpu / 1e9}%.3f,${run / 1e3}%.3f," +
             f"${sr / 1e6}%.2f,${sw / 1e6}%.2f")
+        if (reps == 0) df.foreach(_.show(12, 60))
+        spark.catalog.clearCache()
       }
     }
     spark.stop()

@@ -237,15 +237,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: ScaleGen <srcSfDir> <dstDir> [copies=10] [table ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(args(0))
     inflate(spark, args(0), args(1),
       if (args.length > 2) args(2).toInt else 10,
       if (args.length > 3) args.drop(3).toSet else AllTables)

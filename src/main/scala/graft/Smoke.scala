@@ -1,22 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke main: mirrors the driver's t1 gate — runs `SparkEntry.entry`
   * and asserts rows > 0, printing the row count and a sample.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"[smoke] entry rows=$n")

@@ -651,7 +651,7 @@ object SparkEntryExt {
         s.sessionState.conf.numShufflePartitions)
       // Under AQE + partition coalescing, SQLConf.numShufflePartitions
       // reads `coalescePartitions.initialPartitionNum` whenever that
-      // key is SET — and the harness sessions (RunQ/Bench/Verify) set
+      // key is SET — and the harness sessions (GraftSession) set
       // it volume-sized. Overriding only `spark.sql.shuffle.partitions`
       // would be silently shadowed there (today the two sizings share
       // VolumeConf over the same directory so the shadowing is
@@ -2224,8 +2224,9 @@ object SparkEntryExt {
       // partition), but the old per-path tails planned 4× (2 joins +
       // group-fold + mean aggregate) ≈ 16 extra sequential AQE stage
       // jobs for 80 rows of input.
-      val tagged = Seq("knn" -> knn5, "bm25" -> bm5, "rrf" -> rrf5,
-          "hybrid_mmr" -> mmr3)
+      val paths = Seq("knn" -> knn5, "bm25" -> bm5, "rrf" -> rrf5,
+        "hybrid_mmr" -> mmr3)
+      val tagged = paths
         .map { case (n, h) => h.withColumn("method", lit(n)) }
         .reduce(_.unionByName(_))
       val withRel = tagged.join(qLab, "query_id").join(pLab, "point_id")
@@ -2242,7 +2243,7 @@ object SparkEntryExt {
       // drop such methods. Identical output whenever every method has
       // hits — the case at every bench/verify scale.
       import s.implicits._
-      Seq("knn", "bm25", "rrf", "hybrid_mmr").toDF("method")
+      paths.map(_._1).toDF("method")
         .join(perMethod, Seq("method"), "left")
         .select(col("method"), coalesce(col("n_queries"), lit(0L)).as("n_queries"),
           col("mean_ndcg"))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,29 +6,14 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // driver contract: exactly (sfDir, outDir). Extra args are a dev-only
     // name subset so a changed query can be re-checked without dumping
-    // all 96 (oracle_sql.json is filtered to match, so dev/check.py
-    // compares just the subset).
+    // the whole registry (oracle_sql.json is filtered to match, so
+    // dev/check.py compares just the subset).
     val sfDir = args(0)
     val outDir = args(1)
     val subset: Option[Set[String]] =
       if (args.length > 2) Some(args.drop(2).toSet) else None
     def keep(name: String): Boolean = subset.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // volume-sized AQE initial partition count (see RunQ): lazy plans
-      // get split-safety at any sfDir volume, AQE coalesces it back at
-      // the verify scale factors
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        VolumeConf.initialPartitions(sfDir, cpus.toInt).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sfDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (keep(name))

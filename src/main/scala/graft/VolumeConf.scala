@@ -4,7 +4,7 @@ package graft
   * arithmetic a production job does with its cluster's task size,
   * shared by the library's eager stored-table builds
   * (`SparkEntryExt.withVocabSizedShuffle`) and the harness sessions'
-  * AQE config (RunQ/Bench/Verify set
+  * AQE config ([[GraftSession]] sets
   * `spark.sql.adaptive.coalescePartitions.initialPartitionNum` from
   * it).
   *
@@ -21,10 +21,7 @@ package graft
   * of the key space) while AQE's coalescer merges the small-decade
   * cost back down toward `advisoryPartitionSizeInBytes` — the
   * oversplit is paid only in shuffle-file count, never in task count,
-  * so sf0.01/sf0.1 suites keep their plans. This removed
-  * `SPARK_GRAFT_SHUFFLE` as a correctness-of-scale dependency
-  * (r18's SCALING.md records the seam it papered over); the env var
-  * remains as an explicit dev override only.
+  * so sf0.01/sf0.1 suites keep their plans.
   */
 object VolumeConf {
 
@@ -68,10 +65,7 @@ object VolumeConf {
   }
 
   /** The AQE initial partition number for a harness session over
-    * `sfDir`: volume-sized, floored at the session's parallelism and
-    * at any explicit `SPARK_GRAFT_SHUFFLE` dev override (the override
-    * must never be allowed to UNDER-split what the volume sizing
-    * would).
+    * `sfDir`: volume-sized, floored at the session's parallelism.
     */
   def initialPartitions(sfDir: String, cpus: Int): Int = {
     val bytes = docBytes(sfDir)
@@ -83,9 +77,8 @@ object VolumeConf {
     if (bytes == 0L)
       System.err.println(
         s"[graft] WARNING: volume probe read 0 bytes at $sfDir/documents.parquet" +
-          " — AQE initial partitions fall back to the CPU/env floor; at a big" +
+          " — AQE initial partitions fall back to the CPU floor; at a big" +
           " decade this under-splits wide-key aggregates (check the path)")
-    val explicit = sys.env.get("SPARK_GRAFT_SHUFFLE").flatMap(_.toIntOption)
-    volumeSizedPartitions(bytes, math.max(cpus, explicit.getOrElse(0)))
+    volumeSizedPartitions(bytes, cpus)
   }
 }

@@ -621,11 +621,13 @@ object EventStream {
         val fs = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val merged =
           if (fs.exists(storePath)) {
-            // replace by DOC, not by chunk key: a re-ingested doc that
-            // now chunks into FEWER pieces must drop its old tail
-            // chunks too, or deleted text keeps matching kNN queries
+            // replace by the micro-batch's docs, not by the docs its
+            // chunks carry: a re-ingested doc that now chunks into
+            // fewer pieces, or into none (no chunk reaches minLen),
+            // must drop its old chunks too, or deleted text keeps
+            // matching kNN queries
             val base = spark.read.parquet(storeDir)
-            base.join(points.select(col("doc_id")).distinct(),
+            base.join(batch.select(col("doc_id")).distinct(),
                 Seq("doc_id"), "left_anti")
               .unionByName(points)
           } else points

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -13,4 +14,12 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+}
+
+/** The listener bus is `private[spark]` too: blocks until every posted
+  * event has been delivered, so listener counters read after an action
+  * are complete.
+  */
+object ListenerBusBridge {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

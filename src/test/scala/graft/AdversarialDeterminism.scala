@@ -33,7 +33,7 @@ object AdversarialDeterminism {
     spark.sparkContext.setLogLevel("WARN")
     // Base data dir: first CLI arg, then the runners' env contract,
     // then the container default — the dev audit should run on any
-    // machine's data layout, like Verify/Bench/RunQ do.
+    // machine's data layout, like Verify/Bench/DevMeter do.
     val sfDir = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.001")

@@ -1018,6 +1018,30 @@ class OpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming index build: a doc re-ingested with no chunk-sized text keeps no chunks") {
+    val in = java.nio.file.Files.createTempDirectory("ixshort-in").toString
+    val store = java.nio.file.Files.createTempDirectory("ixshort-st").toString + "/points"
+    Tables.documents(spark, sf0001).limit(5).select(col("doc_id"), col("text"))
+      .write.mode("append").parquet(in)
+    val q = EventStream.indexStream(spark, in, store, dim = 8)
+    try {
+      q.processAllAvailable()
+      val before = spark.read.parquet(store)
+      val victim = before.agg(min(col("doc_id"))).head().getLong(0)
+      val others = before.filter(col("doc_id") =!= victim).count()
+      assert(others > 0, "fixture needs docs besides the re-ingested one")
+      // shorter than the chunker's minLen = 20: the new version yields
+      // no chunk at all, so nothing of the old version may stay
+      Seq((victim, "too short")).toDF("doc_id", "text")
+        .write.mode("append").parquet(in)
+      q.processAllAvailable()
+      val after = spark.read.parquet(store)
+      assert(after.filter(col("doc_id") === victim).count() == 0,
+        s"doc $victim was re-ingested without chunkable text; its old chunks must go")
+      assert(after.count() == others, "the other docs' chunks must be untouched")
+    } finally q.stop()
+  }
+
   test("index stream restart: checkpoint resumes at the first unprocessed batch") {
     val in = java.nio.file.Files.createTempDirectory("ixrst-in").toString
     val store = java.nio.file.Files.createTempDirectory("ixrst-st").toString + "/points"
