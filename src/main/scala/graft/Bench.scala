@@ -30,18 +30,11 @@ object Bench {
         try fn(spark, sfDir).count() catch { case _: Throwable => () }
       }
     }
-    // Untimed pre-warm of every memoized one-time build (trained IVF /
-    // PQ / BPE models, stored index tables): without this, a query
-    // whose refinement the budget never reaches records its PROBE rep,
-    // and for the memoized family that cold rep includes model
-    // training + index writes — the round-12 driver-bench outliers
-    // (sim_ivfpq 5.0x, sim_ivf_trained_batch 4.1x, text_bpe_apply
-    // ~5x vs warm) were exactly this artifact. Production runs these
-    // builds at ingest; every recorded rep should measure serving.
-    // Guarded: a prewarm failure must not fail the bench — the probe
-    // pass itself will then record the build-inclusive time, which is
-    // the pre-round-13 behavior, not a new failure mode.
-    try SparkEntryExt.prewarmMemos(spark, sfDir)
+    // Untimed run of every corpus-keyed one-time build (Memo.prewarm),
+    // so a query whose refinement the budget never reaches does not
+    // record training or index writes in its probe rep. Guarded: if it
+    // fails, the probe pass records the build-inclusive time instead.
+    try Memo.prewarm(spark, sfDir)
     catch { case e: Throwable =>
       System.err.println(s"memo prewarm failed (continuing): $e")
     }

@@ -60,7 +60,7 @@ object DevMeter {
           try fn(spark, sfDir).count() catch { case _: Throwable => () }
         }
       }
-      try SparkEntryExt.prewarmMemos(spark, sfDir)
+      try Memo.prewarm(spark, sfDir)
       catch { case e: Throwable => System.err.println(s"prewarm failed: $e") }
     }
     println("query,rep,wall_s,jobs,stages,tasks,cpu_s,run_s,shuf_read_mb,shuf_write_mb")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -198,87 +198,21 @@ object DevProfile {
     }
   }
 
-  /** pipeline_e2e stage by stage — the composed-bill attribution the
-    * 100× row records. Mirrors the registered query. ATTRIBUTION
-    * LESSON (found at 1000×): a `localCheckpoint(false)` is lazy only
-    * for its FINAL stage — under AQE, `AdaptiveSparkPlanExec.execute()`
-    * runs every upstream query stage (all shuffles) at checkpoint
-    * CONSTRUCTION to pick the final plan. So every checkpoint
-    * construction sits under its own `*-construct` timer; the count()
-    * timers measure only the final-stage tail. (The registered query's
-    * wall-clock is unaffected — this is profiler placement, not a plan
-    * change.)
+  /** pipeline_e2e stage by stage: the registry's own chain
+    * ([[SparkEntryExt.pipelineE2eChain]]) with each of its five cuts
+    * timed as construction plus an eager materialization (under AQE a
+    * cut's construction already runs every upstream shuffle stage), and
+    * the pack stage timed on the chain's output.
     */
   private def profileE2e(spark: SparkSession, sfDir: String): Unit = {
-    val docs = Tables.documents(spark, sfDir)
-    val cleaned = time("1-construct clean checkpoint") {
-      Clean.removeBoilerplate(docs, "doc_id", "text",
-          sep = " the ", minDocs = 3)
-        .filter(col("n_kept") > 0)
-        .select(col("doc_id"), col("clean_text").as("text"))
-        .localCheckpoint(false)
-    }
-    time("1 clean")(println("  n=" + cleaned.count()))
-    val okIds = time("2-construct qualityFilter") {
-      TextAnalysis.qualityFilter(cleaned, "doc_id", "text")
-        .filter(col("reason") === "ok").select(col("doc_id"))
-    }
-    val qdocs = time("2-construct checkpoint") {
-      cleaned.join(okIds, Seq("doc_id")).localCheckpoint(false)
-    }
-    time("2 quality gate")(println("  n=" + qdocs.count()))
-    val pairs = time("3a-construct LSH checkpoint") {
-      Dedup.minHashLsh(qdocs, "doc_id", "text",
-          shingleN = 3, numHashes = 16, rowsPerBand = 8)
-        .filter(col("jaccard") >= 0.5)
-        .localCheckpoint(false)
-    }
-    time("3a LSH pairs")(println("  n=" + pairs.count()))
-    // keepBest's label rounds run EAGERLY at construction (per-round
-    // localCheckpoints) — time the construction or the loop cost
-    // vanishes from the attribution (the semdedup-profile lesson)
-    val survivors = time("3b label propagation (construction)") {
-      Dedup.keepBest(qdocs, "doc_id", "text", pairs, iterations = 3)
-        .select(col("doc_id"))
-    }
-    val sdocs = time("3c-construct checkpoint") {
-      qdocs.join(survivors, Seq("doc_id"))
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .localCheckpoint(false)
-    }
-    time("3c keep-best survivors")(println("  n=" + sdocs.count()))
-    val dsirSel = time("4a DSIR select (construction)") {
-      graft.ops.Curation.dsirSelect(sdocs, "doc_id", "text",
-        isTarget = col("lang") === "en", buckets = 256, keepFrac = 0.25)
-    }
-    val pool = time("4b-construct checkpoint") {
-      sdocs.filter(col("lang") === "en")
-        .unionByName(sdocs.join(dsirSel.select(col("doc_id")), Seq("doc_id")))
-        .localCheckpoint(false)
-    }
-    time("4b DSIR select + pool")(println("  n=" + pool.count()))
-    val mixed = TextAnalysis.tokenBudgetSample(pool, "doc_id", "lang", "text",
-      budgets = Map("en" -> 6000L, "zh" -> 1500L), defaultBudget = 2000L)
-    val selected = pool.join(mixed.select(col("doc_id")), Seq("doc_id"))
-    // knobs single-sourced from the registry chain (pipelineE2eChain
-    // is the source of truth; this profile re-expresses its stages
-    // inline ONLY to attach per-stage timers and counts — keep any
-    // knob change there mirrored here or the staged-vs-checkpointed
-    // comparisons stop measuring the same chain)
-    val order = graft.ops.Curation.epochShuffle(selected, "doc_id",
-      seed = SparkEntryExt.epochSeed, nShards = SparkEntryExt.epochShards)
-    val keyed = time("5-6-construct checkpoint") {
-      selected.join(order, Seq("doc_id"))
-        .withColumn("__ord", col("shard").cast("long") * lit(1L << 40) + col("pos"))
-        .localCheckpoint(false)
-    }
-    time("5-6 mix + epoch shuffle")(println("  n=" + keyed.count()))
-    val packed = TextAnalysis.packSequences(keyed, "__ord", "text", seqLen = 512)
-    val out = packed.select(col("doc_id").as("__ord"), col("n_tokens"),
-        col("seq_start"), col("seq_end"), col("offset"))
-      .join(keyed.select(col("__ord"), col("doc_id"), col("lang"),
-        col("shard"), col("pos")), Seq("__ord"))
-    time("7 pack + join back")(println("  n=" + out.count()))
+    def timedCut(compute: () => DataFrame, stage: String): DataFrame =
+      time(stage) {
+        val out = compute().localCheckpoint(true)
+        println("  n=" + out.count())
+        out
+      }
+    val out = SparkEntryExt.pipelineE2eChain(spark, sfDir, timedCut)
+    time("pack")(println("  n=" + out.count()))
   }
 
   /** The DURABLE-STAGING twin of the e2e profile: the same chain with
@@ -287,11 +221,11 @@ object DevProfile {
     * One total wall-clock plus a per-stage directory listing; compare
     * against the `e2e` stage's checkpointed total at the same decade
     * to price the storage round-trips the restartable form buys.
-    * Stage dir: SPARK_GRAFT_STAGE_DIR or a temp dir.
+    * Stage dir: SPARK_GRAFT_STAGE_DIR or a scratch dir deleted at exit.
     */
   private def profileE2eStaged(spark: SparkSession, sfDir: String): Unit = {
     val stageDir = sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR",
-      java.nio.file.Files.createTempDirectory("e2e_staged").toString)
+      Memo.scratchDir("e2e_staged"))
     println(s"[profile] stageDir=$stageDir")
     // the 5 staged boundaries run eagerly here; the final pack+join
     // builds lazily on the keyed table and executes under the second

@@ -104,22 +104,18 @@ object EventStream {
     */
   private val RowsPerStatePartition = 250000L
 
-  /** Volume-sized state-partition count for a finite input dir:
-    * ⌈rows / [[RowsPerStatePartition]]⌉ from the parquet footers (a
-    * driver-side metadata read, the [[drainAll]] ledger source), later
-    * clamped to the session's shuffle parallelism by
-    * [[withStatePartitions]]. Same discipline as
-    * [[graft.VolumeConf]]: the count tracks stream VOLUME with the
-    * session width as the ceiling, instead of a constant tuned to
-    * either the local core count or one fixture size — a production
+  /** Volume-sized state-partition count for a finite input of `rows`
+    * rows: ⌈rows / [[RowsPerStatePartition]]⌉, later clamped to the
+    * session's shuffle parallelism by [[withStatePartitions]]. Same
+    * discipline as [[graft.VolumeConf]]: the count tracks stream VOLUME
+    * with the session width as the ceiling, instead of a constant tuned
+    * to either the local core count or one fixture size — a production
     * deployment's volume pushes it up to the session's own
     * parallelism, a small fixture shrinks it to 1.
     */
-  private def statePartitionsFor(spark: SparkSession, inputDir: String): Int = {
-    val rows = parquetRowCount(spark, inputDir)
+  private def statePartitionsFor(rows: Long): Int =
     math.max(1L, (rows + RowsPerStatePartition - 1) / RowsPerStatePartition)
       .min(Int.MaxValue.toLong).toInt
-  }
 
   /** Raise the progress-log retention to 10k entries. MUST run before
     * `start()`: StreamExecution clones the session at start, so a conf
@@ -137,7 +133,8 @@ object EventStream {
     * summed from the file footers on the driver — the same number
     * `spark.read.parquet(dir).count()` computes, without launching a
     * job. Used for the [[drainAll]] ingest ledger and
-    * [[statePartitionsFor]], whose inputs are finite flat fixture
+    * [[statePartitionsFor]] (scanned once per [[runFinite]] run for
+    * both), whose inputs are finite flat fixture
     * directories. NON-recursive deliberately, to match
     * FileStreamSource's own listing: a nested subdirectory's files
     * would inflate `expected` past what the source can ever ingest and
@@ -175,9 +172,16 @@ object EventStream {
     * per plan instance and can legitimately over-count. The ledger is
     * the `recentProgress` ring buffer, whose retention cap every runner
     * raises to 10k BEFORE starting its query ([[ensureProgressRetention]]).
+    * The expected volume is a driver-side footer read
+    * ([[parquetRowCount]]), not a Spark count job.
     */
   def drainAll(spark: SparkSession, q: org.apache.spark.sql.streaming.StreamingQuery,
-      inputDir: String, timeoutSec: Int = 120): Unit = {
+      inputDir: String, timeoutSec: Int = 120): Unit =
+    drainRows(spark, q, inputDir, parquetRowCount(spark, inputDir), timeoutSec)
+
+  /** [[drainAll]] against an already-scanned `expected` row count. */
+  private def drainRows(spark: SparkSession, q: org.apache.spark.sql.streaming.StreamingQuery,
+      inputDir: String, expected: Long, timeoutSec: Int): Unit = {
     // Retention must have been raised BEFORE q started (the query holds
     // a session clone — see [[ensureProgressRetention]], called by every
     // runner in this file pre-start). Setting it here would be too late;
@@ -186,11 +190,6 @@ object EventStream {
     require(spark.conf.get("spark.sql.streaming.numRecentProgressUpdates", "100").toInt >= 10000,
       "drainAll: progress retention not raised before query start — " +
         "the ledger could undercount; call ensureProgressRetention pre-start")
-    // Parquet footers already hold the exact row count, so the expected
-    // volume is a driver-side metadata read (a few ms), not a Spark
-    // count job — the old `spark.read.parquet(inputDir).count()` paid a
-    // full scheduler round-trip per drain, once per stream query.
-    val expected = parquetRowCount(spark, inputDir)
     def ingested: Long = q.recentProgress.iterator.map(_.numInputRows).sum
     q.processAllAvailable()
     val deadline = System.nanoTime() + timeoutSec * 1000000000L
@@ -205,27 +204,18 @@ object EventStream {
   /** Drive the stateful sessionizer over a parquet dir, single batch,
     * update-mode memory sink.
     */
-  def runSessionsOnce(spark: SparkSession, inputDir: String, queryName: String): DataFrame = {
-    import spark.implicits._
-    withStatePartitions(spark, statePartitionsFor(spark, inputDir)) {
-      val stream = spark.readStream.schema(eventSchema).parquet(inputDir)
-        // CONTRACT (shared with Relational.sessionize): session
-        // identity requires a non-null user key and a non-null event
-        // time — and the typed EvRow encoder holds a primitive Long
-        // user_id, so an unfiltered NULL would abort the stream with
-        // NOT_NULL_ASSERT_VIOLATION instead of degrading per row
+  def runSessionsOnce(spark: SparkSession, inputDir: String, queryName: String): DataFrame =
+    runFinite(spark, inputDir, queryName, "update") { stream =>
+      import spark.implicits._
+      // CONTRACT (shared with Relational.sessionize): session identity
+      // requires a non-null user key and a non-null event time — and
+      // the typed EvRow encoder holds a primitive Long user_id, so an
+      // unfiltered NULL would abort the stream with
+      // NOT_NULL_ASSERT_VIOLATION instead of degrading per row
+      statefulSessionCounts(stream
         .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .select(col("event_id"), col("ts"), col("user_id")).as[EvRow]
-      val q = statefulSessionCounts(stream).writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try drainAll(spark, q, inputDir)
-      finally q.stop()
-      spark.table(queryName)
+        .select(col("event_id"), col("ts"), col("user_id")).as[EvRow]).toDF()
     }
-  }
 
   /** Streaming exact-dedup: at-least-once sources redeliver rows, so
     * the ingest edge of a training-data pipeline needs key-dedup as a
@@ -244,17 +234,7 @@ object EventStream {
     * append-mode memory sink.
     */
   def runDedupOnce(spark: SparkSession, inputDir: String, queryName: String): DataFrame =
-    withStatePartitions(spark, statePartitionsFor(spark, inputDir)) {
-      val stream = spark.readStream.schema(eventSchema).parquet(inputDir)
-      val q = dedupStream(stream, "1 hour", Seq("event_id")).writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try drainAll(spark, q, inputDir)
-      finally q.stop()
-      spark.table(queryName)
-    }
+    runFinite(spark, inputDir, queryName, "append")(dedupStream(_, "1 hour", Seq("event_id")))
 
   /** Stream-stream interval join: each purchase matched to the same
     * user's clicks in the `interval` before it — click attribution, the
@@ -296,19 +276,11 @@ object EventStream {
     * [[withStatePartitions]]; see its note for the measurements.
     */
   def runJoinOnce(spark: SparkSession, inputDir: String, queryName: String): DataFrame =
-    withStatePartitions(spark, statePartitionsFor(spark, inputDir)) {
-      val ev = spark.readStream.schema(eventSchema).parquet(inputDir)
-      val q = attributionJoin(
-          ev.filter(col("event_type") === "click"),
-          ev.filter(col("event_type") === "purchase"),
-          delay = "1 hour", interval = "6 hours").writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try drainAll(spark, q, inputDir)
-      finally q.stop()
-      spark.table(queryName)
+    runFinite(spark, inputDir, queryName, "append") { ev =>
+      attributionJoin(
+        ev.filter(col("event_type") === "click"),
+        ev.filter(col("event_type") === "purchase"),
+        delay = "1 hour", interval = "6 hours")
     }
 
   /** Ingest novelty filter: stream-STATIC anti-join — arriving docs
@@ -761,7 +733,7 @@ object EventStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         batch.write.mode("overwrite").parquet(s"$storeDir/vec_batch_$batchId")
-        val streamed = spark.read.parquet(s"$storeDir/vec_batch_*")
+        val streamed = readBatches(spark, storeDir, "vec_batch_*")
         val union = baseline.select(col("vec_id"), col("embedding"))
           .withColumn("__isb", lit(0))
           .unionByName(streamed.select(col("vec_id"), col("embedding"))
@@ -850,6 +822,16 @@ object EventStream {
       .map(_.toSeq).getOrElse(Seq.empty)
   }
 
+  /** The per-batch dirs matching `pattern` under a cumulative store,
+    * read as one table. The dirs are passed to the reader by name: a
+    * glob path makes Spark's sink-metadata probe log a
+    * `FileNotFoundException` trace on every read.
+    */
+  private[graft] def readBatches(spark: SparkSession, storeDir: String,
+      pattern: String): DataFrame =
+    spark.read.parquet(listStore(storeDir, pattern, spark.sparkContext.hadoopConfiguration)
+      .map(_.getPath.toString): _*)
+
   /** True iff `checkpointDir` is a COMMITTED streaming checkpoint —
     * at least one entry in its `offsets/` log. Only such a checkpoint
     * makes skipping the fresh-store guard safe: batch ids then resume
@@ -929,17 +911,26 @@ object EventStream {
     * materialized result table.
     */
   def runOnce(spark: SparkSession, inputDir: String, queryName: String): DataFrame =
-    withStatePartitions(spark, statePartitionsFor(spark, inputDir)) {
-      val stream = spark.readStream
-        .schema(eventSchema)
-        .parquet(inputDir)
-      val q = hourlyAgg(stream).writeStream
-        .outputMode("complete")
+    runFinite(spark, inputDir, queryName, "complete")(hourlyAgg)
+
+  /** Run `plan` over the finite event dir `inputDir` into the memory
+    * sink `queryName` in `mode`, drained to completion under
+    * volume-sized state partitions, and return the sink table. The
+    * footers are scanned once: that row count sizes the state
+    * partitions and is the drain ledger's target.
+    */
+  private def runFinite(spark: SparkSession, inputDir: String, queryName: String,
+      mode: String)(plan: DataFrame => DataFrame): DataFrame = {
+    val rows = parquetRowCount(spark, inputDir)
+    withStatePartitions(spark, statePartitionsFor(rows)) {
+      val q = plan(spark.readStream.schema(eventSchema).parquet(inputDir)).writeStream
+        .outputMode(mode)
         .format("memory")
         .queryName(queryName)
         .start()
-      try drainAll(spark, q, inputDir)
+      try drainRows(spark, q, inputDir, rows, timeoutSec = 120)
       finally q.stop()
       spark.table(queryName)
     }
+  }
 }

@@ -13,6 +13,18 @@ import scala.jdk.CollectionConverters._
 class SessionGuardSpec extends AnyFunSuite {
 
   test("SparkSession.builder() appears in src/main only inside GraftSession.scala") {
+    val hits = SessionGuardSpec.codeHits("SparkSession.builder")
+    assert(hits.nonEmpty && hits.forall(_.contains("/GraftSession.scala:")),
+      s"sessions must come from GraftSession, found builders at: ${hits.mkString(", ")}")
+  }
+}
+
+object SessionGuardSpec {
+
+  /** `file:line` of every code line under src/main/scala containing
+    * `token`; doc comments may show it as usage, only code counts.
+    */
+  def codeHits(token: String): Seq[String] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory,
       s"expected main sources at ${root.getAbsolutePath} (run tests from the repo root)")
@@ -20,15 +32,12 @@ class SessionGuardSpec extends AnyFunSuite {
       Option(d.listFiles()).toSeq.flatten.flatMap { f =>
         if (f.isDirectory) sources(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
       }
-    val hits = for {
+    for {
       f <- sources(root)
       (line, i) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
       code = line.trim
-      // doc comments may show the builder as usage, only code counts
       if !code.startsWith("*") && !code.startsWith("//") && !code.startsWith("/*")
-      if code.contains("SparkSession.builder")
+      if code.contains(token)
     } yield s"${f.getPath}:${i + 1}"
-    assert(hits.nonEmpty && hits.forall(_.contains("/GraftSession.scala:")),
-      s"sessions must come from GraftSession, found builders at: ${hits.mkString(", ")}")
   }
 }
