@@ -86,8 +86,8 @@ object Memo {
     * before their timed pass so a recorded rep measures serving, never a
     * one-time training or index write (the round-12 `sim_ivfpq` /
     * `sim_ivf_trained_batch` / `text_bpe_apply` outliers). Production
-    * runs these builds at ingest. Builds register when their registry
-    * object initializes, so every registry is touched first.
+    * runs these builds at ingest. Builds register when their query
+    * family object initializes, so every family is touched first.
     */
   def prewarm(s: SparkSession, sfDir: String): Unit = {
     SparkEntry.queries: Unit

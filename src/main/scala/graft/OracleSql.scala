@@ -1,10 +1,10 @@
 package graft
 
 /** Shared DuckDB SQL fragments for the oracle entries — ONE definition
-  * of the portable hash / vector-math / tokenizer transliterations, so
-  * the Spark operators and every oracle stay in lockstep (previously
-  * `h32Sql` lived in both SparkEntry and SparkEntryExt — a silent
-  * parity-drift risk if one copy was edited).
+  * of the portable hash / vector-math / tokenizer transliterations and
+  * of every CTE chain more than one query family uses, so the Spark
+  * operators and every oracle stay in lockstep (two copies of one
+  * fragment are a silent parity-drift risk if one copy is edited).
   */
 object OracleSql {
 
@@ -295,4 +295,134 @@ object OracleSql {
        |    FROM cl, base
        |  UNION ALL SELECT 'quality_ok_frac', okf FROM ok)
        |ORDER BY metric""".stripMargin
+
+  /** Committed fixture directory, interpolated into BOTH the Spark read
+    * and the DuckDB oracle of the fixture-backed queries
+    * (`q_csv_roundtrip`, `q_jsonl_ingest`, `sim_recall_clustered`: same
+    * file, two readers). Overridable for dev checkouts at a
+    * non-standard path.
+    */
+  val FixturesDir: String =
+    sys.props.getOrElse("graft.fixtures.dir", "/root/repo/data/fixtures")
+
+  /** Shared prefix: tokenize → trigram shingles → portable hash →
+    * 16-seed MinHash signatures → 2×8 band table. Doc signatures are
+    * independent of every other doc, so the SAME band table serves the
+    * symmetric self-join (`minhashPairsCte`) and the asymmetric
+    * batch-vs-corpus join (`dedup_incremental`).
+    */
+  def minhashBandsCteFrom(src: String): String =
+    s"""tl AS (SELECT doc_id, $toksSql AS t FROM $src),
+       |sh AS (
+       |  SELECT DISTINCT doc_id, unnest(${ngramSql("t", 3)}) AS sh
+       |  FROM tl),
+       |shh AS (SELECT doc_id, ${h32Sql("sh")} AS h FROM sh),
+       |seeds AS (SELECT unnest(generate_series(0, 15)) AS seed),
+       |mh AS (
+       |  SELECT doc_id, seed,
+       |    min(((1 + 104729 * seed) * h + (12345 + 7919 * seed)) % 4294967311) AS mh
+       |  FROM shh, seeds GROUP BY doc_id, seed),
+       |bands AS (
+       |  SELECT doc_id, seed // 8 AS band, string_agg(mh::VARCHAR, ',' ORDER BY seed) AS key
+       |  FROM mh GROUP BY doc_id, band)""".stripMargin
+
+  lazy val minhashBandsCte: String = minhashBandsCteFrom("documents")
+
+  /** The pairs chain WITHOUT the leading WITH, parameterized over the
+    * `(doc_id, text)` source relation — composable inside a larger
+    * WITH chain (`pipeline_e2e` runs it over the cleaned+quality-ok
+    * corpus, not raw documents).
+    */
+  def minhashPairsBodyFrom(src: String): String =
+    s"""${minhashBandsCteFrom(src)},
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM bands a JOIN bands b
+       |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
+       |sets AS (SELECT doc_id, list(DISTINCT h) AS s FROM shh GROUP BY doc_id),
+       |prs AS (
+       |  SELECT doc_a, doc_b,
+       |    len(list_intersect(sa.s, sb.s))::DOUBLE /
+       |      len(list_distinct(list_concat(sa.s, sb.s))) AS j
+       |  FROM cand
+       |  JOIN sets sa ON cand.doc_a = sa.doc_id
+       |  JOIN sets sb ON cand.doc_b = sb.doc_id
+       |  WHERE len(list_intersect(sa.s, sb.s))::DOUBLE /
+       |      len(list_distinct(list_concat(sa.s, sb.s))) >= 0.5)""".stripMargin
+
+  /** Shared DuckDB CTE: MinHash-LSH candidate pairs verified at j ≥ 0.5
+    * (mirrors Dedup.minHashLsh with 3-gram shingles, 16 hashes,
+    * 2 bands × 8 rows). Trigram shingles are the standard MinHash
+    * configuration: with unigrams the synthetic corpus' shared
+    * vocabulary made nearly every doc pair a band collision (2.3M
+    * candidate pairs from 5k docs at sf0.1); trigrams isolate the ~244
+    * genuinely near-duplicate pairs at ~10,000× less verify work.
+    */
+  lazy val minhashPairsCte: String =
+    "WITH " + minhashPairsBodyFrom("documents")
+
+  /** Min-label propagation over the `prs` pair set, unrolled 3 rounds
+    * (mirrors `Dedup.clusterLabels(iterations = 3)`); ends at
+    * `l3(doc_id, label)`. ONE definition, two consumers
+    * (`dedup_cluster`, `dedup_keep_best`) — the dataCardSql
+    * discipline. Expects `prs(doc_a, doc_b, …)` in scope (the
+    * minhashPairsCte product).
+    */
+  def clusterLabelCtesFrom(docsSrc: String): String =
+    // MATERIALIZED levels: DuckDB 1.0 INLINES a CTE at every reference
+    // and each propagation level references the previous one TWICE (its
+    // own rows + the edge join), so the unmaterialized chain re-derives
+    // the whole upstream (prs' band self-join, and in pipeline_e2e the
+    // clean→quality→minhash lineage) 2^rounds times — measured as a
+    // 19-CPU-minute oracle stall on a 393-doc corpus. Materialization
+    // is semantics-neutral; each level now computes once.
+    s"""edges AS MATERIALIZED (
+       |  SELECT doc_a AS src, doc_b AS dst FROM prs
+       |  UNION ALL SELECT doc_b, doc_a FROM prs),
+       |l0 AS MATERIALIZED (SELECT doc_id, doc_id AS label FROM $docsSrc),
+       |l1 AS MATERIALIZED (SELECT doc_id, min(label) AS label FROM (
+       |  SELECT doc_id, label FROM l0
+       |  UNION ALL SELECT e.src AS doc_id, l.label FROM edges e JOIN l0 l ON e.dst = l.doc_id)
+       |  GROUP BY doc_id),
+       |l2 AS MATERIALIZED (SELECT doc_id, min(label) AS label FROM (
+       |  SELECT doc_id, label FROM l1
+       |  UNION ALL SELECT e.src AS doc_id, l.label FROM edges e JOIN l1 l ON e.dst = l.doc_id)
+       |  GROUP BY doc_id),
+       |l3 AS MATERIALIZED (SELECT doc_id, min(label) AS label FROM (
+       |  SELECT doc_id, label FROM l2
+       |  UNION ALL SELECT e.src AS doc_id, l.label FROM edges e JOIN l2 l ON e.dst = l.doc_id)
+       |  GROUP BY doc_id)""".stripMargin
+
+  lazy val clusterLabelCtes: String = clusterLabelCtesFrom("documents")
+
+  /** BM25 CTE chain mirroring Retrieval.bm25TopK step for step
+    * (postings → doc lengths folded from postings → df → one-row
+    * corpus stats → distinct query terms of docs 0..7 → df-capped
+    * idf weights → scored → ranked-on-rounded-score top-k). Shared by
+    * `text_bm25` (k=5) and the hybrid fusion (k=10). Ends at CTE
+    * `bmr(query_id, doc_id, score, rank)`.
+    */
+  def bm25Ctes(k: Int): String =
+    s"""tok25 AS (SELECT doc_id, unnest($toksSql) AS term FROM documents),
+       |tf25 AS (SELECT doc_id, term, count(*) AS tf FROM tok25 GROUP BY 1, 2),
+       |dl25 AS (SELECT doc_id, sum(tf)::DOUBLE AS dl FROM tf25 GROUP BY 1),
+       |df25 AS (SELECT term, count(*) AS df
+       |         FROM (SELECT DISTINCT doc_id, term FROM tok25) GROUP BY 1),
+       |st25 AS (SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl FROM dl25),
+       |qt25 AS (SELECT doc_id AS query_id, unnest(list_distinct($toksSql)) AS term
+       |         FROM documents WHERE doc_id < 8),
+       |qw25 AS (SELECT qt25.query_id, qt25.term,
+       |           ln((st25.n - df + 0.5) / (df + 0.5) + 1) AS idf
+       |         FROM qt25 JOIN df25 USING (term), st25
+       |         WHERE df::DOUBLE <= 0.8 * st25.n),
+       |sc25 AS (SELECT qw25.query_id, tf25.doc_id,
+       |           round(sum(qw25.idf * (tf * (1.2 + 1)) /
+       |             (tf + 1.2 * (1 - 0.75 + 0.75 * dl25.dl / st25.avgdl))), 6) AS score
+       |         FROM qw25 JOIN tf25 USING (term)
+       |           JOIN dl25 ON tf25.doc_id = dl25.doc_id, st25
+       |         GROUP BY 1, 2),
+       |bmr AS (SELECT query_id, doc_id, score,
+       |          CAST(row_number() OVER (PARTITION BY query_id
+       |            ORDER BY score DESC, doc_id) AS BIGINT) AS rank
+       |        FROM sc25 QUALIFY rank <= $k)""".stripMargin
 }

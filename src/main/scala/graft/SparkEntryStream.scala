@@ -8,8 +8,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Tables
 import graft.streaming.EventStream
 
-/** Query registry, part 3: the Structured-Streaming operators under the
-  * SAME oracle gate as the batch queries. Each query materializes its
+/** The streaming family (`stream_*`): the Structured-Streaming operators
+  * under the SAME oracle gate as the batch queries. Each query materializes its
   * input to a scratch parquet dir (events are ns→µs normalized — the
   * streaming reader takes an explicit TIMESTAMP schema), drives the
   * streaming plan to completion against it, and returns the final
@@ -75,20 +75,40 @@ object SparkEntryStream {
     store
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val entries: Seq[Query] = Seq(
     // incremental tumbling-window agg ≡ the batch q_events_hourly
-    "stream_hourly" -> ((s, d) =>
+    Query("stream_hourly", """SELECT date_trunc('hour', ts) AS hour, event_type,
+        |  count(*) AS n_events, round(sum(value), 2) AS sum_value
+        |FROM events
+        |GROUP BY 1, 2
+        |ORDER BY 1, 2""".stripMargin)((s, d) =>
       EventStream.runOnce(s, stagedEvents(s, d), s"graft_stream_hourly_${runId.incrementAndGet()}")
         .orderBy(col("hour"), col("event_type"))),
     // stateful mapGroupsWithState sessionization ≡ the batch gap rule
-    "stream_sessionize" -> ((s, d) =>
+    // per-user collapse of the batch sessionize formula (session ids are
+    // a 0-based running sum, so n_sessions = sum(gap flags) + 1)
+    Query("stream_sessionize", """WITH flagged AS (
+        |  SELECT user_id,
+        |    CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER
+        |        (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000000
+        |      THEN 1 ELSE 0 END AS new_s
+        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL)
+        |SELECT user_id, CAST(sum(new_s) + 1 AS BIGINT) AS n_sessions,
+        |  count(*) AS n_events
+        |FROM flagged
+        |GROUP BY user_id
+        |ORDER BY user_id""".stripMargin)((s, d) =>
       EventStream.runSessionsOnce(s, stagedEvents(s, d), s"graft_stream_sess_${runId.incrementAndGet()}")
         .select(col("user_id"), col("n_sessions"), col("n_events"))
         .orderBy(col("user_id"))),
     // dropDuplicatesWithinWatermark ingest-dedup: on an already-unique
     // keyed input the stream must be a no-op pass-through (count-shaped
     // summary so the oracle stays tiny and deterministic)
-    "stream_dedup" -> ((s, d) =>
+    Query("stream_dedup", """SELECT event_type, count(*) AS n_events,
+        |  count(DISTINCT event_id) AS n_distinct_ids
+        |FROM events
+        |GROUP BY event_type
+        |ORDER BY event_type""".stripMargin)((s, d) =>
       EventStream.runDedupOnce(s, stagedEvents(s, d), s"graft_stream_dedup_${runId.incrementAndGet()}")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
@@ -97,60 +117,107 @@ object SparkEntryStream {
     // stream-stream interval join (click attribution): two watermarked
     // sides, state bounded by delay + interval; on finite input the
     // inner join must equal the batch range join
-    "stream_join" -> ((s, d) =>
+    // batch range join the finite-input stream-stream join converges to;
+    // epoch_us on both sides — the staged stream input is µs-normalized
+    Query("stream_join", """SELECT p.user_id, p.event_id AS purchase_id, c.event_id AS click_id
+        |FROM events p JOIN events c
+        |  ON p.event_type = 'purchase' AND c.event_type = 'click'
+        |  AND p.user_id = c.user_id
+        |  AND epoch_us(c.ts) >= epoch_us(p.ts) - 21600000000
+        |  AND epoch_us(c.ts) < epoch_us(p.ts)
+        |ORDER BY purchase_id, click_id""".stripMargin)((s, d) =>
       EventStream.runJoinOnce(s, stagedEvents(s, d), s"graft_stream_join_${runId.incrementAndGet()}")
         .select(col("user_id"), col("purchase_id"), col("click_id"))
         .orderBy(col("purchase_id"), col("click_id"))),
     // quality gate at the ingest edge: per-micro-batch application of
     // the batch cascade; verdicts over two batches ≡ one batch pass
-    "stream_quality" -> ((s, d) => runQualityOnce(s, d)),
+    Query("stream_quality", s"""WITH ${OracleSql.qualityCtes("sq", "documents")}
+         |SELECT doc_id, n_tokens, reason, reason = 'ok' AS keep
+         |FROM sq_r
+         |ORDER BY doc_id""".stripMargin)((s, d) => runQualityOnce(s, d)),
     // stream-static anti-join novelty filter: streamed docs vs the
     // static corpus hash set ≡ the batch anti-join
-    "stream_novel" -> ((s, d) => runNovelOnce(s, d)),
+    Query("stream_novel", """SELECT s.doc_id, CAST(length(s.text) AS BIGINT) AS n_chars
+        |FROM documents s
+        |WHERE sha256(s.text) NOT IN (
+        |  SELECT sha256(text) FROM documents WHERE doc_id % 3 <> 0)
+        |ORDER BY s.doc_id""".stripMargin)((s, d) => runNovelOnce(s, d)),
     // continuous index maintenance (the reference's ingestion loop as a
     // stream): final point store ≡ batch chunk+embed over the LATEST doc
     // versions — i.e. the doc-replace upsert branch is what's checked
-    "stream_index" -> ((s, d) => runIndexOnce(s, d)),
+    // batch equivalent of the two-micro-batch ingest: chunk + embed the
+    // LATEST version of every doc (20..39 truncated to their re-ingested
+    // 120-char v2) — doc-replace upsert means no other row may survive
+    Query("stream_index", s"""WITH docs_final AS (
+         |  SELECT doc_id, text FROM documents WHERE doc_id < 20
+         |  UNION ALL
+         |  SELECT doc_id, substr(text, 1, 120) AS text FROM documents
+         |  WHERE doc_id >= 20 AND doc_id < 40
+         |  UNION ALL
+         |  SELECT doc_id, text FROM documents WHERE doc_id >= 40 AND doc_id < 60),
+         |ch AS (${OracleSql.chunkCte("docs_final")}),
+         |${OracleSql.embedCtes("ie", "(SELECT chunk_id AS id, chunk_text AS __txt FROM ch)", 16)}
+         |SELECT ch.chunk_id, ch.doc_id, ch.chunk_index,
+         |  CAST(length(ch.chunk_text) AS BIGINT) AS n_chars,
+         |  round(e.v[1], 6) AS first_dim,
+         |  round(list_reduce(e.v, (a, x) -> a + x), 6) AS vsum
+         |FROM ch JOIN ie_emb e ON ch.chunk_id = e.id
+         |ORDER BY ch.chunk_id""".stripMargin)((s, d) => runIndexOnce(s, d)),
     // incremental Count-Min maintenance: per-micro-batch sketches
     // merged ≡ one batch build (mergeable summary) — probed against the
     // SAME oracle SQL as q_cms_freq
-    "stream_cms" -> ((s, d) => runCmsOnce(s, d)),
+    Query("stream_cms", OracleSql.cmsFreqSql(RelationalQueries.CmsDepth,
+      RelationalQueries.CmsWidth, RelationalQueries.CmsTopK))((s, d) => runCmsOnce(s, d)),
     // continuous serving: streamed query vectors answered per
     // micro-batch with the batch kNN against the static corpus; hits
     // over two batches ≡ one batch kNN join
-    "stream_search" -> ((s, d) => runSearchOnce(s, d)),
+    Query("stream_search", s"""SELECT q.vec_id AS query_id,
+         |  CAST(row_number() OVER (PARTITION BY q.vec_id
+         |    ORDER BY ${OracleSql.sqlCos("q.embedding", "p.embedding")} DESC, p.vec_id)
+         |    AS BIGINT) AS rank,
+         |  p.vec_id AS point_id,
+         |  round(${OracleSql.sqlCos("q.embedding", "p.embedding")}, 6) AS score
+         |FROM embeddings q, embeddings p
+         |WHERE q.vec_id < 10 AND p.vec_id >= 10
+         |QUALIFY rank <= 3
+         |ORDER BY query_id, rank""".stripMargin)((s, d) => runSearchOnce(s, d)),
     // CDC into the partitioned lake store: micro-batched updates merged
     // by key via upsertPartitioned; final table ≡ the one-shot batch
     // upsert (the SAME oracle SQL as q_upsert — merge-by-key is
     // batch-slicing invariant over disjoint key sets)
-    "stream_upsert" -> ((s, d) => runUpsertOnce(s, d)),
+    Query("stream_upsert", OracleSql.upsertMergedSummarySql)((s, d) => runUpsertOnce(s, d)),
     // CDC erasure stream: two delete micro-batches applied to the
     // partitioned store ≡ the one-shot batch delete
-    "stream_delete" -> ((s, d) => runDeleteOnce(s, d)),
+    Query("stream_delete", """SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
+        |  round(sum(o_totalprice), 2) AS total
+        |FROM orders
+        |WHERE o_orderkey % 10 <> 0
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)((s, d) =>
+      runDeleteOnce(s, d)),
     // continuous drift monitoring: per-micro-batch PSI snapshots of
     // baseline vs streamed-so-far; the final snapshot ≡ the batch
     // v_drift (the SAME single-sourced oracle SQL)
-    "stream_drift" -> ((s, d) => runDriftOnce(s, d)),
+    Query("stream_drift", OracleSql.dimDriftSql)((s, d) => runDriftOnce(s, d)),
     // continuous profile maintenance: per-micro-batch doc profiles +
     // term sets accumulated; the card derived from them ≡ the batch
     // pipeline_data_card (the SAME single-sourced oracle SQL — its
     // third consumer, after the raw and profile-backed batch forms)
-    "stream_data_card" -> ((s, d) => runProfileCardOnce(s, d)),
+    Query("stream_data_card", OracleSql.dataCardSql)((s, d) => runProfileCardOnce(s, d)),
     // continuous serving from the STORED ANN index: streamed queries
     // answered per micro-batch by the composed IVF+BQ search; hits
     // over two batches ≡ the one-shot batch sim_ivf_bq (SAME oracle —
     // per-query purity makes the slicing invisible)
-    "stream_idx_search" -> ((s, d) => runIndexedSearchOnce(s, d)),
+    Query("stream_idx_search", AnnQueries.ivfBqSql)((s, d) => runIndexedSearchOnce(s, d)),
     // continuous crawl filtering against the STORED NB model: docs
     // scored per micro-batch by nbScoreBatch; scores over two batches
     // ≡ the one-shot pipeline_nb_inc (SAME oracle — per-doc purity)
-    "stream_nb_score" -> ((s, d) => runNbScoreOnce(s, d)),
+    Query("stream_nb_score", SparkEntryExt.nbIncSql)((s, d) => runNbScoreOnce(s, d)),
     // the OOV-aware streaming form: the model is trained on the
     // corpus MINUS the batch (nbOovModelIndex — genuinely OOV-bearing
     // micro-batches) and absent terms contribute the stored oov_lr
     // constant; scores over two batches ≡ the one-shot
     // pipeline_nb_oov (SAME oracle — per-doc purity again)
-    "stream_nb_oov" -> ((s, d) => runNbScoreOnce(s, d, oov = true)))
+    Query("stream_nb_oov", SparkEntryExt.nbOovSql)((s, d) => runNbScoreOnce(s, d, oov = true)))
 
   /** Drive [[EventStream.driftStream]]: even-id vectors are the static
     * baseline, odd-id vectors stream in TWO micro-batches (split at
@@ -276,7 +343,7 @@ object SparkEntryStream {
     */
   private def runIndexedSearchOnce(spark: SparkSession, sfDir: String): DataFrame = {
     val (first, second, points) = searchInputs(spark, sfDir)
-    val idx = spark.table(SparkEntryExt.ivfBqIndex(spark, sfDir))
+    val idx = spark.table(AnnQueries.ivfBqIndex(spark, sfDir))
     readHits(spark, driveBatches(spark, "ixsrch", "/hits", first, second) {
       (in, store) => EventStream.indexedSearchStream(spark, in, store, idx, points,
         bits = 4, dim = 64, nprobe = 2, shortlist = 20, k = 5)
@@ -349,11 +416,11 @@ object SparkEntryStream {
     val store = driveBatches(spark, "cms", "/sketches",
         docs.filter(col("doc_id") < 250), docs.filter(col("doc_id") >= 250)) {
       (in, store) => EventStream.cmsSketchStream(spark, in, store,
-        SparkEntryExt.CmsDepth, SparkEntryExt.CmsWidth)
+        RelationalQueries.CmsDepth, RelationalQueries.CmsWidth)
     }
     val sketch = EventStream.readCmsSketch(store,
-      SparkEntryExt.CmsDepth, SparkEntryExt.CmsWidth)
-    TextAnalysis.topTerms(docs, "doc_id", "text", limit = SparkEntryExt.CmsTopK)
+      RelationalQueries.CmsDepth, RelationalQueries.CmsWidth)
+    TextAnalysis.topTerms(docs, "doc_id", "text", limit = RelationalQueries.CmsTopK)
       .select(col("term"),
         CmsAgg.estimate(lit(sketch), col("term")).as("est"),
         col("cnt").as("exact"))
@@ -396,119 +463,4 @@ object SparkEntryStream {
         round(aggregate(col("embedding"), lit(0.0d), (a, x) => a + x), 6).as("vsum"))
       .orderBy(col("chunk_id"))
   }
-
-  def oracleSql: Map[String, String] = Map(
-    // literally the q_upsert oracle (single-sourced in OracleSql):
-    // micro-batch slicing must not move the merged table
-    "stream_upsert" -> OracleSql.upsertMergedSummarySql,
-    // erasure commutes: the CDC-sliced delete must equal the one-shot
-    // batch delete of the same key set
-    "stream_delete" ->
-      """SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
-        |  round(sum(o_totalprice), 2) AS total
-        |FROM orders
-        |WHERE o_orderkey % 10 <> 0
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    // literally the v_drift oracle: the final cumulative PSI snapshot
-    // must not depend on how the odd half was micro-batched
-    "stream_drift" -> OracleSql.dimDriftSql,
-    // literally the pipeline_data_card oracle: per-doc profiles are
-    // batch-local, so micro-batch slicing cannot move the card
-    "stream_data_card" -> OracleSql.dataCardSql,
-    // literally the sim_ivf_bq oracle: per-query purity against the
-    // static index makes the micro-batch slicing invisible
-    "stream_idx_search" -> SparkEntryExt.ivfBqSql,
-    // literally the pipeline_nb_inc oracle: per-doc purity against
-    // the static stored model makes the micro-batch slicing invisible
-    "stream_nb_score" -> SparkEntryExt.nbIncSql,
-    // literally the pipeline_nb_oov oracle: same purity argument over
-    // the corpus-minus-batch stored model + the oov_lr constant
-    "stream_nb_oov" -> SparkEntryExt.nbOovSql,
-    // identical to the batch hourly oracle — stream must converge to it
-    "stream_hourly" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type,
-        |  count(*) AS n_events, round(sum(value), 2) AS sum_value
-        |FROM events
-        |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-    // per-user collapse of the batch sessionize formula (session ids are
-    // a 0-based running sum, so n_sessions = sum(gap flags) + 1)
-    "stream_sessionize" ->
-      """WITH flagged AS (
-        |  SELECT user_id,
-        |    CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER
-        |        (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000000
-        |      THEN 1 ELSE 0 END AS new_s
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL)
-        |SELECT user_id, CAST(sum(new_s) + 1 AS BIGINT) AS n_sessions,
-        |  count(*) AS n_events
-        |FROM flagged
-        |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-    "stream_dedup" ->
-      """SELECT event_type, count(*) AS n_events,
-        |  count(DISTINCT event_id) AS n_distinct_ids
-        |FROM events
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-    // batch range join the finite-input stream-stream join converges to;
-    // epoch_us on both sides — the staged stream input is µs-normalized
-    "stream_join" ->
-      """SELECT p.user_id, p.event_id AS purchase_id, c.event_id AS click_id
-        |FROM events p JOIN events c
-        |  ON p.event_type = 'purchase' AND c.event_type = 'click'
-        |  AND p.user_id = c.user_id
-        |  AND epoch_us(c.ts) >= epoch_us(p.ts) - 21600000000
-        |  AND epoch_us(c.ts) < epoch_us(p.ts)
-        |ORDER BY purchase_id, click_id""".stripMargin,
-    // batch anti-join the stream-static novelty filter must equal
-    "stream_novel" ->
-      """SELECT s.doc_id, CAST(length(s.text) AS BIGINT) AS n_chars
-        |FROM documents s
-        |WHERE sha256(s.text) NOT IN (
-        |  SELECT sha256(text) FROM documents WHERE doc_id % 3 <> 0)
-        |ORDER BY s.doc_id""".stripMargin,
-    // the batch quality cascade the two-micro-batch stream must equal
-    // (per-doc purity ⇒ batch boundaries cannot move verdicts)
-    "stream_quality" ->
-      s"""WITH ${OracleSql.qualityCtes("sq", "documents")}
-         |SELECT doc_id, n_tokens, reason, reason = 'ok' AS keep
-         |FROM sq_r
-         |ORDER BY doc_id""".stripMargin,
-    // batch equivalent of the two-micro-batch ingest: chunk + embed the
-    // LATEST version of every doc (20..39 truncated to their re-ingested
-    // 120-char v2) — doc-replace upsert means no other row may survive
-    "stream_index" ->
-      s"""WITH docs_final AS (
-         |  SELECT doc_id, text FROM documents WHERE doc_id < 20
-         |  UNION ALL
-         |  SELECT doc_id, substr(text, 1, 120) AS text FROM documents
-         |  WHERE doc_id >= 20 AND doc_id < 40
-         |  UNION ALL
-         |  SELECT doc_id, text FROM documents WHERE doc_id >= 40 AND doc_id < 60),
-         |ch AS (${OracleSql.chunkCte("docs_final")}),
-         |${OracleSql.embedCtes("ie", "(SELECT chunk_id AS id, chunk_text AS __txt FROM ch)", 16)}
-         |SELECT ch.chunk_id, ch.doc_id, ch.chunk_index,
-         |  CAST(length(ch.chunk_text) AS BIGINT) AS n_chars,
-         |  round(e.v[1], 6) AS first_dim,
-         |  round(list_reduce(e.v, (a, x) -> a + x), 6) AS vsum
-         |FROM ch JOIN ie_emb e ON ch.chunk_id = e.id
-         |ORDER BY ch.chunk_id""".stripMargin,
-    // literally the batch CMS oracle: micro-batch slicing must not move
-    // a single sketch cell
-    "stream_cms" -> OracleSql.cmsFreqSql(
-      SparkEntryExt.CmsDepth, SparkEntryExt.CmsWidth, SparkEntryExt.CmsTopK),
-    // the one-shot batch kNN join the two-micro-batch serving stream
-    // must accumulate to
-    "stream_search" ->
-      s"""SELECT q.vec_id AS query_id,
-         |  CAST(row_number() OVER (PARTITION BY q.vec_id
-         |    ORDER BY ${OracleSql.sqlCos("q.embedding", "p.embedding")} DESC, p.vec_id)
-         |    AS BIGINT) AS rank,
-         |  p.vec_id AS point_id,
-         |  round(${OracleSql.sqlCos("q.embedding", "p.embedding")}, 6) AS score
-         |FROM embeddings q, embeddings p
-         |WHERE q.vec_id < 10 AND p.vec_id >= 10
-         |QUALIFY rank <= 3
-         |ORDER BY query_id, rank""".stripMargin)
 }

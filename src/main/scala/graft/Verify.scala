@@ -35,7 +35,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(e => keep(e._1))
+    // sorted by name, so the file's bytes depend on the registered
+    // queries only, never on how the registry map was built
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1).filter(e => keep(e._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -24,7 +24,9 @@ object SimilaritySearch {
       .reduce(_ + _)
 
   /** IVF top-k: queries search only their own bucket. Output:
-    * (query_id, rank, point_id, score) — rank within bucket.
+    * (query_id, rank, point_id, score) — rank within bucket. The
+    * in-plan form of [[ivfTopKStored]]: the point buckets are computed
+    * in the plan and the query side is broadcast (interactive lookups).
     */
   def ivfTopK(
       queries: DataFrame,
@@ -33,21 +35,9 @@ object SimilaritySearch {
       pointIdCol: String,
       vecCol: String,
       bits: Int,
-      k: Int): DataFrame = {
-    val q = broadcast(
-      queries
-        .withColumn("__bucket", signBucket(vecCol, bits))
-        .select(col(queryIdCol).as("query_id"), col(vecCol).as("__qvec"), col("__bucket")))
-    val p = points.withColumn("__bucket", signBucket(vecCol, bits))
-    val scored = p
-      .join(q, "__bucket") // bucket equi-join — the ANN pruning step
-      .withColumn("score", VectorOps.cosine(col("__qvec"), col(vecCol)))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("score"), col(pointIdCol).asc)
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(pointIdCol).as("point_id"), col("score"))
-  }
+      k: Int): DataFrame =
+    ivfTopKStored(broadcast(queries), points.withColumn("__bucket", signBucket(vecCol, bits)),
+      queryIdCol, pointIdCol, vecCol, "__bucket", bits, k)
 
   /** IVF search against a PRE-BUCKETED point table — the index layout
     * as a storage property. [[ivfTopK]] broadcasts the query side,
@@ -540,23 +530,11 @@ object SimilaritySearch {
       prefixDim: Int,
       shortlist: Int,
       k: Int): DataFrame = {
-    require(prefixDim >= 1, s"prefixDim ($prefixDim) must be >= 1")
-    require(k >= 1 && shortlist >= k,
-      s"need shortlist ($shortlist) >= k ($k) >= 1")
-    val q = broadcast(queries.select(
-      col(queryIdCol).as("query_id"),
-      slice(col(vecCol), 1, prefixDim).as("__qpre")))
     val pre = points
-      .select(col(pointIdCol).as("point_id"), slice(col(vecCol), 1, prefixDim).as("__ppre"))
-      .repartition(col("point_id"))
-    val wPre = Window.partitionBy(col("query_id"))
-      .orderBy(desc("__pre_score"), col("point_id").asc)
-    val shortIds = pre.crossJoin(q)
-      .withColumn("__pre_score", VectorOps.cosine(col("__qpre"), col("__ppre")))
-      .withColumn("__prank", row_number().over(wPre))
-      .filter(col("__prank") <= shortlist)
-      .select(col("query_id"), col("point_id"))
-    fetchAndRerank(shortIds, queries, points, queryIdCol, pointIdCol, vecCol, k)
+      .select(col(pointIdCol), slice(col(vecCol), 1, prefixDim).as("__pre"))
+      .repartition(col(pointIdCol))
+    prefixRerankTopKStored(queries, pre, points, queryIdCol, pointIdCol, vecCol, "__pre",
+      prefixDim, shortlist, k)
   }
 
   /** Shared phase 2 of the two-phase compressed-search shape
@@ -650,8 +628,6 @@ object SimilaritySearch {
       dim: Int,
       shortlist: Int,
       k: Int): DataFrame = {
-    require(k >= 1 && shortlist >= k,
-      s"need shortlist ($shortlist) >= k ($k) >= 1")
     // Phase 1 — Hamming shortlist over the NARROW signature table
     // (point_id + dim/32 longs; the raw vector column never enters the
     // pair join). The repartition below the pack projection is
@@ -663,21 +639,11 @@ object SimilaritySearch {
     // shuffles only ~16 bytes/row — at any corpus size this is the
     // cheapest boundary that forces one-pack-per-row; a production
     // deployment materializes signatures at ingest and skips it.
-    val q = broadcast(queries.select(
-      col(queryIdCol).as("query_id"),
-      packSignBits(col(vecCol), dim).as("__qsig")))
     val sigs = points
-      .select(col(pointIdCol).as("point_id"), packSignBits(col(vecCol), dim).as("__psig"))
-      .repartition(col("point_id"))
-    val wPre = Window.partitionBy(col("query_id"))
-      .orderBy(col("__ham").asc, col("point_id").asc)
-    val shortIds = sigs.crossJoin(q)
-      .withColumn("__ham", hammingUnrolled(col("__qsig"), col("__psig"), dim))
-      .withColumn("__hrank", row_number().over(wPre))
-      .filter(col("__hrank") <= shortlist)
-      .select(col("query_id"), col("point_id"))
-    // Phase 2 — shared with prefixRerankTopK: [[fetchAndRerank]]
-    fetchAndRerank(shortIds, queries, points, queryIdCol, pointIdCol, vecCol, k)
+      .select(col(pointIdCol), packSignBits(col(vecCol), dim).as("__sig"))
+      .repartition(col(pointIdCol))
+    bqRerankTopKStored(queries, sigs, points, queryIdCol, pointIdCol, vecCol, "__sig",
+      dim, shortlist, k)
   }
 
   /** [[bqRerankTopK]] against a PRE-MATERIALIZED signature table — the

@@ -134,29 +134,31 @@ object EventStream {
     * `spark.read.parquet(dir).count()` computes, without launching a
     * job. Used for the [[drainAll]] ingest ledger and
     * [[statePartitionsFor]] (scanned once per [[runFinite]] run for
-    * both), whose inputs are finite flat fixture
-    * directories. NON-recursive deliberately, to match
-    * FileStreamSource's own listing: a nested subdirectory's files
-    * would inflate `expected` past what the source can ever ingest and
-    * turn every drain into a full-timeout loud failure.
+    * both), whose inputs are finite flat fixture directories.
+    *
+    * A subdirectory fails fast, naming its path: FileStreamSource
+    * ingests the files under a partition-style `key=value` dir but not
+    * under a plain one, so no flat count matches what the source reads
+    * for every shape, and a short ledger would let the drain return
+    * before ingestion finishes. Entries starting with `_` or `.` are
+    * skipped, as Spark skips them.
     */
   private def parquetRowCount(spark: SparkSession, dir: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(conf)
-    val it = fs.listFiles(root, false)
-    var total = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (f.isFile && name.endsWith(".parquet") && !name.startsWith("_") &&
-          !name.startsWith(".")) {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-        try total += r.getRecordCount finally r.close()
-      }
-    }
-    total
+    fs.listStatus(root).iterator
+      .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+      .map { f =>
+        require(!f.isDirectory,
+          s"stream input dir $dir holds the subdirectory ${f.getPath}: the drain ledger " +
+            "counts only the files directly under the input dir")
+        if (f.getPath.getName.endsWith(".parquet")) {
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+          try r.getRecordCount finally r.close()
+        } else 0L
+      }.sum
   }
 
   /** Drain `q` until every row currently in `inputDir` has been

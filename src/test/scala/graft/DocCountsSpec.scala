@@ -30,9 +30,12 @@ class DocCountsSpec extends AnyFunSuite {
   private val nQueries = SparkEntry.queries.size
 
   test("every query entry has an oracle or a documented rows-only check") {
-    // structural invariant behind the counts: oracleSql keys ⊆ queries keys
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracleSql entries without a query: $orphans")
+    // structural invariant behind the counts: the key sets are equal —
+    // dev/check.py walks the oracle entries, so a query without an
+    // oracle would go unchecked with no error
+    val q = SparkEntry.queries.keySet
+    val o = SparkEntry.oracleSql.keySet
+    assert(q == o, s"queries without an oracle: ${q -- o}; oracles without a query: ${o -- q}")
   }
 
   test("README.md query counts match SparkEntry.queries.size") {

@@ -362,6 +362,20 @@ class OpsSpec extends SparkSpec {
       s"merged table wrong after restart: $rows")
   }
 
+  test("stream drain ledger: a partition-style input subdirectory fails fast") {
+    // FileStreamSource ingests the day=1/ rows too, so a ledger that
+    // counts only the top-level file would let the drain pass short
+    val in = java.nio.file.Files.createTempDirectory("nested-in").toString
+    val ev = Tables.events(spark, sf0001)
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+    ev.limit(2).write.mode("append").parquet(in)
+    ev.limit(3).write.mode("append").parquet(s"$in/day=1")
+    val e = intercept[IllegalArgumentException] {
+      EventStream.runOnce(spark, in, "graft_nested_input_probe")
+    }
+    assert(e.getMessage.contains("day=1"), e.getMessage)
+  }
+
   test("upsertPartitioned: URI-escaping partition value rejected before live data is touched") {
     val dir = java.nio.file.Files.createTempDirectory("upsertesc").toString + "/t"
     val base = Seq((1L, "en", "a"), (2L, "de", "b")).toDF("id", "lang", "v")
