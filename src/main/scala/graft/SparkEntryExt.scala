@@ -307,25 +307,13 @@ object SparkEntryExt {
        |ORDER BY bin""".stripMargin
 
   /** The `pipeline_e2e` chain with a pluggable stage-boundary cut —
-    * ONE body serves both execution forms so they cannot drift:
-    * the registered query cuts with a lazy `localCheckpoint` (fast,
-    * executor-local, the small-scale form), while
-    * [[pipelineE2eStaged]] cuts with a durable Parquet stage (the
-    * 100-TB form — restartable, storage-replicated, and each staged
-    * table is itself an inspectable corpus-build artifact). `cut`
-    * receives the stage name so the durable form can lay out
+    * ONE body serves both execution forms so they cannot drift: the
+    * registered query cuts with [[Lineage.local]], a long cluster run
+    * with [[Lineage.staged]], which lays out
     * `stagePath/{cleaned,qdocs,sdocs,pool,keyed}`.
-    *
-    * The stage input is a THUNK, not a DataFrame: several stages run
-    * real work at construction time, not just at action time
-    * (keepBest's label rounds eagerly localCheckpoint per iteration;
-    * dsirSelect's boundary cut executes its upstream shuffle stages
-    * under AQE), so a resume-capable cut must be able to skip a
-    * completed stage WITHOUT constructing its plan — only a deferred
-    * input makes "read the staged table instead" actually free.
     */
   private[graft] def pipelineE2eChain(s: SparkSession, d: String,
-      cut: (() => DataFrame, String) => DataFrame): DataFrame = {
+      cut: Lineage.Cut): DataFrame = {
     val docs = Tables.documents(s, d)
     val cleaned = cut(() => Clean.removeBoilerplate(docs, "doc_id", "text",
         sep = " the ", minDocs = 3)
@@ -368,86 +356,6 @@ object SparkEntryExt {
       .select(col("doc_id"), col("lang"), col("shard"), col("pos"),
         col("n_tokens"), col("seq_start"), col("seq_end"), col("offset"))
       .orderBy(col("shard"), col("pos"))
-  }
-
-  /** Durable-staging twin of `pipeline_e2e` — every localCheckpoint
-    * boundary becomes a Parquet table under `stagePath` (the
-    * Curation.curate stagePath pattern, extended to the full 7-stage
-    * chain). At cluster scale this is the form you run: a lost
-    * executor re-reads from storage instead of dying with its
-    * checkpoint blocks, and the staged `cleaned`/`qdocs`/`sdocs`
-    * tables are the natural ingest points for downstream consumers.
-    * Pinned row-identical to the checkpointed form in OpsSpec.
-    *
-    * `resume = true` makes the restart claim real code, not an
-    * operator's manual: a stage whose table already committed is
-    * READ, with its entire upstream construction skipped; the first
-    * missing stage and EVERYTHING AFTER it recompute and rewrite
-    * (cuts fire in chain order, so one `dirty` latch gives the
-    * cascade — a recomputed middle stage can never be silently
-    * stitched to downstream tables derived from its previous
-    * generation). Commit is checked through the path's Hadoop
-    * `FileSystem` (so `hdfs://`/`s3a://` stage paths resume too, not
-    * just local disk) and requires BOTH the writer's `_SUCCESS`
-    * marker AND the `_schema.json` this cut writes after the data
-    * commits — a crash anywhere mid-stage leaves at most one of the
-    * two, and the stage recomputes. On object-store committers
-    * configured to skip `_SUCCESS` markers, resume degrades SAFELY:
-    * nothing skips, everything recomputes. Reads always carry an
-    * explicit schema (the written df's, or `_schema.json` on a
-    * skip), so a stage that legitimately winnows to ZERO rows —
-    * Parquet dir with no part files — reads back as the empty
-    * DataFrame instead of failing schema inference, keeping the
-    * staged twin row-identical to the checkpointed form on
-    * degenerate corpora too. The remaining contract is the same one
-    * every staged warehouse pipeline carries: stage tables under one
-    * `stagePath` belong to one logical run — resuming over stages
-    * produced by DIFFERENT inputs/knobs is the caller's staleness
-    * bug, which production runs prevent by deriving `stagePath` from
-    * a run id (OpsSpec pins the skip, tail-recompute, and
-    * middle-stage-cascade sides).
-    */
-  private[graft] def pipelineE2eStaged(s: SparkSession, d: String,
-      stagePath: String, resume: Boolean = false): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.types.{DataType, StructType}
-    var dirty = false
-    pipelineE2eChain(s, d, (compute, name) => {
-      val dir = new Path(s"$stagePath/$name")
-      val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val marker = new Path(dir, "_SUCCESS")
-      val schemaFile = new Path(dir, "_schema.json")
-      val committed = fs.exists(marker) && fs.exists(schemaFile)
-      // a torn sidecar (crash after fs.create succeeded but before the
-      // write/close finished) must read as UNCOMMITTED — fall through
-      // to recompute instead of throwing out of DataType.fromJson,
-      // keeping the "crash anywhere mid-stage recomputes" contract
-      val schema: Option[StructType] =
-        if (resume && committed && !dirty) {
-          val in = fs.open(schemaFile)
-          val json =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-          scala.util.Try(DataType.fromJson(json).asInstanceOf[StructType]).toOption
-        } else None
-      schema match {
-        case Some(st) => s.read.schema(st).parquet(dir.toString)
-        case None =>
-          dirty = true
-          val df = compute()
-          df.write.mode("overwrite").parquet(dir.toString)
-          // schema sidecar AFTER the data commit, written to a temp name
-          // and renamed into place: its presence is half the commit
-          // predicate, so neither a crash between the two writes nor a
-          // torn sidecar write can read as committed
-          val tmp = new Path(dir, "._schema.json.tmp")
-          val out = fs.create(tmp, true)
-          try out.write(df.schema.json.getBytes("UTF-8")) finally out.close()
-          if (fs.exists(schemaFile)) fs.delete(schemaFile, false): Unit
-          if (!fs.rename(tmp, schemaFile))
-            throw new java.io.IOException(s"rename $tmp -> $schemaFile failed")
-          s.read.schema(df.schema).parquet(dir.toString)
-      }
-    })
   }
 
   val entries: Seq[Query] = Seq(
@@ -628,9 +536,8 @@ object SparkEntryExt {
     // only an end-to-end oracle can catch. Stage boundaries carry lazy
     // localCheckpoints (the curate fan-out discipline — each stage's
     // output feeds 2+ consumers); at 100 TB each boundary is a staged
-    // parquet table instead ([[pipelineE2eStaged]], the
-    // Curation.curate stagePath pattern — staged ≡ checkpointed is
-    // pinned row-for-row in OpsSpec).
+    // parquet table instead (the same chain cut with Lineage.staged —
+    // staged ≡ checkpointed is pinned row-for-row in OpsSpec).
     // Packing consumes the epoch order via a synthetic monotone key
     // shard·2^40 + pos (pos is dense within shard, so lexicographic
     // (shard, pos) order is preserved for any corpus below 2^40 docs
@@ -725,7 +632,7 @@ object SparkEntryExt {
          |  prev % 512 AS offset
          |FROM pk
          |ORDER BY shard, pos""".stripMargin)((s, d) =>
-      pipelineE2eChain(s, d, (compute, _) => compute().localCheckpoint(false))),
+      pipelineE2eChain(s, d, Lineage.local)),
     // reproducible training-order: seeded hash-mod shards + dense
     // within-shard positions; no global sort anywhere (the one
     // exchange is the shard exchange, per-task state is one shard)

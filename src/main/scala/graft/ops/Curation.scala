@@ -24,80 +24,48 @@ import org.apache.spark.sql.functions._
   * multiplies another's output. The cleaned text feeds three
   * consumers here; at 100 TB you materialize the cleaned corpus once
   * (it is the natural checkpoint between ingest and curation) and run
-  * quality/dedup/sample over the materialized table — the `stagePath`
-  * overload below does exactly that, verdict logic unchanged.
+  * quality/dedup/sample over the materialized table — pass
+  * `cut = Lineage.staged(stagePath)`, verdict logic unchanged.
   */
 object Curation {
 
-  /** In-plan variant — the SMALL-SCALE form. The branch-fan-out cut is
-    * a lazy `localCheckpoint`: fast (no filesystem round-trip), but it
-    * stores unreplicated executor-local blocks AND severs lineage, so
-    * on a real cluster one lost executor kills the job unrecoverably.
-    * For a long 100 TB run use the `stagePath` overload below, which
-    * materializes the same two cut points as Parquet — restartable,
-    * replicated by the storage layer, and the natural checkpoint
-    * between ingest and curation. Verdict logic is shared verbatim
-    * ([[verdictFrom]]), proven output-identical in OpsSpec.
+  /** The curation verdict per doc. Both fan-out points — the cleaned
+    * corpus and the (doc_id, reason) quality table — go through `cut`:
+    * [[Lineage.local]] in-plan (the small-scale form), or
+    * [[Lineage.staged]] for a long 100 TB run, which materializes the
+    * same two cut points as Parquet at `stagePath/{cleaned,quality}` —
+    * restartable, replicated by the storage layer, and exactly what
+    * downstream training-data stages ingest. Proven output-identical in
+    * OpsSpec.
     */
   def curate(docs: DataFrame, idCol: String, textCol: String,
-      sep: String, minDocs: Int, samplePct: Int): DataFrame =
-    // Lazy local checkpoint = the "materialize the cleaned corpus once"
-    // step applied in-plan: `cleaned` fans out to THREE consumers
-    // (quality, the dedup hash, the final verdict join), and because
-    // column pruning pushes a different projection into each branch,
-    // their exchanges are not identical — ReuseExchange cannot dedup
-    // them and every branch re-runs the segment-explode + df-aggregate
-    // + reassembly (measured: 4.2 s -> ~2 s at sf0.1, 144 -> ~40
-    // parquet scans in the plan). Same cut for the (doc_id, reason)
-    // quality table (two consumers: the dedup gate and the verdict
-    // join).
-    verdictFrom(
-      Clean.removeBoilerplate(docs, idCol, textCol, sep, minDocs)
-        .localCheckpoint(false),
-      _.localCheckpoint(false), samplePct)
-
-  /** Durable-staging variant — the PRODUCTION form at scale: the
-    * cleaned corpus and the quality table are written once to
-    * `stagePath` as Parquet and re-read, so the three-consumer fan-out
-    * reads a materialized table instead of executor-local checkpoint
-    * blocks. A lost executor re-reads from storage; a restarted job
-    * resumes from the staged tables; the staged cleaned corpus is also
-    * exactly what downstream training-data stages ingest.
-    */
-  def curate(docs: DataFrame, idCol: String, textCol: String,
-      sep: String, minDocs: Int, samplePct: Int, stagePath: String): DataFrame = {
-    // validate BEFORE the eager stage write: verdictFrom's require
-    // would otherwise fire only after the full cleaned corpus has been
-    // computed and written (hours of work at scale for a bad argument)
+      sep: String, minDocs: Int, samplePct: Int,
+      cut: Lineage.Cut = Lineage.local): DataFrame = {
+    // validate BEFORE the first cut: a staged cut writes at call time,
+    // so a late require would fire only after the full cleaned corpus
+    // has been computed and written (hours of work at scale for a bad
+    // argument)
     require(samplePct >= 1 && samplePct <= 100,
       s"samplePct ($samplePct) must be in [1, 100]")
-    val spark = docs.sparkSession
-    def stage(df: DataFrame, name: String): DataFrame = {
-      val p = s"$stagePath/$name"
-      df.write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    }
-    verdictFrom(
-      stage(Clean.removeBoilerplate(docs, idCol, textCol, sep, minDocs), "cleaned"),
-      stage(_, "quality"), samplePct)
-  }
-
-  /** Shared verdict logic over an already-cut cleaned corpus; `cut`
-    * materializes the quality table (localCheckpoint in-plan, Parquet
-    * stage in the durable form).
-    */
-  private def verdictFrom(cleaned: DataFrame, cut: DataFrame => DataFrame,
-      samplePct: Int): DataFrame = {
-    require(samplePct >= 1 && samplePct <= 100,
-      s"samplePct ($samplePct) must be in [1, 100]")
+    // Cutting = the "materialize the cleaned corpus once" step:
+    // `cleaned` fans out to THREE consumers (quality, the dedup hash,
+    // the final verdict join), and because column pruning pushes a
+    // different projection into each branch, their exchanges are not
+    // identical — ReuseExchange cannot dedup them and every branch
+    // re-runs the segment-explode + df-aggregate + reassembly
+    // (measured: 4.2 s -> ~2 s at sf0.1, 144 -> ~40 parquet scans in
+    // the plan). Same cut for the quality table (two consumers: the
+    // dedup gate and the verdict join).
+    val cleaned = cut(() => Clean.removeBoilerplate(docs, idCol, textCol, sep, minDocs),
+      "cleaned")
     // quality runs only on docs that survived cleaning: the cascade's
     // signals are undefined on empty text (and the empty verdict is
     // decided before quality anyway)
-    val quality = cut(TextAnalysis.qualityFilter(
+    val quality = cut(() => TextAnalysis.qualityFilter(
         cleaned.filter(col("n_kept") > 0)
           .select(col("doc_id"), col("clean_text").as("text")),
         "doc_id", "text")
-      .select(col("doc_id"), col("reason").as("__q_reason")))
+      .select(col("doc_id"), col("reason").as("__q_reason")), "quality")
     // exact dedup among quality survivors: representative = min doc_id
     // per clean-text hash; only (doc_id, 64-hex sha256) shuffles
     val ok = cleaned.join(quality, Seq("doc_id"))

@@ -651,10 +651,6 @@ object Dedup {
     // cluster, executor loss invalidates a local checkpoint and fails
     // the job — the retry-from-scratch trade documented at
     // [[clusterLabelsConverged]], which production callers use.)
-    // Both directions in ONE pass over pairs (a union of two selects
-    // would embed — and therefore execute — the upstream pair pipeline
-    // twice), checkpointed so the pair pipeline runs exactly once and
-    // the per-round plans are edge-leaf-sized.
     // Measured-rejected (r22): dropping the per-ROUND checkpoints (edges
     // leaf only, trusting ReuseExchange to dedup the doubled label
     // subtrees) cut jobs ~12% (dedup_cluster 25→22, pipeline_e2e 90→85)
@@ -663,21 +659,36 @@ object Dedup {
     // and raised shuffle read — the doubled subtrees re-execute beyond
     // what ReuseExchange dedups, and the uncut plan doubles per round
     // (2^6 copies at the OpsSpec iterations=6 call).
-    val edges = pairs
+    val edges = labelEdges(pairs)
+    val initial = docs.select(col(idCol).as("doc_id"), col(idCol).as("label"))
+    (1 to iterations).foldLeft(initial)((labels, _) => labelRound(edges, labels))
+      .select(col("doc_id"), col("label").as("cluster_id"))
+  }
+
+  /** The label graph's edges: both directions in ONE pass over pairs (a
+    * union of two selects would embed — and therefore execute — the
+    * upstream pair pipeline twice), eagerly checkpointed so the pair
+    * pipeline runs exactly once and the per-round plans are
+    * edge-leaf-sized.
+    */
+  private def labelEdges(pairs: DataFrame): DataFrame =
+    pairs
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint(true)
-    var labels = docs.select(col(idCol).as("doc_id"), col(idCol).as("label"))
-    for (_ <- 1 to iterations) {
-      val nbr = edges
-        .join(labels.select(col("doc_id").as("dst"), col("label")), "dst")
-        .select(col("src").as("doc_id"), col("label"))
-      labels = labels.union(nbr).groupBy(col("doc_id")).agg(min(col("label")).as("label"))
-        .localCheckpoint(true)
-    }
-    labels.select(col("doc_id"), col("label").as("cluster_id"))
+
+  /** One min-label propagation round — label(d) ← min(label(d), min
+    * label of neighbors) — eagerly checkpointed, so the next round's
+    * plan starts from a leaf.
+    */
+  private def labelRound(edges: DataFrame, labels: DataFrame): DataFrame = {
+    val nbr = edges
+      .join(labels.select(col("doc_id").as("dst"), col("label")), "dst")
+      .select(col("src").as("doc_id"), col("label"))
+    labels.union(nbr).groupBy(col("doc_id")).agg(min(col("label")).as("label"))
+      .localCheckpoint(true)
   }
 
   /** Iterate-until-stable variant of [[clusterLabels]]: min-label
@@ -713,22 +724,13 @@ object Dedup {
   def clusterLabelsConverged(docs: DataFrame, idCol: String, pairs: DataFrame,
       maxIterations: Int = 20): DataFrame = {
     require(maxIterations >= 1, s"maxIterations ($maxIterations) must be >= 1")
-    val edges = pairs
-      .select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist()
+    val edges = labelEdges(pairs)
     var labels = docs.select(col(idCol).as("doc_id"), col(idCol).as("label"))
       .localCheckpoint(true)
     var it = 0
     var changed = 1L
     while (changed > 0 && it < maxIterations) {
-      val nbr = edges
-        .join(labels.select(col("doc_id").as("dst"), col("label")), "dst")
-        .select(col("src").as("doc_id"), col("label"))
-      val next = labels.union(nbr).groupBy(col("doc_id")).agg(min(col("label")).as("label"))
-        .localCheckpoint(true)
+      val next = labelRound(edges, labels)
       // one count over the join of two checkpointed label tables —
       // min-label propagation only ever DECREASES a label, so
       // inequality == change
@@ -739,7 +741,6 @@ object Dedup {
       labels = next
       it += 1
     }
-    edges.unpersist()
     if (changed > 0)
       System.err.println(
         s"[graft] clusterLabelsConverged: NOT converged after $maxIterations rounds " +

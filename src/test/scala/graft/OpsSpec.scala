@@ -1148,38 +1148,51 @@ class OpsSpec extends SparkSpec {
   }
 
   test("curation durable staging: Parquet-staged verdicts identical to in-plan form") {
-    // the stagePath overload swaps localCheckpoint blocks for
-    // restartable Parquet stages — the verdicts must not move, and the
-    // staged cleaned corpus must actually exist at the stage path
+    // the staged cut swaps localCheckpoint blocks for restartable
+    // Parquet stages — the verdicts must not move, and the staged
+    // cleaned corpus must actually exist at the stage path
     val docs = Tables.documents(spark, sf0001)
       .select(col("doc_id"), col("text"))
-    val inPlan = Curation.curate(docs, "doc_id", "text", " the ", minDocs = 3, samplePct = 80)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    def verdicts(cut: Lineage.Cut): Map[Long, String] =
+      Curation.curate(docs, "doc_id", "text", " the ", minDocs = 3, samplePct = 80, cut = cut)
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val inPlan = verdicts(Lineage.local)
     val tmp = java.nio.file.Files.createTempDirectory("curate_stage").toString
-    val durable = Curation
-      .curate(docs, "doc_id", "text", " the ", minDocs = 3, samplePct = 80, stagePath = tmp)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val durable = verdicts(Lineage.staged(tmp))
     assert(durable == inPlan, "staged and in-plan verdicts diverged")
     assert(inPlan.values.toSet.contains("kept"))
     val staged = spark.read.parquet(s"$tmp/cleaned")
     assert(staged.count() == docs.count(), "staged cleaned corpus must cover every doc")
     assert(staged.columns.contains("clean_text"))
+    // resume over the completed stage dir: both stages are read back,
+    // none recomputed or rewritten (file-level identity), verdicts equal
+    def listing(stage: String): Seq[(String, Long, Long)] = {
+      val d = new java.io.File(s"$tmp/$stage")
+      d.listFiles().toSeq.filter(_.getName.endsWith(".parquet"))
+        .map(f => (f.getName, f.length(), f.lastModified())).sortBy(_._1)
+    }
+    val before = Seq("cleaned", "quality").map(s => s -> listing(s))
+    assert(before.forall(_._2.nonEmpty), s"missing staged files: $before")
+    val resumed = verdicts(Lineage.staged(tmp, resume = true))
+    assert(resumed == inPlan, "resumed verdicts diverged")
+    for ((s0, b) <- before)
+      assert(listing(s0) == b, s"resume rewrote completed stage $s0")
   }
 
   test("pipeline_e2e durable staging: 7-stage Parquet form identical to checkpointed form") {
     // the 100-TB execution form of the composed curation chain: every
     // lazy-localCheckpoint boundary becomes a Parquet stage
-    // (SparkEntryExt.pipelineE2eStaged). One shared chain body feeds
+    // (Lineage.staged). One shared chain body feeds
     // both cuts, so this pin is about the CUT SEMANTICS — a Parquet
     // write/read round-trip must not move a single packed row (schema
     // round-trip, row order via the explicit orderBy, and no
     // checkpoint-block-vs-storage divergence anywhere in 7 stages).
     val sf001 = "/root/testdata/sf0.01"
     def key(r: org.apache.spark.sql.Row) = r.toSeq.map(String.valueOf).mkString("|")
-    val ckpt = SparkEntryExt.pipelineE2eChain(spark, sf001,
-      (compute, _) => compute().localCheckpoint(false)).collect().map(key)
+    val ckpt = SparkEntryExt.pipelineE2eChain(spark, sf001, Lineage.local).collect().map(key)
     val tmp = java.nio.file.Files.createTempDirectory("e2e_stage").toString
-    val staged = SparkEntryExt.pipelineE2eStaged(spark, sf001, tmp).collect().map(key)
+    val staged =
+      SparkEntryExt.pipelineE2eChain(spark, sf001, Lineage.staged(tmp)).collect().map(key)
     assert(ckpt.nonEmpty, "chain produced no packed rows at sf0.01")
     assert(staged.toSeq == ckpt.toSeq, "staged and checkpointed pipeline_e2e diverged")
     // the staged boundaries must actually exist as readable tables —
@@ -1198,7 +1211,7 @@ class OpsSpec extends SparkSpec {
     // (a) full resume over a completed run: every stage table is read,
     // none recomputed or rewritten (file-level identity, the
     // upsertPartitioned discipline), output identical
-    val resumed = SparkEntryExt.pipelineE2eStaged(spark, sf001, tmp, resume = true)
+    val resumed = SparkEntryExt.pipelineE2eChain(spark, sf001, Lineage.staged(tmp, resume = true))
       .collect().map(key)
     assert(resumed.toSeq == ckpt.toSeq, "resumed run diverged")
     for ((s0, b) <- before)
@@ -1212,7 +1225,7 @@ class OpsSpec extends SparkSpec {
       assert(!d.exists)
     }
     rmStage("pool"); rmStage("keyed")
-    val partial = SparkEntryExt.pipelineE2eStaged(spark, sf001, tmp, resume = true)
+    val partial = SparkEntryExt.pipelineE2eChain(spark, sf001, Lineage.staged(tmp, resume = true))
       .collect().map(key)
     assert(partial.toSeq == ckpt.toSeq, "partial resume diverged")
     for ((s0, b) <- before.take(3))
@@ -1223,7 +1236,7 @@ class OpsSpec extends SparkSpec {
     // PREVIOUS sdocs generation must not be stitched to a fresh sdocs
     val afterB = Seq("cleaned", "qdocs", "sdocs", "pool", "keyed").map(s => s -> listing(s))
     rmStage("sdocs")
-    val cascaded = SparkEntryExt.pipelineE2eStaged(spark, sf001, tmp, resume = true)
+    val cascaded = SparkEntryExt.pipelineE2eChain(spark, sf001, Lineage.staged(tmp, resume = true))
       .collect().map(key)
     assert(cascaded.toSeq == ckpt.toSeq, "cascaded resume diverged")
     for ((s0, b) <- afterB.take(2))
