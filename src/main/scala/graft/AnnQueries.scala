@@ -810,9 +810,8 @@ object AnnQueries {
         .select(col("id_a"), col("id_b"), round(col("score"), 6).as("score"))
         .orderBy(col("id_a"), col("id_b"))),
     // SemDeDup-style semantic dedup: cosine near-dup components over the
-    // sign-bucketed embedding space, min-id representative kept. The
-    // 3-round unroll is the oracle-expressible form; production default
-    // is the converged variant (iterations = 0). AT SCALE use
+    // sign-bucketed embedding space, min-id representative kept (the
+    // shared recursive-closure label oracle). AT SCALE use
     // `sim_semdedup_vol` below: this fixed bits=4 width saturates the
     // hot-bucket guard at the 1000x decade (every bucket > cap -> zero
     // pairs, SCALING.md), which the vol form's self-sizing removes
@@ -822,27 +821,13 @@ object AnnQueries {
          |  SELECT a.vec_id AS doc_a, b2.vec_id AS doc_b
          |  FROM b a JOIN b b2 ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id
          |  WHERE ${sqlCos("a.embedding", "b2.embedding")} >= 0.4),
-         |edges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM prs
-         |  UNION ALL SELECT doc_b, doc_a FROM prs),
-         |l0 AS (SELECT vec_id AS doc_id, vec_id AS label FROM embeddings),
-         |l1 AS (SELECT doc_id, min(label) AS label FROM (
-         |  SELECT doc_id, label FROM l0
-         |  UNION ALL SELECT e.src AS doc_id, l.label FROM edges e JOIN l0 l ON e.dst = l.doc_id)
-         |  GROUP BY doc_id),
-         |l2 AS (SELECT doc_id, min(label) AS label FROM (
-         |  SELECT doc_id, label FROM l1
-         |  UNION ALL SELECT e.src AS doc_id, l.label FROM edges e JOIN l1 l ON e.dst = l.doc_id)
-         |  GROUP BY doc_id),
-         |l3 AS (SELECT doc_id, min(label) AS label FROM (
-         |  SELECT doc_id, label FROM l2
-         |  UNION ALL SELECT e.src AS doc_id, l.label FROM edges e JOIN l2 l ON e.dst = l.doc_id)
-         |  GROUP BY doc_id)
+         |ids AS (SELECT vec_id AS doc_id FROM embeddings),
+         |${clusterLabelCtesFrom("ids")}
          |SELECT doc_id AS id, label AS cluster_id, (label = doc_id) AS keep
-         |FROM l3
+         |FROM labels
          |ORDER BY id""".stripMargin)((s, d) =>
       SimilaritySearch.semanticDedup(Tables.embeddings(s, d), "vec_id", "embedding",
-          threshold = 0.4, bits = 4, iterations = 3)
+          threshold = 0.4, bits = 4)
         .orderBy(col("id"))),
     // the production form of the same operator: the quantizer width is
     // SELF-SIZED in-plan from a 1-row broadcast count (bits =
@@ -856,7 +841,7 @@ object AnnQueries {
     // to [4, 16] (integer `//` + bin-string length — the engine's exact
     // arithmetic), bucket = top-bits prefix of the 16-bit sign bucket,
     // hot-bucket guard included (count window over the bucket key),
-    // then the shared 3-round label chain
+    // then the shared label closure
     Query("sim_semdedup_vol", s"""WITH bt AS (
          |  SELECT least(16, greatest(4, length(bin(greatest(count(*) // 256, 1))))) AS bits
          |  FROM embeddings),
@@ -876,10 +861,10 @@ object AnnQueries {
          |ids AS (SELECT vec_id AS doc_id FROM embeddings),
          |${clusterLabelCtesFrom("ids")}
          |SELECT doc_id AS id, label AS cluster_id, (label = doc_id) AS keep
-         |FROM l3
+         |FROM labels
          |ORDER BY id""".stripMargin)((s, d) =>
       SimilaritySearch.semanticDedupVol(Tables.embeddings(s, d), "vec_id", "embedding",
-          threshold = 0.4, targetBucket = 256, iterations = 3)
+          threshold = 0.4, targetBucket = 256)
         .orderBy(col("id"))),
     // Sorscher-et-al. prototypicality pruning: keep the hardest half of
     // every trained cluster (cosine-to-own-centroid ascending). Reuses

@@ -80,13 +80,13 @@ object DedupQueries {
         .orderBy(col("doc_a"), col("doc_b"))),
     Query("dedup_cluster", s"""$minhashPairsCte,
          |$clusterLabelCtes
-         |SELECT doc_id, label AS cluster_id FROM l3
+         |SELECT doc_id, label AS cluster_id FROM labels
          |ORDER BY doc_id""".stripMargin)((s, d) => {
       val docs = Tables.documents(s, d)
       val pairs = Dedup.minHashLsh(docs, "doc_id", "text",
           shingleN = 3, numHashes = 16, rowsPerBand = 8)
         .filter(col("jaccard") >= 0.5)
-      Dedup.clusterLabels(docs, "doc_id", pairs, iterations = 3).orderBy(col("doc_id"))
+      Dedup.clusterLabels(docs, "doc_id", pairs).orderBy(col("doc_id"))
     }),
     // survivor selection on top of the cluster labels: per near-dup
     // cluster keep the ONE doc a quality-aware pipeline keeps
@@ -102,14 +102,14 @@ object DedupQueries {
          |    row_number() OVER (PARTITION BY l.label
          |      ORDER BY coalesce(q.reason = 'ok', false) DESC,
          |        coalesce(q.n_tokens, 0) DESC, l.doc_id) AS rn
-         |  FROM l3 l LEFT JOIN kb_r q ON l.doc_id = q.doc_id)
+         |  FROM labels l LEFT JOIN kb_r q ON l.doc_id = q.doc_id)
          |WHERE rn = 1
          |ORDER BY cluster_id""".stripMargin)((s, d) => {
       val docs = Tables.documents(s, d)
       val pairs = Dedup.minHashLsh(docs, "doc_id", "text",
           shingleN = 3, numHashes = 16, rowsPerBand = 8)
         .filter(col("jaccard") >= 0.5)
-      Dedup.keepBest(docs, "doc_id", "text", pairs, iterations = 3)
+      Dedup.keepBest(docs, "doc_id", "text", pairs)
         .orderBy(col("cluster_id"))
     }),
     Query("dedup_simhash", s"""WITH tc AS (

@@ -361,37 +361,40 @@ object OracleSql {
   lazy val minhashPairsCte: String =
     "WITH " + minhashPairsBodyFrom("documents")
 
-  /** Min-label propagation over the `prs` pair set, unrolled 3 rounds
-    * (mirrors `Dedup.clusterLabels(iterations = 3)`); ends at
-    * `l3(doc_id, label)`. ONE definition, two consumers
-    * (`dedup_cluster`, `dedup_keep_best`) — the dataCardSql
-    * discipline. Expects `prs(doc_a, doc_b, …)` in scope (the
-    * minhashPairsCte product).
+  /** Connected-component labels over the `prs` pair set (mirrors
+    * [[graft.ops.Dedup.clusterLabels]]'s fixed point: every doc's label
+    * is the minimum doc id of its component); ends at
+    * `labels(doc_id, label)`. ONE definition for every label oracle
+    * (`dedup_cluster`, `dedup_keep_best`, `q_leakfree_split`,
+    * `sim_semdedup`, `sim_semdedup_vol`, `pipeline_e2e`). Expects
+    * `prs(doc_a, doc_b, …)` in scope and `docsSrc` to carry `doc_id`.
+    *
+    * The propagation loop's fixed point is the transitive closure of
+    * the edges: `WITH RECURSIVE … UNION` (set semantics, so it stops
+    * once no new (src, dst) pair appears) reaches every doc of the
+    * component, whatever its chain length. The recursion is nested in
+    * the `labels` body, so a consumer's top-level `WITH` stays plain.
     */
   def clusterLabelCtesFrom(docsSrc: String): String =
-    // MATERIALIZED levels: DuckDB 1.0 INLINES a CTE at every reference
-    // and each propagation level references the previous one TWICE (its
-    // own rows + the edge join), so the unmaterialized chain re-derives
-    // the whole upstream (prs' band self-join, and in pipeline_e2e the
-    // clean→quality→minhash lineage) 2^rounds times — measured as a
-    // 19-CPU-minute oracle stall on a 393-doc corpus. Materialization
-    // is semantics-neutral; each level now computes once.
+    // MATERIALIZED: DuckDB 1.0 INLINES a CTE at every reference, and
+    // the closure reads `edges` in its base case and again on every
+    // recursive step, so an unmaterialized chain would re-derive the
+    // whole upstream (prs' band self-join, and in pipeline_e2e the
+    // clean→quality→minhash lineage) per reference — the unrolled form
+    // this replaced measured that as a 19-CPU-minute oracle stall on a
+    // 393-doc corpus. Materialization is semantics-neutral; each CTE
+    // computes once.
     s"""edges AS MATERIALIZED (
        |  SELECT doc_a AS src, doc_b AS dst FROM prs
        |  UNION ALL SELECT doc_b, doc_a FROM prs),
        |l0 AS MATERIALIZED (SELECT doc_id, doc_id AS label FROM $docsSrc),
-       |l1 AS MATERIALIZED (SELECT doc_id, min(label) AS label FROM (
-       |  SELECT doc_id, label FROM l0
-       |  UNION ALL SELECT e.src AS doc_id, l.label FROM edges e JOIN l0 l ON e.dst = l.doc_id)
-       |  GROUP BY doc_id),
-       |l2 AS MATERIALIZED (SELECT doc_id, min(label) AS label FROM (
-       |  SELECT doc_id, label FROM l1
-       |  UNION ALL SELECT e.src AS doc_id, l.label FROM edges e JOIN l1 l ON e.dst = l.doc_id)
-       |  GROUP BY doc_id),
-       |l3 AS MATERIALIZED (SELECT doc_id, min(label) AS label FROM (
-       |  SELECT doc_id, label FROM l2
-       |  UNION ALL SELECT e.src AS doc_id, l.label FROM edges e JOIN l2 l ON e.dst = l.doc_id)
-       |  GROUP BY doc_id)""".stripMargin
+       |labels AS MATERIALIZED (
+       |  WITH RECURSIVE reach(src, dst) AS (
+       |    SELECT src, dst FROM edges
+       |    UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
+       |  SELECT l0.doc_id, least(l0.label, coalesce(min(r.dst), l0.label)) AS label
+       |  FROM l0 LEFT JOIN reach r ON r.src = l0.doc_id
+       |  GROUP BY l0.doc_id, l0.label)""".stripMargin
 
   lazy val clusterLabelCtes: String = clusterLabelCtesFrom("documents")
 

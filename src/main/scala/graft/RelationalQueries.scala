@@ -11,7 +11,7 @@ import graft.ops._
   */
 object RelationalQueries {
 
-  import OracleSql.{FixturesDir, h32Sql, minhashPairsCte, toksSql}
+  import OracleSql.{clusterLabelCtes, FixturesDir, h32Sql, minhashPairsCte, toksSql}
 
   /** The k both KMV queries register AND their oracles interpolate —
     * one constant, so the Scala parameter and the oracle SQL cannot
@@ -724,32 +724,17 @@ object RelationalQueries {
     // cluster-aware train/test split: whole near-dup clusters land in
     // one split (split-time decontamination)
     Query("q_leakfree_split", s"""$minhashPairsCte,
-         |edges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM prs
-         |  UNION ALL SELECT doc_b, doc_a FROM prs),
-         |l0 AS (SELECT doc_id, doc_id AS label FROM documents),
-         |l1 AS (SELECT doc_id, min(label) AS label FROM (
-         |  SELECT doc_id, label FROM l0
-         |  UNION ALL SELECT e.src AS doc_id, l.label FROM edges e JOIN l0 l ON e.dst = l.doc_id)
-         |  GROUP BY doc_id),
-         |l2 AS (SELECT doc_id, min(label) AS label FROM (
-         |  SELECT doc_id, label FROM l1
-         |  UNION ALL SELECT e.src AS doc_id, l.label FROM edges e JOIN l1 l ON e.dst = l.doc_id)
-         |  GROUP BY doc_id),
-         |l3 AS (SELECT doc_id, min(label) AS label FROM (
-         |  SELECT doc_id, label FROM l2
-         |  UNION ALL SELECT e.src AS doc_id, l.label FROM edges e JOIN l2 l ON e.dst = l.doc_id)
-         |  GROUP BY doc_id)
+         |$clusterLabelCtes
          |SELECT doc_id, label AS cluster_id,
          |  CASE WHEN ${h32Sql("'split|' || label")} % 100 < 80
          |       THEN 'train' ELSE 'test' END AS split
-         |FROM l3
+         |FROM labels
          |ORDER BY doc_id""".stripMargin)((s, d) => {
       val docs = Tables.documents(s, d)
       val pairs = Dedup.minHashLsh(docs, "doc_id", "text",
           shingleN = 3, numHashes = 16, rowsPerBand = 8)
         .filter(col("jaccard") >= 0.5)
-      Curation.leakFreeSplit(docs, "doc_id", pairs, iterations = 3, trainPct = 80)
+      Curation.leakFreeSplit(docs, "doc_id", pairs, trainPct = 80)
         .orderBy(col("doc_id"))
     }),
     // histogram-sketch quantiles: bounded-state mergeable quantile

@@ -328,7 +328,7 @@ object SparkEntryExt {
       val pairs = Dedup.minHashLsh(qdocs, "doc_id", "text",
           shingleN = 3, numHashes = 16, rowsPerBand = 8)
         .filter(col("jaccard") >= 0.5)
-      val survivors = Dedup.keepBest(qdocs, "doc_id", "text", pairs, iterations = 3)
+      val survivors = Dedup.keepBest(qdocs, "doc_id", "text", pairs)
         .select(col("doc_id"))
       qdocs.join(survivors, Seq("doc_id"))
         .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
@@ -568,7 +568,7 @@ object SparkEntryExt {
          |    SELECT l.doc_id,
          |      row_number() OVER (PARTITION BY l.label
          |        ORDER BY r.n_tokens DESC, l.doc_id) AS rn
-         |    FROM l3 l JOIN qr r USING (doc_id))
+         |    FROM labels l JOIN qr r USING (doc_id))
          |  WHERE rn = 1),
          |sd AS MATERIALIZED (
          |  SELECT k.doc_id, q.text, d.lang

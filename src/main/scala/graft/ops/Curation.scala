@@ -135,13 +135,15 @@ object Curation {
     * `pairs(doc_a, doc_b)` is the near-dup edge list (e.g.
     * [[Dedup.minHashLsh]] above a jaccard threshold); `trainPct` of
     * the hash space (0..100) goes to train. Singleton docs are their
-    * own cluster. Scale shape = [[Dedup.clusterLabels]] (linear label
-    * propagation) plus one narrow hash projection — no new shuffle.
+    * own cluster, and a near-dup chain of any length is one cluster.
+    * Scale shape = [[Dedup.clusterLabels]] (linear label propagation,
+    * run to its fixed point) plus one narrow hash projection — no new
+    * shuffle.
     */
   def leakFreeSplit(docs: DataFrame, idCol: String, pairs: DataFrame,
-      iterations: Int, trainPct: Int): DataFrame = {
+      trainPct: Int): DataFrame = {
     require(trainPct >= 0 && trainPct <= 100, s"trainPct ($trainPct) must be in [0, 100]")
-    Dedup.clusterLabels(docs, idCol, pairs, iterations)
+    Dedup.clusterLabels(docs, idCol, pairs)
       .select(col("doc_id"), col("cluster_id"),
         when(pmod(Dedup.h32(concat_ws("|", lit("split"), col("cluster_id"))), lit(100))
             < trainPct, lit("train"))

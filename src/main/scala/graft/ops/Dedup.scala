@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -625,44 +625,68 @@ object Dedup {
   }
 
   /** Connected-component labels over the near-dup pair graph by
-    * min-label propagation, loop-unrolled `iterations` times (each
-    * iteration: label(d) ← min(label(d), min label of neighbors)).
-    * Deterministic for ANY iteration count (both engines run the same
-    * unrolled formula); near-dup graphs are overwhelmingly cliques, where
-    * one round converges. This is the production OUTPUT of dedup —
-    * cluster assignments, linear in |docs| — rather than the O(dups²)
-    * pair enumeration.
+    * min-label propagation (each round: label(d) ← min(label(d), min
+    * label of neighbors)), iterated until NO label changes — then every
+    * component, however long its chain, carries its minimum doc id.
+    * Near-dup graphs are overwhelmingly cliques: round 1 reaches the
+    * fixed point and round 2 confirms it. Capped at `maxIterations`
+    * with a warning — a >cap-diameter graph means the "near-dup graphs
+    * are cliques" assumption broke and the caller should look at the
+    * data, not trust the labels silently. This is the production
+    * OUTPUT of dedup — cluster assignments, linear in |docs| — rather
+    * than the O(dups²) pair enumeration. The DuckDB oracle reaches the
+    * same fixed point as a recursive closure over the edges
+    * ([[graft.OracleSql.clusterLabelCtesFrom]]). `pairs` must join ids
+    * of `docs` only: an id found only in `pairs` still gets a label row
+    * here, while the oracle labels the docs alone.
+    *
+    * The convergence test adds no job: each round's aggregate also
+    * carries the doc's previous label, and an `Observation` counting
+    * `label < prev` (labels only ever decrease, so that IS a change)
+    * is filled by the round's own eager checkpoint.
     */
   def clusterLabels(docs: DataFrame, idCol: String, pairs: DataFrame,
-      iterations: Int): DataFrame = {
+      maxIterations: Int = 20): DataFrame = {
+    require(maxIterations >= 1, s"maxIterations ($maxIterations) must be >= 1")
     // Iterative algorithm discipline (same reason GraphX checkpoints):
     // each round references `labels` TWICE (self ∪ neighbor-join), so an
-    // unpersisted lineage doubles per round — round 3 would re-run the
-    // whole upstream LSH pipeline up to 8×. `localCheckpoint(true)`
-    // per round — the [[clusterLabelsConverged]] / Pq / Bpe rule, NOT
-    // persist + count: persist pins execution but leaves the LOGICAL
-    // plan doubling per round (measured here: a 3-round unroll over a
-    // real LSH pair pipeline reached a ~1000-Exchange, 600 KB plan
-    // string, and every downstream action re-analyzed it), while the
+    // uncut lineage doubles per round — every round would re-run the
+    // whole upstream LSH pipeline 2^round times. `localCheckpoint(true)`
+    // per round — the Pq / Bpe rule, NOT persist + count: persist pins
+    // execution but leaves the LOGICAL plan doubling per round (a
+    // persist-only loop over a real pair pipeline grew the plan to
+    // 2^rounds copies of the upstream LSH subtree, and the DRIVER spun
+    // for tens of minutes in plan walks on a 12-doc corpus), while the
     // eager checkpoint truncates each round to a leaf, so planning cost
-    // is flat and the materializing action replaces the old count().
-    // Superseded rounds' blocks are released asynchronously by the
-    // ContextCleaner once the old `labels` reference drops. (On a
+    // is flat. Superseded rounds' blocks are released asynchronously by
+    // the ContextCleaner once the old `labels` reference drops. (On a
     // cluster, executor loss invalidates a local checkpoint and fails
-    // the job — the retry-from-scratch trade documented at
-    // [[clusterLabelsConverged]], which production callers use.)
+    // the job — the retry-from-scratch trade every iterative framework
+    // makes for driver-side sanity; use reliable checkpointing if that
+    // trade is wrong for the deployment.)
     // Measured-rejected (r22): dropping the per-ROUND checkpoints (edges
     // leaf only, trusting ReuseExchange to dedup the doubled label
     // subtrees) cut jobs ~12% (dedup_cluster 25→22, pipeline_e2e 90→85)
     // but REGRESSED min-CPU on 3 of 4 consumers (dedup_keep_best
     // 5.8→7.1 s, pipeline_e2e 11.7→12.6 s, same-window A/B at sf0.1)
     // and raised shuffle read — the doubled subtrees re-execute beyond
-    // what ReuseExchange dedups, and the uncut plan doubles per round
-    // (2^6 copies at the OpsSpec iterations=6 call).
+    // what ReuseExchange dedups, and the uncut plan doubles per round.
     val edges = labelEdges(pairs)
-    val initial = docs.select(col(idCol).as("doc_id"), col(idCol).as("label"))
-    (1 to iterations).foldLeft(initial)((labels, _) => labelRound(edges, labels))
-      .select(col("doc_id"), col("label").as("cluster_id"))
+    var labels = docs.select(col(idCol).as("doc_id"), col(idCol).as("label"))
+    var rounds = 0
+    var changed = 1L
+    while (changed > 0 && rounds < maxIterations) {
+      val (next, nChanged) = labelRound(edges, labels)
+      labels = next
+      changed = nChanged
+      rounds += 1
+    }
+    if (changed > 0)
+      System.err.println(
+        s"[graft] clusterLabels: NOT converged after $maxIterations rounds " +
+          s"($changed labels still changing) — component diameter exceeds the cap; " +
+          "labels are a fixed-point-in-progress, not final components")
+    labels.select(col("doc_id"), col("label").as("cluster_id"))
   }
 
   /** The label graph's edges: both directions in ONE pass over pairs (a
@@ -681,72 +705,24 @@ object Dedup {
 
   /** One min-label propagation round — label(d) ← min(label(d), min
     * label of neighbors) — eagerly checkpointed, so the next round's
-    * plan starts from a leaf.
+    * plan starts from a leaf. Returns the new labels and how many of
+    * them changed, counted by an `Observation` over the round's own
+    * aggregate (the self rows carry the previous label), so the count
+    * rides the checkpoint's job instead of a join + `count()` of its own.
     */
-  private def labelRound(edges: DataFrame, labels: DataFrame): DataFrame = {
+  private def labelRound(edges: DataFrame, labels: DataFrame): (DataFrame, Long) = {
     val nbr = edges
       .join(labels.select(col("doc_id").as("dst"), col("label")), "dst")
-      .select(col("src").as("doc_id"), col("label"))
-    labels.union(nbr).groupBy(col("doc_id")).agg(min(col("label")).as("label"))
+      .select(col("src").as("doc_id"), col("label"), lit(false).as("self"))
+    val obs = Observation()
+    val next = labels.select(col("doc_id"), col("label"), lit(true).as("self"))
+      .union(nbr)
+      .groupBy(col("doc_id"))
+      .agg(min(col("label")).as("label"), min(when(col("self"), col("label"))).as("prev"))
+      .observe(obs, count(when(col("label") < col("prev"), lit(1))).as("changed"))
+      .select(col("doc_id"), col("label"))
       .localCheckpoint(true)
-  }
-
-  /** Iterate-until-stable variant of [[clusterLabels]]: min-label
-    * propagation runs until NO label changes (then every component,
-    * however long its chain, carries one label), capped at
-    * `maxIterations` with a warning — a >cap-diameter graph means the
-    * "near-dup graphs are cliques" assumption broke and the caller
-    * should look at the data, not trust the labels silently.
-    *
-    * The per-round changed-label count is one aggregate over the
-    * already-materialized `next` joined to the previous round — both
-    * tiny label tables, no upstream re-execution. The fixed-unroll
-    * [[clusterLabels]] remains the oracle-checked form (a convergence
-    * loop is run-dependent, so it cannot be transliterated to static
-    * SQL); this is the production entry point.
-    *
-    * Lineage discipline — `localCheckpoint`, NOT `persist`: each round
-    * references the previous label table twice (self ∪ neighbor-join),
-    * so the LOGICAL plan doubles per round even when execution hits the
-    * cache. A persist-only loop over a real pair pipeline grew the plan
-    * to 2^rounds copies of the whole upstream LSH subtree and the
-    * DRIVER — analyzer, optimizer, plan-string generation — spun for
-    * tens of minutes on a 12-doc corpus while executors sat idle.
-    * `localCheckpoint(eager = true)` materializes the round AND
-    * truncates the plan to a leaf, so per-round planning cost is flat.
-    * (On a cluster, executor loss invalidates a local checkpoint and
-    * fails the job — the retry-from-scratch trade every iterative
-    * framework makes for driver-side sanity; use reliable checkpointing
-    * if that trade is wrong for the deployment.) Superseded rounds'
-    * blocks are released asynchronously by the ContextCleaner once the
-    * old `labels` reference drops.
-    */
-  def clusterLabelsConverged(docs: DataFrame, idCol: String, pairs: DataFrame,
-      maxIterations: Int = 20): DataFrame = {
-    require(maxIterations >= 1, s"maxIterations ($maxIterations) must be >= 1")
-    val edges = labelEdges(pairs)
-    var labels = docs.select(col(idCol).as("doc_id"), col(idCol).as("label"))
-      .localCheckpoint(true)
-    var it = 0
-    var changed = 1L
-    while (changed > 0 && it < maxIterations) {
-      val next = labelRound(edges, labels)
-      // one count over the join of two checkpointed label tables —
-      // min-label propagation only ever DECREASES a label, so
-      // inequality == change
-      changed = next.as("n")
-        .join(labels.as("p"), col("n.doc_id") === col("p.doc_id"))
-        .filter(col("n.label") =!= col("p.label"))
-        .count()
-      labels = next
-      it += 1
-    }
-    if (changed > 0)
-      System.err.println(
-        s"[graft] clusterLabelsConverged: NOT converged after $maxIterations rounds " +
-          s"($changed labels still changing) — component diameter exceeds the cap; " +
-          "labels are a fixed-point-in-progress, not final components")
-    labels.select(col("doc_id"), col("label").as("cluster_id"))
+    (next, obs.get("changed").asInstanceOf[Long])
   }
 
   /** Keep-BEST dedup — the survivor-selection verb on top of
@@ -771,37 +747,14 @@ object Dedup {
     * `(cluster_id, doc_id, n_tokens, n_members)` — the deduped corpus
     * with its provenance (`n_members` = how many copies collapsed).
     *
-    * This overload labels with the fixed-unroll [[clusterLabels]]
-    * (oracle-expressible: the DuckDB mirror unrolls the same rounds);
-    * production survivor selection over an unbounded-diameter pair
-    * graph wants [[clusterLabelsConverged]]'s fixed point — feed its
-    * output to [[keepBestFromLabels]], which this overload shares
-    * verbatim (survivor invariance under deeper iteration is
-    * OpsSpec-pinned on a bounded-diameter fixture).
+    * CONTRACT: `idCol` must be UNIQUE over `docs`: the labels then hold
+    * exactly one row per doc (the [[graft.ops.Bpe.applyMerges]]
+    * contract), while duplicated ids multiply through the quality join
+    * and inflate `n_members` with phantom copies — silently, not as an
+    * error.
     */
   def keepBest(docs: DataFrame, idCol: String, textCol: String,
-      pairs: DataFrame, iterations: Int): DataFrame =
-    keepBestFromLabels(clusterLabels(docs, idCol, pairs, iterations),
-      docs, idCol, textCol)
-
-  /** [[keepBest]]'s selection tail over an ALREADY-LABELED corpus:
-    * `labels(doc_id, cluster_id)` is any cluster labeling —
-    * [[clusterLabels]]' fixed unroll, [[clusterLabelsConverged]]'s
-    * fixed point, or a stored label table from a previous run. The
-    * survivor depends only on the label PARTITION (which docs share a
-    * cluster), not on which iteration scheme produced it, so a deeper
-    * labeling that reaches the same components keeps the same
-    * survivors.
-    *
-    * CONTRACT: `idCol` must be UNIQUE over `docs` and `labels` must
-    * hold exactly one row per doc (the [[graft.ops.Bpe.applyMerges]]
-    * contract): duplicated ids multiply through the quality join and
-    * inflate `n_members` with phantom copies — silently, not as an
-    * error. [[clusterLabels]]' own output satisfies this by
-    * construction (its groupBy collapses to one row per doc_id).
-    */
-  def keepBestFromLabels(labels: DataFrame, docs: DataFrame,
-      idCol: String, textCol: String): DataFrame = {
+      pairs: DataFrame): DataFrame = {
     // LEFT join + coalesced defaults: qualityFilter emits NO row for a
     // zero-token doc (its unigram aggregate has no rows), and an inner
     // join would silently delete such docs from their clusters — a
@@ -816,51 +769,13 @@ object Dedup {
     val best = byCluster.orderBy(
       coalesce(col("keep"), lit(false)).desc,
       coalesce(col("n_tokens"), lit(0L)).desc, col("doc_id").asc)
-    labels.select(col("doc_id"), col("cluster_id"))
+    clusterLabels(docs, idCol, pairs)
       .join(quality, Seq("doc_id"), "left")
       .withColumn("n_members", count(lit(1)).over(byCluster))
       .withColumn("__rn", row_number().over(best))
       .filter(col("__rn") === 1)
       .select(col("cluster_id"), col("doc_id"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"), col("n_members"))
-  }
-
-  /** The composed production dedup pipeline: exact-collapse FIRST
-    * (sha256 group-by picks one representative per identical content),
-    * MinHash-LSH + clustering on representatives only, then map every
-    * doc to its representative's near-dup cluster.
-    *
-    * Ordering matters enormously: on a corpus with heavy exact
-    * duplication the LSH band buckets contain every copy, and candidate
-    * pairs grow quadratically in copy count — measured on a 10×-
-    * duplicated 50k-doc corpus: 303.6M candidate pairs raw vs 3.0M
-    * after exact-collapse (100×). Output: (doc_id, cluster_id) where
-    * cluster_id is the minimum doc_id of the combined exact+near
-    * duplicate group.
-    *
-    * Clustering runs CONVERGED ([[clusterLabelsConverged]]), not the
-    * fixed 3-round unroll: a production corpus owes no diameter bound,
-    * and a >3-hop near-dup chain must still collapse to one cluster
-    * (the unroll stays only as the statically-SQL-expressible form the
-    * `dedup_cluster` oracle query checks).
-    */
-  def nearDupPipeline(docs: DataFrame, idCol: String, textCol: String,
-      jaccardThreshold: Double = 0.5, shingleN: Int = 1,
-      numHashes: Int = 16, rowsPerBand: Int = 8,
-      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val withHash = docs.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
-      sha2(col(textCol), 256).as("__ch"))
-    val reps = withHash.groupBy(col("__ch")).agg(min(col("doc_id")).as("rep_id"))
-    val repDocs = withHash.join(reps, "__ch")
-      .filter(col("doc_id") === col("rep_id"))
-      .select(col("doc_id"), col("__text").as("text"))
-    val pairs = minHashLsh(repDocs, "doc_id", "text", shingleN = shingleN,
-      numHashes = numHashes, rowsPerBand = rowsPerBand, maxBucketSize = maxBucketSize)
-      .filter(col("jaccard") >= jaccardThreshold)
-    val repClusters = clusterLabelsConverged(repDocs, "doc_id", pairs)
-      .select(col("doc_id").as("rep_id"), col("cluster_id"))
-    withHash.join(reps, "__ch").join(repClusters, "rep_id")
-      .select(col("doc_id"), col("cluster_id"))
   }
 
   /** Incremental dedup — the production shape for a GROWING corpus:

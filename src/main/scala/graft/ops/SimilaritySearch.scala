@@ -880,17 +880,13 @@ object SimilaritySearch {
     * `keep` flag (filter on `keep` for the surviving corpus).
     *
     * Scale shape: bucket-pruned pair join (never N² scoring) + label
-    * propagation over id-sized tables. `iterations <= 0` (the default)
-    * runs [[Dedup.clusterLabelsConverged]] — the production mode, exact
-    * for any component diameter; a positive value runs the fixed
-    * `iterations`-round unroll, which is what the static-SQL oracle can
-    * express (`sim_semdedup`) but splits components longer than
-    * `iterations` hops.
+    * propagation over id-sized tables ([[Dedup.clusterLabels]], exact
+    * for any component diameter).
     */
   def semanticDedup(vectors: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, bits: Int, iterations: Int = 0): DataFrame =
+      threshold: Double, bits: Int): DataFrame =
     semDedupFromPairs(vectors, idCol,
-      cosineNearDup(vectors, idCol, vecCol, threshold, bits), iterations)
+      cosineNearDup(vectors, idCol, vecCol, threshold, bits))
 
   /** [[semanticDedup]] over [[cosineNearDupVol]] candidates — the form
     * whose quantizer width grows with the corpus instead of saturating
@@ -899,24 +895,19 @@ object SimilaritySearch {
     * 2M rows as singletons). Same output contract as [[semanticDedup]].
     */
   def semanticDedupVol(vectors: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, targetBucket: Int = 256, iterations: Int = 0,
+      threshold: Double, targetBucket: Int = 256,
       maxBucketSize: Int = Dedup.DefaultMaxBucketSize): DataFrame =
     semDedupFromPairs(vectors, idCol,
-      cosineNearDupVol(vectors, idCol, vecCol, threshold, targetBucket, maxBucketSize),
-      iterations)
+      cosineNearDupVol(vectors, idCol, vecCol, threshold, targetBucket, maxBucketSize))
 
   /** Shared label-propagation + min-id-keep tail of the two
     * semantic-dedup fronts (every id keeps its row; members of excluded
     * hot buckets simply contribute no pairs and stay singletons).
     */
   private def semDedupFromPairs(vectors: DataFrame, idCol: String,
-      nearDupPairs: DataFrame, iterations: Int): DataFrame = {
+      nearDupPairs: DataFrame): DataFrame = {
     val pairs = nearDupPairs.select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-    val ids = vectors.select(col(idCol))
-    val labels =
-      if (iterations <= 0) Dedup.clusterLabelsConverged(ids, idCol, pairs)
-      else Dedup.clusterLabels(ids, idCol, pairs, iterations)
-    labels
+    Dedup.clusterLabels(vectors.select(col(idCol)), idCol, pairs)
       .withColumn("keep", col("cluster_id") === col("doc_id"))
       .select(col("doc_id").as("id"), col("cluster_id"), col("keep"))
   }

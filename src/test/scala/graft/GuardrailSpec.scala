@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ops._
 
-/** Scale-guardrail behavior: the LSH hot-bucket cap, convergence-aware
-  * clustering, the jaccardPairs input guard, tfIdf laziness, the
+/** Scale-guardrail behavior: the LSH hot-bucket cap, run-to-fixed-point
+  * cluster labels, the jaccardPairs input guard, tfIdf laziness, the
   * kmeans numeric-id precondition, and the approx-distinct error bound.
   */
 class GuardrailSpec extends SparkSpec {
@@ -134,57 +134,82 @@ class GuardrailSpec extends SparkSpec {
       "default cap must not drop harness-scale buckets")
   }
 
-  test("clusterLabelsConverged: 5-hop chain collapses to ONE cluster") {
-    // A≈B≈C≈D≈E — diameter 4, so the fixed 3-round unroll CANNOT finish
-    // (doc 5 only sees 3 hops), while the converged mode must.
+  test("clusterLabels: 5-doc chain collapses to ONE cluster") {
+    // 1≈2≈3≈4≈5 — diameter 4, past any 3-round unroll; the loop runs
+    // until no label changes, so the chain end reaches label 1
     val docs = (1L to 5L).map(i => Tuple1(i)).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("doc_a", "doc_b")
-    val fixed = Dedup.clusterLabels(docs, "doc_id", pairs, iterations = 3)
+    val got = Dedup.clusterLabels(docs, "doc_id", pairs, maxIterations = 10)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fixed(5L) != 1L, "3-round unroll must NOT reach the chain end (motivates the loop)")
-    val conv = Dedup.clusterLabelsConverged(docs, "doc_id", pairs, maxIterations = 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(conv.values.toSet == Set(1L), s"all five docs in cluster 1, got $conv")
+    assert(got == (1L to 5L).map(_ -> 1L).toMap, s"all five docs in cluster 1, got $got")
   }
 
-  test("clusterLabelsConverged: capped run still returns labels (warn path)") {
+  test("clusterLabels: capped run returns partial labels (warn path)") {
+    // one round moves every label at most one hop toward the minimum
     val docs = (1L to 5L).map(i => Tuple1(i)).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("doc_a", "doc_b")
-    val got = Dedup.clusterLabelsConverged(docs, "doc_id", pairs, maxIterations = 1)
-    assert(got.count() == 5)
+    val got = Dedup.clusterLabels(docs, "doc_id", pairs, maxIterations = 1)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 5L -> 4L), s"got $got")
   }
 
-  test("nearDupPipeline: >3-hop near-dup chain collapses to ONE cluster") {
+  test("clusterLabels: a diameter-6 MinHash chain is ONE cluster") {
     // 12 docs sliding a 16-token window by 2: jaccard is 14/18 at offset
     // 1 and 12/20 at offset 2 (both ≥ 0.5 → edges), 10/22 at offset 3
-    // (< 0.5 → no edge) — a width-2 chain of diameter 6. The production
-    // pipeline must converge it to one cluster; the fixed 3-round unroll
-    // provably cannot (asserted below so a regression to it is caught).
+    // (< 0.5 → no edge) — a width-2 chain of diameter 6. The labels must
+    // converge it to one cluster; three rounds provably cannot (asserted
+    // below so the fixture keeps its bite).
     val docs = (1 to 12).map { i =>
       (i.toLong, (0 until 16).map(j => s"w${2 * (i - 1) + j}").mkString(" "))
     }.toDF("doc_id", "text")
-    val got = Dedup.nearDupPipeline(docs, "doc_id", "text",
-        numHashes = 16, rowsPerBand = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got.size == 12)
-    assert(got.values.toSet == Set(1L), s"one converged cluster expected, got $got")
     val pairs = Dedup.minHashLsh(docs, "doc_id", "text", 1, 16, 2)
       .filter(col("jaccard") >= 0.5)
-    val unrolled = Dedup.clusterLabels(docs, "doc_id", pairs, iterations = 3)
+    val got = Dedup.clusterLabels(docs, "doc_id", pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (1L to 12L).map(_ -> 1L).toMap, s"one converged cluster expected, got $got")
+    val threeRounds = Dedup.clusterLabels(docs, "doc_id", pairs, maxIterations = 3)
       .collect().map(r => r.getLong(1)).toSet
-    assert(unrolled.size > 1,
-      "fixture diameter must exceed the 3-round unroll for this test to bite")
+    assert(threeRounds.size > 1,
+      "fixture diameter must exceed three rounds for this test to bite")
   }
 
-  test("clusterLabelsConverged matches fixed unroll on a clique corpus") {
-    // near-dup graphs are mostly cliques — both forms must agree there
+  test("clusterLabels: a clique corpus converges in one round") {
+    // near-dup graphs are mostly cliques: one round already reaches the
+    // component minimum, and the full run agrees
     val docs = (1L to 6L).map(i => Tuple1(i)).toDF("doc_id")
     val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L), (5L, 6L)).toDF("doc_a", "doc_b")
-    val a = Dedup.clusterLabels(docs, "doc_id", pairs, iterations = 3)
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L)
+    Seq(1, 20).foreach { cap =>
+      val got = Dedup.clusterLabels(docs, "doc_id", pairs, maxIterations = cap)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == want, s"maxIterations = $cap: got $got")
+    }
+  }
+
+  test("clusterLabels: empty docs and pairs still end the loop with no rows") {
+    // the round's change count must arrive even when its job scans
+    // nothing, or the loop would wait on it forever
+    val docs = Seq.empty[Long].toDF("doc_id")
+    val pairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+    assert(Dedup.clusterLabels(docs, "doc_id", pairs).count() == 0)
+    val filtered = spark.range(5).select(col("id").as("doc_id")).filter(col("doc_id") < 0)
+    assert(Dedup.clusterLabels(filtered, "doc_id", pairs).count() == 0)
+  }
+
+  test("dedup_cluster: a 5-hop MinHash chain is one cluster through the registry") {
+    // doc i (1..12) holds the 200 tokens w{10(i-1)+j}: neighbours share
+    // 190 of them, and the registry's own trigram MinHash (16 hashes,
+    // 2 bands × 8 rows, j ≥ 0.5) links 1-2-6-7-8-10 plus side edges
+    // from 3, 4, 5 and 9 — a 5-hop path no 3-round unroll crosses.
+    // Docs 11 and 12 find no band collision and stay singletons.
+    val dir = java.nio.file.Files.createTempDirectory("graft-chain").toString
+    (1 to 12).map { i =>
+      (i.toLong, (0 until 200).map(j => s"w${10 * (i - 1) + j}").mkString(" "))
+    }.toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/documents.parquet")
+    val got = SparkEntry.queries("dedup_cluster")(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = Dedup.clusterLabelsConverged(docs, "doc_id", pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a == b)
+    val want = (1L to 10L).map(_ -> 1L).toMap ++ Map(11L -> 11L, 12L -> 12L)
+    assert(got == want, s"got $got")
   }
 
   test("jaccardPairs: guard raises at EXECUTION when input exceeds maxDocs") {

@@ -633,22 +633,6 @@ class OpsSpec extends SparkSpec {
     assert(got == Seq((1L, 2L, 1.0)))
   }
 
-  test("dedup: composed pipeline — exact copies and near-dups share a cluster") {
-    // 40 shared tokens → j = 40/41 ≈ 0.976; with the fixed hash family
-    // the band collision is deterministic (verified by this test run)
-    val base = (1 to 40).map(i => s"tok$i").mkString(" ")
-    val df = Seq(
-      (1L, base), (2L, base),              // exact dups
-      (3L, base + " extra"),               // near-dup of 1
-      (4L, "q r s t u v w z")              // unrelated
-    ).toDF("doc_id", "text")
-    val got = Dedup.nearDupPipeline(df, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got(1L) == got(2L), "exact dups share cluster")
-    assert(got(1L) == got(3L), "near dup joins the cluster")
-    assert(got(4L) != got(1L), "unrelated doc separate")
-  }
-
   test("dedup: substring spans merge at gap <= n, within-doc repeats don't qualify") {
     // n=2 hand-computed fixture:
     //  A "a b c d e f" / B "a b c x e f" share grams ab(0) bc(1) ef(4)
@@ -739,7 +723,7 @@ class OpsSpec extends SparkSpec {
       (7L, "   "), (8L, "")
     ).toDF("doc_id", "text")
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (5L, 8L)).toDF("doc_a", "doc_b")
-    val got = Dedup.keepBest(docs, "doc_id", "text", pairs, iterations = 3)
+    val got = Dedup.keepBest(docs, "doc_id", "text", pairs)
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got.keySet == Set(1L, 4L, 5L, 7L), s"one survivor per cluster: ${got.keySet}")
     assert(got(1L) == ((3L, 20L, 3L)),
@@ -749,61 +733,6 @@ class OpsSpec extends SparkSpec {
       s"(keep, n_tokens) tie falls to min id; empty member 8 counted but never wins: ${got(5L)}")
     assert(got(7L) == ((7L, 0L, 1L)),
       s"all-empty singleton cluster must still emit its row: ${got(7L)}")
-  }
-
-  test("dedup: keepBestFromLabels — survivors invariant under deeper labeling on a bounded-diameter graph") {
-    // keepBest's selection depends only on the label PARTITION: on a
-    // fixture whose pair graph has diameter <= 3, the fixed 3-round
-    // unroll already reaches the fixed point, so the converged labeling
-    // (production) and a deeper unroll must pick the SAME survivors
-    // through the shared keepBestFromLabels tail
-    val pass16a = "the alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima mike november oscar"
-    val pass16b = "the apple berry cherry damson elder feijoa grape honey icaco jambul kiwi lemon mango nutmeg olive"
-    val pass20 = "the papa quebec romeo sierra tango uniform victor whiskey xray yankee zulu alpha2 bravo2 charlie2 delta2 echo2 foxtrot2 golf2 hotel2"
-    val fail30 = "the " + Seq.fill(29)("zz").mkString(" ")
-    val docs = Seq(
-      (1L, fail30), (2L, pass16a), (3L, pass20),
-      (4L, pass16b), (5L, pass16a), (6L, pass16b),
-      (7L, "   "), (8L, "")
-    ).toDF("doc_id", "text")
-    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (5L, 8L)).toDF("doc_a", "doc_b")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val viaUnroll = rows(Dedup.keepBest(docs, "doc_id", "text", pairs, iterations = 3))
-    val viaConverged = rows(Dedup.keepBestFromLabels(
-      Dedup.clusterLabelsConverged(docs, "doc_id", pairs), docs, "doc_id", "text"))
-    val viaDeeper = rows(Dedup.keepBestFromLabels(
-      Dedup.clusterLabels(docs, "doc_id", pairs, iterations = 6), docs, "doc_id", "text"))
-    assert(viaConverged == viaUnroll,
-      s"converged labels changed survivors:\nconv=$viaConverged\nunroll=$viaUnroll")
-    assert(viaDeeper == viaUnroll,
-      s"deeper unroll changed survivors:\ndeep=$viaDeeper\nunroll=$viaUnroll")
-  }
-
-  test("dedup: converged keepBest equals dedup_keep_best's unroll on the harness corpus") {
-    // the nearDupPipeline precedent (r18 verdict item 6): the fixture
-    // pin above proves survivor invariance on a toy graph; this pin
-    // exercises the PRODUCTION path — keepBestFromLabels over
-    // clusterLabelsConverged — against the registered dedup_keep_best
-    // query (the oracle-checked 3-round unroll) on the real sf0.01
-    // corpus with its real LSH pair set. The corpus' near-dup
-    // components are bounded-diameter by construction there, so the
-    // two labelings must realize the same partition and the shared
-    // keepBestFromLabels tail the same survivors, row for row.
-    val sf001 = "/root/testdata/sf0.01"
-    val docs = Tables.documents(spark, sf001)
-    val pairs = Dedup.minHashLsh(docs, "doc_id", "text",
-        shingleN = 3, numHashes = 16, rowsPerBand = 8)
-      .filter(col("jaccard") >= 0.5)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val viaQuery = rows(SparkEntry.queries("dedup_keep_best")(spark, sf001))
-    val viaConverged = rows(Dedup.keepBestFromLabels(
-      Dedup.clusterLabelsConverged(docs, "doc_id", pairs), docs, "doc_id", "text"))
-    assert(viaQuery.nonEmpty, "harness corpus must produce survivor rows")
-    assert(viaConverged == viaQuery,
-      s"production converged path diverged from the oracle-checked unroll: " +
-        s"${(viaConverged -- viaQuery).take(3)} vs ${(viaQuery -- viaConverged).take(3)}")
   }
 
   test("dedup: incremental spans equal the full run restricted to the batch") {

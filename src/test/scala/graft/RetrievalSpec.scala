@@ -145,7 +145,7 @@ class RetrievalSpec extends SparkSpec {
     val pairs = Dedup.minHashLsh(docs, "doc_id", "text",
         shingleN = 3, numHashes = 16, rowsPerBand = 8)
       .filter(col("jaccard") >= 0.5)
-    val split = Curation.leakFreeSplit(docs, "doc_id", pairs, iterations = 3, trainPct = 80)
+    val split = Curation.leakFreeSplit(docs, "doc_id", pairs, trainPct = 80)
     val mixed = split.groupBy("cluster_id")
       .agg(countDistinct(col("split")).as("n_splits"))
       .filter(col("n_splits") > 1)
@@ -153,9 +153,9 @@ class RetrievalSpec extends SparkSpec {
     assert(split.filter(col("split") === "train").count() > 0)
     assert(split.filter(col("split") === "test").count() > 0)
     // degenerate percentages are total
-    assert(Curation.leakFreeSplit(docs, "doc_id", pairs, 3, 0)
+    assert(Curation.leakFreeSplit(docs, "doc_id", pairs, 0)
       .filter(col("split") === "train").count() == 0)
-    assert(Curation.leakFreeSplit(docs, "doc_id", pairs, 3, 100)
+    assert(Curation.leakFreeSplit(docs, "doc_id", pairs, 100)
       .filter(col("split") === "test").count() == 0)
   }
 }

@@ -83,8 +83,8 @@ class SimilaritySpec extends SparkSpec {
     def v(deg: Double) = Array(
       math.cos(math.toRadians(deg)).toFloat, math.sin(math.toRadians(deg)).toFloat)
     // 5-hop chain at 30° steps (consecutive cos = 0.866, two apart = 0.5):
-    // only the converged default can collapse it end-to-end — a 3-round
-    // unroll provably cannot reach 4 hops
+    // the labels run to their fixed point, so the 4-hop chain collapses
+    // end-to-end where a 3-round unroll provably could not
     val vecs = Seq(
       10L -> v(0), 11L -> v(30), 12L -> v(60), 13L -> v(90), 14L -> v(120),
       99L -> v(-90)).toDF("vec_id", "embedding")
@@ -387,10 +387,10 @@ class SimilaritySpec extends SparkSpec {
       "top-4 bits of the 16-bit bucket ARE the 4-bit bucket)") {
     val emb = Tables.embeddings(spark, sf0001) // 500 vectors → bits clamps to 4
     val fixed = SimilaritySearch.semanticDedup(emb, "vec_id", "embedding",
-      threshold = 0.4, bits = 4, iterations = 3).collect()
+      threshold = 0.4, bits = 4).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     val vol = SimilaritySearch.semanticDedupVol(emb, "vec_id", "embedding",
-      threshold = 0.4, targetBucket = 256, iterations = 3).collect()
+      threshold = 0.4, targetBucket = 256).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     assert(vol == fixed, "volume-sized form must equal the fixed form where the widths agree")
   }
