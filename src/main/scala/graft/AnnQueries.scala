@@ -13,58 +13,32 @@ import graft.ops._
   */
 object AnnQueries {
 
-  import OracleSql.{clusterLabelCtesFrom, FixturesDir, h32Sql, sqlCos}
+  import OracleSql.{clusterLabelCtesFrom, FixturesDir, h32Sql, kmeansCtes, nearestCellsSql,
+    sqlCos, sqlDot}
 
-  /** Unrolled deterministic k-means training (2 Lloyd iterations,
-    * centroids rounded to 6 dp each update, stale-cell rule) — mirrors
-    * SimilaritySearch.trainedCentroids/assignPoints step for step. A
-    * CTE list (no leading WITH) ending at `ap(pid, v, cid)` (the
-    * trained point assignment) with `c2(cid, c)` (the trained
-    * centroids) and `qs(pid, v)` (the held-out query rows) still in
-    * scope — ONE definition of the trainer, shared by the trained-IVF
-    * search oracle and the prototypicality-prune oracle so the Lloyd
-    * unroll cannot drift between them (the dataCardSql discipline).
+  /** Trained-IVF CTEs (16 cells, 2 Lloyd iterations, cosine
+    * assignment — `ivfCentRows`' parameters) over the held-out split: a
+    * CTE list (no leading WITH) ending at `ap(pid, v, cid)` (the trained
+    * point assignment) with `c2(cid, c)` (the trained centroids) and
+    * `qs(pid, v)` (the held-out query rows) still in scope. Shared by
+    * the trained-IVF search oracle and the cluster-curation oracles.
     */
-  private lazy val ivfTrainCtes: String = {
-    def assignCte(src: String, cents: String): String =
-      s"""SELECT pid, v, cid FROM (
-         |  SELECT pid, v, cid, row_number() OVER (PARTITION BY pid ORDER BY s DESC, cid) AS rn
-         |  FROM (SELECT p.pid, p.v, c.cid, ${sqlCos("p.v", "c.c")} AS s
-         |        FROM $src p CROSS JOIN $cents c)) WHERE rn = 1""".stripMargin
-    // stale-cell rule (mirrors kmeansCentroids): a cid absent from the
-    // assignment keeps its previous centroid instead of vanishing
-    def updateCte(assigned: String, prev: String): String =
-      s"""SELECT p.cid, coalesce(u.c, p.c) AS c FROM $prev p LEFT JOIN (
-         |  SELECT cid, list(m ORDER BY j) AS c FROM (
-         |    SELECT cid, j, round(avg(v[j]), 6) AS m
-         |    FROM $assigned, LATERAL (SELECT unnest(generate_series(1, len(v))) AS j) g
-         |    GROUP BY cid, j) GROUP BY cid) u ON p.cid = u.cid""".stripMargin
+  private lazy val ivfTrainCtes: String =
     s"""emb AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
        |  FROM embeddings),
        |pts AS (SELECT vec_id AS pid, v FROM emb WHERE vec_id >= 10),
        |qs AS (SELECT vec_id AS pid, v FROM emb WHERE vec_id < 10),
-       |c0 AS (
-       |  SELECT pid AS cid, v AS c
-       |  FROM (SELECT pid, v FROM pts ORDER BY pid LIMIT 16)),
-       |a1 AS (${assignCte("pts", "c0")}),
-       |c1 AS (${updateCte("a1", "c0")}),
-       |a2 AS (${assignCte("pts", "c1")}),
-       |c2 AS (${updateCte("a2", "c1")}),
-       |ap AS (${assignCte("pts", "c2")})""".stripMargin
-  }
+       |${kmeansCtes("pts", k = 16, iters = 2, sqlCos, out = "ap")}""".stripMargin
 
-  /** Trained k-means + multi-probe IVF search — mirrors
-    * SimilaritySearch.ivfTrainedTopK. A standalone SELECT so
-    * `sim_recall_eval` can embed it as a derived table as well as
-    * `sim_ivf_trained` using it directly.
+  /** Trained k-means + multi-probe IVF search (nprobe=4, k=3) — mirrors
+    * trainedCentroids + assignPoints + searchAssignedCells. A
+    * standalone SELECT so `sim_recall_eval` can embed it as a derived
+    * table as well as `sim_ivf_trained` using it directly.
     */
   private lazy val ivfTrainedSelect: String = {
     s"""WITH $ivfTrainCtes,
        |qp AS (
-       |  SELECT pid AS qid, v AS qv, cid FROM (
-       |    SELECT pid, v, cid, row_number() OVER (PARTITION BY pid ORDER BY s DESC, cid) AS rn
-       |    FROM (SELECT q.pid, q.v, c.cid, ${sqlCos("q.v", "c.c")} AS s
-       |          FROM qs q CROSS JOIN c2 c)) WHERE rn <= 4),
+       |  SELECT pid AS qid, v AS qv, cid FROM (${nearestCellsSql("qs", "c2", sqlCos, 4)})),
        |scored AS (
        |  SELECT qp.qid AS query_id, ap.pid AS point_id, ${sqlCos("qp.qv", "ap.v")} AS score
        |  FROM qp JOIN ap ON qp.cid = ap.cid),
@@ -101,8 +75,8 @@ object AnnQueries {
        |  SELECT q0.query_id, q0.embedding, xor(q0.bucket, f.m) AS bucket
        |  FROM fr f JOIN $qCte q0 USING (query_id) WHERE f.rn <= 1)""".stripMargin
 
-  /** Product-quantization oracle: per-subspace unrolled EUCLIDEAN
-    * k-means (assignment by `argmax dot − ‖c‖²/2`) → per-(point, sub)
+  /** Product-quantization oracle: per-subspace [[OracleSql.kmeansCtes]]
+    * chains with EUCLIDEAN assignment (`argmax dot − ‖c‖²/2`) → per-(point, sub)
     * code assignment → broadcast-LUT ADC cosine — mirrors
     * Pq.trainCodebooks / Pq.encode / Pq.adcTopK step for step
     * (m=8 × 8-d subspaces, 16 codes, 2 Lloyd iterations, ADC scores
@@ -120,28 +94,11 @@ object AnnQueries {
     val ivfpq = mode == "ivfpq"
     val adcK = if (!rerank) k else if (ivfpq) 20 else 50
     // L2 assignment (argmax dot − ‖c‖²/2), not the IVF trainer's cosine
-    def assignCte(src: String, cents: String): String =
-      s"""SELECT pid, v, cid FROM (
-         |  SELECT pid, v, cid, row_number() OVER (PARTITION BY pid ORDER BY s DESC, cid) AS rn
-         |  FROM (SELECT p.pid, p.v, c.cid,
-         |          ${OracleSql.sqlDot("p.v", "c.c")} - ${OracleSql.sqlDot("c.c", "c.c")} / 2 AS s
-         |        FROM $src p CROSS JOIN $cents c)) WHERE rn = 1""".stripMargin
-    def updateCte(assigned: String, prev: String): String =
-      s"""SELECT p.cid, coalesce(u.c, p.c) AS c FROM $prev p LEFT JOIN (
-         |  SELECT cid, list(m ORDER BY j) AS c FROM (
-         |    SELECT cid, j, round(avg(v[j]), 6) AS m
-         |    FROM $assigned, LATERAL (SELECT unnest(generate_series(1, len(v))) AS j) g
-         |    GROUP BY cid, j) GROUP BY cid) u ON p.cid = u.cid""".stripMargin
+    def l2(v: String, c: String): String = s"${sqlDot(v, c)} - ${sqlDot(c, c)} / 2"
     val subChains = (0 until m).map { s =>
       val lo = s * dsub + 1; val hi = (s + 1) * dsub
       s"""ps$s AS (SELECT pid, v[$lo:$hi] AS v FROM pts),
-         |c0$s AS (SELECT pid AS cid, v AS c
-         |         FROM (SELECT pid, v FROM ps$s ORDER BY pid LIMIT $kCodes)),
-         |a1$s AS (${assignCte(s"ps$s", s"c0$s")}),
-         |c1$s AS (${updateCte(s"a1$s", s"c0$s")}),
-         |a2$s AS (${assignCte(s"ps$s", s"c1$s")}),
-         |c2$s AS (${updateCte(s"a2$s", s"c1$s")}),
-         |cd$s AS (${assignCte(s"ps$s", s"c2$s")})""".stripMargin
+         |${kmeansCtes(s"ps$s", kCodes, iters = 2, l2, out = s"cd$s", sfx = s.toString)}""".stripMargin
     }.mkString(",\n")
     val cbUnion = (0 until m).map(s => s"SELECT $s AS sub, cid, c FROM c2$s")
       .mkString("\n  UNION ALL ")
@@ -162,8 +119,8 @@ object AnnQueries {
        |qn AS (SELECT pid AS qid, ${OracleSql.sqlNorm("v")} AS n FROM qs),
        |lut AS (
        |  SELECT q.qid, q.sub, cb.cid,
-       |    ${OracleSql.sqlDot("q.qv", "cb.c")} AS pdot,
-       |    ${OracleSql.sqlDot("cb.c", "cb.c")} AS cn2
+       |    ${sqlDot("q.qv", "cb.c")} AS pdot,
+       |    ${sqlDot("cb.c", "cb.c")} AS cn2
        |  FROM qsub q JOIN cb ON q.sub = cb.sub),
        |${if (ivfpq)
             s"""pbk AS (SELECT pid, ${bucketSql("v")} AS bucket FROM pts),

@@ -116,6 +116,47 @@ object OracleSql {
   def sqlCos(a: String, b: String): String =
     s"(${sqlDot(a, b)} / (${sqlNorm(a)} * ${sqlNorm(b)}))"
 
+  /** The ONE nearest-centroid rule in SQL (mirrors
+    * `SimilaritySearch.nearestCells`): each `src(pid, v)` row keeps its
+    * `n` best cells of `cents(cid, c)` by `score(v, c)`, ties to the
+    * lowest cid. A SELECT emitting `(pid, v, cid)`.
+    */
+  def nearestCellsSql(src: String, cents: String, score: (String, String) => String,
+      n: Int): String =
+    s"""SELECT pid, v, cid FROM (
+       |  SELECT pid, v, cid, row_number() OVER (PARTITION BY pid ORDER BY s DESC, cid) AS rn
+       |  FROM (SELECT p.pid, p.v, c.cid, ${score("p.v", "c.c")} AS s
+       |        FROM $src p CROSS JOIN $cents c)) WHERE rn <= $n""".stripMargin
+
+  /** Deterministic k-means over `src(pid, v)`, mirroring
+    * `SimilaritySearch.lloyd` step for step: seeds `c0` = the `k`
+    * lowest-pid rows (cid = pid), then `iters` rounds of assignment
+    * (`a1`, `a2`, … by [[nearestCellsSql]]) and update (`c1`, `c2`, … =
+    * per-component means rounded to 6 dp; a cell left empty keeps its
+    * centroid), then `out(pid, v, cid)`, the final assignment. A CTE
+    * list (no leading WITH). Every name but `out` ends in `sfx`, so
+    * several chains share one WITH; with `iters = 2` the trained
+    * centroids are `c2` + `sfx`, as `(cid, c)`.
+    */
+  def kmeansCtes(src: String, k: Int, iters: Int, score: (String, String) => String,
+      out: String, sfx: String = ""): String = {
+    def update(assigned: String, prev: String): String =
+      s"""SELECT p.cid, coalesce(u.c, p.c) AS c FROM $prev p LEFT JOIN (
+         |  SELECT cid, list(m ORDER BY j) AS c FROM (
+         |    SELECT cid, j, round(avg(v[j]), 6) AS m
+         |    FROM $assigned, LATERAL (SELECT unnest(generate_series(1, len(v))) AS j) g
+         |    GROUP BY cid, j) GROUP BY cid) u ON p.cid = u.cid""".stripMargin
+    val seeds =
+      s"""c0$sfx AS (
+         |  SELECT pid AS cid, v AS c
+         |  FROM (SELECT pid, v FROM $src ORDER BY pid LIMIT $k))""".stripMargin
+    val rounds = (1 to iters).map(i =>
+      s"""a$i$sfx AS (${nearestCellsSql(src, s"c${i - 1}$sfx", score, 1)}),
+         |c$i$sfx AS (${update(s"a$i$sfx", s"c${i - 1}$sfx")})""".stripMargin)
+    (seeds +: rounds :+ s"$out AS (${nearestCellsSql(src, s"c$iters$sfx", score, 1)})")
+      .mkString(",\n")
+  }
+
   /** CTE body mirroring `Chunker.chunk` + the `doc_id*1000+chunk_index`
     * chunk keying (reference `Qdrant/main.py:36-41` semantics: trim and
     * drop empties BEFORE index assignment, min-len filter AFTER — index

@@ -34,7 +34,7 @@ final class CmsBuffer(val depth: Int, val width: Int) {
 /** Bucket selection shared by build and probe — and, critically, by the
   * DuckDB oracle: bucket(j, key) = h32("<j>|<key>") mod width with h32
   * the repo's portable hash (first 8 hex chars of md5 as a BIGINT,
-  * exactly [[graft.ops.Dedup.h32Seeded]] / `OracleSql.h32Sql`). md5 is
+  * exactly [[graft.OracleSql.h32Sql]]). md5 is
   * ~10× slower than a splitmix-style mix, but it is what makes every
   * estimate bit-reproducible in independent engines; swap the hash (and
   * the oracle) together if sketch build ever dominates a profile.

@@ -24,10 +24,6 @@ object Dedup {
   def h32(s: Column): Column =
     conv(substring(md5(s), 1, 8), 16, 10).cast("long")
 
-  /** Seeded variant for the MinHash family. */
-  def h32Seeded(seed: Int, s: Column): Column =
-    h32(concat_ws("|", lit(seed.toString), s))
-
   /** Whitespace tokens, empty-safe (parity with DuckDB
     * `string_split(trim(x), ' ')` + non-empty filter).
     */

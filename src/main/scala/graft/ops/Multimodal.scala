@@ -1,17 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Multimodal column plumbing (north-star extension): treat media as
-  * opaque BINARY columns with typed metadata, and run decode /
-  * feature-extraction as partition-batched functions.
+/** Multimodal operators over a media stand-in (north-star extension):
+  * typed metadata, frame sampling and perceptual near-dup signatures,
+  * all declarative column expressions and DuckDB-oracle-checked.
   *
-  * The decode step itself is STUBBED with a deterministic fake (no image
-  * /audio codecs in this environment — SURVEY §2.5 boundary discipline);
-  * everything Spark-side is real: schema, binary handling, partition
-  * batching (the shape a model-inference UDF needs: amortize model init
-  * per PARTITION, not per row), and frame sampling.
+  * There are no image/audio codecs in this environment (SURVEY §2.5
+  * boundary discipline), so the text column stands in for the media
+  * payload; a real deployment swaps the feature step for a decoder and
+  * keeps the plan around it.
   *
   * At 100 TB: media rows are large → keep
   * `spark.sql.files.maxPartitionBytes` small for these scans, never
@@ -20,97 +19,6 @@ import org.apache.spark.sql.functions._
   * downstream expression references it.
   */
 object Multimodal {
-
-  case class MediaFeatures(
-      doc_id: Long,
-      n_bytes: Long,
-      n_frames: Long,
-      features: Array[Float])
-
-  /** Attach an opaque binary "media" column (here: the utf-8 bytes of
-    * `text` — a deterministic stand-in for real image/audio payloads).
-    */
-  def withMedia(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol).cast("long").as("doc_id"), col(textCol).cast("binary").as("media"))
-
-  /** STUB decode: deterministic fake "model features" from raw bytes —
-    * `dim` means of stride-sampled byte values, scaled to [0,1]. A real
-    * deployment swaps ONLY this function for an image/audio decoder; the
-    * partition-batched plumbing around it is unchanged.
-    */
-  def decodeStub(bytes: Array[Byte], dim: Int): Array[Float] = {
-    val out = new Array[Float](dim)
-    if (bytes.nonEmpty) {
-      var i = 0
-      while (i < bytes.length) {
-        out(i % dim) += (bytes(i) & 0xff) / 255.0f
-        i += 1
-      }
-      val perBucket = math.max(1, bytes.length / dim)
-      var j = 0
-      while (j < dim) { out(j) /= perBucket; j += 1 }
-    }
-    out
-  }
-
-  /** Partition-batched feature extraction over the binary column —
-    * `mapPartitions` so per-partition setup (a model session, in real
-    * life) happens once per task, and rows stream through in batches.
-    */
-  def extractFeatures(media: DataFrame, dim: Int, frameSize: Int): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        // per-partition init would go here (e.g. load the decoder once)
-        rows.map { case (id, bytes) =>
-          val b = if (bytes == null) Array.emptyByteArray else bytes
-          MediaFeatures(
-            doc_id = id,
-            n_bytes = b.length.toLong,
-            n_frames = (b.length.toLong + frameSize - 1) / frameSize,
-            features = decodeStub(b, dim))
-        }
-      }
-  }
-
-  /** STUB resize: deterministic stride downsample of the byte stream to
-    * ≤ `targetBytes` (the image-resize / audio-downsample stand-in). A
-    * real deployment swaps only this function for a scaler; the
-    * binary→binary column plumbing around it is the real part.
-    */
-  def resizeStub(bytes: Array[Byte], targetBytes: Int): Array[Byte] =
-    if (bytes.length <= targetBytes) bytes
-    else {
-      val out = new Array[Byte](targetBytes)
-      // proportional index: floor(j·n/target) < n for j < target, so the
-      // output is exactly targetBytes and spans the full input
-      var j = 0
-      while (j < targetBytes) {
-        out(j) = bytes((j.toLong * bytes.length / targetBytes).toInt); j += 1
-      }
-      out
-    }
-
-  /** Partition-batched media resize: binary column in, smaller binary
-    * column + size metadata out. Narrow transform — at 100 TB this runs
-    * in the scan stage and the full-size payload never crosses a
-    * shuffle.
-    */
-  def resizeMedia(media: DataFrame, targetBytes: Int): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        // per-partition init (real scaler/codec handle) would go here
-        rows.map { case (id, bytes) =>
-          val b = if (bytes == null) Array.emptyByteArray else bytes
-          (id, resizeStub(b, targetBytes), b.length.toLong)
-        }
-      }
-      .toDF("doc_id", "media_resized", "orig_bytes")
-      .withColumn("new_bytes", octet_length(col("media_resized")).cast("long"))
-  }
 
   /** Frame sampling as a generator: 1 media row → N fixed-size frame
     * rows (the video-frame / audio-window shape), each with its offset
@@ -167,7 +75,7 @@ object Multimodal {
     * the space byte of the text stand-in; a real byte-stream
     * deployment splits at rolling-hash boundaries, the LBFS/CDC
     * trick, and a real media deployment swaps in visual words / audio
-    * fingerprint peaks at the [[decodeStub]] boundary), then each run
+    * fingerprint peaks at the decoder boundary), then each run
     * of `shingleN` consecutive chunks is one feature
     * ([[Dedup.shingles]]). Chunk boundaries depend only on nearby
     * content, never on absolute offsets, so an edit disturbs only the

@@ -22,17 +22,15 @@ import org.apache.spark.sql.functions._
   *  - cosine comes from the same sums: `‖p̂‖² = Σ_s ‖c_{s,code_s}‖²`
   *    rides the join as a second accumulated column.
   *
-  * The per-subspace trainer is EUCLIDEAN Lloyd's — assignment by
-  * `argmax dot(v, c) − ‖c‖²/2` (≡ argmin ‖v − c‖², since ‖v‖² is
-  * constant per vector) — NOT the spherical k-means the IVF coarse
-  * quantizer uses: PQ quality is reconstruction error, and cosine
-  * assignment ignores the subvector magnitudes ADC then relies on.
-  * Determinism conventions are the
-  * [[SimilaritySearch.kmeansCentroids]] ones: lowest-id seeds,
-  * lowest-cid tie-breaks, 6-dp-rounded means, stale-cell rule — so the
-  * whole pipeline stays DuckDB-oracle-expressible. Scores are rounded
-  * to 6 dp BEFORE ranking (the BM25 rule): the ADC sum is a hash-agg
-  * over `m` doubles, so its last bits depend on addition order.
+  * The codebooks train through the IVF quantizer's Lloyd loop
+  * ([[SimilaritySearch.lloyd]], which states the determinism rules),
+  * with EUCLIDEAN assignment — `argmax dot(v, c) − ‖c‖²/2` (≡ argmin
+  * ‖v − c‖², since ‖v‖² is constant per vector) — NOT the spherical
+  * cosine the IVF coarse quantizer uses: PQ quality is reconstruction
+  * error, and cosine assignment ignores the subvector magnitudes ADC
+  * then relies on. Scores are rounded to 6 dp BEFORE ranking (the BM25
+  * rule): the ADC sum is a hash-agg over `m` doubles, so its last bits
+  * depend on addition order.
   *
   * At 100 TB compose with the IVF family (IVF-PQ): coarse cells prune
   * candidates ([[SimilaritySearch.ivfTopKStored]]), ADC scores the
@@ -41,40 +39,22 @@ import org.apache.spark.sql.functions._
   */
 object Pq {
 
-  /** Nearest centroid under L2 with `sub` riding the key: `argmin
-    * ‖v − c‖² ≡ argmax dot(v, c) − ‖c‖²/2`. `vecs(__id, sub, __v)`
-    * meets the broadcast `cents(sub, cid, centroid)` on the subspace
-    * id, so all m subspaces assign in the same job. Ties to the
-    * lowest cid.
-    */
   /** The ONE definition of the L2 assignment objective. */
   private def l2Score(v: Column, c: Column): Column =
     VectorOps.dot(v, c) - VectorOps.dot(c, c) / 2
-
-  private def assignL2(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("__id"), col("sub")).orderBy(desc("__s"), col("cid").asc)
-    vecs.join(broadcast(cents), "sub")
-      .withColumn("__s", l2Score(col("__v"), col("centroid")))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col("__id"), col("sub"), col("__v"), col("cid"))
-  }
 
   /** Per-subspace codebooks `(sub, cid, centroid)` as a driver-local
     * model (`m × kCodes` rows — the PQ analogue of
     * [[SimilaritySearch.trainedCentroids]]; collecting keeps the
     * Lloyd subtrees out of every consumer's plan).
     *
-    * All `m` codebooks train TOGETHER — `sub` is part of the row and
-    * group key, so each Lloyd iteration is ONE pass over the corpus
-    * (assign: broadcast `m × kCodes` centroids, window per (id, sub);
-    * update: one (sub, cid) group-by) instead of `m` serial runs. At
-    * 100 TB that is the difference between `iters` corpus scans and
-    * `m × iters`. Determinism follows the
-    * [[SimilaritySearch.kmeansCentroids]] rules: seeds = the `kCodes`
-    * lowest-id vectors' subvectors (cid = seed id — the same id set
-    * for every sub), means rounded to 6 dp per update, stale cells
-    * keep their previous centroid.
+    * All `m` codebooks train TOGETHER — `sub` is a key of the shared
+    * Lloyd loop, so each iteration is ONE pass over the corpus (assign:
+    * broadcast `m × kCodes` centroids, window per (id, sub); update:
+    * one (sub, cid) group-by) instead of `m` serial runs. At 100 TB
+    * that is the difference between `iters` corpus scans and
+    * `m × iters`. Seeds are the `kCodes` lowest-id vectors' subvectors,
+    * so every sub shares the same cid set.
     */
   def trainCodebooks(points: DataFrame, idCol: String, vecCol: String,
       dim: Int, m: Int, kCodes: Int, iters: Int): DataFrame = {
@@ -82,43 +62,9 @@ object Pq {
     val dsub = dim / m
     val spark = points.sparkSession
     import spark.implicits._
-    val pts = explodeSubs(
-        points.select(col(idCol).as("__id"), col(vecCol)), vecCol, m, dsub)
-      .select(col("__id"), col("sub"), col("__sv").as("__v"))
-    var cents = explodeSubs(
-        points.orderBy(col(idCol)).limit(kCodes)
-          .select(col(idCol).cast("long").as("__seed"), col(vecCol)),
-        vecCol, m, dsub)
-      .select(col("sub"), col("__seed").as("cid"), col("__sv").as("centroid"))
-    for (_ <- 1 to iters) {
-      val avgs = (0 until dsub).map(j =>
-        round(avg(element_at(col("__v"), j + 1)), 6).as(s"__m$j"))
-      val updated = assignL2(pts, cents)
-        .groupBy(col("sub"), col("cid"))
-        .agg(avgs.head, avgs.tail: _*)
-        .select(col("sub"), col("cid"),
-          array((0 until dsub).map(j => col(s"__m$j")): _*).as("__upd"))
-      cents = cents
-        .join(updated, Seq("sub", "cid"), "left")
-        .select(col("sub"), col("cid"),
-          coalesce(col("__upd"), col("centroid")).as("centroid"))
-        // Flat lineage per round (the Dedup.clusterLabels discipline):
-        // `cents` appears TWICE in each round's plan (assignment +
-        // stale-cell join), so without truncation the logical plan
-        // doubles per iteration — at iters=10 the analyzer walks ~2^10
-        // copies of the corpus subtree before a single task runs. The
-        // eager checkpoint materializes m × kCodes rows (the model,
-        // trivially small) and cuts the plan to a leaf, so per-round
-        // planning and execution cost stay constant (PqSpec pins
-        // iters=10 completing in bounded time). Tradeoff: localCheckpoint
-        // stores blocks WITHOUT replication, so on a real cluster an
-        // executor loss mid-training aborts the job instead of recomputing
-        // from lineage — acceptable for this k-row model frame (retraining
-        // is cheap); a long-running deployment with a configured checkpoint
-        // dir should use reliable `checkpoint()` instead.
-        .localCheckpoint(true)
-    }
-    cents.collect().toSeq
+    SimilaritySearch.lloyd(points.select(col(idCol).as("__id"), col(vecCol).as("__v")),
+        subvectors(_, "__v", m, dsub, Nil), Seq("sub"), l2Score, dsub, kCodes, iters)
+      .collect().toSeq
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
       .toDF("sub", "cid", "centroid")
   }
@@ -134,36 +80,38 @@ object Pq {
       .withColumn("__sv", col("__e.__sv"))
       .drop("__e")
 
+  /** `(__id, sub, __v, carry…)`: the k-means row shape of a frame
+    * carrying `__id` and `vecCol`, one row per subvector.
+    */
+  private def subvectors(df: DataFrame, vecCol: String, m: Int, dsub: Int,
+      carry: Seq[String]): DataFrame =
+    explodeSubs(df, vecCol, m, dsub)
+      .select((Seq(col("__id"), col("sub"), col("__sv").as("__v")) ++ carry.map(col)): _*)
+
   /** PQ-encode: `(point_id, sub, code)` — nearest codebook entry per
-    * (point, subspace) under L2 (the [[assignL2]] rule, lowest-cid
-    * tie-break). Long layout so ADC is a plain `(sub, code)`
-    * equi-join; a production table would pack it to one
-    * `array<tinyint>` column per point.
+    * (point, subspace) under L2 (the training rule,
+    * [[SimilaritySearch.nearestCells]], lowest-cid tie-break). Long
+    * layout so ADC is a plain `(sub, code)` equi-join; a production
+    * table would pack it to one `array<tinyint>` column per point.
     */
   def encode(points: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame, m: Int, dsub: Int): DataFrame =
     encodeCore(points, idCol, vecCol, codebooks, m, dsub, carry = Nil)
 
-  /** Shared encode body: explode to subvectors, L2-assign each against
-    * the broadcast codebook (the [[assignL2]] scoring — ONE definition
-    * of the assignment rule for train and encode paths), keep `carry`
-    * columns computed from the original row.
+  /** Shared encode body: explode to subvectors and assign each with
+    * the training rule, keeping `carry` columns computed from the
+    * original row.
     */
   private def encodeCore(points: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame, m: Int, dsub: Int,
       carry: Seq[(String, Column)]): DataFrame = {
-    val w = Window.partitionBy(col("point_id"), col("sub"))
-      .orderBy(desc("__s"), col("cid").asc)
     val src = points.select(
-      (Seq(col(idCol).as("point_id"), col(vecCol)) ++
+      (Seq(col(idCol).as("__id"), col(vecCol)) ++
         carry.map { case (n, c) => c.as(n) }): _*)
-    explodeSubs(src, vecCol, m, dsub)
-      .join(broadcast(codebooks), "sub")
-      .withColumn("__s", l2Score(col("__sv"), col("centroid")))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
+    SimilaritySearch.nearestCells(subvectors(src, vecCol, m, dsub, carry.map(_._1)),
+        codebooks, Seq("sub"), l2Score, 1)
       .select(
-        (Seq(col("point_id"), col("sub"), col("cid").as("code")) ++
+        (Seq(col("__id").as("point_id"), col("sub"), col("cid").as("code")) ++
           carry.map { case (n, _) => col(n) }): _*)
   }
 

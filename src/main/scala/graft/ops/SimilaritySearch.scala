@@ -168,74 +168,100 @@ object SimilaritySearch {
     fetchAndRerank(shortIds, queries, points, queryIdCol, pointIdCol, vecCol, k)
   }
 
-  /** Deterministic spherical k-means (Lloyd's algorithm, loop-unrolled
-    * `iters` times) for a TRAINED IVF coarse quantizer — the 100 TB
-    * upgrade over [[signBucket]]: centroids adapt to the data
-    * distribution, so buckets are balanced and probing the `nprobe`
-    * nearest cells recovers more of the exact top-k per candidate
-    * scored (measured on the harness embeddings, recall@3 vs the
-    * sign quantizer: 0.47 → 0.55 at the same 1/4 probe budget, 0.78
+  /** Deterministic spherical k-means for a TRAINED IVF coarse quantizer
+    * — the 100 TB upgrade over [[signBucket]]: centroids adapt to the
+    * data distribution, so buckets are balanced and probing the
+    * `nprobe` nearest cells recovers more of the exact top-k per
+    * candidate scored (measured on the harness embeddings, recall@3 vs
+    * the sign quantizer: 0.47 → 0.55 at the same 1/4 probe budget, 0.78
     * at nprobe=4 — and nprobe is a knob the sign bucket doesn't have).
-    *
-    * Determinism (DuckDB-oracle requirement): init = the `k` lowest-id
-    * vectors; assignment = max cosine with ties to the lowest centroid
-    * id; update = element-wise mean ROUNDED to 6 dp so both engines
-    * iterate from identical centroid values regardless of their
-    * aggregation order. All DataFrame ops — assignment is a broadcast
-    * cross join (k rows) + one window, update is posexplode + two
-    * group-bys; nothing here needs a driver-side loop over data.
+    * [[lloyd]] with cosine assignment; its scaladoc holds the
+    * determinism rules the DuckDB oracle mirrors.
     */
   def kmeansCentroids(points: DataFrame, idCol: String, vecCol: String,
-      dim: Int, k: Int, iters: Int): DataFrame = {
-    // centroid ids are cast("long") of the seed ids below; a string id
-    // would silently NULL-cast and corrupt every downstream tie-break
-    require(points.schema(idCol).dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"kmeansCentroids: id column '$idCol' must be numeric " +
-        s"(got ${points.schema(idCol).dataType.simpleString}) — centroid ids are " +
-        "the seed vectors' own ids cast to long; map string ids to a surrogate first")
-    val pts = normalized(points, idCol, vecCol)
-    // Centroid id = the seed vector's own id (requires a numeric id
-    // column). Distinct, deterministic, and ORDER-PRESERVING vs a
-    // row_number()-1 labeling (ids ascend either way), so the
-    // lowest-cid assignment/probe tie-breaks pick the same cells — and
-    // it needs no global window over the seed frame (a `Window` with a
-    // foldable partition key gets constant-folded to an unpartitioned
-    // WindowExec: single-partition warning + a pointless exchange).
-    var cents = pts.orderBy(col("__id")).limit(k)
-      .select(col("__id").cast("long").as("cid"), col("__v").as("centroid"))
+      dim: Int, k: Int, iters: Int): DataFrame =
+    lloyd(normalized(points, idCol, vecCol), identity, Nil, VectorOps.cosine, dim, k, iters)
+
+  /** The ONE Lloyd loop, shared by the IVF quantizer ([[kmeansCentroids]])
+    * and the PQ codebooks (`Pq.trainCodebooks`). `rows(__id, __v)` holds
+    * one row per point; `split` maps such a frame to the training
+    * vectors `(__id, keys…, __v)` (identity for IVF, the per-subspace
+    * explode for PQ, where `keys = Seq("sub")` trains all `m` codebooks
+    * in the same pass). Output `(keys…, cid, centroid)`, checkpointed.
+    *
+    * Determinism (DuckDB-oracle requirement, `OracleSql.kmeansCtes`):
+    * seeds = the `k` lowest-id rows, centroid id = the seed's own id;
+    * assignment = [[nearestCells]] (max `score`, ties to the lowest
+    * cid); update = per-component mean ROUNDED to 6 dp so both engines
+    * iterate from identical centroid values whatever their aggregation
+    * order; a cell that attracts no vector keeps its centroid.
+    */
+  private[ops] def lloyd(rows: DataFrame, split: DataFrame => DataFrame, keys: Seq[String],
+      score: (Column, Column) => Column, dim: Int, k: Int, iters: Int): DataFrame = {
+    // Centroid ids are the seed ids cast to long. Under Spark 4's
+    // default ANSI cast a non-numeric string id would fail only once
+    // training executes, and a digit-string id would seed in string
+    // order ("10" < "9"), so reject non-numeric ids before any job.
+    val idType = rows.schema("__id").dataType
+    require(idType.isInstanceOf[org.apache.spark.sql.types.NumericType],
+      s"k-means: the id column must be numeric (got ${idType.simpleString}) — centroid " +
+        "ids are the seed vectors' own ids cast to long; map string ids to a surrogate first")
+    val cell = (keys :+ "cid").map(col)
+    val pts = split(rows)
+    // Seeding by id (rather than a row_number()-1 label) needs no global
+    // window: a `Window` with a foldable partition key is constant-folded
+    // to an unpartitioned WindowExec — a single-partition warning plus a
+    // pointless exchange. Ids ascend either way, so the lowest-cid
+    // tie-breaks pick the same cells.
+    var cents = split(rows.orderBy(col("__id")).limit(k))
+      .select(keys.map(col) ++ Seq(col("__id").cast("long").as("cid"),
+        col("__v").as("centroid")): _*)
     for (_ <- 1 to iters) {
       // Update = `dim` per-component avg aggregates in ONE group-by
       // (map-side combinable, one shuffle of k×dim partials per mapper)
       // rather than posexplode + two shuffles: exploding multiplies the
-      // assignment output by `dim` before the exchange — a 64× row
-      // blowup at 100 TB for no information gain.
+      // assignment output by `dim` before the exchange.
       val avgs = (0 until dim).map(j =>
         round(avg(element_at(col("__v"), j + 1)), 6).as(s"__m$j"))
-      val updated = assignToCentroid(pts, cents)
-        .groupBy(col("cid"))
+      val updated = nearestCells(pts, cents, keys, score, 1)
+        .groupBy(cell: _*)
         .agg(avgs.head, avgs.tail: _*)
-        .select(col("cid"),
-          array((0 until dim).map(j => col(s"__m$j")): _*).as("__upd"))
-      // A cell that attracted no vectors this round vanishes from the
-      // group-by; without this join k would silently SHRINK for the rest
-      // of the run (and the IVF built on the result would lose cells).
-      // Keep the previous centroid instead — the standard "stale cell"
-      // rule, and a k-row join on both engines (oracle mirrors it).
+        .select(cell :+ array((0 until dim).map(j => col(s"__m$j")): _*).as("__upd"): _*)
+      // The stale-cell rule: a cell absent from the group-by keeps its
+      // previous centroid, so k never silently SHRINKS (GuardrailSpec).
       cents = cents
-        .join(updated, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("__upd"), col("centroid")).as("centroid"))
-        // Flat lineage per round (the Dedup.clusterLabels discipline,
-        // same rationale as Pq.trainCodebooks): `cents` is referenced
-        // twice per round (assignment + stale-cell join), so the
-        // logical plan would double per iteration; the eager checkpoint
-        // materializes the k-row model and truncates the plan to a leaf.
-        // Non-replicated storage: an executor loss mid-training aborts
-        // rather than recomputes — fine for a cheap k-row model; use
-        // reliable checkpoint() when a checkpoint dir is configured.
+        .join(updated, keys :+ "cid", "left")
+        .select(cell :+ coalesce(col("__upd"), col("centroid")).as("centroid"): _*)
+        // `cents` is read twice per round (assignment + stale-cell
+        // join), so the logical plan would double per iteration; the
+        // eager checkpoint materializes the k-row model and cuts the
+        // plan to a leaf (PqSpec pins iters=10 in bounded time). The
+        // blocks are not replicated: an executor loss mid-training
+        // aborts rather than recomputes — fine for a cheap k-row model;
+        // use reliable checkpoint() when a checkpoint dir is configured.
         .localCheckpoint(true)
     }
     cents
+  }
+
+  /** The ONE nearest-centroid rule: each `vecs(__id, keys…, __v, …)`
+    * row keeps its `n` best cells of `cents(keys…, cid, centroid)` by
+    * `score(__v, centroid)`, ties to the lowest cid. The centroid table
+    * is broadcast — a cross join for IVF, an equi-join on `keys` for PQ
+    * (all subspaces in one job) — and one window over `(__id, keys…)`
+    * ranks the cells. Output: `vecs`' columns plus `cid`.
+    */
+  private[ops] def nearestCells(vecs: DataFrame, cents: DataFrame, keys: Seq[String],
+      score: (Column, Column) => Column, n: Int): DataFrame = {
+    val w = Window.partitionBy((col("__id") +: keys.map(col)): _*)
+      .orderBy(desc("__s"), col("cid"))
+    val pairs =
+      if (keys.isEmpty) vecs.crossJoin(broadcast(cents)) else vecs.join(broadcast(cents), keys)
+    pairs
+      .withColumn("__s", score(col("__v"), col("centroid")))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= n)
+      .select(vecs.columns.map(col) :+ col("cid"): _*)
   }
 
   /** (id, vec) projected to internal names, elements widened to double
@@ -244,18 +270,6 @@ object SimilaritySearch {
   private def normalized(df: DataFrame, idCol: String, vecCol: String): DataFrame =
     df.select(col(idCol).as("__id"),
       transform(col(vecCol), x => x.cast("double")).as("__v"))
-
-  /** Nearest-centroid assignment: broadcast the (tiny) centroid table,
-    * score all cells per vector, keep the max-cosine cell.
-    */
-  private def assignToCentroid(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("__id")).orderBy(desc("__s"), col("cid"))
-    vecs.crossJoin(broadcast(cents))
-      .withColumn("__s", VectorOps.cosine(col("__v"), col("centroid")))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col("__id"), col("__v"), col("cid"))
-  }
 
   /** Trained centroids as a driver-local DataFrame — k rows of dim
     * doubles, bounded by the kCentroids parameter (this is the model,
@@ -284,13 +298,15 @@ object SimilaritySearch {
     */
   def assignPoints(points: DataFrame, pointIdCol: String, vecCol: String,
       cents: DataFrame): DataFrame =
-    assignToCentroid(normalized(points, pointIdCol, vecCol), cents)
+    nearestCells(normalized(points, pointIdCol, vecCol), cents, Nil, VectorOps.cosine, 1)
       .select(col("__id").as("point_id"), col("__v").as("__pv"), col("cid"))
 
-  /** Search an ALREADY-ASSIGNED point table: each query probes its
+  /** Trained-IVF search over an ALREADY-ASSIGNED point table
+    * ([[assignPoints]] over [[trainedCentroids]]): each query probes its
     * `nprobe` nearest centroids (broadcast, k rows) and scores only
-    * those cells' points. Shared tail of the in-plan trained search
-    * and the stored-index search — when `assignedPts` is a
+    * those cells' points. One shuffle on the cell id joins the two
+    * sides — the same plan shape at 100 TB, where the centroid table
+    * stays broadcast-small (k ≪ N). When `assignedPts` is a
     * `bucketBy(cid)` table, the cell join needs only the query-side
     * exchange (plan-pinned in BucketingSpec).
     */
@@ -302,12 +318,8 @@ object SimilaritySearch {
       vecCol: String,
       nprobe: Int,
       k: Int): DataFrame = {
-    val wq = Window.partitionBy(col("__id")).orderBy(desc("__s"), col("cid"))
-    val probes = normalized(queries, queryIdCol, vecCol)
-      .crossJoin(broadcast(cents))
-      .withColumn("__s", VectorOps.cosine(col("__v"), col("centroid")))
-      .withColumn("__rn", row_number().over(wq))
-      .filter(col("__rn") <= nprobe)
+    val probes = nearestCells(normalized(queries, queryIdCol, vecCol), cents, Nil,
+        VectorOps.cosine, nprobe)
       .select(col("__id").as("query_id"), col("__v").as("__qv"), col("cid"))
     val w = Window.partitionBy(col("query_id")).orderBy(desc("score"), col("point_id"))
     assignedPts.join(probes, "cid")
@@ -315,29 +327,6 @@ object SimilaritySearch {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("point_id"), col("score"))
-  }
-
-  /** Trained-IVF top-k with multi-probe: points live in their nearest
-    * centroid cell; each query probes its `nprobe` nearest cells and
-    * scores only those cells' points. One shuffle on the cell id joins
-    * the two sides — the same plan shape at 100 TB, where the centroid
-    * table stays broadcast-small (k ≪ N) and cell populations are
-    * balanced by training rather than luck.
-    */
-  def ivfTrainedTopK(
-      queries: DataFrame,
-      points: DataFrame,
-      queryIdCol: String,
-      pointIdCol: String,
-      vecCol: String,
-      dim: Int,
-      kCentroids: Int,
-      iters: Int,
-      nprobe: Int,
-      k: Int): DataFrame = {
-    val cents = trainedCentroids(points, pointIdCol, vecCol, dim, kCentroids, iters)
-    searchAssignedCells(assignPoints(points, pointIdCol, vecCol, cents), cents,
-      queries, queryIdCol, vecCol, nprobe, k)
   }
 
   /** Per-cluster prototypicality pruning — the data-pruning recipe of
@@ -731,7 +720,7 @@ object SimilaritySearch {
 
   /** Index-quality evaluation: per-query recall@k of an approximate hit
     * table against the exact ground truth (both as (queryCol, pointCol)
-    * rows, e.g. [[ivfTrainedTopK]] vs [[graft.ops.Knn.knnJoin]]). This
+    * rows, e.g. [[searchAssignedCells]] vs [[graft.ops.Knn.knnJoin]]). This
     * is the operator an ANN deployment tunes `nprobe`/`kCentroids`
     * with: run it on a sampled query set, move the knobs, re-measure.
     * Queries whose approximate hits miss entirely report 0.0 (a left

@@ -256,6 +256,15 @@ class GuardrailSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       SimilaritySearch.kmeansCentroids(pts, "sid", "embedding", dim = 2, k = 2, iters = 1))
     assert(e.getMessage.contains("must be numeric"))
+    // the PQ codebooks train through the same loop; digit strings cast
+    // cleanly, so only the up-front check can reject them
+    val digits = Seq(("1", Array(1.0f, 0.0f)), ("2", Array(0.0f, 1.0f)))
+      .toDF("sid", "embedding")
+    for (df <- Seq(pts, digits)) {
+      val pq = intercept[IllegalArgumentException](
+        Pq.trainCodebooks(df, "sid", "embedding", dim = 2, m = 1, kCodes = 2, iters = 1))
+      assert(pq.getMessage.contains("must be numeric"), pq.getMessage)
+    }
   }
 
   test("kmeansCentroids: an emptied cell keeps its centroid — k never shrinks") {
@@ -269,6 +278,10 @@ class GuardrailSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     assert(cents.keySet == Set(1L, 2L), s"both cells must survive, got ${cents.keySet}")
     assert(cents(2L) == Seq(1.0, 0.0), "emptied cell keeps its previous centroid")
+    val books = Pq.trainCodebooks(pts, "vid", "embedding", dim = 2, m = 1, kCodes = 2, iters = 2)
+      .collect().map(r => r.getLong(1) -> r.getSeq[Double](2)).toMap
+    assert(books.keySet == Set(1L, 2L), s"both PQ codes must survive, got ${books.keySet}")
+    assert(books(2L) == Seq(1.0, 0.0), "emptied PQ cell keeps its previous centroid")
   }
 
   test("stored batch ANN: multi-probe lifts recall@3, floor pinned vs exact kNN") {

@@ -821,38 +821,6 @@ class OpsSpec extends SparkSpec {
     assert(f(1L) != f(2L))
   }
 
-  test("multimodal: resize bounds payload size, keeps small media intact, deterministic") {
-    val docs = Tables.documents(spark, sf0001).limit(20)
-    val media = Multimodal.withMedia(docs, "doc_id", "text")
-    val resized = Multimodal.resizeMedia(media, targetBytes = 64)
-      .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1), r.getLong(2), r.getLong(3)))
-    assert(resized.nonEmpty)
-    resized.foreach { case (_, out, orig, now) =>
-      assert(now <= 64, s"resized payload $now > target")
-      assert(now == math.min(orig, 64L), "small media must pass through untouched")
-      assert(out.length.toLong == now)
-    }
-    // pure function of the input bytes: recompute driver-side and compare
-    val byId = media.collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
-    resized.foreach { case (id, out, _, _) =>
-      assert(out.sameElements(Multimodal.resizeStub(byId(id), 64)))
-    }
-  }
-
-  test("multimodal: partition-batched feature extraction, deterministic stub") {
-    val docs = Tables.documents(spark, sf0001).limit(10)
-    val feats = Multimodal.extractFeatures(
-      Multimodal.withMedia(docs, "doc_id", "text"), dim = 8, frameSize = 64)
-    val rows = feats.collect()
-    assert(rows.length == 10)
-    assert(rows.forall(_.features.length == 8))
-    assert(rows.forall(r => r.n_frames == (r.n_bytes + 63) / 64))
-    // deterministic: same input → same features
-    val again = Multimodal.extractFeatures(
-      Multimodal.withMedia(docs, "doc_id", "text"), dim = 8, frameSize = 64).collect()
-    assert(rows.map(_.features.toSeq).toSet == again.map(_.features.toSeq).toSet)
-  }
-
   test("multimodal near-dup: identical media at Hamming 0, edits stay close, unrelated spread") {
     // identical payloads -> identical signature; a small mid-payload
     // insertion (the planted-near-dup shape) must stay within a few

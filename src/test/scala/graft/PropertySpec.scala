@@ -173,9 +173,12 @@ class PropertySpec extends SparkSpec {
     assert(nCells <= k && nCells >= 1)
     assert(cents.select("cid").distinct().count() == nCells, "cell ids unique")
     // full-corpus search (nprobe = k) must return each query's exact result set
-    val topSelf = SimilaritySearch.ivfTrainedTopK(
-      df.limit(5), df.withColumnRenamed("vec_id", "point_id"), "vec_id", "point_id", "v",
-      dim = 8, kCentroids = k, iters = 2, nprobe = k, k = 1)
+    val points = df.withColumnRenamed("vec_id", "point_id")
+    val trained = SimilaritySearch.trainedCentroids(points, "point_id", "v",
+      dim = 8, kCentroids = k, iters = 2)
+    val topSelf = SimilaritySearch.searchAssignedCells(
+      SimilaritySearch.assignPoints(points, "point_id", "v", trained), trained,
+      df.limit(5), "vec_id", "v", nprobe = k, k = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     // with points == queries, every query's nearest neighbor at nprobe=k is itself
     topSelf.foreach { case (q, p) => assert(q == p, s"query $q missed itself (got $p)") }
@@ -277,17 +280,6 @@ class PropertySpec extends SparkSpec {
       assert(codes.forall(c => c >= -127 && c <= 127), s"code out of range: $codes")
       if (r.getDouble(3) == 0.0) assert(r.getDouble(2) == 0.0) // zero vec: guard, all-zero codes
       else assert(r.getDouble(2) > 0.999, s"reconstruction cosine ${r.getDouble(2)}")
-    }
-  }
-
-  test("property: resize never grows media, bounded by target, deterministic") {
-    val byteGen = Gen.chooseNum(0, 300).flatMap(n =>
-      Gen.listOfN(n, Gen.chooseNum(-128, 127).map(_.toByte)).map(_.toArray))
-    samples(byteGen, 60).foreach { b =>
-      val out = Multimodal.resizeStub(b, 48)
-      assert(out.length == math.min(b.length, 48))
-      assert(out.sameElements(Multimodal.resizeStub(b, 48)))
-      if (b.length <= 48) assert(out.sameElements(b))
     }
   }
 

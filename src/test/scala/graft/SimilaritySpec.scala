@@ -44,9 +44,12 @@ class SimilaritySpec extends SparkSpec {
       }
       rs.sum / rs.size
     }
+    val cents = SimilaritySearch.trainedCentroids(points, "point_id", "embedding",
+      dim = 64, kCentroids = 8, iters = 2)
+    val assigned = SimilaritySearch.assignPoints(points, "point_id", "embedding", cents)
     def trainedAt(nprobe: Int): Map[Long, Set[Long]] = SimilaritySearch
-      .ivfTrainedTopK(queries, points, "vec_id", "point_id", "embedding",
-        dim = 64, kCentroids = 8, iters = 2, nprobe = nprobe, k = 3)
+      .searchAssignedCells(assigned, cents, queries, "vec_id", "embedding",
+        nprobe = nprobe, k = 3)
       .select("query_id", "point_id").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     val sign = SimilaritySearch
