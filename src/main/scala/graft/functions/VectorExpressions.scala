@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -21,6 +23,12 @@ import org.apache.spark.sql.types._
   * widened to double before multiply (same as the `x::DOUBLE` cast in the
   * expression form). Unequal lengths score over the common prefix; null
   * input → null (NullIntolerant semantics via BinaryExpression).
+  *
+  * [[NearestCellsExpr]] is the k-means assignment kernel: it scores one
+  * vector against a packed list of cells with those same folds and keeps
+  * the top `n` cell ids in the order a `row_number` window would give
+  * them, so the trainers need neither a (vector, cell) pair row nor a
+  * sort.
   */
 object VectorExpressions {
 
@@ -33,10 +41,43 @@ object VectorExpressions {
     case other => throw new IllegalStateException(s"unsupported element type $other")
   }
 
-  private def getD(dt: DataType, arr: ArrayData, i: Int): Double = dt match {
-    case FloatType => arr.getFloat(i).toDouble
-    case DoubleType => arr.getDouble(i)
+  private def isFloat(dt: DataType): Boolean = dt match {
+    case FloatType => true
+    case DoubleType => false
     case other => throw new IllegalStateException(s"unsupported element type $other")
+  }
+
+  @inline private def getD(float: Boolean, arr: ArrayData, i: Int): Double =
+    if (float) arr.getFloat(i).toDouble else arr.getDouble(i)
+
+  /** a·b over the common prefix, sequential left fold. */
+  private def dotOf(x: ArrayData, xf: Boolean, y: ArrayData, yf: Boolean): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += getD(xf, x, i) * getD(yf, y, i); i += 1 }
+    acc
+  }
+
+  /** a·b / (‖a‖‖b‖), 0.0 when either norm is zero; one pass over the
+    * common prefix, then each array's tail into its own norm (parity
+    * with the l2Norm(a)*l2Norm(b) form).
+    */
+  private def cosineOf(x: ArrayData, xf: Boolean, y: ArrayData, yf: Boolean): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0; var sa = 0.0; var sb = 0.0
+    var i = 0
+    while (i < n) {
+      val xv = getD(xf, x, i); val yv = getD(yf, y, i)
+      dot += xv * yv; sa += xv * xv; sb += yv * yv
+      i += 1
+    }
+    var j = n
+    while (j < x.numElements()) { val v = getD(xf, x, j); sa += v * v; j += 1 }
+    j = n
+    while (j < y.numElements()) { val v = getD(yf, y, j); sb += v * v; j += 1 }
+    val denom = math.sqrt(sa) * math.sqrt(sb)
+    if (denom == 0.0) 0.0 else dot / denom
   }
 
   abstract class ArrayPairFold extends BinaryExpression {
@@ -60,16 +101,9 @@ object VectorExpressions {
   case class DotProductExpr(left: Expression, right: Expression) extends ArrayPairFold {
     override def prettyName: String = "graft_dot"
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val lt = elemType(left); val rt = elemType(right)
-      val n = math.min(x.numElements(), y.numElements())
-      var acc = 0.0
-      var i = 0
-      while (i < n) { acc += getD(lt, x, i) * getD(rt, y, i); i += 1 }
-      acc
-    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      dotOf(a.asInstanceOf[ArrayData], isFloat(elemType(left)),
+        b.asInstanceOf[ArrayData], isFloat(elemType(right)))
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, (x, y) => {
@@ -97,27 +131,9 @@ object VectorExpressions {
   case class CosineSimilarityExpr(left: Expression, right: Expression) extends ArrayPairFold {
     override def prettyName: String = "graft_cosine"
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val lt = elemType(left); val rt = elemType(right)
-      val n = math.min(x.numElements(), y.numElements())
-      var dot = 0.0; var sa = 0.0; var sb = 0.0
-      var i = 0
-      while (i < n) {
-        val xv = getD(lt, x, i); val yv = getD(rt, y, i)
-        dot += xv * yv; sa += xv * xv; sb += yv * yv
-        i += 1
-      }
-      // norms over the FULL arrays for unequal lengths (parity with the
-      // l2Norm(a)*l2Norm(b) form); loop above covered the common prefix
-      var j = n
-      while (j < x.numElements()) { val v = getD(lt, x, j); sa += v * v; j += 1 }
-      j = n
-      while (j < y.numElements()) { val v = getD(rt, y, j); sb += v * v; j += 1 }
-      val denom = math.sqrt(sa) * math.sqrt(sb)
-      if (denom == 0.0) 0.0 else dot / denom
-    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      cosineOf(a.asInstanceOf[ArrayData], isFloat(elemType(left)),
+        b.asInstanceOf[ArrayData], isFloat(elemType(right)))
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, (x, y) => {
@@ -208,6 +224,138 @@ object VectorExpressions {
       copy(left = l, right = r)
   }
 
+  /** Cell score of [[NearestCellsExpr]]: larger is nearer. */
+  sealed trait CellMetric
+  object CellMetric {
+    /** cos(v, c), the fold of [[CosineSimilarityExpr]] (IVF cells). */
+    case object Cosine extends CellMetric
+    /** dot(v, c) − dot(c, c)/2 with the fold of [[DotProductExpr]]: the
+      * argmin of ‖v − c‖², since ‖v‖² is constant per vector (PQ codes).
+      * The one definition of the L2 assignment objective.
+      */
+    case object L2 extends CellMetric
+  }
+
+  /** The k-means assignment kernel: `left` is a vector (ARRAY<FLOAT|DOUBLE>,
+    * may be NULL), `right` the packed cells `ARRAY<STRUCT<cid: BIGINT,
+    * centroid: ARRAY<FLOAT|DOUBLE>>>` it may land in; the result is the
+    * ids of its `n` best cells, best first (fewer when there are fewer
+    * cells; NULL only when `right` is NULL).
+    *
+    * The contract is per row: each row keeps its `n` best cells, exactly
+    * the rows `row_number() OVER (PARTITION BY row ORDER BY score DESC,
+    * cid) <= n` keeps over the (row, cell) pairs. So the order matches
+    * Spark's sort: score descending with NULL scores last, doubles
+    * compared as `SQLOrderingUtil.compareDoubles` does (NaN greatest,
+    * −0.0 = 0.0), ties to the lowest cid. A NULL vector or a NULL
+    * centroid scores NULL, so a NULL vector keeps its `n` lowest cids.
+    * Scores come from the same element access and left folds as
+    * [[DotProductExpr]] / [[CosineSimilarityExpr]], so zero, denormal and
+    * null-element inputs rank as their pair scores would.
+    */
+  case class NearestCellsExpr(left: Expression, right: Expression, metric: CellMetric, n: Int)
+      extends BinaryExpression {
+    require(n >= 1, s"n ($n) must be >= 1")
+    override def prettyName: String = "graft_nearest_cells"
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def nullable: Boolean = right.nullable
+
+    override def checkInputDataTypes()
+        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+      def vec(dt: DataType) = dt match {
+        case ArrayType(FloatType | DoubleType, _) => true
+        case _ => false
+      }
+      val cellsOk = right.dataType match {
+        case ArrayType(StructType(Array(StructField(_, LongType, _, _),
+            StructField(_, c, _, _))), _) => vec(c)
+        case _ => false
+      }
+      if (vec(left.dataType) && cellsOk)
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      else
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"$prettyName expects ARRAY<FLOAT|DOUBLE> and ARRAY<STRUCT<BIGINT, " +
+            s"ARRAY<FLOAT|DOUBLE>>> inputs, got ${left.dataType.catalogString} / " +
+            s"${right.dataType.catalogString}")
+    }
+
+    @transient private lazy val vf = isFloat(elemType(left))
+    @transient private lazy val cf = isFloat(
+      elemType(right).asInstanceOf[StructType].fields(1).dataType
+        .asInstanceOf[ArrayType].elementType)
+
+    private def score(v: ArrayData, c: ArrayData): Double = metric match {
+      case CellMetric.Cosine => cosineOf(v, vf, c, cf)
+      case CellMetric.L2 => dotOf(v, vf, c, cf) - dotOf(c, cf, c, cf) / 2.0
+    }
+
+    /** Whether (aNull, a, aCid) ranks before (bNull, b, bCid). */
+    private def before(aNull: Boolean, a: Double, aCid: Long,
+        bNull: Boolean, b: Double, bCid: Long): Boolean =
+      if (aNull || bNull) {
+        if (aNull && bNull) aCid < bCid else bNull
+      } else {
+        val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(a, b)
+        if (c != 0) c > 0 else aCid < bCid
+      }
+
+    /** Top-`n` insertion over the cells; `v` may be null. */
+    def select(v: ArrayData, cells: ArrayData): ArrayData = {
+      val m = math.min(n, cells.numElements())
+      val cids = new Array[Long](m)
+      val scores = new Array[Double](m)
+      val nulls = new Array[Boolean](m)
+      var filled = 0
+      var i = 0
+      while (i < cells.numElements()) {
+        if (!cells.isNullAt(i)) {
+          val cell = cells.getStruct(i, 2)
+          val cid = cell.getLong(0)
+          val isNull = v == null || cell.isNullAt(1)
+          val s = if (isNull) 0.0 else score(v, cell.getArray(1))
+          var j = filled
+          while (j > 0 && before(isNull, s, cid, nulls(j - 1), scores(j - 1), cids(j - 1))) j -= 1
+          if (j < m) {
+            var t = math.min(filled, m - 1)
+            while (t > j) {
+              cids(t) = cids(t - 1); scores(t) = scores(t - 1); nulls(t) = nulls(t - 1)
+              t -= 1
+            }
+            cids(j) = cid; scores(j) = s; nulls(j) = isNull
+            if (filled < m) filled += 1
+          }
+        }
+        i += 1
+      }
+      UnsafeArrayData.fromPrimitiveArray(if (filled == m) cids else cids.take(filled))
+    }
+
+    override def eval(input: InternalRow): Any = {
+      val cells = right.eval(input)
+      if (cells == null) null
+      else select(left.eval(input).asInstanceOf[ArrayData], cells.asInstanceOf[ArrayData])
+    }
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val self = ctx.addReferenceObj("nearestCells", this,
+        "graft.functions.VectorExpressions.NearestCellsExpr")
+      val v = left.genCode(ctx)
+      val c = right.genCode(ctx)
+      ev.copy(code = code"""
+        |${v.code}
+        |${c.code}
+        |boolean ${ev.isNull} = ${c.isNull};
+        |${CodeGenerator.javaType(dataType)} ${ev.value} = null;
+        |if (!${ev.isNull}) {
+        |  ${ev.value} = $self.select(${v.isNull} ? null : ${v.value}, ${c.value});
+        |}""".stripMargin)
+    }
+
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+      copy(left = l, right = r)
+  }
+
   // Spark 4 Column <-> Expression bridge
   import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 
@@ -218,4 +366,6 @@ object VectorExpressions {
     column(DotProductExpr(expression(a), expression(b)))
   def cosine(a: Column, b: Column): Column =
     column(CosineSimilarityExpr(expression(a), expression(b)))
+  def nearestCells(vec: Column, cells: Column, metric: CellMetric, n: Int): Column =
+    column(NearestCellsExpr(expression(vec), expression(cells), metric, n))
 }

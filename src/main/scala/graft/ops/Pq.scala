@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorExpressions.CellMetric
+
 /** Product quantization (Jégou et al., "Product Quantization for
   * Nearest Neighbor Search", TPAMI 2011) — the compression layer a
   * vector store needs when the raw float corpus stops fitting: split
@@ -25,7 +27,8 @@ import org.apache.spark.sql.functions._
   * The codebooks train through the IVF quantizer's Lloyd loop
   * ([[SimilaritySearch.lloyd]], which states the determinism rules),
   * with EUCLIDEAN assignment — `argmax dot(v, c) − ‖c‖²/2` (≡ argmin
-  * ‖v − c‖², since ‖v‖² is constant per vector) — NOT the spherical
+  * ‖v − c‖², since ‖v‖² is constant per vector; `CellMetric.L2` of the
+  * nearest-cell kernel is its one definition) — NOT the spherical
   * cosine the IVF coarse quantizer uses: PQ quality is reconstruction
   * error, and cosine assignment ignores the subvector magnitudes ADC
   * then relies on. Scores are rounded to 6 dp BEFORE ranking (the BM25
@@ -39,34 +42,26 @@ import org.apache.spark.sql.functions._
   */
 object Pq {
 
-  /** The ONE definition of the L2 assignment objective. */
-  private def l2Score(v: Column, c: Column): Column =
-    VectorOps.dot(v, c) - VectorOps.dot(c, c) / 2
-
   /** Per-subspace codebooks `(sub, cid, centroid)` as a driver-local
     * model (`m × kCodes` rows — the PQ analogue of
-    * [[SimilaritySearch.trainedCentroids]]; collecting keeps the
-    * Lloyd subtrees out of every consumer's plan).
+    * [[SimilaritySearch.trainedCentroids]]; [[SimilaritySearch.lloyd]]
+    * returns the model already collected, so no consumer re-runs the
+    * training).
     *
     * All `m` codebooks train TOGETHER — `sub` is a key of the shared
     * Lloyd loop, so each iteration is ONE pass over the corpus (assign:
-    * broadcast `m × kCodes` centroids, window per (id, sub); update:
-    * one (sub, cid) group-by) instead of `m` serial runs. At 100 TB
-    * that is the difference between `iters` corpus scans and
-    * `m × iters`. Seeds are the `kCodes` lowest-id vectors' subvectors,
-    * so every sub shares the same cid set.
+    * each subvector against its sub's broadcast `kCodes` cells in the
+    * nearest-cell kernel; update: one (sub, cid) group-by) instead of
+    * `m` serial runs. At 100 TB that is the difference between `iters`
+    * corpus scans and `m × iters`. Seeds are the `kCodes` lowest-id
+    * vectors' subvectors, so every sub shares the same cid set.
     */
   def trainCodebooks(points: DataFrame, idCol: String, vecCol: String,
       dim: Int, m: Int, kCodes: Int, iters: Int): DataFrame = {
     require(m >= 1 && dim % m == 0, s"dim ($dim) must divide into m ($m) subspaces")
     val dsub = dim / m
-    val spark = points.sparkSession
-    import spark.implicits._
     SimilaritySearch.lloyd(points.select(col(idCol).as("__id"), col(vecCol).as("__v")),
-        subvectors(_, "__v", m, dsub, Nil), Seq("sub"), l2Score, dsub, kCodes, iters)
-      .collect().toSeq
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-      .toDF("sub", "cid", "centroid")
+      subvectors(_, "__v", m, dsub, Nil), Seq("sub"), CellMetric.L2, dsub, kCodes, iters)
   }
 
   /** Explode a vector column into its `m` double-widened subvectors:
@@ -109,7 +104,7 @@ object Pq {
       (Seq(col(idCol).as("__id"), col(vecCol)) ++
         carry.map { case (n, c) => c.as(n) }): _*)
     SimilaritySearch.nearestCells(subvectors(src, vecCol, m, dsub, carry.map(_._1)),
-        codebooks, Seq("sub"), l2Score, 1)
+        codebooks, Seq("sub"), CellMetric.L2, 1)
       .select(
         (Seq(col("__id").as("point_id"), col("sub"), col("cid").as("code")) ++
           carry.map { case (n, _) => col(n) }): _*)

@@ -1,8 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.functions.VectorExpressions
+import graft.functions.VectorExpressions.CellMetric
 
 /** Approximate-nearest-neighbor building blocks over an embedding column
   * (north-star extension; the exact brute-force kNN in [[Knn]] is the
@@ -168,6 +174,125 @@ object SimilaritySearch {
     fetchAndRerank(shortIds, queries, points, queryIdCol, pointIdCol, vecCol, k)
   }
 
+  /** The ONE Lloyd loop, shared by the IVF quantizer ([[trainedCentroids]])
+    * and the PQ codebooks (`Pq.trainCodebooks`). `rows(__id, __v)` holds
+    * one row per point; `split` maps such a frame to the training
+    * vectors `(__id, keys…, __v)` (identity for IVF, the per-subspace
+    * explode for PQ, where `keys = Seq("sub")` trains all `m` codebooks
+    * in the same pass). Output: the model `(keys…, cid, centroid)` as a
+    * driver-local frame (`centroid` is `array<double>`, a null element
+    * read as 0.0, as every scoring fold reads it).
+    *
+    * Determinism (DuckDB-oracle requirement, `OracleSql.kmeansCtes`):
+    * seeds = the `k` lowest-id rows, centroid id = the seed's own id;
+    * assignment = [[nearestCells]] (max score, ties to the lowest cid);
+    * update = per-component mean ROUNDED to 6 dp so both engines iterate
+    * from identical centroid values whatever their aggregation order; a
+    * cell that attracts no vector keeps its centroid.
+    *
+    * The model stays on the driver between rounds (it is k rows, like
+    * Spark ML's KMeansModel): each round is one assignment plus one
+    * group-by over the corpus, collected, and the stale-cell rule runs on
+    * the collected rows. No round reads another round's plan, so the
+    * lineage stays flat at any `iters` with no checkpoint (PqSpec pins
+    * iters=10), and no job re-runs the training for a consumer.
+    */
+  private[ops] def lloyd(rows: DataFrame, split: DataFrame => DataFrame, keys: Seq[String],
+      metric: CellMetric, dim: Int, k: Int, iters: Int): DataFrame = {
+    // Centroid ids are the seed ids cast to long. Under Spark 4's
+    // default ANSI cast a non-numeric string id would fail only once
+    // training executes, and a digit-string id would seed in string
+    // order ("10" < "9"), so reject non-numeric ids before any job.
+    val idType = rows.schema("__id").dataType
+    require(idType.isInstanceOf[NumericType],
+      s"k-means: the id column must be numeric (got ${idType.simpleString}) — centroid " +
+        "ids are the seed vectors' own ids cast to long; map string ids to a surrogate first")
+    val spark = rows.sparkSession
+    val nk = keys.size
+    val pts = split(rows)
+    val schema = StructType(keys.map(pts.schema(_)) ++ Seq(
+      StructField("cid", LongType, nullable = false),
+      StructField("centroid", ArrayType(DoubleType, containsNull = false))))
+    // (keys…, cid, centroid) from a collected (keys…, cid, vector) row
+    def modelRow(r: Row): Row = Row.fromSeq((0 until nk).map(r.get) ++ Seq(
+      r.getLong(nk), Option(r.getSeq[Double](nk + 1)).map(_.toArray).orNull))
+    def cellOf(r: Row): Seq[Any] = (0 to nk).map(r.get)
+    def model(rs: Seq[Row]): DataFrame = spark.createDataFrame(rs.asJava, schema)
+    val cell = (keys :+ "cid").map(col)
+    // Seeding by id (rather than a row_number()-1 label) needs no global
+    // window: a `Window` with a foldable partition key is constant-folded
+    // to an unpartitioned WindowExec — a single-partition warning plus a
+    // pointless exchange. Ids ascend either way, so the lowest-cid
+    // tie-breaks pick the same cells.
+    var cents: Seq[Row] = split(rows.orderBy(col("__id")).limit(k))
+      .select(keys.map(col) ++ Seq(col("__id").cast("long"), col("__v")): _*)
+      .collect().toSeq.map(modelRow)
+    for (_ <- 1 to iters) {
+      // Update = `dim` per-component avg aggregates in ONE group-by
+      // (map-side combinable, one shuffle of k×dim partials per mapper)
+      // rather than posexplode + two shuffles: exploding multiplies the
+      // assignment output by `dim` before the exchange.
+      val avgs = (0 until dim).map(j =>
+        round(avg(element_at(col("__v"), j + 1)), 6).as(s"__m$j"))
+      val updated = nearestCells(pts, model(cents), keys, metric, 1)
+        .groupBy(cell: _*)
+        .agg(avgs.head, avgs.tail: _*)
+        .select(cell :+ array((0 until dim).map(j => col(s"__m$j")): _*).as("__upd"): _*)
+        .collect().map(r => cellOf(r) -> modelRow(r)).toMap
+      // The stale-cell rule: a cell absent from the group-by keeps its
+      // previous centroid, so k never silently SHRINKS (GuardrailSpec).
+      cents = cents.map(r => updated.getOrElse(cellOf(r), r))
+    }
+    model(cents)
+  }
+
+  /** The ONE nearest-centroid rule: each `vecs(__id, keys…, __v, …)`
+    * row keeps its `n` best cells of `cents(keys…, cid, centroid)` by
+    * `metric` (ties to the lowest cid). The contract is per row: each
+    * row keeps its `n` best cells, the rows a `row_number` window over
+    * the (row, cell) pairs would keep (NULL scores last, so a NULL vector
+    * keeps its `n` lowest cids).
+    *
+    * The model is packed on the driver into one `array<struct<cid,
+    * centroid>>` per key (one row for IVF, one per `sub` for PQ) and
+    * broadcast; [[graft.functions.VectorExpressions.NearestCellsExpr]]
+    * then ranks a row's cells in place. No (row, cell) pair row, sort
+    * or exchange: the assignment is a map-side pass over `vecs`.
+    * Output: `vecs`' columns plus `cid`, one row per kept cell.
+    */
+  private[ops] def nearestCells(vecs: DataFrame, cents: DataFrame, keys: Seq[String],
+      metric: CellMetric, n: Int): DataFrame = {
+    val packed = broadcast(packCells(cents, keys))
+    val paired = if (keys.isEmpty) vecs.crossJoin(packed) else vecs.join(packed, keys)
+    paired.select(vecs.columns.map(col) :+
+      explode(VectorExpressions.nearestCells(col("__v"), col("__cells"), metric, n)).as("cid"): _*)
+  }
+
+  /** `cents(keys…, cid, centroid)` collected and packed as one
+    * `(keys…, __cells)` row per key, cells in cid order. The model is
+    * k rows; collecting a driver-local model runs no job.
+    */
+  private def packCells(cents: DataFrame, keys: Seq[String]): DataFrame = {
+    val nk = keys.size
+    val cellType = StructType(Seq(StructField("cid", LongType, nullable = false),
+      StructField("centroid", cents.schema("centroid").dataType)))
+    val schema = StructType(keys.map(cents.schema(_)) :+
+      StructField("__cells", ArrayType(cellType, containsNull = false), nullable = false))
+    val packed = cents.select((keys :+ "cid" :+ "centroid").map(col): _*).collect().toSeq
+      .groupBy(r => (0 until nk).map(r.get))
+      .toSeq.map { case (key, rs) =>
+        val cells = rs.map(r => Row(r.getAs[Number](nk).longValue, r.get(nk + 1)))
+        Row.fromSeq(key :+ cells.sortBy(_.getLong(0)))
+      }
+    cents.sparkSession.createDataFrame(packed.asJava, schema)
+  }
+
+  /** (id, vec) projected to internal names, elements widened to double
+    * (parity with the oracle's per-element `::DOUBLE`).
+    */
+  private def normalized(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("__id"), VectorOps.toDoubleArray(col(vecCol)).as("__v"))
+
   /** Deterministic spherical k-means for a TRAINED IVF coarse quantizer
     * — the 100 TB upgrade over [[signBucket]]: centroids adapt to the
     * data distribution, so buckets are balanced and probing the
@@ -176,119 +301,15 @@ object SimilaritySearch {
     * the sign quantizer: 0.47 → 0.55 at the same 1/4 probe budget, 0.78
     * at nprobe=4 — and nprobe is a knob the sign bucket doesn't have).
     * [[lloyd]] with cosine assignment; its scaladoc holds the
-    * determinism rules the DuckDB oracle mirrors.
-    */
-  def kmeansCentroids(points: DataFrame, idCol: String, vecCol: String,
-      dim: Int, k: Int, iters: Int): DataFrame =
-    lloyd(normalized(points, idCol, vecCol), identity, Nil, VectorOps.cosine, dim, k, iters)
-
-  /** The ONE Lloyd loop, shared by the IVF quantizer ([[kmeansCentroids]])
-    * and the PQ codebooks (`Pq.trainCodebooks`). `rows(__id, __v)` holds
-    * one row per point; `split` maps such a frame to the training
-    * vectors `(__id, keys…, __v)` (identity for IVF, the per-subspace
-    * explode for PQ, where `keys = Seq("sub")` trains all `m` codebooks
-    * in the same pass). Output `(keys…, cid, centroid)`, checkpointed.
-    *
-    * Determinism (DuckDB-oracle requirement, `OracleSql.kmeansCtes`):
-    * seeds = the `k` lowest-id rows, centroid id = the seed's own id;
-    * assignment = [[nearestCells]] (max `score`, ties to the lowest
-    * cid); update = per-component mean ROUNDED to 6 dp so both engines
-    * iterate from identical centroid values whatever their aggregation
-    * order; a cell that attracts no vector keeps its centroid.
-    */
-  private[ops] def lloyd(rows: DataFrame, split: DataFrame => DataFrame, keys: Seq[String],
-      score: (Column, Column) => Column, dim: Int, k: Int, iters: Int): DataFrame = {
-    // Centroid ids are the seed ids cast to long. Under Spark 4's
-    // default ANSI cast a non-numeric string id would fail only once
-    // training executes, and a digit-string id would seed in string
-    // order ("10" < "9"), so reject non-numeric ids before any job.
-    val idType = rows.schema("__id").dataType
-    require(idType.isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"k-means: the id column must be numeric (got ${idType.simpleString}) — centroid " +
-        "ids are the seed vectors' own ids cast to long; map string ids to a surrogate first")
-    val cell = (keys :+ "cid").map(col)
-    val pts = split(rows)
-    // Seeding by id (rather than a row_number()-1 label) needs no global
-    // window: a `Window` with a foldable partition key is constant-folded
-    // to an unpartitioned WindowExec — a single-partition warning plus a
-    // pointless exchange. Ids ascend either way, so the lowest-cid
-    // tie-breaks pick the same cells.
-    var cents = split(rows.orderBy(col("__id")).limit(k))
-      .select(keys.map(col) ++ Seq(col("__id").cast("long").as("cid"),
-        col("__v").as("centroid")): _*)
-    for (_ <- 1 to iters) {
-      // Update = `dim` per-component avg aggregates in ONE group-by
-      // (map-side combinable, one shuffle of k×dim partials per mapper)
-      // rather than posexplode + two shuffles: exploding multiplies the
-      // assignment output by `dim` before the exchange.
-      val avgs = (0 until dim).map(j =>
-        round(avg(element_at(col("__v"), j + 1)), 6).as(s"__m$j"))
-      val updated = nearestCells(pts, cents, keys, score, 1)
-        .groupBy(cell: _*)
-        .agg(avgs.head, avgs.tail: _*)
-        .select(cell :+ array((0 until dim).map(j => col(s"__m$j")): _*).as("__upd"): _*)
-      // The stale-cell rule: a cell absent from the group-by keeps its
-      // previous centroid, so k never silently SHRINKS (GuardrailSpec).
-      cents = cents
-        .join(updated, keys :+ "cid", "left")
-        .select(cell :+ coalesce(col("__upd"), col("centroid")).as("centroid"): _*)
-        // `cents` is read twice per round (assignment + stale-cell
-        // join), so the logical plan would double per iteration; the
-        // eager checkpoint materializes the k-row model and cuts the
-        // plan to a leaf (PqSpec pins iters=10 in bounded time). The
-        // blocks are not replicated: an executor loss mid-training
-        // aborts rather than recomputes — fine for a cheap k-row model;
-        // use reliable checkpoint() when a checkpoint dir is configured.
-        .localCheckpoint(true)
-    }
-    cents
-  }
-
-  /** The ONE nearest-centroid rule: each `vecs(__id, keys…, __v, …)`
-    * row keeps its `n` best cells of `cents(keys…, cid, centroid)` by
-    * `score(__v, centroid)`, ties to the lowest cid. The centroid table
-    * is broadcast — a cross join for IVF, an equi-join on `keys` for PQ
-    * (all subspaces in one job) — and one window over `(__id, keys…)`
-    * ranks the cells. Output: `vecs`' columns plus `cid`.
-    */
-  private[ops] def nearestCells(vecs: DataFrame, cents: DataFrame, keys: Seq[String],
-      score: (Column, Column) => Column, n: Int): DataFrame = {
-    val w = Window.partitionBy((col("__id") +: keys.map(col)): _*)
-      .orderBy(desc("__s"), col("cid"))
-    val pairs =
-      if (keys.isEmpty) vecs.crossJoin(broadcast(cents)) else vecs.join(broadcast(cents), keys)
-    pairs
-      .withColumn("__s", score(col("__v"), col("centroid")))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= n)
-      .select(vecs.columns.map(col) :+ col("cid"): _*)
-  }
-
-  /** (id, vec) projected to internal names, elements widened to double
-    * (parity with the oracle's per-element `::DOUBLE`).
-    */
-  private def normalized(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    df.select(col(idCol).as("__id"),
-      transform(col(vecCol), x => x.cast("double")).as("__v"))
-
-  /** Trained centroids as a driver-local DataFrame — k rows of dim
-    * doubles, bounded by the kCentroids parameter (this is the model,
-    * same as Spark ML's KMeansModel holding centers locally). The
-    * consumers then read a local relation: training runs exactly once,
-    * with no persist() left leaking in the cache manager and no
-    * Lloyd-subtree re-execution per consumer (measured at sf0.1: ~5 s
-    * vs 6.2 s unpersisted recompute, comparable to the persist variant
-    * without its unreleasable cache entry).
+    * determinism rules the DuckDB oracle mirrors. Output: `(cid,
+    * centroid)`, k rows of `dim` doubles as a driver-local frame (the
+    * model), so consumers read a local relation and never re-run the
+    * training.
     */
   def trainedCentroids(points: DataFrame, pointIdCol: String, vecCol: String,
-      dim: Int, kCentroids: Int, iters: Int): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    kmeansCentroids(points, pointIdCol, vecCol, dim, kCentroids, iters)
-      .collect().toSeq
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .toDF("cid", "centroid")
-  }
+      dim: Int, kCentroids: Int, iters: Int): DataFrame =
+    lloyd(normalized(points, pointIdCol, vecCol), identity, Nil, CellMetric.Cosine,
+      dim, kCentroids, iters)
 
   /** Points labeled with their nearest trained cell:
     * (point_id, __pv double-vector, cid). This is the INDEX layout —
@@ -298,7 +319,7 @@ object SimilaritySearch {
     */
   def assignPoints(points: DataFrame, pointIdCol: String, vecCol: String,
       cents: DataFrame): DataFrame =
-    nearestCells(normalized(points, pointIdCol, vecCol), cents, Nil, VectorOps.cosine, 1)
+    nearestCells(normalized(points, pointIdCol, vecCol), cents, Nil, CellMetric.Cosine, 1)
       .select(col("__id").as("point_id"), col("__v").as("__pv"), col("cid"))
 
   /** Trained-IVF search over an ALREADY-ASSIGNED point table
@@ -319,7 +340,7 @@ object SimilaritySearch {
       nprobe: Int,
       k: Int): DataFrame = {
     val probes = nearestCells(normalized(queries, queryIdCol, vecCol), cents, Nil,
-        VectorOps.cosine, nprobe)
+        CellMetric.Cosine, nprobe)
       .select(col("__id").as("query_id"), col("__v").as("__qv"), col("cid"))
     val w = Window.partitionBy(col("query_id")).orderBy(desc("score"), col("point_id"))
     assignedPts.join(probes, "cid")
@@ -329,33 +350,6 @@ object SimilaritySearch {
       .select(col("query_id"), col("rank"), col("point_id"), col("score"))
   }
 
-  /** Per-cluster prototypicality pruning — the data-pruning recipe of
-    * Sorscher et al. 2022 (NeurIPS, "Beyond neural scaling laws"):
-    * cluster the embedding space, score each point by its cosine to its
-    * own cluster centroid (the PROTOTYPICALITY of the example), and
-    * keep only the `keepFrac` HARDEST (least prototypical) examples of
-    * each cluster — with abundant data, easy/prototypical examples are
-    * the ones worth dropping. Dropping per CLUSTER rather than globally
-    * preserves coverage: no region of the embedding space is emptied
-    * just because its examples are all easy.
-    *
-    * Scale shape: centroid assignment is a broadcast nested-loop over
-    * the k-row centroid table (map-side, no shuffle); the per-cluster
-    * count + rank windows share ONE exchange on `cid`. At this fixture
-    * k = 16, so the window stage has 16 partitions — at 100 TB the
-    * quantizer is trained with k ~ sqrt(N) (tens of thousands of
-    * cells, the same knob the IVF index turns), which is exactly what
-    * re-balances these windows; a keep-hardest THRESHOLD (per-cluster
-    * score quantile, broadcast back) is the approximate fallback if
-    * even that leaves a mega-cluster.
-    *
-    * Ties (same score within a cluster) break by point id, so the kept
-    * set is a total function of the input. `cluster_n` counts the
-    * cluster BEFORE pruning; `greatest(1, floor(n * keepFrac))` keeps
-    * at least one example per non-empty cluster.
-    * Output: `(cid, point_id, cluster_n, rank, score)` — rank 1 is the
-    * hardest example of its cluster.
-    */
   /** Cluster data-map cards — the per-cluster report curation
     * decisions read (the embedding-space analog of the corpus data
     * card; the lens SemDeDup-style analyses and cluster-balanced
@@ -426,6 +420,33 @@ object SimilaritySearch {
       .select(col("cid"), col("point_id"), col("cluster_n"), col("rank").cast("long"))
   }
 
+  /** Per-cluster prototypicality pruning — the data-pruning recipe of
+    * Sorscher et al. 2022 (NeurIPS, "Beyond neural scaling laws"):
+    * cluster the embedding space, score each point by its cosine to its
+    * own cluster centroid (the PROTOTYPICALITY of the example), and
+    * keep only the `keepFrac` HARDEST (least prototypical) examples of
+    * each cluster — with abundant data, easy/prototypical examples are
+    * the ones worth dropping. Dropping per CLUSTER rather than globally
+    * preserves coverage: no region of the embedding space is emptied
+    * just because its examples are all easy.
+    *
+    * Scale shape: centroid assignment is a broadcast nested-loop over
+    * the k-row centroid table (map-side, no shuffle); the per-cluster
+    * count + rank windows share ONE exchange on `cid`. At this fixture
+    * k = 16, so the window stage has 16 partitions — at 100 TB the
+    * quantizer is trained with k ~ sqrt(N) (tens of thousands of
+    * cells, the same knob the IVF index turns), which is exactly what
+    * re-balances these windows; a keep-hardest THRESHOLD (per-cluster
+    * score quantile, broadcast back) is the approximate fallback if
+    * even that leaves a mega-cluster.
+    *
+    * Ties (same score within a cluster) break by point id, so the kept
+    * set is a total function of the input. `cluster_n` counts the
+    * cluster BEFORE pruning; `greatest(1, floor(n * keepFrac))` keeps
+    * at least one example per non-empty cluster.
+    * Output: `(cid, point_id, cluster_n, rank, score)` — rank 1 is the
+    * hardest example of its cluster.
+    */
   def prototypicalityPrune(points: DataFrame, pointIdCol: String, vecCol: String,
       cents: DataFrame, keepFrac: Double): DataFrame = {
     require(keepFrac > 0.0 && keepFrac <= 1.0, s"keepFrac ($keepFrac) must be in (0, 1]")

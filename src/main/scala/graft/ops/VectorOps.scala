@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Vector column operators — the core capability of the reference
   * (L2-normalize `Qdrant/main.py:15-18`, cosine scoring implied by
@@ -20,8 +21,13 @@ import org.apache.spark.sql.functions._
   */
 object VectorOps {
 
-  /** ARRAY<FLOAT> → ARRAY<DOUBLE>; double math end-to-end. */
-  def toDoubleArray(v: Column): Column = transform(v, _.cast("double"))
+  /** ARRAY<FLOAT> → ARRAY<DOUBLE>; double math end-to-end. A native
+    * cast, not a `transform` lambda: same values, NULL array → NULL,
+    * null element → null, but the result type is always
+    * `array<double>` with `containsNull = true`, whatever the input's
+    * element nullability.
+    */
+  def toDoubleArray(v: Column): Column = v.cast(ArrayType(DoubleType))
 
   /** Σ x² — sequential left fold, deterministic order. */
   def sumSquares(v: Column): Column =

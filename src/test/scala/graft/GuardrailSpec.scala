@@ -250,11 +250,11 @@ class GuardrailSpec extends SparkSpec {
     assert(got((1L, "a")) == 0.0)
   }
 
-  test("kmeansCentroids: non-numeric id column is rejected loudly") {
+  test("trainedCentroids: non-numeric id column is rejected loudly") {
     val pts = Seq(("a", Array(1.0f, 0.0f)), ("b", Array(0.0f, 1.0f)))
       .toDF("sid", "embedding")
     val e = intercept[IllegalArgumentException](
-      SimilaritySearch.kmeansCentroids(pts, "sid", "embedding", dim = 2, k = 2, iters = 1))
+      SimilaritySearch.trainedCentroids(pts, "sid", "embedding", dim = 2, kCentroids = 2, iters = 1))
     assert(e.getMessage.contains("must be numeric"))
     // the PQ codebooks train through the same loop; digit strings cast
     // cleanly, so only the up-front check can reject them
@@ -267,14 +267,14 @@ class GuardrailSpec extends SparkSpec {
     }
   }
 
-  test("kmeansCentroids: an emptied cell keeps its centroid — k never shrinks") {
+  test("trainedCentroids: an emptied cell keeps its centroid — k never shrinks") {
     // 3 identical vectors: every assignment ties to the lowest cid, so
     // the second seed's cell empties on iteration 1. The bare group-by
-    // would drop it and silently shrink k; the stale-cell join keeps it.
+    // would drop it and silently shrink k; the stale-cell rule keeps it.
     val pts = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(1.0f, 0.0f)), (3L, Array(1.0f, 0.0f)))
       .toDF("vid", "embedding")
     val cents = SimilaritySearch
-      .kmeansCentroids(pts, "vid", "embedding", dim = 2, k = 2, iters = 2)
+      .trainedCentroids(pts, "vid", "embedding", dim = 2, kCentroids = 2, iters = 2)
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     assert(cents.keySet == Set(1L, 2L), s"both cells must survive, got ${cents.keySet}")
     assert(cents(2L) == Seq(1.0, 0.0), "emptied cell keeps its previous centroid")

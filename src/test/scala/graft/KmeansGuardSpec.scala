@@ -17,6 +17,16 @@ class KmeansGuardSpec extends AnyFunSuite {
         hits.filterNot(_.contains("/ops/SimilaritySearch.scala:")).mkString(", "))
   }
 
+  test("the nearest-cell kernel is called only from SimilaritySearch.scala, which has no cut") {
+    val hits = SessionGuardSpec.codeHits("VectorExpressions.nearestCells(")
+    assert(hits.nonEmpty && hits.forall(_.contains("/ops/SimilaritySearch.scala:")),
+      s"cell assignment must go through SimilaritySearch.nearestCells, found: " +
+        hits.filterNot(_.contains("/ops/SimilaritySearch.scala:")).mkString(", "))
+    val cuts = SessionGuardSpec.codeHits("localCheckpoint")
+      .filter(_.contains("/ops/SimilaritySearch.scala:"))
+    assert(cuts.isEmpty, s"the driver-held Lloyd model needs no cut, found: ${cuts.mkString(", ")}")
+  }
+
   test("the SQL stale-cell update appears only in OracleSql.scala") {
     val hits = SessionGuardSpec.codeHits("coalesce(u.c, p.c)")
     assert(hits.nonEmpty && hits.forall(_.contains("/OracleSql.scala:")),

@@ -310,6 +310,48 @@ class PlanSpec extends SparkSpec {
       s"IVF degenerated to a cartesian scoring pass:\n$plan")
   }
 
+  test("k-means assignment is map-side: no window, no shuffle of the points (assign, encode, probe)") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    object walk extends AdaptiveSparkPlanHelper
+    def executed(df: DataFrame): SparkPlan = { df.collect(); df.queryExecution.executedPlan }
+    def windowKeys(p: SparkPlan): Seq[Seq[String]] = walk.collect(p) {
+      case w: WindowExec => w.partitionSpec.flatMap(_.references.map(_.name))
+      case w: WindowGroupLimitExec => w.partitionSpec.flatMap(_.references.map(_.name))
+    }
+    def shuffleKeys(p: SparkPlan): Seq[Seq[String]] = walk.collect(p) {
+      case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+          h.expressions.flatMap(_.references.map(_.name))
+        case other => Seq(other.toString)
+      }
+    }
+    val emb = Tables.embeddings(spark, sf0001)
+    val points = emb.filter(col("vec_id") >= 10).withColumnRenamed("vec_id", "point_id")
+    val cents = SimilaritySearch.trainedCentroids(points, "point_id", "embedding",
+      dim = 64, kCentroids = 8, iters = 1)
+    val cb = Pq.trainCodebooks(emb, "vec_id", "embedding", dim = 64, m = 8, kCodes = 8, iters = 1)
+    for ((name, df) <- Seq(
+        "assignPoints" -> SimilaritySearch.assignPoints(points, "point_id", "embedding", cents),
+        "Pq.encode" -> Pq.encode(emb, "vec_id", "embedding", cb, m = 8, dsub = 8))) {
+      val plan = executed(df)
+      assert(windowKeys(plan).isEmpty && shuffleKeys(plan).isEmpty,
+        s"$name must rank cells in the kernel, without a window or an exchange:\n$plan")
+    }
+    // the probe (queries → their nprobe cells) adds no window of its own
+    // and no exchange on the query id; the one window left is the
+    // per-query top-k over the probed cells' points
+    val search = executed(SimilaritySearch.searchAssignedCells(
+      SimilaritySearch.assignPoints(points, "point_id", "embedding", cents), cents,
+      emb.filter(col("vec_id") < 10), "vec_id", "embedding", nprobe = 4, k = 3))
+    assert(windowKeys(search).nonEmpty && windowKeys(search).forall(_ == Seq("query_id")),
+      s"only the top-k window over query_id may remain:\n$search")
+    assert(!shuffleKeys(search).exists(_.contains("__id")),
+      s"the probe must not exchange the queries by id:\n$search")
+  }
+
   test("contamination is hash equi-joins on the shingle hash, never all-pairs") {
     val docs = Tables.documents(spark, sf0001)
     val plan = formatted(Dedup.contamination(

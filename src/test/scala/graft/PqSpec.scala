@@ -71,13 +71,13 @@ class PqSpec extends SparkSpec {
   }
 
   test("trainCodebooks at iters=10: flat lineage, bounded plan depth and time") {
-    // Each Lloyd round references `cents` twice (assignment + stale-cell
-    // join); without the per-round localCheckpoint the logical plan
-    // doubles per iteration — at iters=10 the analyzer alone walks
-    // ~2^10 copies of the corpus subtree (minutes of driver spin on a
-    // 50-row input). With the checkpoint the whole training is 10 flat
-    // rounds and finishes in seconds; the generous wall bound is a
-    // regression tripwire, not a perf target.
+    // Each Lloyd round reads the previous round's model; kept as a plan,
+    // the model would be referenced twice per round (assignment +
+    // stale-cell rule) and the logical plan would double per iteration —
+    // at iters=10 the analyzer alone would walk ~2^10 copies of the
+    // corpus subtree. With the model collected on the driver every round
+    // is one flat plan and the training finishes in seconds; the
+    // generous wall bound is a regression tripwire, not a perf target.
     val small = pts.filter(col("vec_id") < 60)
     val t0 = System.nanoTime()
     val cb10 = Pq.trainCodebooks(small, "vec_id", "embedding", dim, m, kCodes, iters = 10)

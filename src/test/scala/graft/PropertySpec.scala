@@ -168,7 +168,7 @@ class PropertySpec extends SparkSpec {
     val vecs = samples(vecGen.map(_.padTo(8, 1.0f)), 60)
     val df = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "v")
     val k = 5
-    val cents = SimilaritySearch.kmeansCentroids(df, "vec_id", "v", dim = 8, k = k, iters = 2)
+    val cents = SimilaritySearch.trainedCentroids(df, "vec_id", "v", dim = 8, kCentroids = k, iters = 2)
     val nCells = cents.count()
     assert(nCells <= k && nCells >= 1)
     assert(cents.select("cid").distinct().count() == nCells, "cell ids unique")

@@ -220,4 +220,27 @@ class VectorOpsSpec extends SparkSpec {
     assert(e.getMessage.contains("width mismatch") ||
       Option(e.getCause).exists(_.getMessage.contains("width mismatch")))
   }
+
+  test("toDoubleArray: the native cast equals the transform-lambda form") {
+    // the lambda form it replaced, kept here as the reference
+    def lambda(c: org.apache.spark.sql.Column) = transform(c, _.cast("double"))
+    val floats = Seq(
+      (1L, Seq(Option(1.5f), Option(-0.0f), Option(Float.MinPositiveValue), Option(Float.NaN))),
+      (2L, Seq(Option(3.0e38f), None, Option(-2.25f))),
+      (3L, null)).toDF("id", "v")
+    val doubles = Seq(
+      (1L, Seq(Option(1.5), Option(-0.0), Option(Double.MinPositiveValue))),
+      (2L, Seq(Option(1e300), None)),
+      (3L, null)).toDF("id", "v")
+    for (df <- Seq(floats, doubles)) {
+      val got = df.select(col("id"), VectorOps.toDoubleArray(col("v")).as("d"))
+      val ref = df.select(col("id"), lambda(col("v")).as("d"))
+      assert(got.orderBy("id").collect().map(_.toString).toSeq ==
+        ref.orderBy("id").collect().map(_.toString).toSeq)
+      assert(got.schema("d").dataType ==
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType, containsNull = true))
+    }
+    assert(floats.filter(col("id") === 3L)
+      .select(VectorOps.toDoubleArray(col("v"))).head().isNullAt(0), "NULL array stays NULL")
+  }
 }
