@@ -4,8 +4,9 @@
 Usage: python3 dev/diff_dumps.py <outA> <outB>
 
 A query is identical when its two parquet outputs give the same column
-names and the same DuckDB fetchall() rows, row order included (no
-rounding: this checks a refactor, not an engine pair). Also lists the
+names, the same DuckDB column types (so an int rank widened to bigint
+counts as a difference) and the same DuckDB fetchall() rows, row order
+included (no rounding: this checks a refactor, not an engine pair). Also lists the
 queries whose oracle_sql.json strings differ. Exits 1 if any output
 differs or is missing on one side.
 """
@@ -22,7 +23,7 @@ def outputs(out_dir):
 
 def fetch(con, out_dir, name):
     rel = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
-    return rel.columns, rel.fetchall()
+    return list(zip(rel.columns, map(str, rel.types))), rel.fetchall()
 
 
 def main(a, b):
@@ -37,7 +38,7 @@ def main(a, b):
         cols_a, rows_a = fetch(con, a, name)
         cols_b, rows_b = fetch(con, b, name)
         if cols_a != cols_b:
-            print(f"DIFF {name}: columns {cols_a} vs {cols_b}")
+            print(f"DIFF {name}: columns (name, type) {cols_a} vs {cols_b}")
             n_diff += 1
         elif rows_a != rows_b and repr(rows_a) != repr(rows_b):  # repr: NaN == NaN
             first = next((i for i, (x, y) in enumerate(zip(rows_a, rows_b))

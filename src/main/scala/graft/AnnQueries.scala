@@ -13,8 +13,8 @@ import graft.ops._
   */
 object AnnQueries {
 
-  import OracleSql.{clusterLabelCtesFrom, FixturesDir, h32Sql, kmeansCtes, nearestCellsSql,
-    sqlCos, sqlDot}
+  import OracleSql.{clusterLabelCtesFrom, exactKnnSql, FixturesDir, h32Sql, kmeansCtes,
+    nearestCellsSql, sqlCos, sqlDot, topKSql}
 
   /** Trained-IVF CTEs (16 cells, 2 Lloyd iterations, cosine
     * assignment — `ivfCentRows`' parameters) over the held-out split: a
@@ -44,8 +44,7 @@ object AnnQueries {
        |  FROM qp JOIN ap ON qp.cid = ap.cid),
        |ranked AS (
        |  SELECT query_id, point_id, score,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, point_id) AS BIGINT)
-       |      AS rank
+       |    ${topKSql("query_id", "score DESC, point_id")}
        |  FROM scored QUALIFY rank <= 3)
        |SELECT query_id, rank, point_id, round(score, 6) AS score
        |FROM ranked ORDER BY query_id, rank""".stripMargin
@@ -67,7 +66,7 @@ object AnnQueries {
        |  FROM $qCte, LATERAL (SELECT unnest(generate_series(1, 4)) AS j) g),
        |fr AS (
        |  SELECT query_id, m,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY a, m) AS rn
+       |    ${topKSql("query_id", "a, m", "rn")}
        |  FROM fl),
        |probes AS (
        |  SELECT query_id, embedding, bucket FROM $qCte
@@ -139,9 +138,7 @@ object AnnQueries {
           else ""}
        |  GROUP BY l.qid, cds.pid),
        |ranked AS (
-       |  SELECT query_id, point_id, score,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, point_id)
-       |      AS BIGINT) AS rank
+       |  SELECT query_id, point_id, score, ${topKSql("query_id", "score DESC, point_id")}
        |  FROM sc QUALIFY rank <= $adcK)
        |${if (!rerank)
             """SELECT query_id, rank, point_id, score
@@ -153,9 +150,7 @@ object AnnQueries {
               |    JOIN pts p ON p.pid = r.point_id
               |    JOIN qs q ON q.pid = r.query_id),
               |rr2 AS (
-              |  SELECT query_id, point_id, score,
-              |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, point_id)
-              |      AS BIGINT) AS rank
+              |  SELECT query_id, point_id, score, ${topKSql("query_id", "score DESC, point_id")}
               |  FROM rr QUALIFY rank <= $k)
               |SELECT query_id, rank, point_id, round(score, 6) AS score
               |FROM rr2 ORDER BY query_id, rank""".stripMargin}""".stripMargin
@@ -376,13 +371,11 @@ object AnnQueries {
        |sl AS (
        |  SELECT q.vec_id AS query_id, p.vec_id AS point_id,
        |    q.embedding AS qe, p.embedding AS pe,
-       |    row_number() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${sqlCos("q.pre", "p.pre")} DESC, p.vec_id) AS prank
+       |    ${topKSql("q.vec_id", s"${sqlCos("q.pre", "p.pre")} DESC, p.vec_id", "prank")}
        |  FROM q, p
        |  QUALIFY prank <= 20)
        |SELECT query_id,
-       |  CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY ${sqlCos("qe", "pe")} DESC, point_id) AS BIGINT) AS rank,
+       |  ${topKSql("query_id", s"${sqlCos("qe", "pe")} DESC, point_id")},
        |  point_id,
        |  round(${sqlCos("qe", "pe")}, 6) AS score
        |FROM sl
@@ -408,16 +401,13 @@ object AnnQueries {
        |      FROM b WHERE vec_id >= 10),
        |sl AS (
        |  SELECT pr.query_id, p.point_id, qs.qe, p.pe,
-       |    row_number() OVER (PARTITION BY pr.query_id
-       |      ORDER BY bit_count(xor(qs.qw0, p.w0)) + bit_count(xor(qs.qw1, p.w1)) ASC,
-       |        p.point_id ASC) AS hrank
+       |    ${topKSql("pr.query_id", s"${bqHammingSql("qs.qw", "p.w")} ASC, p.point_id ASC", "hrank")}
        |  FROM probes pr
        |  JOIN p ON pr.bucket = p.bucket
        |  JOIN qs ON pr.query_id = qs.query_id
        |  QUALIFY hrank <= 20)
        |SELECT query_id,
-       |  CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY ${sqlCos("qe", "pe")} DESC, point_id) AS BIGINT) AS rank,
+       |  ${topKSql("query_id", s"${sqlCos("qe", "pe")} DESC, point_id")},
        |  point_id,
        |  round(${sqlCos("qe", "pe")}, 6) AS score
        |FROM sl
@@ -436,19 +426,22 @@ object AnnQueries {
        |sl AS (
        |  SELECT q.vec_id AS query_id, p.vec_id AS point_id,
        |    q.embedding AS qe, p.embedding AS pe,
-       |    row_number() OVER (PARTITION BY q.vec_id
-       |      ORDER BY bit_count(xor(q.w0, p.w0)) + bit_count(xor(q.w1, p.w1)) ASC,
-       |        p.vec_id ASC) AS hrank
+       |    ${topKSql("q.vec_id", s"${bqHammingSql("q.w", "p.w")} ASC, p.vec_id ASC", "hrank")}
        |  FROM q, p
        |  QUALIFY hrank <= 20)
        |SELECT query_id,
-       |  CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY ${sqlCos("qe", "pe")} DESC, point_id) AS BIGINT) AS rank,
+       |  ${topKSql("query_id", s"${sqlCos("qe", "pe")} DESC, point_id")},
        |  point_id,
        |  round(${sqlCos("qe", "pe")}, 6) AS score
        |FROM sl
        |QUALIFY rank <= 5
        |ORDER BY query_id, rank""".stripMargin
+
+  /** Hamming distance between two 2-word BQ signatures held as columns
+    * `<q>0`, `<q>1` and `<p>0`, `<p>1` (see [[bqWordSql]]).
+    */
+  private def bqHammingSql(q: String, p: String): String =
+    s"bit_count(xor(${q}0, ${p}0)) + bit_count(xor(${q}1, ${p}1))"
 
   private def bucketSql(col: String, bits: Int = 4): String =
     (0 until bits)
@@ -460,13 +453,8 @@ object AnnQueries {
     */
   private def recallAllSql(prefix: String): String =
       s"""WITH ${prefix}exact AS (
-         |  SELECT query_id, point_id FROM (
-         |    SELECT q.vec_id AS query_id, p.vec_id AS point_id,
-         |      CAST(row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY ${sqlCos("q.embedding", "p.embedding")} DESC, p.vec_id) AS BIGINT) AS rank
-         |    FROM embeddings q, embeddings p
-         |    WHERE q.vec_id < 10 AND p.vec_id >= 10
-         |    QUALIFY rank <= 3)),
+         |  SELECT query_id, point_id
+         |  FROM (${exactKnnSql("embeddings", "q.vec_id < 10", "p.vec_id >= 10", 3)})),
          |eb AS (
          |  SELECT vec_id, embedding, ${bucketSql("embedding")} AS bucket FROM embeddings),
          |qm AS (SELECT vec_id AS query_id, embedding, bucket FROM eb WHERE vec_id < 10),
@@ -474,16 +462,14 @@ object AnnQueries {
          |ivf AS (
          |  SELECT query_id, point_id FROM (
          |    SELECT q.query_id, p.point_id,
-         |      row_number() OVER (PARTITION BY q.query_id
-         |        ORDER BY ${sqlCos("q.embedding", "p.embedding")} DESC, p.point_id) AS rank
+         |      ${topKSql("q.query_id", s"${sqlCos("q.embedding", "p.embedding")} DESC, p.point_id")}
          |    FROM qm q JOIN pm p ON q.bucket = p.bucket
          |    QUALIFY rank <= 3)),
          |${mpProbeCtes("qm")},
          |mp AS (
          |  SELECT query_id, point_id FROM (
          |    SELECT p.query_id, pm.point_id,
-         |      row_number() OVER (PARTITION BY p.query_id
-         |        ORDER BY ${sqlCos("p.embedding", "pm.embedding")} DESC, pm.point_id) AS rank
+         |      ${topKSql("p.query_id", s"${sqlCos("p.embedding", "pm.embedding")} DESC, pm.point_id")}
          |    FROM probes p JOIN pm ON p.bucket = pm.bucket
          |    QUALIFY rank <= 3)),
          |trained AS (SELECT query_id, point_id FROM ($ivfTrainedSelect)),
@@ -498,42 +484,34 @@ object AnnQueries {
          |bq AS (
          |  SELECT query_id, point_id FROM (
          |    SELECT query_id, point_id,
-         |      row_number() OVER (PARTITION BY query_id
-         |        ORDER BY ${sqlCos("qe", "pe")} DESC, point_id) AS rank
+         |      ${topKSql("query_id", s"${sqlCos("qe", "pe")} DESC, point_id")}
          |    FROM (
          |      SELECT q.vec_id AS query_id, p.vec_id AS point_id,
          |        q.embedding AS qe, p.embedding AS pe,
-         |        row_number() OVER (PARTITION BY q.vec_id
-         |          ORDER BY bit_count(xor(q.w0, p.w0)) + bit_count(xor(q.w1, p.w1)) ASC,
-         |            p.vec_id ASC) AS hrank
+         |        ${topKSql("q.vec_id", s"${bqHammingSql("q.w", "p.w")} ASC, p.vec_id ASC", "hrank")}
          |      FROM bqs q, bqs p WHERE q.vec_id < 10 AND p.vec_id >= 10
          |      QUALIFY hrank <= 20)
          |    QUALIFY rank <= 3)),
          |pfx AS (
          |  SELECT query_id, point_id FROM (
          |    SELECT query_id, point_id,
-         |      row_number() OVER (PARTITION BY query_id
-         |        ORDER BY ${sqlCos("qe", "pe")} DESC, point_id) AS rank
+         |      ${topKSql("query_id", s"${sqlCos("qe", "pe")} DESC, point_id")}
          |    FROM (
          |      SELECT q.vec_id AS query_id, p.vec_id AS point_id,
          |        q.embedding AS qe, p.embedding AS pe,
-         |        row_number() OVER (PARTITION BY q.vec_id
-         |          ORDER BY ${sqlCos("q.embedding[1:16]", "p.embedding[1:16]")} DESC,
-         |            p.vec_id ASC) AS prank
+         |        ${topKSql("q.vec_id",
+                    s"${sqlCos("q.embedding[1:16]", "p.embedding[1:16]")} DESC, p.vec_id ASC", "prank")}
          |      FROM embeddings q, embeddings p WHERE q.vec_id < 10 AND p.vec_id >= 10
          |      QUALIFY prank <= 20)
          |    QUALIFY rank <= 3)),
          |ibq AS (
          |  SELECT query_id, point_id FROM (
          |    SELECT query_id, point_id,
-         |      row_number() OVER (PARTITION BY query_id
-         |        ORDER BY ${sqlCos("qe", "pe")} DESC, point_id) AS rank
+         |      ${topKSql("query_id", s"${sqlCos("qe", "pe")} DESC, point_id")}
          |    FROM (
          |      SELECT pr.query_id, pm.point_id,
          |        qb.embedding AS qe, pb.embedding AS pe,
-         |        row_number() OVER (PARTITION BY pr.query_id
-         |          ORDER BY bit_count(xor(qb.w0, pb.w0)) + bit_count(xor(qb.w1, pb.w1)) ASC,
-         |            pm.point_id ASC) AS hrank
+         |        ${topKSql("pr.query_id", s"${bqHammingSql("qb.w", "pb.w")} ASC, pm.point_id ASC", "hrank")}
          |      FROM probes pr
          |      JOIN pm ON pr.bucket = pm.bucket
          |      JOIN bqs qb ON qb.vec_id = pr.query_id
@@ -580,8 +558,7 @@ object AnnQueries {
          |s AS (
          |  SELECT q.query_id, p.point_id,
          |    ${sqlCos("q.embedding", "p.embedding")} AS score,
-         |    CAST(row_number() OVER (PARTITION BY q.query_id
-         |      ORDER BY ${sqlCos("q.embedding", "p.embedding")} DESC, p.point_id) AS BIGINT) AS rank
+         |    ${topKSql("q.query_id", s"${sqlCos("q.embedding", "p.embedding")} DESC, p.point_id")}
          |  FROM q JOIN p ON q.bucket = p.bucket
          |  QUALIFY rank <= 3)
          |SELECT query_id, rank, point_id, round(score, 6) AS score
@@ -612,8 +589,7 @@ object AnnQueries {
          |s AS (
          |  SELECT q.query_id, b.vec_id AS point_id,
          |    ${sqlCos("q.embedding", "b.embedding")} AS score,
-         |    CAST(row_number() OVER (PARTITION BY q.query_id
-         |      ORDER BY ${sqlCos("q.embedding", "b.embedding")} DESC, b.vec_id) AS BIGINT) AS rank
+         |    ${topKSql("q.query_id", s"${sqlCos("q.embedding", "b.embedding")} DESC, b.vec_id")}
          |  FROM q JOIN b ON q.bucket = b.bucket
          |  QUALIFY rank <= 3)
          |SELECT query_id, rank, point_id, round(score, 6) AS score
@@ -645,8 +621,7 @@ object AnnQueries {
          |s AS (
          |  SELECT p.query_id, b.vec_id AS point_id,
          |    ${sqlCos("p.embedding", "b.embedding")} AS score,
-         |    CAST(row_number() OVER (PARTITION BY p.query_id
-         |      ORDER BY ${sqlCos("p.embedding", "b.embedding")} DESC, b.vec_id) AS BIGINT) AS rank
+         |    ${topKSql("p.query_id", s"${sqlCos("p.embedding", "b.embedding")} DESC, b.vec_id")}
          |  FROM probes p JOIN b ON p.bucket = b.bucket
          |  QUALIFY rank <= 3)
          |SELECT query_id, rank, point_id, round(score, 6) AS score
@@ -692,13 +667,8 @@ object AnnQueries {
     // index-quality eval: recall@3 of the trained IVF (nprobe=4) vs the
     // exact kNN ground truth — the nprobe/kCentroids tuning loop
     Query("sim_recall_eval", s"""WITH exact AS (
-         |  SELECT query_id, point_id FROM (
-         |    SELECT q.vec_id AS query_id, p.vec_id AS point_id,
-         |      CAST(row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY ${sqlCos("q.embedding", "p.embedding")} DESC, p.vec_id) AS BIGINT) AS rank
-         |    FROM embeddings q, embeddings p
-         |    WHERE q.vec_id < 10 AND p.vec_id >= 10
-         |    QUALIFY rank <= 3)),
+         |  SELECT query_id, point_id
+         |  FROM (${exactKnnSql("embeddings", "q.vec_id < 10", "p.vec_id >= 10", 3)})),
          |approx AS (SELECT query_id, point_id FROM ($ivfTrainedSelect)),
          |hits AS (
          |  SELECT e.query_id, count(*) AS n_hits
@@ -836,8 +806,7 @@ object AnnQueries {
          |ranked AS (
          |  SELECT cid, point_id, score,
          |    CAST(count(*) OVER (PARTITION BY cid) AS BIGINT) AS cluster_n,
-         |    CAST(row_number() OVER (PARTITION BY cid ORDER BY score, point_id) AS BIGINT)
-         |      AS rank
+         |    ${topKSql("cid", "score, point_id")}
          |  FROM scored)
          |SELECT cid, point_id, cluster_n, rank, round(score, 6) AS score
          |FROM ranked
@@ -863,7 +832,7 @@ object AnnQueries {
          |rep AS (
          |  SELECT cid, point_id, score FROM (
          |    SELECT cid, point_id, score,
-         |      row_number() OVER (PARTITION BY cid ORDER BY score DESC, point_id) AS rn
+         |      ${topKSql("cid", "score DESC, point_id", "rn")}
          |    FROM scored) WHERE rn = 1),
          |tot AS (SELECT count(*)::DOUBLE AS n FROM scored)
          |SELECT a.cid, a.cluster_n,
@@ -887,8 +856,7 @@ object AnnQueries {
          |r AS (
          |  SELECT cid, pid AS point_id,
          |    CAST(count(*) OVER (PARTITION BY cid) AS BIGINT) AS cluster_n,
-         |    CAST(row_number() OVER (PARTITION BY cid
-         |      ORDER BY ${h32Sql("pid::VARCHAR")}, pid) AS BIGINT) AS rank
+         |    ${topKSql("cid", s"${h32Sql("pid::VARCHAR")}, pid")}
          |  FROM ap)
          |SELECT cid, point_id, cluster_n, rank FROM r
          |WHERE rank <= 20 ORDER BY cid, rank""".stripMargin)((s, d) =>

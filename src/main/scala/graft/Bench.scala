@@ -1,6 +1,17 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+
+  /** Warm-up: JIT/codegen compilation + parquet footer/page cache, so
+    * per-query timings measure the queries, not first-query JVM warmup.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    Seq("q1_pricing", "v_knn_join", "q_events_hourly").foreach { n =>
+      SparkEntry.queries.get(n).foreach { fn =>
+        try fn(spark, sfDir).count() catch { case _: Throwable => () }
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // ONE definition of the summary path for both the startup delete and
@@ -23,13 +34,7 @@ object Bench {
     val selected =
       if (args.nonEmpty) SparkEntry.queries.view.filterKeys(args.toSet).toMap
       else SparkEntry.queries
-    // Warm-up: JIT/codegen compilation + parquet footer/page cache, so
-    // per-query timings measure the queries, not first-query JVM warmup.
-    Seq("q1_pricing", "v_knn_join", "q_events_hourly").foreach { n =>
-      SparkEntry.queries.get(n).foreach { fn =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      }
-    }
+    warmUp(spark, sfDir)
     // Untimed run of every corpus-keyed one-time build (Memo.prewarm),
     // so a query whose refinement the budget never reaches does not
     // record training or index writes in its probe rep. Guarded: if it

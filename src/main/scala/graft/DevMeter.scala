@@ -55,11 +55,7 @@ object DevMeter {
       else names0.toSeq
     // Bench-style warm-up + memo prewarm so reps measure serving.
     if (reps > 0) {
-      Seq("q1_pricing", "v_knn_join", "q_events_hourly").foreach { n =>
-        SparkEntry.queries.get(n).foreach { fn =>
-          try fn(spark, sfDir).count() catch { case _: Throwable => () }
-        }
-      }
+      Bench.warmUp(spark, sfDir)
       try Memo.prewarm(spark, sfDir)
       catch { case e: Throwable => System.err.println(s"prewarm failed: $e") }
     }

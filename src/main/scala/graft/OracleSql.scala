@@ -116,6 +116,29 @@ object OracleSql {
   def sqlCos(a: String, b: String): String =
     s"(${sqlDot(a, b)} / (${sqlNorm(a)} * ${sqlNorm(b)}))"
 
+  /** The ONE oracle ranking rule, mirror of [[graft.ops.Knn.rankTopK]]: a
+    * SELECT-list item numbering the rows of each `partition` by `orderBy`
+    * (every key's direction and the unique tie-break spelled out), cast
+    * to BIGINT as `rankAlias`. The caller keeps `rankAlias <= k`.
+    */
+  def topKSql(partition: String, orderBy: String, rankAlias: String = "rank"): String =
+    s"CAST(row_number() OVER (PARTITION BY $partition ORDER BY $orderBy) AS BIGINT) AS $rankAlias"
+
+  /** Exact cosine top-k over `src(vec_id, embedding)` against itself,
+    * mirror of [[graft.ops.Knn.knnJoin]]: query rows `q` kept by
+    * `qFilter`, point rows `p` by `pFilter`, ranked by score DESC with
+    * ties to the lower point id. A SELECT of `(query_id, rank, point_id,
+    * score)`, score rounded to 6 dp, with no ORDER BY.
+    */
+  def exactKnnSql(src: String, qFilter: String, pFilter: String, k: Int): String = {
+    val cos = sqlCos("q.embedding", "p.embedding")
+    s"""SELECT q.vec_id AS query_id, ${topKSql("q.vec_id", s"$cos DESC, p.vec_id")},
+       |  p.vec_id AS point_id, round($cos, 6) AS score
+       |FROM $src q, $src p
+       |WHERE $qFilter AND $pFilter
+       |QUALIFY rank <= $k""".stripMargin
+  }
+
   /** The ONE nearest-centroid rule in SQL (mirrors
     * `SimilaritySearch.nearestCells`): each `src(pid, v)` row keeps its
     * `n` best cells of `cents(cid, c)` by `score(v, c)`, ties to the
@@ -465,8 +488,6 @@ object OracleSql {
        |         FROM qw25 JOIN tf25 USING (term)
        |           JOIN dl25 ON tf25.doc_id = dl25.doc_id, st25
        |         GROUP BY 1, 2),
-       |bmr AS (SELECT query_id, doc_id, score,
-       |          CAST(row_number() OVER (PARTITION BY query_id
-       |            ORDER BY score DESC, doc_id) AS BIGINT) AS rank
+       |bmr AS (SELECT query_id, doc_id, score, ${topKSql("query_id", "score DESC, doc_id")}
        |        FROM sc25 QUALIFY rank <= $k)""".stripMargin
 }

@@ -11,7 +11,7 @@ import graft.ops._
   */
 object RagQueries {
 
-  import OracleSql.{bm25Ctes, chunkCte, embedCtes, sqlCos, sqlDot}
+  import OracleSql.{bm25Ctes, chunkCte, embedCtes, exactKnnSql, sqlCos, sqlDot, topKSql}
 
   // Shared oracle CTE for the RAG hit set (mirrors Rag.hits exactly).
   private val ragHitsCte: String =
@@ -21,9 +21,7 @@ object RagQueries {
        |q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id < 5),
        |hits AS (
        |  SELECT q.query_id, p.point_id, trim(coalesce(p.text, '')) AS t,
-       |    CAST(row_number() OVER (
-       |      PARTITION BY q.query_id
-       |      ORDER BY ${sqlCos("q.embedding", "p.embedding")} DESC, p.point_id) AS BIGINT) AS rank
+       |    ${topKSql("q.query_id", s"${sqlCos("q.embedding", "p.embedding")} DESC, p.point_id")}
        |  FROM q, pts p
        |  QUALIFY rank <= 5)""".stripMargin
 
@@ -47,8 +45,7 @@ object RagQueries {
          |  SELECT query_id, point_id, v, rel FROM (
          |    SELECT q.vec_id AS query_id, p.vec_id AS point_id, p.embedding AS v,
          |      ${sqlCos("q.embedding", "p.embedding")} AS rel,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY ${sqlCos("q.embedding", "p.embedding")} DESC, p.vec_id) AS rn
+         |      ${topKSql("q.vec_id", s"${sqlCos("q.embedding", "p.embedding")} DESC, p.vec_id", "rn")}
          |    FROM embeddings q, embeddings p
          |    WHERE q.vec_id < 5 AND p.vec_id >= 10) WHERE rn <= 8)""".stripMargin)
 
@@ -79,8 +76,7 @@ object RagQueries {
          |sel$t AS (
          |  SELECT query_id, point_id, obj FROM (
          |    SELECT query_id, point_id, ${objExpr("rel", "maxsim")} AS obj,
-         |      row_number() OVER (PARTITION BY query_id
-         |        ORDER BY ${objExpr("rel", "maxsim")} DESC, point_id) AS r
+         |      ${topKSql("query_id", s"${objExpr("rel", "maxsim")} DESC, point_id", "r")}
          |    FROM p$t) WHERE r = 1)""".stripMargin
     }.mkString(",\n")
     val out = (1 to selectK).map(t =>
@@ -95,8 +91,7 @@ object RagQueries {
        |sel1 AS (
        |  SELECT query_id, point_id, obj FROM (
        |    SELECT query_id, point_id, round(rel, 6) AS obj,
-       |      row_number() OVER (PARTITION BY query_id
-       |        ORDER BY round(rel, 6) DESC, point_id) AS r
+       |      ${topKSql("query_id", "round(rel, 6) DESC, point_id", "r")}
        |    FROM hp) WHERE r = 1),
        |$steps
        |SELECT * FROM (
@@ -113,12 +108,8 @@ object RagQueries {
   private def hybridCtes(k: Int): String =
     s"""${bm25Ctes(10)},
        |vr AS (
-       |  SELECT q.vec_id AS query_id, p.vec_id AS doc_id,
-       |    CAST(row_number() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${sqlCos("q.embedding", "p.embedding")} DESC, p.vec_id) AS BIGINT) AS rank
-       |  FROM embeddings q, embeddings p
-       |  WHERE q.vec_id < 8
-       |  QUALIFY rank <= 10),
+       |  SELECT query_id, point_id AS doc_id, rank
+       |  FROM (${exactKnnSql("embeddings", "q.vec_id < 8", "true", 10)})),
        |fus AS (
        |  SELECT coalesce(a.query_id, b.query_id) AS query_id,
        |    coalesce(a.doc_id, b.doc_id) AS doc_id,
@@ -127,9 +118,7 @@ object RagQueries {
        |  FROM bmr a FULL OUTER JOIN vr b
        |    ON a.query_id = b.query_id AND a.doc_id = b.doc_id),
        |hyb AS (
-       |  SELECT query_id, doc_id, rrf,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY rrf DESC, doc_id) AS BIGINT) AS rank
+       |  SELECT query_id, doc_id, rrf, ${topKSql("query_id", "rrf DESC, doc_id")}
        |  FROM fus QUALIFY rank <= $k)""".stripMargin
 
   /** The rag_hybrid_mmr oracle statement, shared verbatim with the
@@ -170,8 +159,7 @@ object RagQueries {
          |cnt AS (
          |  SELECT query_id, tok, count(*) AS c FROM toks WHERE tok <> '' GROUP BY 1, 2),
          |top AS (
-         |  SELECT query_id, tok, c,
-         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY c DESC, tok) AS BIGINT) AS r
+         |  SELECT query_id, tok, c, ${topKSql("query_id", "c DESC, tok", "r")}
          |  FROM cnt QUALIFY r <= 5)
          |SELECT query_id, string_agg(tok, ',' ORDER BY r) AS predicted,
          |  CAST(sum(c) AS BIGINT) AS support
@@ -192,8 +180,7 @@ object RagQueries {
          |${embedCtes("qe", "(SELECT doc_id AS id, text AS __txt FROM documents WHERE doc_id < 5)", 64)},
          |hits AS (
          |  SELECT q.id AS query_id, c.id AS chunk_id,
-         |    CAST(row_number() OVER (PARTITION BY q.id
-         |      ORDER BY ${sqlDot("q.v", "c.v")} DESC, c.id) AS BIGINT) AS rank
+         |    ${topKSql("q.id", s"${sqlDot("q.v", "c.v")} DESC, c.id")}
          |  FROM qe_emb q, ce_emb c
          |  QUALIFY rank <= 5),
          |hx AS (
@@ -220,8 +207,7 @@ object RagQueries {
          |ptok AS (SELECT query_id, unnest(string_split(trim(chunk_text), ' ')) AS tok FROM hx),
          |pcnt AS (SELECT query_id, tok, count(*) AS c FROM ptok WHERE tok <> '' GROUP BY 1, 2),
          |ptop AS (
-         |  SELECT query_id, tok,
-         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY c DESC, tok) AS BIGINT) AS r
+         |  SELECT query_id, tok, ${topKSql("query_id", "c DESC, tok", "r")}
          |  FROM pcnt QUALIFY r <= 5),
          |pred AS (
          |  SELECT query_id, string_agg(tok, ' ' ORDER BY r) AS predicted FROM ptop GROUP BY query_id),
@@ -296,9 +282,7 @@ object RagQueries {
          |hits AS (
          |  SELECT query_id, rank, q_label, p_label FROM (
          |    SELECT q.query_id, q.q_label, p.p_label,
-         |      CAST(row_number() OVER (PARTITION BY q.query_id
-         |        ORDER BY ${sqlCos("q.embedding", "p.embedding")} DESC, p.point_id) AS BIGINT)
-         |        AS rank
+         |      ${topKSql("q.query_id", s"${sqlCos("q.embedding", "p.embedding")} DESC, p.point_id")}
          |    FROM q, p
          |    QUALIFY rank <= 5)),
          |rel AS (
@@ -352,9 +336,7 @@ object RagQueries {
          |hits AS (
          |  SELECT query_id, rank, q_label, p_label FROM (
          |    SELECT q.query_id, q.q_label, p.p_label,
-         |      CAST(row_number() OVER (PARTITION BY q.query_id
-         |        ORDER BY ${sqlCos("q.embedding", "p.embedding")} DESC, p.point_id) AS BIGINT)
-         |        AS rank
+         |      ${topKSql("q.query_id", s"${sqlCos("q.embedding", "p.embedding")} DESC, p.point_id")}
          |    FROM q, p
          |    QUALIFY rank <= 5)),
          |rel AS (

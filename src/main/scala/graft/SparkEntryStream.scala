@@ -171,15 +171,8 @@ object SparkEntryStream {
     // continuous serving: streamed query vectors answered per
     // micro-batch with the batch kNN against the static corpus; hits
     // over two batches ≡ one batch kNN join
-    Query("stream_search", s"""SELECT q.vec_id AS query_id,
-         |  CAST(row_number() OVER (PARTITION BY q.vec_id
-         |    ORDER BY ${OracleSql.sqlCos("q.embedding", "p.embedding")} DESC, p.vec_id)
-         |    AS BIGINT) AS rank,
-         |  p.vec_id AS point_id,
-         |  round(${OracleSql.sqlCos("q.embedding", "p.embedding")}, 6) AS score
-         |FROM embeddings q, embeddings p
-         |WHERE q.vec_id < 10 AND p.vec_id >= 10
-         |QUALIFY rank <= 3
+    Query("stream_search",
+      s"""${OracleSql.exactKnnSql("embeddings", "q.vec_id < 10", "p.vec_id >= 10", 3)}
          |ORDER BY query_id, rank""".stripMargin)((s, d) => runSearchOnce(s, d)),
     // CDC into the partitioned lake store: micro-batched updates merged
     // by key via upsertPartitioned; final table ≡ the one-shot batch

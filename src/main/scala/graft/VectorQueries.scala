@@ -11,7 +11,10 @@ import graft.ops._
   */
 object VectorQueries {
 
-  import OracleSql.{h32Sql, sqlCos, sqlNorm}
+  import OracleSql.{exactKnnSql, h32Sql, sqlCos, sqlNorm, topKSql}
+
+  /** Cosine of query row `q` and point row `p` of `embeddings`. */
+  private val qpCos = sqlCos("q.embedding", "p.embedding")
 
   val entries: Seq[Query] = Seq(
     // ---- vector core (SURVEY §2.3, V1–V6) ----
@@ -48,14 +51,7 @@ object VectorQueries {
           col("__qvec"), 5)
         .select(col("vec_id"), round(col("score"), 6).as("score"))
     }),
-    Query("v_knn_join", s"""SELECT q.vec_id AS query_id,
-         |  CAST(row_number() OVER (PARTITION BY q.vec_id
-         |    ORDER BY ${sqlCos("q.embedding", "p.embedding")} DESC, p.vec_id) AS BIGINT) AS rank,
-         |  p.vec_id AS point_id,
-         |  round(${sqlCos("q.embedding", "p.embedding")}, 6) AS score
-         |FROM embeddings q, embeddings p
-         |WHERE q.vec_id < 10 AND p.vec_id >= 10
-         |QUALIFY rank <= 5
+    Query("v_knn_join", s"""${exactKnnSql("embeddings", "q.vec_id < 10", "p.vec_id >= 10", 5)}
          |ORDER BY query_id, rank""".stripMargin)((s, d) => {
       val emb = Tables.embeddings(s, d)
       val queries = emb.filter(col("vec_id") < 10)
@@ -82,16 +78,9 @@ object VectorQueries {
          |      list_transform(e, x -> (x * 0.5)::FLOAT)),
          |      list_transform(e, x -> (-x)::FLOAT)),
          |      list_transform(e, x -> (x * 0.25)::FLOAT)),
-         |      list_transform(list_reverse(e), x -> (x * 0.5)::FLOAT)) AS v
+         |      list_transform(list_reverse(e), x -> (x * 0.5)::FLOAT)) AS embedding
          |  FROM (SELECT vec_id, embedding AS e FROM embeddings))
-         |SELECT q.vec_id AS query_id,
-         |  CAST(row_number() OVER (PARTITION BY q.vec_id
-         |    ORDER BY ${sqlCos("q.v", "p.v")} DESC, p.vec_id) AS BIGINT) AS rank,
-         |  p.vec_id AS point_id,
-         |  round(${sqlCos("q.v", "p.v")}, 6) AS score
-         |FROM w q, w p
-         |WHERE q.vec_id < 5 AND p.vec_id >= 10
-         |QUALIFY rank <= 3
+         |${exactKnnSql("w", "q.vec_id < 5", "p.vec_id >= 10", 3)}
          |ORDER BY query_id, rank""".stripMargin)((s, d) => {
       val emb = Tables.embeddings(s, d)
       def widen(df: DataFrame): DataFrame = df.withColumn("v384",
@@ -274,14 +263,8 @@ object VectorQueries {
     // Qdrant filtered search: payload predicate (label = 2) restricts
     // eligibility BEFORE scoring; predicate reaches the parquet scan
     // (PlanSpec-pinned PushedFilters)
-    Query("v_knn_filtered", s"""SELECT q.vec_id AS query_id,
-         |  CAST(row_number() OVER (PARTITION BY q.vec_id
-         |    ORDER BY ${sqlCos("q.embedding", "p.embedding")} DESC, p.vec_id) AS BIGINT) AS rank,
-         |  p.vec_id AS point_id,
-         |  round(${sqlCos("q.embedding", "p.embedding")}, 6) AS score
-         |FROM embeddings q, embeddings p
-         |WHERE q.vec_id < 5 AND p.vec_id >= 10 AND p.label = 2
-         |QUALIFY rank <= 3
+    Query("v_knn_filtered",
+      s"""${exactKnnSql("embeddings", "q.vec_id < 5", "p.vec_id >= 10 AND p.label = 2", 3)}
          |ORDER BY query_id, rank""".stripMargin)((s, d) => {
       val emb = Tables.embeddings(s, d)
       Knn.filteredKnnJoin(
@@ -341,16 +324,12 @@ object VectorQueries {
     Query("v_search_groups", s"""WITH h AS (
          |  SELECT query_id, grp, point_id, score, hit_rank FROM (
          |    SELECT q.vec_id AS query_id, p.label AS grp, p.vec_id AS point_id,
-         |      ${sqlCos("q.embedding", "p.embedding")} AS score,
-         |      CAST(row_number() OVER (PARTITION BY q.vec_id, p.label
-         |        ORDER BY ${sqlCos("q.embedding", "p.embedding")} DESC, p.vec_id)
-         |        AS BIGINT) AS hit_rank
+         |      $qpCos AS score,
+         |      ${topKSql("q.vec_id, p.label", s"$qpCos DESC, p.vec_id", "hit_rank")}
          |    FROM embeddings q, embeddings p
          |    WHERE q.vec_id < 5 AND p.vec_id >= 10) WHERE hit_rank <= 2),
          |g AS (
-         |  SELECT query_id, grp,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY score DESC, grp) AS BIGINT) AS group_rank
+         |  SELECT query_id, grp, ${topKSql("query_id", "score DESC, grp", "group_rank")}
          |  FROM h WHERE hit_rank = 1
          |  QUALIFY group_rank <= 3)
          |SELECT h.query_id, g.group_rank, h.grp, h.hit_rank, h.point_id,
@@ -372,10 +351,9 @@ object VectorQueries {
     // DIFFERENT label — contrastive-training pairs from the same
     // broadcast kNN shape
     Query("v_hard_negatives", s"""SELECT q.vec_id AS query_id,
-         |  CAST(row_number() OVER (PARTITION BY q.vec_id
-         |    ORDER BY ${sqlCos("q.embedding", "p.embedding")} DESC, p.vec_id) AS BIGINT) AS rank,
+         |  ${topKSql("q.vec_id", s"$qpCos DESC, p.vec_id")},
          |  p.vec_id AS point_id,
-         |  round(${sqlCos("q.embedding", "p.embedding")}, 6) AS score,
+         |  round($qpCos, 6) AS score,
          |  p.label AS neg_label
          |FROM embeddings q, embeddings p
          |WHERE q.vec_id < 5 AND p.vec_id >= 10 AND p.label <> q.label

@@ -12,10 +12,8 @@ import org.apache.spark.sql.functions._
   *  - V5 batch top-k: the reference's sequential per-row loop
   *    (`Qdrant/llm.py:93` calling `:20`) is semantically a k-NN JOIN —
   *    here one declarative plan: broadcast the (small) query side, score,
-  *    and take `row_number() <= k` per query. Spark ≥3.5 rewrites the
-  *    rank-limit window to `WindowGroupLimit`, i.e. a map-side partial
-  *    top-k before the shuffle — per-query state is k rows, never the
-  *    full candidate set.
+  *    and keep each query's top k by [[rankTopK]], the one per-query
+  *    ranking rule every batch search shares.
   *
   * Determinism (V6): Qdrant's tie order is undefined; we strengthen to a
   * total order `(score DESC, point_id ASC)` so results are
@@ -28,6 +26,32 @@ import org.apache.spark.sql.functions._
   * cross join.
   */
 object Knn {
+
+  /** The ONE per-group top-k rule: within each `partitionBy` group, number
+    * the rows by `orderBy` (each key carries its own direction — score
+    * DESC, Hamming ASC — and the last key is the unique tie-break, so the
+    * order is total), cast that rank to bigint as `rankCol`, and keep
+    * rank ≤ `k`.
+    *
+    * `row_number() <= k` over a partitioned window is what Spark ≥3.5
+    * rewrites to `WindowGroupLimit`: a map-side partial top-k before the
+    * shuffle, so per-query state is k rows, never the full candidate set
+    * (PlanSpec pins the rewrite per routed operator). The rewrite needs
+    * a literal `k` (`lit(n)`); a per-row bound such as
+    * [[SimilaritySearch.prototypicalityPrune]]'s per-cell quota filters
+    * after a full per-group sort.
+    *
+    * Not routed here: single-query top-k ([[topK]], [[recommend]]) plans
+    * as `orderBy.limit` → `TakeOrderedAndProject` with no window;
+    * [[SimilaritySearch.nearestCells]] ranks cells inside its native
+    * kernel; and `row_number` windows that number rows rather than cut
+    * them (shard positions, batch indices, span cuts) are not top-k.
+    */
+  def rankTopK(df: DataFrame, partitionBy: Seq[Column], orderBy: Seq[Column], k: Column,
+      rankCol: String): DataFrame =
+    df.withColumn(rankCol,
+        row_number().over(Window.partitionBy(partitionBy: _*).orderBy(orderBy: _*)).cast("long"))
+      .filter(col(rankCol) <= k)
 
   /** V4: score every point against one literal query vector, keep top-k. */
   def topK(points: DataFrame, vecCol: String, idCol: String, queryVec: Column, k: Int): DataFrame =
@@ -58,13 +82,8 @@ object Knn {
       case "dot" => VectorOps.dot(col("__qvec"), col(pointVecCol))
       case other => throw new IllegalArgumentException(s"unknown metric: $other")
     }
-    val scored = points
-      .crossJoin(q)
-      .withColumn("score", scoreExpr)
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("score"), col(pointIdCol).asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankTopK(points.crossJoin(q).withColumn("score", scoreExpr),
+        Seq(col("query_id")), Seq(desc("score"), col(pointIdCol).asc), lit(k), "rank")
       .drop("__qvec")
   }
 
@@ -157,9 +176,8 @@ object Knn {
     * the best `hitsPerGroup` hits of each payload group, with groups
     * ranked by their best hit and only the top `groupsK` kept —
     * "the most relevant document per source/author/domain" without a
-    * second query. Two stacked rank-limit windows, both rewritten to
-    * WindowGroupLimit: per-(query, group) state is `hitsPerGroup`
-    * rows, per-query state `groupsK` groups.
+    * second query. Two stacked [[rankTopK]] cuts: per-(query, group)
+    * state is `hitsPerGroup` rows, per-query state `groupsK` groups.
     *
     * Output: `(query_id, group_rank, group, hit_rank, point_id,
     * score)`.
@@ -178,22 +196,19 @@ object Knn {
       s"need groupsK ($groupsK) >= 1 and hitsPerGroup ($hitsPerGroup) >= 1")
     val q = broadcast(
       queries.select(col(queryIdCol).as("query_id"), col(queryVecCol).as("__qvec")))
-    val wInGroup = Window.partitionBy(col("query_id"), col("group"))
-      .orderBy(desc("score"), col("point_id").asc)
-    val hits = points
-      .select(col(pointIdCol).as("point_id"), col(pointVecCol).as("__pvec"),
-        col(groupCol).as("group"))
-      .crossJoin(q)
-      .withColumn("score", VectorOps.cosine(col("__qvec"), col("__pvec")))
-      .withColumn("hit_rank", row_number().over(wInGroup).cast("long"))
-      .filter(col("hit_rank") <= hitsPerGroup)
+    val hits = rankTopK(
+      points
+        .select(col(pointIdCol).as("point_id"), col(pointVecCol).as("__pvec"),
+          col(groupCol).as("group"))
+        .crossJoin(q)
+        .withColumn("score", VectorOps.cosine(col("__qvec"), col("__pvec"))),
+      Seq(col("query_id"), col("group")), Seq(desc("score"), col("point_id").asc),
+      lit(hitsPerGroup), "hit_rank")
     // groups ranked by their BEST hit; ties by group value
-    val wGroups = Window.partitionBy(col("query_id"))
-      .orderBy(desc("__best"), col("group").asc)
-    val best = hits.filter(col("hit_rank") === 1)
-      .select(col("query_id"), col("group"), col("score").as("__best"))
-      .withColumn("group_rank", row_number().over(wGroups).cast("long"))
-      .filter(col("group_rank") <= groupsK)
+    val best = rankTopK(
+        hits.filter(col("hit_rank") === 1)
+          .select(col("query_id"), col("group"), col("score").as("__best")),
+        Seq(col("query_id")), Seq(desc("__best"), col("group").asc), lit(groupsK), "group_rank")
       .select(col("query_id"), col("group"), col("group_rank"))
     hits.join(best, Seq("query_id", "group"))
       .select(col("query_id"), col("group_rank"), col("group"),
@@ -204,7 +219,7 @@ object Knn {
     * `k` HIGHEST-scoring points whose label differs from the anchor's
     * — the close-but-wrong examples an embedding model learns the most
     * from (random negatives are trivially separable; the hardest ones
-    * define the decision boundary). Same broadcast + WindowGroupLimit
+    * define the decision boundary). Same broadcast + [[rankTopK]]
     * shape as [[knnJoin]], with the label inequality as a join-side
     * filter: per-anchor state stays k rows, and at 100 TB the corpus
     * side still never moves. Label here is any supervision proxy —
@@ -227,13 +242,12 @@ object Knn {
       col(anchorIdCol).as("query_id"),
       col(anchorVecCol).as("__qvec"),
       col(anchorLabelCol).as("__qlabel")))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("score"), col(pointIdCol).asc)
-    points
-      .crossJoin(a)
-      .filter(col(pointLabelCol) =!= col("__qlabel"))
-      .withColumn("score", VectorOps.cosine(col("__qvec"), col(pointVecCol)))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    rankTopK(
+        points
+          .crossJoin(a)
+          .filter(col(pointLabelCol) =!= col("__qlabel"))
+          .withColumn("score", VectorOps.cosine(col("__qvec"), col(pointVecCol))),
+        Seq(col("query_id")), Seq(desc("score"), col(pointIdCol).asc), lit(k), "rank")
       .select(col("query_id"), col("rank"), col(pointIdCol).as("point_id"),
         col("score"), col(pointLabelCol).as("neg_label"))
   }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorExpressions.CellMetric
@@ -150,10 +149,8 @@ object Pq {
       .withColumn("score",
         round(when(col("__denom") === 0.0d, lit(0.0d))
           .otherwise(col("__num") / col("__denom")), 6))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("score"), col("point_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Knn.rankTopK(scored, Seq(col("query_id")), Seq(desc("score"), col("point_id").asc),
+        lit(k), "rank")
       .select(col("query_id"), col("rank"), col("point_id"), col("score"))
   }
 
@@ -167,13 +164,12 @@ object Pq {
     val q = broadcast(queries.select(
       col(queryIdCol).as("query_id"), col(vecCol).as("__qvec")))
     val raw = points.select(col(pointIdCol).as("point_id"), col(vecCol).as("__pvec"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("__score"), col("point_id").asc)
-    cand
-      .join(raw, "point_id")
-      .join(q, "query_id")
-      .withColumn("__score", VectorOps.cosine(col("__qvec"), col("__pvec")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Knn.rankTopK(
+        cand
+          .join(raw, "point_id")
+          .join(q, "query_id")
+          .withColumn("__score", VectorOps.cosine(col("__qvec"), col("__pvec"))),
+        Seq(col("query_id")), Seq(desc("__score"), col("point_id").asc), lit(k), "rank")
       .select(col("query_id"), col("rank"), col("point_id"),
         round(col("__score"), 6).as("score"))
   }

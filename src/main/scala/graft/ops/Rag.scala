@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The reference's flagship RAG batch query (`Qdrant/main.py:114-133` →
@@ -43,26 +42,28 @@ object Rag {
         maxCtxChars = maxCtxChars)
       .orderBy(col("query_id"))
 
-  /** Deterministic extractive "generation" stand-in: top-5 most frequent
-    * terms across the retrieved hits, ranked (count DESC, term ASC).
+  /** Deterministic extractive "generation" stand-in (the L2 boundary,
+    * SURVEY §2.5): per query, the top-5 most frequent terms of the
+    * retrieved hits' `textCol`, ranked (count DESC, term ASC) and joined
+    * by `sep` as `predicted`, with their summed counts as `support`.
     */
-  def predictQuery(spark: SparkSession, sfDir: String, nQueries: Int = 5, k: Int = 5): DataFrame = {
-    val toks = hits(spark, sfDir, nQueries, k)
-      .select(col("query_id"), explode(split(trim(col("text")), " ")).as("tok"))
+  private def topTerms(hits: DataFrame, textCol: String, sep: String): DataFrame = {
+    val counted = hits
+      .select(col("query_id"), explode(split(trim(col(textCol)), " ")).as("tok"))
       .filter(col("tok") =!= "")
-    val counted = toks.groupBy(col("query_id"), col("tok")).agg(count(lit(1)).as("c"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("c"), col("tok").asc)
-    counted
-      .withColumn("r", row_number().over(w).cast("long"))
-      .filter(col("r") <= 5)
+      .groupBy(col("query_id"), col("tok")).agg(count(lit(1)).as("c"))
+    Knn.rankTopK(counted, Seq(col("query_id")), Seq(desc("c"), col("tok").asc), lit(5), "r")
       .groupBy(col("query_id"))
       .agg(
         array_join(
           transform(array_sort(collect_list(struct(col("r"), col("tok").as("t")))), s => s.getField("t")),
-          ",").as("predicted"),
+          sep).as("predicted"),
         sum(col("c")).as("support"))
-      .orderBy(col("query_id"))
   }
+
+  /** [[topTerms]] over the [[hits]] of the first `nQueries` embeddings. */
+  def predictQuery(spark: SparkSession, sfDir: String, nQueries: Int = 5, k: Int = 5): DataFrame =
+    topTerms(hits(spark, sfDir, nQueries, k), "text", ",").orderBy(col("query_id"))
 
   /** End-to-end flagship on raw documents (chunk → hash-embed → normalize
     * → kNN → context → predict) — the full reference pipeline shape with
@@ -106,20 +107,7 @@ object Rag {
     val ctx = ContextAssembly.budgetedContext(
       hitRows, "query_id", "rank", "chunk_text",
       pageCol = col("doc_id"), chunkCol = col("chunk_index"), maxCtxChars = maxCtxChars)
-    // L2 stand-in (SURVEY §2.5): extractive prediction = top-5 terms of
-    // the retrieved hits, ranked (count DESC, term ASC)
-    val toks = hitRows
-      .select(col("query_id"), explode(split(trim(col("chunk_text")), " ")).as("tok"))
-      .filter(col("tok") =!= "")
-      .groupBy(col("query_id"), col("tok")).agg(count(lit(1)).as("c"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("c"), col("tok").asc)
-    val predicted = toks
-      .withColumn("r", row_number().over(w))
-      .filter(col("r") <= 5)
-      .groupBy(col("query_id"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("r"), col("tok").as("t")))), s => s.getField("t")),
-        " ").as("predicted"))
+    val predicted = topTerms(hitRows, "chunk_text", " ")
     // L1 prompt projection with the reference's empty-context fallback.
     // The QUERY side drives the join (left to ctx/predicted): a query
     // with no retrievable context must still appear, carrying the

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Lexical (BM25) retrieval and hybrid rank fusion — the keyword half
@@ -25,9 +24,7 @@ import org.apache.spark.sql.functions._
   *    cap (Dedup.minHashLsh): a term matching half the corpus would
   *    otherwise explode one join key into O(N) candidates while
   *    contributing ~zero idf.
-  *  - Per-query top-k is `row_number() <= k` over (score, doc) —
-  *    Spark ≥3.5 plans it as WindowGroupLimit (map-side partial
-  *    top-k), so per-query state is k rows.
+  *  - Per-query top-k over (score, doc) is [[Knn.rankTopK]].
   */
 object Retrieval {
 
@@ -105,10 +102,8 @@ object Retrieval {
           (col("tf") + lit(k1) * (lit(1.0 - b) + col("dl") * b / col("__avgdl"))))
     val scored = cand.groupBy(col("query_id"), col("doc_id"))
       .agg(round(sum(col("contrib")), 6).as("score"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("score"), col("doc_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Knn.rankTopK(scored, Seq(col("query_id")), Seq(desc("score"), col("doc_id").asc),
+        lit(k), "rank")
       .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
   }
 
@@ -150,10 +145,8 @@ object Retrieval {
           coalesce(lit(1.0) / (lit(k0) + col("__rank_a")), lit(0.0)) +
             coalesce(lit(1.0) / (lit(k0) + col("__rank_b")), lit(0.0)),
           6))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("rrf"), col("doc_id").asc)
-    fused
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Knn.rankTopK(fused, Seq(col("query_id")), Seq(desc("rrf"), col("doc_id").asc),
+        lit(k), "rank")
       .select(col("query_id"), col("rank"), col("doc_id"), col("rrf"))
   }
 
@@ -224,10 +217,9 @@ object Retrieval {
       .select(col("query_id"), col("__pa"), col("__pb"),
         VectorOps.cosine(col("__va"), col("__vb")).as("__sim"))
       .localCheckpoint(false)
-    val wSel = Window.partitionBy(col("query_id")).orderBy(desc("__obj"), col("point_id").asc)
     def argmax(cands: DataFrame): DataFrame =
-      cands.withColumn("__rn", row_number().over(wSel))
-        .filter(col("__rn") === 1)
+      Knn.rankTopK(cands, Seq(col("query_id")), Seq(desc("__obj"), col("point_id").asc),
+          lit(1), "__rn")
         .select(col("query_id"), col("point_id"), col("__obj"))
     // pick 1: pure relevance
     var pick = argmax(hits.withColumn("__obj", round(col("__rel"), 6)))

@@ -86,13 +86,11 @@ object SimilaritySearch {
     val q0 = queries
       .select(col(queryIdCol).as("query_id"), col(vecCol).as("__qvec"))
     val q = explodeProbes(q0, bucketCol, bits, nprobe)
-    val scored = bucketedPoints
-      .join(q, bucketCol)
-      .withColumn("score", VectorOps.cosine(col("__qvec"), col(vecCol)))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("score"), col(pointIdCol).asc)
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Knn.rankTopK(
+        bucketedPoints
+          .join(q, bucketCol)
+          .withColumn("score", VectorOps.cosine(col("__qvec"), col(vecCol))),
+        Seq(col("query_id")), Seq(desc("score"), col(pointIdCol).asc), lit(k), "rank")
       .select(col("query_id"), col("rank"), col(pointIdCol).as("point_id"), col("score"))
   }
 
@@ -162,14 +160,13 @@ object SimilaritySearch {
       .withColumn("__qsig", packSignBits(col("__qvec"), dim))
     val q = explodeProbes(q0, bucketCol, bits, nprobe)
       .select(col("query_id"), col("__qsig"), col(bucketCol))
-    val wPre = Window.partitionBy(col("query_id"))
-      .orderBy(col("__ham").asc, col("point_id").asc)
-    val shortIds = idxPoints
-      .select(col(pointIdCol).as("point_id"), col(bucketCol), col(sigCol).as("__psig"))
-      .join(q, bucketCol)
-      .withColumn("__ham", hammingUnrolled(col("__qsig"), col("__psig"), dim))
-      .withColumn("__hrank", row_number().over(wPre))
-      .filter(col("__hrank") <= shortlist)
+    val shortIds = Knn.rankTopK(
+        idxPoints
+          .select(col(pointIdCol).as("point_id"), col(bucketCol), col(sigCol).as("__psig"))
+          .join(q, bucketCol)
+          .withColumn("__ham", hammingUnrolled(col("__qsig"), col("__psig"), dim)),
+        Seq(col("query_id")), Seq(col("__ham").asc, col("point_id").asc), lit(shortlist),
+        "__hrank")
       .select(col("query_id"), col("point_id"))
     fetchAndRerank(shortIds, queries, points, queryIdCol, pointIdCol, vecCol, k)
   }
@@ -342,11 +339,10 @@ object SimilaritySearch {
     val probes = nearestCells(normalized(queries, queryIdCol, vecCol), cents, Nil,
         CellMetric.Cosine, nprobe)
       .select(col("__id").as("query_id"), col("__v").as("__qv"), col("cid"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("score"), col("point_id"))
-    assignedPts.join(probes, "cid")
-      .withColumn("score", VectorOps.cosine(col("__qv"), col("__pv")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Knn.rankTopK(
+        assignedPts.join(probes, "cid")
+          .withColumn("score", VectorOps.cosine(col("__qv"), col("__pv"))),
+        Seq(col("query_id")), Seq(desc("score"), col("point_id")), lit(k), "rank")
       .select(col("query_id"), col("rank"), col("point_id"), col("score"))
   }
 
@@ -370,17 +366,16 @@ object SimilaritySearch {
   def clusterCards(points: DataFrame, pointIdCol: String, vecCol: String,
       cents: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("cid"))
-    val wr = Window.partitionBy(col("cid")).orderBy(desc("score"), col("point_id"))
     val scored = assignPoints(points, pointIdCol, vecCol, cents)
       .join(broadcast(cents), "cid")
       .withColumn("score", VectorOps.cosine(col("__pv"), col("centroid")))
     val total = broadcast(scored.agg(count(lit(1)).cast("double").as("__n")))
-    scored
-      .withColumn("cluster_n", count(lit(1)).over(w))
-      .withColumn("__mean", avg(col("score")).over(w))
-      .withColumn("__min", min(col("score")).over(w))
-      .withColumn("__rn", row_number().over(wr))
-      .filter(col("__rn") === 1)
+    Knn.rankTopK(
+        scored
+          .withColumn("cluster_n", count(lit(1)).over(w))
+          .withColumn("__mean", avg(col("score")).over(w))
+          .withColumn("__min", min(col("score")).over(w)),
+        Seq(col("cid")), Seq(desc("score"), col("point_id")), lit(1), "__rn")
       .crossJoin(total)
       .select(col("cid"), col("cluster_n"),
         round(col("cluster_n") / col("__n"), 6).as("corpus_frac"),
@@ -410,14 +405,12 @@ object SimilaritySearch {
   def clusterBalancedSample(points: DataFrame, pointIdCol: String, vecCol: String,
       cents: DataFrame, perCell: Int): DataFrame = {
     require(perCell > 0, s"perCell ($perCell) must be positive")
-    val w = Window.partitionBy(col("cid"))
-    val wr = Window.partitionBy(col("cid"))
-      .orderBy(Dedup.h32(col("point_id").cast("string")), col("point_id"))
-    assignPoints(points, pointIdCol, vecCol, cents)
-      .withColumn("cluster_n", count(lit(1)).over(w))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= perCell)
-      .select(col("cid"), col("point_id"), col("cluster_n"), col("rank").cast("long"))
+    Knn.rankTopK(
+        assignPoints(points, pointIdCol, vecCol, cents)
+          .withColumn("cluster_n", count(lit(1)).over(Window.partitionBy(col("cid")))),
+        Seq(col("cid")), Seq(Dedup.h32(col("point_id").cast("string")), col("point_id")),
+        lit(perCell), "rank")
+      .select(col("cid"), col("point_id"), col("cluster_n"), col("rank"))
   }
 
   /** Per-cluster prototypicality pruning — the data-pruning recipe of
@@ -450,15 +443,13 @@ object SimilaritySearch {
   def prototypicalityPrune(points: DataFrame, pointIdCol: String, vecCol: String,
       cents: DataFrame, keepFrac: Double): DataFrame = {
     require(keepFrac > 0.0 && keepFrac <= 1.0, s"keepFrac ($keepFrac) must be in (0, 1]")
-    val wc = Window.partitionBy(col("cid"))
-    val wr = Window.partitionBy(col("cid")).orderBy(col("score"), col("point_id"))
-    assignPoints(points, pointIdCol, vecCol, cents)
-      .join(broadcast(cents), "cid")
-      .withColumn("score", VectorOps.cosine(col("__pv"), col("centroid")))
-      .withColumn("cluster_n", count(lit(1)).over(wc))
-      .withColumn("rank", row_number().over(wr).cast("long"))
-      .filter(col("rank") <=
-        greatest(lit(1L), floor(col("cluster_n") * keepFrac).cast("long")))
+    Knn.rankTopK(
+        assignPoints(points, pointIdCol, vecCol, cents)
+          .join(broadcast(cents), "cid")
+          .withColumn("score", VectorOps.cosine(col("__pv"), col("centroid")))
+          .withColumn("cluster_n", count(lit(1)).over(Window.partitionBy(col("cid")))),
+        Seq(col("cid")), Seq(col("score"), col("point_id")),
+        greatest(lit(1L), floor(col("cluster_n") * keepFrac).cast("long")), "rank")
       .select(col("cid"), col("point_id"), col("cluster_n"), col("rank"),
         round(col("score"), 6).as("score"))
   }
@@ -517,8 +508,8 @@ object SimilaritySearch {
     * and a useful cost knob even on non-MRL vectors where leading
     * components are merely informative. Cost shape at 100 TB: the
     * corpus-wide pair pass scores a NARROW prefix table (`prefixDim /
-    * dim` of the vector bytes; per-query state is `shortlist` rows
-    * map-side via WindowGroupLimit), and the full-width cosine runs
+    * dim` of the vector bytes; per-query state is `shortlist` rows,
+    * [[Knn.rankTopK]]), and the full-width cosine runs
     * only on `shortlist` rows per query, fetched by id. With
     * `prefixDim = dim` and `shortlist >=` corpus size
     * this degrades to exact k-NN (pinned in SimilaritySpec).
@@ -559,16 +550,14 @@ object SimilaritySearch {
   private def fetchAndRerank(shortIds: DataFrame, queries: DataFrame,
       points: DataFrame, queryIdCol: String, pointIdCol: String,
       vecCol: String, k: Int): DataFrame = {
-    val wFull = Window.partitionBy(col("query_id"))
-      .orderBy(desc("score"), col("point_id").asc)
-    points
-      .select(col(pointIdCol).as("point_id"), col(vecCol).as("__pvec"))
-      .join(broadcast(shortIds), Seq("point_id"))
-      .join(broadcast(queries.select(col(queryIdCol).as("query_id"),
-        col(vecCol).as("__qvec"))), Seq("query_id"))
-      .withColumn("score", VectorOps.cosine(col("__qvec"), col("__pvec")))
-      .withColumn("rank", row_number().over(wFull).cast("long"))
-      .filter(col("rank") <= k)
+    Knn.rankTopK(
+        points
+          .select(col(pointIdCol).as("point_id"), col(vecCol).as("__pvec"))
+          .join(broadcast(shortIds), Seq("point_id"))
+          .join(broadcast(queries.select(col(queryIdCol).as("query_id"),
+            col(vecCol).as("__qvec"))), Seq("query_id"))
+          .withColumn("score", VectorOps.cosine(col("__qvec"), col("__pvec"))),
+        Seq(col("query_id")), Seq(desc("score"), col("point_id").asc), lit(k), "rank")
       .select(col("query_id"), col("rank"), col("point_id"), col("score"))
   }
 
@@ -622,7 +611,7 @@ object SimilaritySearch {
     * is a plain column) and the raw vector column is fetched BY ID
     * for the `shortlist` survivors per query only (phase 2 below, the
     * [[graft.ops.Pq.adcRerank]] broadcast-join discipline). Broadcast
-    * + WindowGroupLimit shapes for the pair pass; the only point-side
+    * + [[Knn.rankTopK]] for the pair pass; the only point-side
     * movement is one ~16-byte/row exchange of the signature table
     * (see the in-body comment for why that boundary is load-bearing).
     * Output: `(query_id, rank, point_id, score)` — full-width cosine
@@ -688,14 +677,13 @@ object SimilaritySearch {
     val q = broadcast(queries.select(
       col(queryIdCol).as("query_id"),
       packSignBits(col(vecCol), dim).as("__qsig")))
-    val wPre = Window.partitionBy(col("query_id"))
-      .orderBy(col("__ham").asc, col("point_id").asc)
-    val shortIds = sigPoints
-      .select(col(pointIdCol).as("point_id"), col(sigCol).as("__psig"))
-      .crossJoin(q)
-      .withColumn("__ham", hammingUnrolled(col("__qsig"), col("__psig"), dim))
-      .withColumn("__hrank", row_number().over(wPre))
-      .filter(col("__hrank") <= shortlist)
+    val shortIds = Knn.rankTopK(
+        sigPoints
+          .select(col(pointIdCol).as("point_id"), col(sigCol).as("__psig"))
+          .crossJoin(q)
+          .withColumn("__ham", hammingUnrolled(col("__qsig"), col("__psig"), dim)),
+        Seq(col("query_id")), Seq(col("__ham").asc, col("point_id").asc), lit(shortlist),
+        "__hrank")
       .select(col("query_id"), col("point_id"))
     fetchAndRerank(shortIds, queries, points, queryIdCol, pointIdCol, vecCol, k)
   }
@@ -727,14 +715,13 @@ object SimilaritySearch {
     val q = broadcast(queries.select(
       col(queryIdCol).as("query_id"),
       slice(col(vecCol), 1, prefixDim).as("__qpre")))
-    val wPre = Window.partitionBy(col("query_id"))
-      .orderBy(desc("__pre_score"), col("point_id").asc)
-    val shortIds = prePoints
-      .select(col(pointIdCol).as("point_id"), col(preCol).as("__ppre"))
-      .crossJoin(q)
-      .withColumn("__pre_score", VectorOps.cosine(col("__qpre"), col("__ppre")))
-      .withColumn("__prank", row_number().over(wPre))
-      .filter(col("__prank") <= shortlist)
+    val shortIds = Knn.rankTopK(
+        prePoints
+          .select(col(pointIdCol).as("point_id"), col(preCol).as("__ppre"))
+          .crossJoin(q)
+          .withColumn("__pre_score", VectorOps.cosine(col("__qpre"), col("__ppre"))),
+        Seq(col("query_id")), Seq(desc("__pre_score"), col("point_id").asc), lit(shortlist),
+        "__prank")
       .select(col("query_id"), col("point_id"))
     fetchAndRerank(shortIds, queries, points, queryIdCol, pointIdCol, vecCol, k)
   }

@@ -260,6 +260,49 @@ class PlanSpec extends SparkSpec {
       s"expected group limits partitioned by (query_id, group) AND by query_id; got: $specs")
   }
 
+  test("every routed retrieval top-k executes as a WindowGroupLimit keyed on the query id") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowGroupLimitExec
+    object walk extends AdaptiveSparkPlanHelper
+    val emb = Tables.embeddings(spark, sf0001)
+    val docs = Tables.documents(spark, sf0001)
+    val queries = emb.filter(col("vec_id") < 5)
+    val points = emb.filter(col("vec_id") >= 10).withColumnRenamed("vec_id", "point_id")
+    val cents = SimilaritySearch.trainedCentroids(points, "point_id", "embedding",
+      dim = 64, kCentroids = 8, iters = 1)
+    val cb = Pq.trainCodebooks(points, "point_id", "embedding", dim = 64, m = 8, kCodes = 8,
+      iters = 1)
+    val bm25 = Retrieval.bm25TopK(docs, "doc_id", "text", docs.filter(col("doc_id") < 5),
+      "doc_id", "text", k = 5)
+    val dense = Knn.knnJoin(queries, points, "vec_id", "embedding", "point_id", "embedding", 5)
+      .select(col("query_id"), col("point_id").as("doc_id"), col("rank"))
+    val routed = Seq(
+      "bm25TopK" -> bm25,
+      "rrfFuse" -> Retrieval.rrfFuse(bm25, dense, "query_id", "doc_id", "rank", k = 5),
+      "searchAssignedCells" -> SimilaritySearch.searchAssignedCells(
+        SimilaritySearch.assignPoints(points, "point_id", "embedding", cents), cents,
+        queries, "vec_id", "embedding", nprobe = 2, k = 3),
+      "adcRerank" -> Pq.adcRerank(queries, "vec_id", "embedding", points, "point_id", cb,
+        Pq.encode(points, "point_id", "embedding", cb, m = 8, dsub = 8),
+        m = 8, dsub = 8, shortlist = 20, k = 5),
+      "hardNegatives" -> Knn.hardNegatives(queries, points, "vec_id", "embedding", "label",
+        "point_id", "embedding", "label", k = 5),
+      "ivfTopKStored" -> SimilaritySearch.ivfTopKStored(queries,
+        points.withColumn("b", SimilaritySearch.signBucket("embedding", 4)),
+        "vec_id", "point_id", "embedding", "b", bits = 4, k = 3),
+      "bqRerankTopK" -> SimilaritySearch.bqRerankTopK(queries, points, "vec_id", "point_id",
+        "embedding", dim = 64, shortlist = 20, k = 5))
+    for ((name, df) <- routed) {
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val keys = walk.collect(plan) {
+        case w: WindowGroupLimitExec => w.partitionSpec.flatMap(_.references.map(_.name))
+      }
+      assert(keys.contains(Seq("query_id")),
+        s"$name: per-query top-k is not a WindowGroupLimit on query_id (got $keys):\n$plan")
+    }
+  }
+
   test("weighted sample compiles to WindowGroupLimit (pre-shuffle top-k prune)") {
     val plan = formatted(TextAnalysis.weightedSample(
       Tables.documents(spark, sf0001).withColumn("w", lit(3L)),

@@ -88,7 +88,7 @@ class PropertySpec extends SparkSpec {
       assert(hits.size == 5)
       hits.values.foreach { rs =>
         assert(rs.length == math.min(k, 25))
-        val scores = rs.sortBy(_.getInt(1)).map(_.getDouble(2))
+        val scores = rs.sortBy(_.getLong(1)).map(_.getDouble(2))
         assert(scores.zip(scores.tail).forall { case (a, b) => a >= b }, "monotone")
       }
     }

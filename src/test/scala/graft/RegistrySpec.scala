@@ -21,7 +21,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("a name-to-builder map is built in src/main only inside SparkEntry.scala") {
-    val hits = SessionGuardSpec.codeHits("Map[String, (SparkSession, String) => DataFrame]")
+    val hits = OwnershipGuardSpec.codeHits("Map[String, (SparkSession, String) => DataFrame]")
     assert(hits.nonEmpty && hits.forall(_.contains("/SparkEntry.scala:")),
       s"query maps must be derived in SparkEntry, found: ${hits.mkString(", ")}")
   }

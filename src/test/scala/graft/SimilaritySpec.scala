@@ -304,7 +304,7 @@ class SimilaritySpec extends SparkSpec {
     val nPoints = points.count().toInt
     val exact = Knn.knnJoin(queries, points, "vec_id", "embedding", "point_id", "embedding", 5)
       .select("query_id", "rank", "point_id")
-      .collect().map(r => (r.getLong(0), r.getInt(1).toLong, r.getLong(2))).toSet
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val degraded = SimilaritySearch.prefixRerankTopK(queries, points,
         "vec_id", "point_id", "embedding", prefixDim = 64, shortlist = nPoints, k = 5)
       .select("query_id", "rank", "point_id")
@@ -343,7 +343,7 @@ class SimilaritySpec extends SparkSpec {
     val nPoints = points.count().toInt
     val exact = Knn.knnJoin(queries, points, "vec_id", "embedding", "point_id", "embedding", 5)
       .select("query_id", "rank", "point_id")
-      .collect().map(r => (r.getLong(0), r.getInt(1).toLong, r.getLong(2))).toSet
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val degraded = SimilaritySearch.bqRerankTopK(queries, points,
         "vec_id", "point_id", "embedding", dim = 64, shortlist = nPoints, k = 5)
       .select("query_id", "rank", "point_id")

@@ -41,8 +41,8 @@ class VectorOpsSpec extends SparkSpec {
     val points = Seq((10L, Array(2.0f, 0.0f)), (11L, Array(3.0f, 0.0f)), (12L, Array(0.0f, 1.0f)))
       .toDF("pid", "pv")
     val got = Knn.knnJoin(queries, points, "qid", "qv", "pid", "pv", 5)
-      .select("rank", "pid").collect().map(r => (r.getInt(0), r.getLong(1))).sorted
-    assert(got.toSeq == Seq((1, 10L), (2, 11L), (3, 12L)))
+      .select("rank", "pid").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    assert(got.toSeq == Seq((1L, 10L), (2L, 11L), (3L, 12L)))
   }
 
   test("top-k subset property: topK(k) is a prefix of topK(k+1)") {
