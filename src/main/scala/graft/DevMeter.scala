@@ -59,7 +59,7 @@ object DevMeter {
       try Memo.prewarm(spark, sfDir)
       catch { case e: Throwable => System.err.println(s"prewarm failed: $e") }
     }
-    println("query,rep,wall_s,jobs,stages,tasks,cpu_s,run_s,shuf_read_mb,shuf_write_mb")
+    println("query,rep,wall_s,jobs,stages,tasks,cpu_s,run_s,shuf_read_bytes,shuf_write_bytes")
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query '$name'"))
       (0 to reps).foreach { rep =>
@@ -78,8 +78,7 @@ object DevMeter {
         val Array(j, st, tk, cpu, run, sr, sw) = meter.snapshot()
         // rep 0 is the untimed warm-up, reported only when it is the only rep
         if (rep > 0 || reps == 0)
-          println(f"$name,$rep,$wall%.3f,$j,$st,$tk,${cpu / 1e9}%.3f,${run / 1e3}%.3f," +
-            f"${sr / 1e6}%.2f,${sw / 1e6}%.2f")
+          println(f"$name,$rep,$wall%.3f,$j,$st,$tk,${cpu / 1e9}%.3f,${run / 1e3}%.3f,$sr,$sw")
         if (reps == 0) df.foreach(_.show(12, 60))
         spark.catalog.clearCache()
       }

@@ -44,9 +44,16 @@ object CmsHash {
     java.security.MessageDigest.getInstance("MD5"))
 
   def h32(s: String): Long = {
+    val b = s.getBytes(UTF_8)
+    h32(b, 0, b.length)
+  }
+
+  /** [[h32]] of the UTF-8 bytes `buf[off, off + len)` — no string copy. */
+  def h32(buf: Array[Byte], off: Int, len: Int): Long = {
     val d = md.get()
     d.reset()
-    val bytes = d.digest(s.getBytes(UTF_8))
+    d.update(buf, off, len)
+    val bytes = d.digest()
     // first 8 hex chars = first 4 bytes, as an unsigned 32-bit value
     ((bytes(0) & 0xFFL) << 24) | ((bytes(1) & 0xFFL) << 16) |
       ((bytes(2) & 0xFFL) << 8) | (bytes(3) & 0xFFL)

@@ -44,8 +44,13 @@ object Knn {
     * Not routed here: single-query top-k ([[topK]], [[recommend]]) plans
     * as `orderBy.limit` → `TakeOrderedAndProject` with no window;
     * [[SimilaritySearch.nearestCells]] ranks cells inside its native
-    * kernel; and `row_number` windows that number rows rather than cut
-    * them (shard positions, batch indices, span cuts) are not top-k.
+    * kernel; `row_number` windows that number rows rather than cut
+    * them (shard positions, batch indices, span cuts) are not top-k; and
+    * four cuts keep their own window: `TextAnalysis.quotaSample` (a
+    * per-stratum CASE bound beside the literal one), `Curation.dsirSelect`
+    * (a per-row bound over the boundary tie set), and the top-1 picks
+    * `Dedup.keepBest` and `Relational.histogramQuantiles` (`=== 1`, no
+    * bigint rank in their output).
     */
   def rankTopK(df: DataFrame, partitionBy: Seq[Column], orderBy: Seq[Column], k: Column,
       rankCol: String): DataFrame =

@@ -84,15 +84,15 @@ object Rag {
     val embed =
       if (portableHash) VectorOps.embedTextPortable _
       else VectorOps.embedTextDistributed _
-    // Featurize on the COMPACT key only: the featurizer's two
-    // aggregations shuffle (chunk_id, bucket, count) rows — the chunk
-    // text never enters a shuffle as a grouping key. Text + metadata
-    // join back on chunk_id afterwards, and the featurizer's closing
-    // repartition(chunk_id) already matches the join partitioning, so
-    // the text transits at most ONE co-location shuffle. (Round 1
-    // carried chunk_text THROUGH both group-bys to save this join; at
-    // 100 TB corpus-text-in-shuffle dominates everything — re-reading
-    // the zero-shuffle chunker subtree is the cheap side of the trade.)
+    // Featurize on the COMPACT key only: the featurizer's one
+    // aggregation shuffles sparse (bucket, count) buffers keyed by
+    // chunk_id — the chunk text never enters a shuffle as a grouping
+    // key. Text + metadata join back on chunk_id afterwards; the
+    // aggregate's output is already hash-partitioned on chunk_id, so the
+    // text transits at most ONE co-location shuffle. (Round 1 carried
+    // chunk_text THROUGH the group-bys to save this join; at 100 TB
+    // corpus-text-in-shuffle dominates everything — re-reading the
+    // zero-shuffle chunker subtree is the cheap side of the trade.)
     val chunkVecs = embed(chunks, Seq("chunk_id"), "chunk_text", dim)
     val points = chunkVecs.join(chunks, "chunk_id")
     val queries = embed(docs.filter(col("doc_id") < nQueries), Seq("doc_id"), "text", dim)

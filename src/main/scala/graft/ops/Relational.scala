@@ -50,10 +50,8 @@ object Relational {
 
   /** Top-3 orders per customer by totalprice — WindowGroupLimit path. */
   def topOrdersPerCustomer(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey")).orderBy(desc("o_totalprice"), col("o_orderkey").asc)
-    Tables.orders(spark, sfDir)
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 3)
+    Knn.rankTopK(Tables.orders(spark, sfDir), Seq(col("o_custkey")),
+        Seq(desc("o_totalprice"), col("o_orderkey").asc), lit(3), "rn")
       .select(col("o_custkey"), col("rn"), col("o_orderkey"), round(col("o_totalprice"), 2).as("o_totalprice"))
       .orderBy(col("o_custkey"), col("rn"))
   }

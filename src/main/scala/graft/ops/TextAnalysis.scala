@@ -310,13 +310,12 @@ object TextAnalysis {
     val tf = tok.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
       .localCheckpoint(false)
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("doc_id")).orderBy(desc("tfidf_raw"), col("term").asc)
-    tf.join(broadcast(df), "term")
+    val scored = tf.join(broadcast(df), "term")
       .crossJoin(nDocs)
       .withColumn("tfidf_raw",
         col("tf").cast("double") * log(col("__n_docs") / col("df").cast("double")))
-      .withColumn("r", row_number().over(w).cast("long"))
-      .filter(col("r") <= perDoc)
+    Knn.rankTopK(scored, Seq(col("doc_id")), Seq(desc("tfidf_raw"), col("term").asc),
+        lit(perDoc), "r")
       .select(col("doc_id"), col("r"), col("term"), col("tf"), col("df"),
         round(col("tfidf_raw"), 6).as("tfidf"))
   }
@@ -699,13 +698,9 @@ object TextAnalysis {
         coalesce(col(idCol).cast("string"), lit("NULL")))))
       .otherwise(col(weightCol) > 0)
     val key = log(u) / col(weightCol).cast("double")
-    val w = Window.partitionBy(col(stratumCol))
-      .orderBy(key.desc, col(idCol))
-    docs
-      .filter(admit)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= lit(k))
-      .select(col(idCol).as("doc_id"), col(stratumCol).as("stratum"), col("rk"))
+    Knn.rankTopK(docs.filter(admit), Seq(col(stratumCol)), Seq(key.desc, col(idCol)),
+        lit(k), "rk")
+      .select(col(idCol).as("doc_id"), col(stratumCol).as("stratum"), col("rk").cast("int"))
   }
 
   /** Token-budget data mixing: select docs per stratum until each

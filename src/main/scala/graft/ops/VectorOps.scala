@@ -9,10 +9,11 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   * `Distance.COSINE` at `Qdrant/main.py:107`, search scoring consumed at
   * `Qdrant/VectorDB/Database.py:22-28`).
   *
-  * All ops are pure Catalyst column expressions (higher-order array
-  * functions) — no UDFs. That keeps them inside whole-stage codegen, lets
-  * Catalyst constant-fold literal query vectors, and makes every op
-  * expressible in ANSI-ish SQL for the DuckDB oracle.
+  * Every op is a Catalyst expression — higher-order array functions, or
+  * a native expression / aggregate from `graft.functions` (dot, cosine,
+  * mean pooling, the featurizer) — never a UDF. That keeps Catalyst able
+  * to plan and constant-fold them, and every op keeps a SQL form for the
+  * DuckDB oracle.
   *
   * Numeric discipline for oracle parity: elements are cast FLOAT→DOUBLE
   * before arithmetic, and `aggregate` is a sequential left fold (same
@@ -237,42 +238,36 @@ object VectorOps {
   def dequantizeInt8(codes: Column, scale: Column): Column =
     transform(codes, c => c.cast("double") * scale)
 
-  /** Deterministic hash featurizer — the engine's stand-in for the
+  /** Hashed bag-of-words featurizer — the engine's stand-in for the
     * SentenceTransformer encode boundary (`Qdrant/main.py:95,104`; model
-    * inference is out-of-engine per SURVEY §2.3 V2). Bag-of-words hashed
-    * into `dim` buckets, then L2-normalized, as pure expressions.
+    * inference is out-of-engine per SURVEY §2.3 V2). Tokens are the
+    * non-empty single-space pieces of `trim(lower(text))` (the DuckDB
+    * oracle's `string_split(trim(lower(x)), ' ')` + non-empty filter);
+    * each is hashed into one of `dim` buckets and the counts are
+    * L2-normalized. Rows that share an id are merged; an id with no token
+    * has no row.
     *
-    * Scale note: this O(dim × tokens) per-row form is fine for corpus-side
-    * embedding at ingest (it is narrow — no shuffle); the 100 TB path would
-    * swap in a custom codegen Expression with a single pass over tokens,
-    * behind this same function.
-    */
-  def embedText(text: Column, dim: Int): Column = {
-    val toks = split(trim(lower(text)), "\\s+")
-    val counts = transform(
-      sequence(lit(0), lit(dim - 1)),
-      j => size(filter(toks, t => pmod(hash(t), lit(dim)) === j)).cast("double"))
-    l2Normalize(counts)
-  }
-
-  /** Distributed hashed bag-of-words featurizer — the 100 TB path.
-    *
-    * explode(tokens) → hash-bucket → count per (id, bucket) →
-    * map_from_entries → dense L2-normalized vector. Linear in tokens
-    * (ONE hash per token, vs dim× for the per-row expression form), fully
-    * partition-parallel, and — crucially — the aggregation is a
-    * materialization barrier: downstream joins score against a plain
-    * array column instead of Catalyst inlining the featurizer expression
-    * into every candidate pair (which turns a linear featurize + k-NN
-    * into a quadratic recompute; observed 508 s → ~5 s at sf0.1).
+    * One aggregate, [[graft.functions.HashedBowAgg]]: one pass over each
+    * text's bytes and one shuffle of sparse partial counts, hash-
+    * partitioned on the ids — no token rows, no second regroup, no
+    * lambdas. Being an Aggregate is also what makes it safe to join:
+    *   - the vector is an aggregate result, so CollapseProject cannot
+    *     inline the featurizer into a consumer join and re-run it once
+    *     per candidate PAIR (the optimizer does not model join fan-out;
+    *     observed 508 s → ~5 s at sf0.1 when the barrier went in);
+    *   - the optimizer sees the ids as distinct keys. A per-row
+    *     `Project` form with the same output loses them: the size
+    *     estimate of `emb.join(chunks)` on the chunk id grew 472.8 KiB →
+    *     47.2 GiB, every later join against it planned as a sort-merge
+    *     join, and the per-op shuffle went up ~6x.
     *
     * Output: `idCols` + `embedding ARRAY<DOUBLE>`.
     */
   def embedTextDistributed(
-      df: org.apache.spark.sql.DataFrame,
+      df: DataFrame,
       idCols: Seq[String],
       textCol: String,
-      dim: Int): org.apache.spark.sql.DataFrame =
+      dim: Int): DataFrame =
     embedTextImpl(df, idCols, textCol, dim, portableHash = false)
 
   /** Variant with the md5-based portable bucket hash — identical buckets
@@ -280,56 +275,20 @@ object VectorOps {
     * (`v_embed_text`). Murmur3 (`hash()`) stays the default for speed.
     */
   def embedTextPortable(
-      df: org.apache.spark.sql.DataFrame,
+      df: DataFrame,
       idCols: Seq[String],
       textCol: String,
-      dim: Int): org.apache.spark.sql.DataFrame =
+      dim: Int): DataFrame =
     embedTextImpl(df, idCols, textCol, dim, portableHash = true)
 
   private def embedTextImpl(
-      df: org.apache.spark.sql.DataFrame,
+      df: DataFrame,
       idCols: Seq[String],
       textCol: String,
       dim: Int,
-      portableHash: Boolean): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val ids = idCols.map(col)
-    // single-space split + drop-empties, matching the DuckDB oracle's
-    // string_split(trim(...), ' ') + non-empty filter exactly: the old
-    // \s+ regex produced a [''] token for whitespace-only text (spurious
-    // embedding row) and split on tabs/newlines the oracle keeps intact
-    val toks = df.select(
-      ids :+ explode(filter(split(trim(lower(col(textCol))), " "), t => t =!= ""))
-        .as("__tok"): _*)
-    val bucket =
-      if (portableHash) pmod(Dedup.h32(col("__tok")), lit(dim.toLong)).cast("int")
-      else pmod(hash(col("__tok")), lit(dim))
-    toks
-      .withColumn("__b", bucket)
-      .groupBy(ids :+ col("__b"): _*)
-      .agg(count(lit(1)).cast("double").as("__c"))
-      .groupBy(ids: _*)
-      .agg(
-        map_from_entries(collect_list(struct(col("__b"), col("__c")))).as("__m"),
-        // ‖counts‖² as a plain aggregate — one norm per row for free,
-        // instead of re-aggregating the dense array downstream
-        sum(col("__c") * col("__c")).as("__ss"))
-      .withColumn(
-        "embedding",
-        transform(
-          transform(
-            sequence(lit(0), lit(dim - 1)),
-            j => coalesce(element_at(col("__m"), j), lit(0.0))),
-          x => x / when(col("__ss") === 0.0d, lit(1.0d)).otherwise(sqrt(col("__ss")))))
-      .drop("__m", "__ss")
-      // Exchange barrier: materialize the dense vector BEFORE any consumer
-      // join. Without it CollapseProject inlines the (single-use, but
-      // expensive) normalize-from-map expression into the consumer, and a
-      // k-NN join then re-evaluates it once per candidate PAIR instead of
-      // once per point — the optimizer does not model join fan-out.
-      // (Observed 20.6 s → 1.7 s for the flagship kNN at sf0.1.) A tiny
-      // id-hash shuffle of the finished vectors; at 100 TB you'd persist
-      // this table anyway.
-      .repartition(ids: _*)
-  }
+      portableHash: Boolean): DataFrame =
+    df.groupBy(idCols.map(col): _*)
+      .agg(graft.functions.HashedBowAgg.hashedBow(trim(lower(col(textCol))), dim, portableHash)
+        .as("embedding"))
+      .filter(size(col("embedding")) > 0)
 }

@@ -562,9 +562,9 @@ object EventStream {
     val docs = spark.readStream.schema(docSchema).parquet(inputDir)
     // chunk+embed run as BATCH logic per micro-batch inside foreachBatch
     // (literally the batch pipeline's code path): the featurizer's
-    // group-bys would otherwise be chained stateful streaming
-    // aggregations — unbounded state and a watermark-correctness trap
-    // for a computation that is per-document pure anyway.
+    // group-by would otherwise be a stateful streaming aggregation —
+    // unbounded state and a watermark-correctness trap for a
+    // computation that is per-document pure anyway.
     // A real checkpointDir makes the stream RESTARTABLE: the file
     // source records processed files there, so a new query over the
     // same checkpoint resumes at the first unprocessed batch instead of

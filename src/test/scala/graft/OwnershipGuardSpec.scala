@@ -82,6 +82,12 @@ class OwnershipGuardSpec extends AnyFunSuite {
       "oracle k-means updates come from OracleSql.kmeansCtes")
   }
 
+  test("the hashed bag-of-words aggregate is called only from VectorOps.scala") {
+    owned(tokens("HashedBowAgg.hashedBow("), "/ops/VectorOps.scala:",
+      "every embedding goes through VectorOps.embedTextDistributed / embedTextPortable, " +
+        "so the tokenizer and the bucket rule cannot drift between callers")
+  }
+
   test("row_number() appears in the retrieval ops only inside Knn.scala (rankTopK)") {
     owned(tokens("row_number()"), "/ops/Knn.scala:",
       "every per-query top-k ranks through Knn.rankTopK, so the tie-break, the bigint rank " +

@@ -303,6 +303,32 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("featurizer: one id-hashed exchange, no Generate, distinct ids") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object walk extends AdaptiveSparkPlanHelper
+    for (emb <- Seq(
+        VectorOps.embedTextDistributed(Tables.documents(spark, sf0001), Seq("doc_id"), "text", 16),
+        VectorOps.embedTextPortable(Tables.documents(spark, sf0001), Seq("doc_id"), "text", 16))) {
+      // the distinct key is what keeps a later join against the vectors
+      // estimated at the id count, not at the text join's fan-out
+      val keys = emb.queryExecution.optimizedPlan.distinctKeys
+        .map(_.toSeq.flatMap(_.references.map(_.name)))
+      assert(keys.contains(Seq("doc_id")), s"ids lost as distinct keys (got $keys)")
+      emb.collect()
+      val plan = emb.queryExecution.executedPlan
+      val shuffles = walk.collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning }
+      assert(shuffles.size == 1 && (shuffles.head match {
+          case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)) == Seq("doc_id")
+          case _ => false
+        }), s"expected ONE exchange, hashed on doc_id (got $shuffles):\n$plan")
+      assert(walk.collect(plan) { case g: GenerateExec => g }.isEmpty,
+        s"the featurizer must not explode tokens into rows:\n$plan")
+    }
+  }
+
   test("weighted sample compiles to WindowGroupLimit (pre-shuffle top-k prune)") {
     val plan = formatted(TextAnalysis.weightedSample(
       Tables.documents(spark, sf0001).withColumn("w", lit(3L)),

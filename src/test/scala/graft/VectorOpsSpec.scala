@@ -140,17 +140,6 @@ class VectorOpsSpec extends SparkSpec {
       s"composed project->quantize must emit outDim codes with a saturated amax, got $r")
   }
 
-  test("embedTextDistributed matches per-row embedText") {
-    val df = Seq((1L, "a b c a"), (2L, "x y")).toDF("id", "text")
-    val perRow = df.select(col("id"), VectorOps.embedText(col("text"), 8).as("e"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    val dist = VectorOps.embedTextDistributed(df, Seq("id"), "text", 8)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    assert(perRow.keySet == dist.keySet)
-    for (k <- perRow.keySet)
-      assert(perRow(k).zip(dist(k)).forall { case (a, b) => math.abs(a - b) < 1e-12 }, s"id $k")
-  }
-
   test("dimDrift: shifted dimension flagged, identical dimension at zero, PSI nonnegative") {
     // 4 A-vectors and 4 B-vectors: dim 1 shifted by +10 in B, dim 2
     // identical across slices (same multiset => same buckets => psi 0)
