@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   *    `TakeOrderedAndProject` (partial per-partition top-k, no full sort).
   *  - V5 batch top-k: the reference's sequential per-row loop
   *    (`Qdrant/llm.py:93` calling `:20`) is semantically a k-NN JOIN —
-  *    here one declarative plan: broadcast the (small) query side, score,
-  *    and keep each query's top k by [[rankTopK]], the one per-query
-  *    ranking rule every batch search shares.
+  *    here one declarative plan: broadcast the (small) query side, then
+  *    score and keep each query's top k by [[scoreTopK]], the one scored
+  *    top-k every batch vector search shares.
   *
   * Determinism (V6): Qdrant's tie order is undefined; we strengthen to a
   * total order `(score DESC, point_id ASC)` so results are
@@ -41,8 +41,10 @@ object Knn {
     * [[SimilaritySearch.prototypicalityPrune]]'s per-cell quota filters
     * after a full per-group sort.
     *
-    * Not routed here: single-query top-k ([[topK]], [[recommend]]) plans
-    * as `orderBy.limit` → `TakeOrderedAndProject` with no window;
+    * Not routed here directly: a cosine / dot vector search ranks
+    * through [[scoreTopK]], the scored form of this rule. Not routed here
+    * at all: single-query top-k ([[topK]], [[recommend]]) plans as
+    * `orderBy.limit` → `TakeOrderedAndProject` with no window;
     * [[SimilaritySearch.nearestCells]] ranks cells inside its native
     * kernel; `row_number` windows that number rows rather than cut
     * them (shard positions, batch indices, span cuts) are not top-k; and
@@ -57,6 +59,28 @@ object Knn {
     df.withColumn(rankCol,
         row_number().over(Window.partitionBy(partitionBy: _*).orderBy(orderBy: _*)).cast("long"))
       .filter(col(rankCol) <= k)
+
+  /** The ONE scored top-k: score every pair row of `pairs` (a query
+    * vector column and a point vector column side by side) by `metric`
+    * into `scoreCol`, and keep each `partitionBy` group's top `k` by the
+    * one total order — score DESC (NULLs last), then `pointIdCol` ASC —
+    * through [[rankTopK]]. `k` is an `Int`, so the cut is always a
+    * literal and always plans as `WindowGroupLimit`. Every exact, IVF
+    * and re-rank search ranks here; the Hamming shortlists and ADC keep
+    * their own scores and call [[rankTopK]] directly.
+    */
+  def scoreTopK(pairs: DataFrame, queryVecCol: String, pointVecCol: String, pointIdCol: String,
+      k: Int, metric: String = "cosine", partitionBy: Seq[Column] = Seq(col("query_id")),
+      scoreCol: String = "score", rankCol: String = "rank"): DataFrame = {
+    val score = metric match {
+      case "cosine" => VectorOps.cosine(col(queryVecCol), col(pointVecCol))
+      // dot ≡ cosine when both sides are L2-normalized — 1 array pass vs 3
+      case "dot" => VectorOps.dot(col(queryVecCol), col(pointVecCol))
+      case other => throw new IllegalArgumentException(s"unknown metric: $other")
+    }
+    rankTopK(pairs.withColumn(scoreCol, score), partitionBy,
+      Seq(desc(scoreCol), col(pointIdCol).asc), lit(k), rankCol)
+  }
 
   /** V4: score every point against one literal query vector, keep top-k. */
   def topK(points: DataFrame, vecCol: String, idCol: String, queryVec: Column, k: Int): DataFrame =
@@ -81,14 +105,7 @@ object Knn {
       queries.select(
         col(queryIdCol).as("query_id"),
         col(queryVecCol).as("__qvec")))
-    val scoreExpr = metric match {
-      case "cosine" => VectorOps.cosine(col("__qvec"), col(pointVecCol))
-      // dot ≡ cosine when both sides are L2-normalized — 1 array pass vs 3
-      case "dot" => VectorOps.dot(col("__qvec"), col(pointVecCol))
-      case other => throw new IllegalArgumentException(s"unknown metric: $other")
-    }
-    rankTopK(points.crossJoin(q).withColumn("score", scoreExpr),
-        Seq(col("query_id")), Seq(desc("score"), col(pointIdCol).asc), lit(k), "rank")
+    scoreTopK(points.crossJoin(q), "__qvec", pointVecCol, pointIdCol, k, metric)
       .drop("__qvec")
   }
 
@@ -181,8 +198,9 @@ object Knn {
     * the best `hitsPerGroup` hits of each payload group, with groups
     * ranked by their best hit and only the top `groupsK` kept —
     * "the most relevant document per source/author/domain" without a
-    * second query. Two stacked [[rankTopK]] cuts: per-(query, group)
-    * state is `hitsPerGroup` rows, per-query state `groupsK` groups.
+    * second query. Two stacked cuts, the [[scoreTopK]] hits and the
+    * [[rankTopK]] group cut: per-(query, group) state is
+    * `hitsPerGroup` rows, per-query state `groupsK` groups.
     *
     * Output: `(query_id, group_rank, group, hit_rank, point_id,
     * score)`.
@@ -201,14 +219,13 @@ object Knn {
       s"need groupsK ($groupsK) >= 1 and hitsPerGroup ($hitsPerGroup) >= 1")
     val q = broadcast(
       queries.select(col(queryIdCol).as("query_id"), col(queryVecCol).as("__qvec")))
-    val hits = rankTopK(
+    val hits = scoreTopK(
       points
         .select(col(pointIdCol).as("point_id"), col(pointVecCol).as("__pvec"),
           col(groupCol).as("group"))
-        .crossJoin(q)
-        .withColumn("score", VectorOps.cosine(col("__qvec"), col("__pvec"))),
-      Seq(col("query_id"), col("group")), Seq(desc("score"), col("point_id").asc),
-      lit(hitsPerGroup), "hit_rank")
+        .crossJoin(q),
+      "__qvec", "__pvec", "point_id", hitsPerGroup,
+      partitionBy = Seq(col("query_id"), col("group")), rankCol = "hit_rank")
     // groups ranked by their BEST hit; ties by group value
     val best = rankTopK(
         hits.filter(col("hit_rank") === 1)
@@ -224,7 +241,7 @@ object Knn {
     * `k` HIGHEST-scoring points whose label differs from the anchor's
     * — the close-but-wrong examples an embedding model learns the most
     * from (random negatives are trivially separable; the hardest ones
-    * define the decision boundary). Same broadcast + [[rankTopK]]
+    * define the decision boundary). Same broadcast + [[scoreTopK]]
     * shape as [[knnJoin]], with the label inequality as a join-side
     * filter: per-anchor state stays k rows, and at 100 TB the corpus
     * side still never moves. Label here is any supervision proxy —
@@ -247,12 +264,8 @@ object Knn {
       col(anchorIdCol).as("query_id"),
       col(anchorVecCol).as("__qvec"),
       col(anchorLabelCol).as("__qlabel")))
-    rankTopK(
-        points
-          .crossJoin(a)
-          .filter(col(pointLabelCol) =!= col("__qlabel"))
-          .withColumn("score", VectorOps.cosine(col("__qvec"), col(pointVecCol))),
-        Seq(col("query_id")), Seq(desc("score"), col(pointIdCol).asc), lit(k), "rank")
+    scoreTopK(points.crossJoin(a).filter(col(pointLabelCol) =!= col("__qlabel")),
+        "__qvec", pointVecCol, pointIdCol, k)
       .select(col("query_id"), col("rank"), col(pointIdCol).as("point_id"),
         col("score"), col(pointLabelCol).as("neg_label"))
   }

@@ -154,26 +154,6 @@ object Pq {
       .select(col("query_id"), col("rank"), col("point_id"), col("score"))
   }
 
-  /** Exact-cosine re-rank of a `(query_id, point_id)` candidate set —
-    * raw vectors are fetched ONLY for candidates (an equi-join on
-    * point_id), queries broadcast. [[Knn.knnJoin]] output conventions.
-    */
-  private def rerankExact(cand: DataFrame, queries: DataFrame,
-      queryIdCol: String, vecCol: String,
-      points: DataFrame, pointIdCol: String, k: Int): DataFrame = {
-    val q = broadcast(queries.select(
-      col(queryIdCol).as("query_id"), col(vecCol).as("__qvec")))
-    val raw = points.select(col(pointIdCol).as("point_id"), col(vecCol).as("__pvec"))
-    Knn.rankTopK(
-        cand
-          .join(raw, "point_id")
-          .join(q, "query_id")
-          .withColumn("__score", VectorOps.cosine(col("__qvec"), col("__pvec"))),
-        Seq(col("query_id")), Seq(desc("__score"), col("point_id").asc), lit(k), "rank")
-      .select(col("query_id"), col("rank"), col("point_id"),
-        round(col("__score"), 6).as("score"))
-  }
-
   /** ADC top-k over an encoded corpus: approximate cosine
     * `Σ_s dot(q_s, c) / (‖q‖ · sqrt(Σ_s ‖c‖²))` via the broadcast
     * LUT join described above. Output `(query_id, rank, point_id,
@@ -188,17 +168,20 @@ object Pq {
     * et al. §V: ADC orders a candidate shortlist from codes alone,
     * then the top `shortlist` candidates are re-scored against their
     * raw vectors). Compression applies to the 99% of the corpus the
-    * shortlist excludes; the raw-vector fetch is an equi-join on
-    * point_id touching `shortlist × |queries|` rows, so at 100 TB the
-    * full-precision column is read for a vanishing fraction of points
-    * (in columnar storage, a row-group-pruned fetch). On the harness
+    * shortlist excludes; the raw-vector fetch is
+    * [[SimilaritySearch.fetchAndRerank]], a broadcast of the candidate
+    * ids that the point table streams through, touching
+    * `shortlist × |queries|` rows, so at 100 TB the full-precision
+    * column is read for a vanishing fraction of points (in columnar
+    * storage, a row-group-pruned fetch). On the harness
     * embeddings (noise-dominated: exact top-5 cosine ≈ 0.33 vs ≈ 0.2
     * background) pure ADC recall@5 is 0.16 at m=8/k=16; re-ranking an
     * ADC shortlist of 25/50/100 lifts it to 0.52/0.68/0.86 — the
     * shortlist size is the recall knob, and PqSpec pins the floor.
     *
     * Output `(query_id, rank, point_id, score)` with EXACT cosine
-    * scores (same rounding/tie rules as [[Knn.knnJoin]] outputs).
+    * scores, ranked unrounded by the [[Knn.knnJoin]] total order, then
+    * rounded to 6 dp.
     */
   def adcRerank(queries: DataFrame, queryIdCol: String, vecCol: String,
       points: DataFrame, pointIdCol: String,
@@ -207,7 +190,8 @@ object Pq {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
     val cand = adcTopK(queries, queryIdCol, vecCol, codebooks, codes, m, dsub, shortlist)
       .select(col("query_id"), col("point_id"))
-    rerankExact(cand, queries, queryIdCol, vecCol, points, pointIdCol, k)
+    SimilaritySearch.fetchAndRerank(cand, queries, points, queryIdCol, pointIdCol, vecCol, k)
+      .select(col("query_id"), col("rank"), col("point_id"), round(col("score"), 6).as("score"))
   }
 
   /** PQ-encode with the point's coarse bucket carried through the same
@@ -241,6 +225,7 @@ object Pq {
     val lut = buildLut(queries, queryIdCol, vecCol, codebooks, m, dsub, Some(queryBucket))
     val cand = adcRank(lut, codes, bucketed = true, shortlist)
       .select(col("query_id"), col("point_id"))
-    rerankExact(cand, queries, queryIdCol, vecCol, points, pointIdCol, k)
+    SimilaritySearch.fetchAndRerank(cand, queries, points, queryIdCol, pointIdCol, vecCol, k)
+      .select(col("query_id"), col("rank"), col("point_id"), round(col("score"), 6).as("score"))
   }
 }

@@ -86,11 +86,7 @@ object SimilaritySearch {
     val q0 = queries
       .select(col(queryIdCol).as("query_id"), col(vecCol).as("__qvec"))
     val q = explodeProbes(q0, bucketCol, bits, nprobe)
-    Knn.rankTopK(
-        bucketedPoints
-          .join(q, bucketCol)
-          .withColumn("score", VectorOps.cosine(col("__qvec"), col(vecCol))),
-        Seq(col("query_id")), Seq(desc("score"), col(pointIdCol).asc), lit(k), "rank")
+    Knn.scoreTopK(bucketedPoints.join(q, bucketCol), "__qvec", vecCol, pointIdCol, k)
       .select(col("query_id"), col("rank"), col(pointIdCol).as("point_id"), col("score"))
   }
 
@@ -339,10 +335,7 @@ object SimilaritySearch {
     val probes = nearestCells(normalized(queries, queryIdCol, vecCol), cents, Nil,
         CellMetric.Cosine, nprobe)
       .select(col("__id").as("query_id"), col("__v").as("__qv"), col("cid"))
-    Knn.rankTopK(
-        assignedPts.join(probes, "cid")
-          .withColumn("score", VectorOps.cosine(col("__qv"), col("__pv"))),
-        Seq(col("query_id")), Seq(desc("score"), col("point_id")), lit(k), "rank")
+    Knn.scoreTopK(assignedPts.join(probes, "cid"), "__qv", "__pv", "point_id", k)
       .select(col("query_id"), col("rank"), col("point_id"), col("score"))
   }
 
@@ -509,7 +502,7 @@ object SimilaritySearch {
     * components are merely informative. Cost shape at 100 TB: the
     * corpus-wide pair pass scores a NARROW prefix table (`prefixDim /
     * dim` of the vector bytes; per-query state is `shortlist` rows,
-    * [[Knn.rankTopK]]), and the full-width cosine runs
+    * [[Knn.scoreTopK]]), and the full-width cosine runs
     * only on `shortlist` rows per query, fetched by id. With
     * `prefixDim = dim` and `shortlist >=` corpus size
     * this degrades to exact k-NN (pinned in SimilaritySpec).
@@ -538,28 +531,28 @@ object SimilaritySearch {
       prefixDim, shortlist, k)
   }
 
-  /** Shared phase 2 of the two-phase compressed-search shape
-    * ([[prefixRerankTopK]], [[bqRerankTopK]]): fetch raw full-width
-    * vectors BY ID for the shortlisted `(query_id, point_id)` pairs
-    * only (broadcast id joins — the point table streams through one
-    * hash probe, the wide column never enters a pair join), score with
-    * exact cosine, keep top-k per query with the standard
-    * `(score DESC, point_id ASC)` total order. One definition so a fix
-    * to this load-bearing shape cannot land in only one path.
+  /** The ONE exact re-rank, phase 2 of every two-phase search: the
+    * prefix, BQ and IVF-BQ shortlists here and the PQ shortlists of
+    * `Pq.adcRerank` and `Pq.ivfpqRerank`. Fetch raw full-width vectors
+    * BY ID for the shortlisted `(query_id, point_id)` pairs only
+    * (broadcast id joins — the point table streams through one hash
+    * probe, the wide column never enters a pair join nor a broadcast),
+    * then [[Knn.scoreTopK]] with exact cosine. Output `(query_id, rank,
+    * point_id, score)`, score unrounded; the PQ callers round it at
+    * their own select. One definition so a fix to this load-bearing
+    * shape cannot land in only one path.
     */
-  private def fetchAndRerank(shortIds: DataFrame, queries: DataFrame,
+  private[ops] def fetchAndRerank(shortIds: DataFrame, queries: DataFrame,
       points: DataFrame, queryIdCol: String, pointIdCol: String,
-      vecCol: String, k: Int): DataFrame = {
-    Knn.rankTopK(
+      vecCol: String, k: Int): DataFrame =
+    Knn.scoreTopK(
         points
           .select(col(pointIdCol).as("point_id"), col(vecCol).as("__pvec"))
           .join(broadcast(shortIds), Seq("point_id"))
           .join(broadcast(queries.select(col(queryIdCol).as("query_id"),
-            col(vecCol).as("__qvec"))), Seq("query_id"))
-          .withColumn("score", VectorOps.cosine(col("__qvec"), col("__pvec"))),
-        Seq(col("query_id")), Seq(desc("score"), col("point_id").asc), lit(k), "rank")
+            col(vecCol).as("__qvec"))), Seq("query_id")),
+        "__qvec", "__pvec", "point_id", k)
       .select(col("query_id"), col("rank"), col("point_id"), col("score"))
-  }
 
   /** Pack the sign bit of each vector component into 32-bit words
     * (`ARRAY<BIGINT>`, `ceil(dim/32)` entries, bit `31 - (i mod 32)` of
@@ -580,18 +573,11 @@ object SimilaritySearch {
   }
 
   /** Hamming distance between two packed signatures: popcount of the
-    * per-word XOR, summed — 2 instructions per 32 components. The HOF
-    * form works for any width; [[hammingUnrolled]] is the hot-path
-    * variant when the word count is known at plan time (zip_with /
-    * aggregate lambdas evaluate interpreted — measured 2x slower per
-    * pair than the unrolled builtins, which stay in codegen).
-    */
-  def hamming(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
-      lit(0L), (acc, x) => acc + x)
-
-  /** [[hamming]] with the word loop unrolled for a known `dim` — pure
-    * codegen builtins (element_at / xor / bit_count), no lambdas.
+    * per-word XOR, summed — 2 instructions per 32 components, with the
+    * word loop unrolled for a known `dim`: pure codegen builtins
+    * (element_at / xor / bit_count), no lambdas (a zip_with / aggregate
+    * form evaluates interpreted — measured 2x slower per pair;
+    * SimilaritySpec keeps it as the reference).
     */
   def hammingUnrolled(a: Column, b: Column, dim: Int): Column =
     (0 until (dim + 31) / 32)
@@ -715,13 +701,9 @@ object SimilaritySearch {
     val q = broadcast(queries.select(
       col(queryIdCol).as("query_id"),
       slice(col(vecCol), 1, prefixDim).as("__qpre")))
-    val shortIds = Knn.rankTopK(
-        prePoints
-          .select(col(pointIdCol).as("point_id"), col(preCol).as("__ppre"))
-          .crossJoin(q)
-          .withColumn("__pre_score", VectorOps.cosine(col("__qpre"), col("__ppre"))),
-        Seq(col("query_id")), Seq(desc("__pre_score"), col("point_id").asc), lit(shortlist),
-        "__prank")
+    val shortIds = Knn.scoreTopK(
+        prePoints.select(col(pointIdCol).as("point_id"), col(preCol).as("__ppre")).crossJoin(q),
+        "__qpre", "__ppre", "point_id", shortlist, scoreCol = "__pre_score", rankCol = "__prank")
       .select(col("query_id"), col("point_id"))
     fetchAndRerank(shortIds, queries, points, queryIdCol, pointIdCol, vecCol, k)
   }

@@ -64,31 +64,19 @@ object VectorOps {
             transform(t.getField("d"), x => x / safe)
           }))))
 
-  /** Dot product a·b — native codegen Expression (graft.functions); the
-    * declarative equivalent `aggregate(zip_with(a,b,*), 0, +)` is kept in
-    * [[dotHof]] as the reference formulation (bit-identical results, the
-    * oracle SQL mirrors it).
+  /** Dot product a·b — native codegen Expression (graft.functions),
+    * bit-identical to the declarative `aggregate(zip_with(a,b,*), 0, +)`
+    * the oracle SQL mirrors (PropertySpec keeps that form as the
+    * reference).
     */
   def dot(a: Column, b: Column): Column = graft.functions.VectorExpressions.dot(a, b)
 
-  /** a·b via higher-order built-ins — reference/oracle formulation. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(toDoubleArray(a), toDoubleArray(b), (x, y) => x * y),
-      lit(0.0),
-      (acc, x) => acc + x)
-
   /** Cosine similarity a·b / (‖a‖‖b‖); 0.0 when either norm is zero
     * (mirrors the zero-vector guard — no NaN escapes). Native codegen
-    * Expression, same operation order as [[cosineHof]].
+    * Expression, same operation order as the declarative form
+    * PropertySpec keeps as the reference.
     */
   def cosine(a: Column, b: Column): Column = graft.functions.VectorExpressions.cosine(a, b)
-
-  /** Cosine via higher-order built-ins — reference/oracle formulation. */
-  def cosineHof(a: Column, b: Column): Column = {
-    val denom = l2Norm(a) * l2Norm(b)
-    when(denom === 0.0d, lit(0.0d)).otherwise(dotHof(a, b) / denom)
-  }
 
   /** Symmetric int8 scalar quantization: q[i] = round(x[i] / s) with
     * s = max|x| / 127 (zero vector → all-zero codes). 4× storage saving

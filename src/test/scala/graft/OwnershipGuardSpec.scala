@@ -95,6 +95,29 @@ class OwnershipGuardSpec extends AnyFunSuite {
       hit => retrievalOps.exists(hit.contains))
   }
 
+  test("a cosine / dot score reaches rankTopK in Knn, SimilaritySearch and Pq only " +
+      "inside scoreTopK") {
+    // judged per member def, so a score built in a `val` and passed on
+    // counts as much as one written inside the rankTopK call
+    val scoring = tokens("VectorOps.cosine(", "VectorOps.dot(")
+    val scoredCuts = for {
+      op <- Seq("Knn", "SimilaritySearch", "Pq")
+      (name, body) <- memberDefs(s"src/main/scala/graft/ops/$op.scala")
+      if body.contains("rankTopK(") && scoring.findFirstIn(body).isDefined
+    } yield s"$op.$name"
+    // both rank by a per-cell centroid score, not a query's: one by a
+    // per-row ASC quota, the other through cell windows before its cut
+    val exceptions = Set("SimilaritySearch.prototypicalityPrune", "SimilaritySearch.clusterCards")
+    val offenders = scoredCuts.filterNot(exceptions) diff Seq("Knn.scoreTopK")
+    assert(scoredCuts.contains("Knn.scoreTopK") && offenders.isEmpty,
+      "every exact, IVF and re-rank search scores and ranks through Knn.scoreTopK, so the " +
+        "metric, the total order and the top-k shape change in one place (exceptions: " +
+        "prototypicalityPrune keeps the hardest points per cell under a per-row quota, and " +
+        "clusterCards runs cell windows between its score and its cut); scored cuts " +
+        s"outside it: ${offenders.mkString(", ")}" +
+        (if (scoredCuts.contains("Knn.scoreTopK")) "" else " (Knn.scoreTopK gone)"))
+  }
+
   test("no oracle window is hand-ordered by ${sqlCos( or ${sqlDot(") {
     absent("""OVER \([^()]*ORDER BY \$\{sql(?:Cos|Dot)\(""".r,
       "oracle rankings go through OracleSql.topKSql / exactKnnSql")
@@ -117,12 +140,29 @@ object OwnershipGuardSpec {
       }
     for {
       f <- sources(root)
-      code = java.nio.file.Files.readAllLines(f.toPath).asScala.map { line =>
-        val t = line.trim
-        if (t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")) "" else line
-      }.mkString("\n")
+      code = codeOf(f)
       m <- pattern.findAllMatchIn(code)
     } yield s"${f.getPath}:${code.take(m.start).count(_ == '\n') + 1}"
+  }
+
+  /** A source file with its comment lines blanked. */
+  private def codeOf(f: java.io.File): String =
+    java.nio.file.Files.readAllLines(f.toPath).asScala.map { line =>
+      val t = line.trim
+      if (t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")) "" else line
+    }.mkString("\n")
+
+  /** `(name, code)` of each member def of the top-level object in `path`:
+    * a def's code runs to the next member def (nested defs stay inside).
+    */
+  def memberDefs(path: String): Seq[(String, String)] = {
+    val f = new java.io.File(path)
+    assert(f.isFile, s"expected a source file at ${f.getAbsolutePath} (run tests from the repo root)")
+    val code = codeOf(f)
+    val starts = """(?m)^  (?:(?:private|protected)(?:\[\w+\])? )?def (\w+)""".r
+      .findAllMatchIn(code).toSeq
+    starts.zip(starts.drop(1).map(_.start) :+ code.length)
+      .map { case (m, end) => m.group(1) -> code.substring(m.start, end) }
   }
 
   def codeHits(token: String): Seq[String] = codeHits(Pattern.quote(token).r)

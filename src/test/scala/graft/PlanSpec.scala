@@ -151,6 +151,34 @@ class PlanSpec extends SparkSpec {
       s"the per-query LUT must broadcast into the code join:\n$plan")
   }
 
+  test("PQ re-rank: the raw-vector fetch broadcasts the candidate ids, never the point vectors") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.types.ArrayType
+    object walk extends AdaptiveSparkPlanHelper
+    // The shortlist is shortlist × |queries| ids; the point table is the
+    // corpus. The fetch must stream the points through a broadcast of the
+    // ids (SimilaritySearch.fetchAndRerank): a broadcast that carries
+    // point ids beside a vector column is the point table shipped whole
+    // to every task, and at scale it does not fit.
+    val emb = Tables.embeddings(spark, sf0001)
+    val points = emb.filter(col("vec_id") >= 10).withColumnRenamed("vec_id", "point_id")
+    val cb = Pq.trainCodebooks(points, "point_id", "embedding", dim = 64, m = 8, kCodes = 8,
+      iters = 1)
+    val df = Pq.adcRerank(emb.filter(col("vec_id") < 5), "vec_id", "embedding", points,
+      "point_id", cb, Pq.encode(points, "point_id", "embedding", cb, m = 8, dsub = 8),
+      m = 8, dsub = 8, shortlist = 20, k = 5)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val broadcasts = walk.collect(plan) { case b: BroadcastExchangeExec => b.output }
+    assert(broadcasts.exists(_.map(_.name) == Seq("query_id", "point_id")),
+      s"the candidate ids are not broadcast into the raw-vector fetch:\n$plan")
+    val pointVectors = broadcasts.filter(out =>
+      out.exists(_.name == "point_id") && out.exists(_.dataType.isInstanceOf[ArrayType]))
+    assert(pointVectors.isEmpty,
+      s"a broadcast carries point vectors (${pointVectors.map(_.map(_.name))}):\n$plan")
+  }
+
   test("BQ search: signature pack is materialized behind an exchange, never inside the pair loop") {
     // The load-bearing boundary of bqRerankTopK (SCALING.md round 11):
     // whole-stage codegen evaluates stream-side projections lazily
@@ -291,7 +319,19 @@ class PlanSpec extends SparkSpec {
         points.withColumn("b", SimilaritySearch.signBucket("embedding", 4)),
         "vec_id", "point_id", "embedding", "b", bits = 4, k = 3),
       "bqRerankTopK" -> SimilaritySearch.bqRerankTopK(queries, points, "vec_id", "point_id",
-        "embedding", dim = 64, shortlist = 20, k = 5))
+        "embedding", dim = 64, shortlist = 20, k = 5),
+      "prefixRerankTopK" -> SimilaritySearch.prefixRerankTopK(queries, points, "vec_id",
+        "point_id", "embedding", prefixDim = 16, shortlist = 20, k = 5),
+      "ivfBqRerankTopK" -> SimilaritySearch.ivfBqRerankTopK(queries,
+        points.select(col("point_id"), SimilaritySearch.signBucket("embedding", 4).as("b"),
+          SimilaritySearch.packSignBits(col("embedding"), 64).as("sig")),
+        points, "vec_id", "point_id", "embedding", "b", "sig", bits = 4, dim = 64, nprobe = 2,
+        shortlist = 20, k = 5),
+      "ivfpqRerank" -> Pq.ivfpqRerank(queries, "vec_id", "embedding",
+        SimilaritySearch.signBucket("embedding", 4), points, "point_id", cb,
+        Pq.encodeBucketed(points, "point_id", "embedding", cb, m = 8, dsub = 8,
+          SimilaritySearch.signBucket("embedding", 4)),
+        m = 8, dsub = 8, shortlist = 20, k = 5))
     for ((name, df) <- routed) {
       df.collect()
       val plan = df.queryExecution.executedPlan

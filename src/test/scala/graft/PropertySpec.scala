@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -13,6 +14,23 @@ class PropertySpec extends SparkSpec {
 
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))
+
+  /** a·b via higher-order built-ins — the reference formulation the
+    * native `VectorOps.dot` must reproduce bit for bit.
+    */
+  private def dotHof(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(VectorOps.toDoubleArray(a), VectorOps.toDoubleArray(b), (x, y) => x * y),
+      lit(0.0),
+      (acc, x) => acc + x)
+
+  /** Cosine via higher-order built-ins — the reference formulation of
+    * `VectorOps.cosine` (0.0 when either norm is zero).
+    */
+  private def cosineHof(a: Column, b: Column): Column = {
+    val denom = VectorOps.l2Norm(a) * VectorOps.l2Norm(b)
+    when(denom === 0.0d, lit(0.0d)).otherwise(dotHof(a, b) / denom)
+  }
 
   private val vecGen: Gen[Array[Float]] =
     Gen.choose(1, 16).flatMap(d =>
@@ -62,9 +80,9 @@ class PropertySpec extends SparkSpec {
     val rows = df.as("a").crossJoin(df.as("b"))
       .select(
         VectorOps.dot(col("a.v"), col("b.v")).as("dot_native"),
-        VectorOps.dotHof(col("a.v"), col("b.v")).as("dot_hof"),
+        dotHof(col("a.v"), col("b.v")).as("dot_hof"),
         VectorOps.cosine(col("a.v"), col("b.v")).as("cos_native"),
-        VectorOps.cosineHof(col("a.v"), col("b.v")).as("cos_hof"),
+        cosineHof(col("a.v"), col("b.v")).as("cos_hof"),
         col("a.id"), col("b.id"))
       .collect()
     def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.ops._
 
@@ -8,6 +9,14 @@ import graft.ops._
   * against).
   */
 class SimilaritySpec extends SparkSpec {
+
+  /** Hamming distance between packed signatures via higher-order
+    * built-ins — any width; the reference for the unrolled
+    * `SimilaritySearch.hammingUnrolled`.
+    */
+  private def hamming(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
+      lit(0L), (acc, x) => acc + x)
 
   test("ivf recall@3 vs exact kNN is reported and sane; hits subset of bucket") {
     val emb = Tables.embeddings(spark, sf0001)
@@ -322,7 +331,7 @@ class SimilaritySpec extends SparkSpec {
       SimilaritySearch.packSignBits(col("a"), 33).as("sa"),
       SimilaritySearch.packSignBits(col("b"), 33).as("sb"))
     val row = sig.select(
-      SimilaritySearch.hamming(col("sa"), col("sb")).as("h"),
+      hamming(col("sa"), col("sb")).as("h"),
       SimilaritySearch.hammingUnrolled(col("sa"), col("sb"), 33).as("hu"),
       element_at(col("sa"), 1).as("w0"), element_at(col("sa"), 2).as("w1")).first()
     assert(row.getAs[Long]("h") == 2L, "exactly the two flipped dims must differ")
@@ -332,7 +341,7 @@ class SimilaritySpec extends SparkSpec {
     // word 1: only dim 32 (bit 31) set
     assert(row.getAs[Long]("w1") == 0x80000000L)
     // self-hamming is zero
-    assert(sig.select(SimilaritySearch.hamming(col("sa"), col("sa"))).first().getLong(0) == 0L)
+    assert(sig.select(hamming(col("sa"), col("sa"))).first().getLong(0) == 0L)
   }
 
   test("bqRerankTopK degrades to exact kNN at full shortlist; scores are full-width") {
