@@ -62,7 +62,7 @@ object Knn {
 
   /** The ONE scored top-k: score every pair row of `pairs` (a query
     * vector column and a point vector column side by side) by `metric`
-    * into `scoreCol`, and keep each `partitionBy` group's top `k` by the
+    * into `score`, and keep each `partitionBy` group's top `k` by the
     * one total order — score DESC (NULLs last), then `pointIdCol` ASC —
     * through [[rankTopK]]. `k` is an `Int`, so the cut is always a
     * literal and always plans as `WindowGroupLimit`. Every exact, IVF
@@ -71,15 +71,15 @@ object Knn {
     */
   def scoreTopK(pairs: DataFrame, queryVecCol: String, pointVecCol: String, pointIdCol: String,
       k: Int, metric: String = "cosine", partitionBy: Seq[Column] = Seq(col("query_id")),
-      scoreCol: String = "score", rankCol: String = "rank"): DataFrame = {
+      rankCol: String = "rank"): DataFrame = {
     val score = metric match {
       case "cosine" => VectorOps.cosine(col(queryVecCol), col(pointVecCol))
       // dot ≡ cosine when both sides are L2-normalized — 1 array pass vs 3
       case "dot" => VectorOps.dot(col(queryVecCol), col(pointVecCol))
       case other => throw new IllegalArgumentException(s"unknown metric: $other")
     }
-    rankTopK(pairs.withColumn(scoreCol, score), partitionBy,
-      Seq(desc(scoreCol), col(pointIdCol).asc), lit(k), rankCol)
+    rankTopK(pairs.withColumn("score", score), partitionBy,
+      Seq(desc("score"), col(pointIdCol).asc), lit(k), rankCol)
   }
 
   /** V4: score every point against one literal query vector, keep top-k. */

@@ -703,7 +703,7 @@ object SimilaritySearch {
       slice(col(vecCol), 1, prefixDim).as("__qpre")))
     val shortIds = Knn.scoreTopK(
         prePoints.select(col(pointIdCol).as("point_id"), col(preCol).as("__ppre")).crossJoin(q),
-        "__qpre", "__ppre", "point_id", shortlist, scoreCol = "__pre_score", rankCol = "__prank")
+        "__qpre", "__ppre", "point_id", shortlist)
       .select(col("query_id"), col("point_id"))
     fetchAndRerank(shortIds, queries, points, queryIdCol, pointIdCol, vecCol, k)
   }

@@ -42,14 +42,14 @@ class ScoreTopKSpec extends SparkSpec {
   }
 
   /** The inline form, kept as the reference. */
-  private def reference(metric: String, k: Int, partitionBy: Seq[Column], scoreCol: String,
-      rankCol: String): DataFrame = {
+  private def reference(metric: String, k: Int, partitionBy: Seq[Column],
+      rankCol: String = "rank"): DataFrame = {
     val score = metric match {
       case "cosine" => VectorOps.cosine(col("qv"), col("pv"))
       case "dot" => VectorOps.dot(col("qv"), col("pv"))
     }
-    val w = Window.partitionBy(partitionBy: _*).orderBy(desc(scoreCol), col("point_id").asc)
-    pairs.withColumn(scoreCol, score)
+    val w = Window.partitionBy(partitionBy: _*).orderBy(desc("score"), col("point_id").asc)
+    pairs.withColumn("score", score)
       .withColumn(rankCol, row_number().over(w).cast("long"))
       .filter(col(rankCol) <= k)
   }
@@ -67,7 +67,7 @@ class ScoreTopKSpec extends SparkSpec {
       "k beyond the group") {
     for (metric <- Seq("cosine", "dot"); k <- Seq(1, 3, 50))
       assertSame(Knn.scoreTopK(pairs, "qv", "pv", "point_id", k, metric),
-        reference(metric, k, Seq(col("query_id")), "score", "rank"), s"$metric k=$k")
+        reference(metric, k, Seq(col("query_id"))), s"$metric k=$k")
     // NULL scores rank last: the NULL point is each scored query's last hit
     val all = Knn.scoreTopK(pairs, "qv", "pv", "point_id", 50)
     val nullRanks = all.filter(col("point_id") === 3L && col("qv").isNotNull)
@@ -81,16 +81,14 @@ class ScoreTopKSpec extends SparkSpec {
       assertSame(
         Knn.scoreTopK(pairs, "qv", "pv", "point_id", k,
           partitionBy = Seq(col("query_id"), col("grp")), rankCol = "hit_rank"),
-        reference("cosine", k, Seq(col("query_id"), col("grp")), "score", "hit_rank"),
+        reference("cosine", k, Seq(col("query_id"), col("grp")), "hit_rank"),
         s"(query, group) k=$k")
   }
 
-  test("one row per partition, under the prefix shortlist's score and rank names: the inline rows") {
+  test("one row per partition: the inline rows") {
     val byPair = Seq(col("query_id"), col("point_id"))
     for (metric <- Seq("cosine", "dot"))
-      assertSame(
-        Knn.scoreTopK(pairs, "qv", "pv", "point_id", 1, metric, partitionBy = byPair,
-          scoreCol = "__pre_score", rankCol = "__prank"),
-        reference(metric, 1, byPair, "__pre_score", "__prank"), s"one row per partition, $metric")
+      assertSame(Knn.scoreTopK(pairs, "qv", "pv", "point_id", 1, metric, partitionBy = byPair),
+        reference(metric, 1, byPair), s"one row per partition, $metric")
   }
 }
