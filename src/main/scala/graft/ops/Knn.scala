@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.ScoredTopKAgg
+
 /** Exact top-k vector search — the reference's retrieval core.
   *
   *  - V4 single-query top-k: `Qdrant/VectorDB/Database.py:22-28`
@@ -41,10 +43,12 @@ object Knn {
     * [[SimilaritySearch.prototypicalityPrune]]'s per-cell quota filters
     * after a full per-group sort.
     *
-    * Not routed here directly: a cosine / dot vector search ranks
-    * through [[scoreTopK]], the scored form of this rule. Not routed here
-    * at all: single-query top-k ([[topK]], [[recommend]]) plans as
-    * `orderBy.limit` → `TakeOrderedAndProject` with no window;
+    * Not routed here at all: a cosine / dot vector search ranks through
+    * [[scoreTopK]], whose heap aggregate
+    * ([[graft.functions.ScoredTopKAgg]]) keeps this rule's order with
+    * no window and no sort; single-query top-k ([[topK]],
+    * [[recommend]]) plans as `orderBy.limit` → `TakeOrderedAndProject`
+    * with no window;
     * [[SimilaritySearch.nearestCells]] ranks cells inside its native
     * kernel; `row_number` windows that number rows rather than cut
     * them (shard positions, batch indices, span cuts) are not top-k; and
@@ -63,11 +67,23 @@ object Knn {
   /** The ONE scored top-k: score every pair row of `pairs` (a query
     * vector column and a point vector column side by side) by `metric`
     * into `score`, and keep each `partitionBy` group's top `k` by the
-    * one total order — score DESC (NULLs last), then `pointIdCol` ASC —
-    * through [[rankTopK]]. `k` is an `Int`, so the cut is always a
-    * literal and always plans as `WindowGroupLimit`. Every exact, IVF
-    * and re-rank search ranks here; the Hamming shortlists and ADC keep
-    * their own scores and call [[rankTopK]] directly.
+    * one total order — score DESC (NULLs last, NaN first, −0.0 = 0.0),
+    * then `pointIdCol` ASC (NULLs first) — with a bigint `rankCol`
+    * (1..k). Every exact, IVF and re-rank search ranks here; the Hamming
+    * shortlists and ADC keep their own scores and call [[rankTopK]].
+    *
+    * The cut is one [[graft.functions.ScoredTopKAgg]] per group: a
+    * k-bounded heap, merged map-side before the one exchange on the
+    * partition keys and `posexplode`d after it, so no pair row is ever
+    * sorted (the window form sorts every map task's pairs under its
+    * partial `WindowGroupLimit`). Rows are the window form's: ties in
+    * (score, id) stay separate rows, a NULL key is a group.
+    *
+    * Output: the columns of `pairs` except the two vector columns, in
+    * their order, then `score` and `rankCol`. The heap carries every
+    * one of them, since an aggregate's input cannot be pruned by what
+    * its consumers read: a caller that needs a vector after the cut
+    * passes it in under another name.
     */
   def scoreTopK(pairs: DataFrame, queryVecCol: String, pointVecCol: String, pointIdCol: String,
       k: Int, metric: String = "cosine", partitionBy: Seq[Column] = Seq(col("query_id")),
@@ -78,8 +94,16 @@ object Knn {
       case "dot" => VectorOps.dot(col(queryVecCol), col(pointVecCol))
       case other => throw new IllegalArgumentException(s"unknown metric: $other")
     }
-    rankTopK(pairs.withColumn("score", score), partitionBy,
-      Seq(desc("score"), col(pointIdCol).asc), lit(k), rankCol)
+    val scored = pairs.withColumn("score", score).drop(queryVecCol, pointVecCol)
+    val keys = scored.select(partitionBy: _*).columns.toSeq
+    val carried = scored.columns.toSeq.filterNot(c => keys.contains(c) || c == "score" ||
+      c == pointIdCol)
+    scored.groupBy(partitionBy: _*)
+      .agg(ScoredTopKAgg.scoredTopK("score", pointIdCol, carried, k).as("__top"))
+      .select(keys.map(col) :+ posexplode(col("__top")).as(Seq("__pos", "__hit")): _*)
+      .select(scored.columns.toSeq.map(c =>
+          if (keys.contains(c)) col(c) else col("__hit").getField(c).as(c)) :+
+        (col("__pos") + 1).cast("long").as(rankCol): _*)
   }
 
   /** V4: score every point against one literal query vector, keep top-k. */
@@ -90,7 +114,11 @@ object Knn {
       .limit(k)
 
   /** V5: k-NN join. `queries` must be the small side (it is broadcast).
-    * Output: all query columns + point id + `rank` (1..k) + `score`.
+    * Output: every column of `points` except `pointVecCol`, then
+    * `query_id`, `score` and `rank` (1..k). No vector leaves the join,
+    * neither the query's nor the point's: a caller that needs the
+    * point vector after it copies the vector into a column of its own
+    * before the call ([[Retrieval.mmrRerank]]'s `__pv`).
     */
   def knnJoin(
       queries: DataFrame,
@@ -106,7 +134,6 @@ object Knn {
         col(queryIdCol).as("query_id"),
         col(queryVecCol).as("__qvec")))
     scoreTopK(points.crossJoin(q), "__qvec", pointVecCol, pointIdCol, k, metric)
-      .drop("__qvec")
   }
 
   /** Filtered k-NN: Qdrant's filtered search (`search(..., query_filter=…)`)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * documented deterministic stand-in: top-k most frequent terms of the
   * retrieved context (SURVEY §2.5).
   *
-  * Two shuffles total (kNN window + context group-by), queries broadcast.
+  * Two shuffles total (kNN top-k heap + context group-by), queries broadcast.
   */
 object Rag {
 

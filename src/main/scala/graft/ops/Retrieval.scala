@@ -182,11 +182,12 @@ object Retrieval {
       selectK: Int,
       lambda: Double): DataFrame = {
     require(poolK >= selectK, s"need selectK ($selectK) <= poolK ($poolK)")
+    // knnJoin returns no vector, so the pool's copy rides through as __pv
     mmrFromPool(
-      Knn.knnJoin(queries, points, queryIdCol, queryVecCol,
-          pointIdCol, pointVecCol, poolK)
+      Knn.knnJoin(queries, points.withColumn("__pv", col(pointVecCol)), queryIdCol,
+          queryVecCol, pointIdCol, pointVecCol, poolK)
         .select(col("query_id"), col(pointIdCol).as("point_id"),
-          col(pointVecCol).as("__pv"), col("score").as("__rel")),
+          col("__pv"), col("score").as("__rel")),
       selectK, lambda)
   }
 

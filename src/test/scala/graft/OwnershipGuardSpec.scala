@@ -98,12 +98,14 @@ class OwnershipGuardSpec extends AnyFunSuite {
   test("a cosine / dot score reaches rankTopK in Knn, SimilaritySearch and Pq only " +
       "inside scoreTopK") {
     // judged per member def, so a score built in a `val` and passed on
-    // counts as much as one written inside the rankTopK call
+    // counts as much as one written inside the rankTopK call; scoreTopK
+    // itself cuts with its heap aggregate, not with rankTopK
     val scoring = tokens("VectorOps.cosine(", "VectorOps.dot(")
+    val cutting = tokens("rankTopK(", "ScoredTopKAgg.scoredTopK(")
     val scoredCuts = for {
       op <- Seq("Knn", "SimilaritySearch", "Pq")
       (name, body) <- memberDefs(s"src/main/scala/graft/ops/$op.scala")
-      if body.contains("rankTopK(") && scoring.findFirstIn(body).isDefined
+      if cutting.findFirstIn(body).isDefined && scoring.findFirstIn(body).isDefined
     } yield s"$op.$name"
     // both rank by a per-cell centroid score, not a query's: one by a
     // per-row ASC quota, the other through cell windows before its cut
@@ -116,6 +118,15 @@ class OwnershipGuardSpec extends AnyFunSuite {
         "clusterCards runs cell windows between its score and its cut); scored cuts " +
         s"outside it: ${offenders.mkString(", ")}" +
         (if (scoredCuts.contains("Knn.scoreTopK")) "" else " (Knn.scoreTopK gone)"))
+  }
+
+  test("the scored top-k aggregate is built only inside Knn.scoreTopK") {
+    owned(tokens("ScoredTopKAgg.scoredTopK("), "/ops/Knn.scala:",
+      "every scored top-k goes through Knn.scoreTopK, so the heap's order, its carried " +
+        "columns and the rank it restores cannot drift between searches")
+    val builders = memberDefs("src/main/scala/graft/ops/Knn.scala")
+      .collect { case (name, body) if body.contains("ScoredTopKAgg.scoredTopK(") => name }
+    assert(builders == Seq("scoreTopK"), s"built in Knn.${builders.mkString(", Knn.")}")
   }
 
   test("no oracle window is hand-ordered by ${sqlCos( or ${sqlDot(") {

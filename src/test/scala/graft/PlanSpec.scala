@@ -15,6 +15,68 @@ class PlanSpec extends SparkSpec {
   private def formatted(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
+  /** Runs `df` and returns, for each scored top-k in its executed plan
+    * (a final `ScoredTopKAgg` aggregate), the hash keys of every
+    * exchange between it and its partial aggregate, and the sorts in the
+    * unary chain from that partial down to the operator that makes the
+    * pair rows (a join or a scan).
+    */
+  private def heapTopKs(df: DataFrame): Seq[(Seq[Seq[String]], Int)] = {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateMode, Final, Partial}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object walk extends AdaptiveSparkPlanHelper
+    def heap(p: SparkPlan, mode: AggregateMode): Boolean = p match {
+      case a: ObjectHashAggregateExec => a.aggregateExpressions.exists(e =>
+        e.mode == mode && e.aggregateFunction.isInstanceOf[graft.functions.ScoredTopKAgg])
+      case _ => false
+    }
+    def below(p: SparkPlan): Seq[SparkPlan] = p match {
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }
+    def hashKeys(e: ShuffleExchangeExec): Seq[String] = e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+      case other => Seq(other.toString)
+    }
+    // from a final aggregate down to its partial: the exchanges passed
+    def toPartial(p: SparkPlan, ex: Seq[Seq[String]]): Option[(Seq[Seq[String]], SparkPlan)] =
+      if (heap(p, Partial)) Some((ex, p))
+      else below(p) match {
+        case Seq(c) => toPartial(c, p match {
+          case e: ShuffleExchangeExec => ex :+ hashKeys(e)
+          case _ => ex
+        })
+        case _ => None
+      }
+    def sortsToPairs(p: SparkPlan): Int = below(p) match {
+      case Seq(c) => (if (c.isInstanceOf[SortExec]) 1 else 0) + sortsToPairs(c)
+      case _ => 0
+    }
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    walk.collect(plan) { case f if heap(f, Final) => f }.map { f =>
+      val (exchanges, partial) = toPartial(below(f).head, Nil).getOrElse(
+        fail(s"no partial scored top-k under the final one:\n$plan"))
+      (exchanges, sortsToPairs(partial))
+    }
+  }
+
+  /** The scored top-k pin: `df` holds at least one heap top-k, and each
+    * one keeps its partial aggregate below exactly one exchange, hashed
+    * on `keys`, with no sort between the pair rows and that partial.
+    */
+  private def assertHeapTopK(df: DataFrame, keys: Seq[String], what: String): Unit = {
+    val tops = heapTopKs(df)
+    assert(tops.nonEmpty && tops.forall { case (ex, sorts) => ex == Seq(keys) && sorts == 0 },
+      s"$what: expected map-side heap top-k aggregates under one exchange on $keys and no " +
+        s"sort of the pair rows; got (exchange keys, sorts) $tops:\n" +
+        df.queryExecution.executedPlan)
+  }
+
   test("parquet scan pushes id predicates down and prunes columns") {
     val df = Tables.documents(spark, sf0001)
       .filter(col("doc_id") < 20)
@@ -26,16 +88,16 @@ class PlanSpec extends SparkSpec {
       s"unprojected column still read (pruning lost):\n$plan")
   }
 
-  test("kNN join broadcasts the query side and plans a WindowGroupLimit top-k") {
+  test("kNN join broadcasts the query side and keeps each query's top k in a map-side heap") {
     val emb = Tables.embeddings(spark, sf0001)
     val queries = emb.filter(col("vec_id") < 10)
     val points = emb.filter(col("vec_id") >= 10).withColumnRenamed("vec_id", "point_id")
-    val plan = formatted(
-      Knn.knnJoin(queries, points, "vec_id", "embedding", "point_id", "embedding", 5))
+    val knn = Knn.knnJoin(queries, points, "vec_id", "embedding", "point_id", "embedding", 5)
+    val plan = formatted(knn)
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"),
       s"query side not broadcast — the crossJoin would shuffle N×Q at scale:\n$plan")
-    assert(plan.contains("WindowGroupLimit"),
-      s"rank<=k not rewritten to WindowGroupLimit (partial top-k before shuffle):\n$plan")
+    // partial top-k before the shuffle, and no sort of the Q × N pair rows
+    assertHeapTopK(knn, Seq("query_id"), "knnJoin")
   }
 
   test("quota sample compiles to WindowGroupLimit (per-task prune before the stratum shuffle)") {
@@ -267,7 +329,7 @@ class PlanSpec extends SparkSpec {
       s"boundary sub-plan inlined into the selection joins (checkpoint cut lost):\n$plan")
   }
 
-  test("searchGroups plans BOTH rank limits as WindowGroupLimit") {
+  test("searchGroups cuts hits in a (query, group) heap and groups by a WindowGroupLimit") {
     val emb = Tables.embeddings(spark, sf0001)
     val df = Knn.searchGroups(
       emb.filter(col("vec_id") < 5),
@@ -276,19 +338,21 @@ class PlanSpec extends SparkSpec {
       "vec_id", "embedding", "point_id", "embedding", "label",
       groupsK = 3, hitsPerGroup = 2)
     // per-(query, group) state must be hitsPerGroup rows and per-query
-    // state groupsK rows BEFORE any exchange: both stacked rank windows
-    // must install a group limit — one partitioned by (query_id, group),
-    // one by query_id alone (Partial/Final modes of the same limit
-    // share a partition spec, hence the distinct-by-spec count).
+    // state groupsK rows BEFORE any exchange: the hit cut is a map-side
+    // heap under the (query_id, group) exchange, and the group cut a
+    // group limit partitioned by query_id alone (Partial/Final modes of
+    // the same limit share a partition spec, hence the distinct-by-spec
+    // count).
+    assertHeapTopK(df, Seq("query_id", "group"), "searchGroups hits")
     val specs = df.queryExecution.sparkPlan.collect {
       case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec =>
-        w.partitionSpec.map(_.toString)
+        w.partitionSpec.flatMap(_.references.map(_.name))
     }
-    assert(specs.map(_.length).toSet == Set(1, 2),
-      s"expected group limits partitioned by (query_id, group) AND by query_id; got: $specs")
+    assert(specs.toSet == Set(Seq("query_id")),
+      s"expected the group limit partitioned by query_id alone; got: $specs")
   }
 
-  test("every routed retrieval top-k executes as a WindowGroupLimit keyed on the query id") {
+  test("every routed retrieval top-k runs map-side before one exchange on the query id") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.window.WindowGroupLimitExec
     object walk extends AdaptiveSparkPlanHelper
@@ -332,14 +396,21 @@ class PlanSpec extends SparkSpec {
         Pq.encodeBucketed(points, "point_id", "embedding", cb, m = 8, dsub = 8,
           SimilaritySearch.signBucket("embedding", 4)),
         m = 8, dsub = 8, shortlist = 20, k = 5))
+    // scoreTopK cuts are heap aggregates; rankTopK cuts (BM25, RRF and
+    // the Hamming / ADC shortlists under a re-rank) keep their
+    // WindowGroupLimit; rrfFuse holds both through its dense knnJoin
+    val rankCut = Set("bm25TopK", "rrfFuse", "adcRerank", "bqRerankTopK", "ivfBqRerankTopK",
+      "ivfpqRerank")
+    val scoreCut = routed.map(_._1).toSet - "bm25TopK"
     for ((name, df) <- routed) {
-      df.collect()
+      if (scoreCut(name)) assertHeapTopK(df, Seq("query_id"), name) else df.collect()
       val plan = df.queryExecution.executedPlan
       val keys = walk.collect(plan) {
         case w: WindowGroupLimitExec => w.partitionSpec.flatMap(_.references.map(_.name))
       }
-      assert(keys.contains(Seq("query_id")),
+      if (rankCut(name)) assert(keys.contains(Seq("query_id")),
         s"$name: per-query top-k is not a WindowGroupLimit on query_id (got $keys):\n$plan")
+      else assert(keys.isEmpty, s"$name: a scored top-k planned a group limit ($keys):\n$plan")
     }
   }
 
@@ -450,22 +521,24 @@ class PlanSpec extends SparkSpec {
         s"$name must rank cells in the kernel, without a window or an exchange:\n$plan")
     }
     // the probe (queries → their nprobe cells) adds no window of its own
-    // and no exchange on the query id; the one window left is the
-    // per-query top-k over the probed cells' points
-    val search = executed(SimilaritySearch.searchAssignedCells(
+    // and no exchange on the query id; the one top-k left is the
+    // per-query heap over the probed cells' points
+    val searchDf = SimilaritySearch.searchAssignedCells(
       SimilaritySearch.assignPoints(points, "point_id", "embedding", cents), cents,
-      emb.filter(col("vec_id") < 10), "vec_id", "embedding", nprobe = 4, k = 3))
-    assert(windowKeys(search).nonEmpty && windowKeys(search).forall(_ == Seq("query_id")),
-      s"only the top-k window over query_id may remain:\n$search")
+      emb.filter(col("vec_id") < 10), "vec_id", "embedding", nprobe = 4, k = 3)
+    assertHeapTopK(searchDf, Seq("query_id"), "searchAssignedCells")
+    val search = searchDf.queryExecution.executedPlan
+    assert(windowKeys(search).isEmpty, s"the probe and the top-k plan no window:\n$search")
     assert(!shuffleKeys(search).exists(_.contains("__id")),
       s"the probe must not exchange the queries by id:\n$search")
   }
 
   test("contamination is hash equi-joins on the shingle hash, never all-pairs") {
     val docs = Tables.documents(spark, sf0001)
-    val plan = formatted(Dedup.contamination(
+    val df = Dedup.contamination(
       docs.filter(col("doc_id") % 5 =!= 4), docs.filter(col("doc_id") % 5 === 4),
-      "doc_id", "text", n = 3, minHits = 3))
+      "doc_id", "text", n = 3, minHits = 3)
+    val plan = formatted(df)
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"train×test degenerated to all-pairs:\n$plan")
     assert(plan.contains("BroadcastHashJoin") || plan.contains("SortMergeJoin") ||
@@ -477,7 +550,17 @@ class PlanSpec extends SparkSpec {
     // drop a handful of boilerplate grams.
     assert(plan.contains("LeftAnti"),
       s"train-df guard anti-join missing from the plan:\n$plan")
-    assert(!plan.contains("Window"),
+    // judged on the df-cap subtree (the anti-join and both its sides),
+    // by operator, so a window elsewhere in the query is not its concern
+    val capWindows = df.queryExecution.sparkPlan.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti =>
+        j.collect {
+          case w: org.apache.spark.sql.execution.window.WindowExec => w.nodeName
+          case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec => w.nodeName
+        }
+    }
+    assert(capWindows.nonEmpty && capWindows.forall(_.isEmpty),
       s"df cap regressed to a full count-over-window of train shingles:\n$plan")
   }
 
